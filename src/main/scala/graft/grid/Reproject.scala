@@ -21,7 +21,7 @@ import graft.core.TileMath
   */
 object Reproject {
 
-  case class SrcTileIn(dstCol: Int, dstRow: Int, srcCol: Int, srcRow: Int, cells: Seq[Double])
+  case class SrcTileIn(dstCol: Int, dstRow: Int, srcCol: Int, srcRow: Int, cells: Array[Double])
 
   sealed trait Kernel extends Serializable
   case object NearestNeighbor extends Kernel
@@ -33,6 +33,7 @@ object Reproject {
       extends Aggregator[SrcTileIn, Array[Double], Seq[Double]] {
     def zero: Array[Double] = TileMath.empty(dst.tileCols, dst.tileRows)
     def reduce(b: Array[Double], in: SrcTileIn): Array[Double] = {
+      val cells = in.cells
       var py = 0
       while (py < dst.tileRows) {
         var px = 0
@@ -46,16 +47,16 @@ object Reproject {
             val ly = gy - sr * src.tileRows
             if (lx >= 0 && lx < src.tileCols && ly >= 0 && ly < src.tileRows) {
               b(px + py * dst.tileCols) = kernel match {
-                case NearestNeighbor => in.cells((lx + ly * src.tileCols).toInt)
+                case NearestNeighbor => cells((lx + ly * src.tileCols).toInt)
                 case Bilinear =>
                   // fractional source-cell coords of the target center
                   val fcx = (sx - src.extent.xmin) / src.cellWidth - sc * src.tileCols
                   val fcy = (src.extent.ymax - sy) / src.cellHeight - sr * src.tileRows
-                  TileMath.sampleBilinear(in.cells.toArray, src.tileCols, src.tileRows, fcx, fcy)
+                  TileMath.sampleBilinear(cells, src.tileCols, src.tileRows, fcx, fcy)
                 case CubicConvolution =>
                   val fcx = (sx - src.extent.xmin) / src.cellWidth - sc * src.tileCols
                   val fcy = (src.extent.ymax - sy) / src.cellHeight - sr * src.tileRows
-                  TileMath.sampleCubic(in.cells.toArray, src.tileCols, src.tileRows, fcx, fcy)
+                  TileMath.sampleCubic(cells, src.tileCols, src.tileRows, fcx, fcy)
               }
             }
           }

@@ -122,8 +122,8 @@ object Raster {
       .agg(pa(col("dcol"), col("drow"), col("cells")).as("padded"))
   }
 
-  private val focalMeanUdf = udf((padded: Seq[Double], cols: Int, rows: Int, pad: Int, r: Int, circle: Boolean) =>
-    TileMath.focalMean(padded.toArray, cols, rows, pad, r, circle).toSeq)
+  private val focalMeanUdf = udf((padded: Array[Double], cols: Int, rows: Int, pad: Int, r: Int, circle: Boolean) =>
+    TileMath.focalMean(padded, cols, rows, pad, r, circle))
 
   /** Focal mean convolution (F1, ConvolveLayerExample.scala:62-73): halo
     * join then an embarrassingly-parallel per-tile kernel. */
@@ -132,8 +132,8 @@ object Raster {
       .select(col("tile_col"), col("tile_row"),
         focalMeanUdf(col("padded"), lit(cols), lit(rows), lit(radius), lit(radius), lit(circle)).as("cells"))
 
-  private val convolveUdf = udf((padded: Seq[Double], cols: Int, rows: Int, pad: Int, kernel: Seq[Double]) =>
-    TileMath.convolve(padded.toArray, cols, rows, pad, kernel.toArray).toSeq)
+  private val convolveUdf = udf((padded: Array[Double], cols: Int, rows: Int, pad: Int, kernel: Array[Double]) =>
+    TileMath.convolve(padded, cols, rows, pad, kernel))
 
   /** Generic focal convolution with a caller-supplied square kernel
     * (odd side; row index downward) — the user-defined-kernel member of
@@ -148,11 +148,11 @@ object Raster {
     withHalo(tiles, cols, rows, pad)
       .select(col("tile_col"), col("tile_row"),
         convolveUdf(col("padded"), lit(cols), lit(rows), lit(pad),
-          typedLit(kernel.flatten.toSeq)).as("cells"))
+          typedLit(kernel.flatten)).as("cells"))
   }
 
-  private val hornSlopeUdf = udf((padded: Seq[Double], cols: Int, rows: Int) =>
-    TileMath.hornSlope(padded.toArray, cols, rows, pad = 1).toSeq)
+  private val hornSlopeUdf = udf((padded: Array[Double], cols: Int, rows: Int) =>
+    TileMath.hornSlope(padded, cols, rows, pad = 1))
 
   /** Horn slope (gradient magnitude) — the terrain member of the focal
     * family (F1/F2): halo exchange at pad=1 (~1.1x wire), then the
@@ -163,8 +163,8 @@ object Raster {
       .select(col("tile_col"), col("tile_row"),
         hornSlopeUdf(col("padded"), lit(cols), lit(rows)).as("cells"))
 
-  private val hornHillshadeUdf = udf((padded: Seq[Double], cols: Int, rows: Int) =>
-    TileMath.hornHillshade(padded.toArray, cols, rows, pad = 1).toSeq)
+  private val hornHillshadeUdf = udf((padded: Array[Double], cols: Int, rows: Int) =>
+    TileMath.hornHillshade(padded, cols, rows, pad = 1))
 
   /** Lambertian hillshade (azimuth 315°, altitude 45°) — the rendering
     * member of the terrain family: same pad=1 halo as [[slope]], then
@@ -176,8 +176,8 @@ object Raster {
       .select(col("tile_col"), col("tile_row"),
         hornHillshadeUdf(col("padded"), lit(cols), lit(rows)).as("cells"))
 
-  private val d8FlowDirUdf = udf((padded: Seq[Double], cols: Int, rows: Int) =>
-    TileMath.d8FlowDir(padded.toArray, cols, rows, pad = 1).toSeq)
+  private val d8FlowDirUdf = udf((padded: Array[Double], cols: Int, rows: Int) =>
+    TileMath.d8FlowDir(padded, cols, rows, pad = 1))
 
   /** D8 flow direction — hydrology member of the terrain family: pad=1
     * halo then the per-tile steepest-descent kernel (TileMath.d8FlowDir;
@@ -187,10 +187,10 @@ object Raster {
       .select(col("tile_col"), col("tile_row"),
         d8FlowDirUdf(col("padded"), lit(cols), lit(rows)).as("cells"))
 
-  private val hornGxUdf = udf((padded: Seq[Double], cols: Int, rows: Int) =>
-    TileMath.hornGradient(padded.toArray, cols, rows, 1, 0).toSeq)
-  private val hornGyUdf = udf((padded: Seq[Double], cols: Int, rows: Int) =>
-    TileMath.hornGradient(padded.toArray, cols, rows, 1, 1).toSeq)
+  private val hornGxUdf = udf((padded: Array[Double], cols: Int, rows: Int) =>
+    TileMath.hornGradient(padded, cols, rows, 1, 0))
+  private val hornGyUdf = udf((padded: Array[Double], cols: Int, rows: Int) =>
+    TileMath.hornGradient(padded, cols, rows, 1, 1))
 
   /** Per-pixel Horn gradient components (gx, gy) off ONE pad=1 halo
     * exchange — both kernels run in the same projection, so the wire
@@ -494,8 +494,8 @@ object Raster {
 
   case class FocalSC(wsum: Double, wn: Double)
 
-  private val idwFillUdf = udf((padded: Seq[Double], cols: Int, rows: Int) => {
-    val (v, n) = TileMath.idwFill(padded.toArray, cols, rows, pad = 2)
+  private val idwFillUdf = udf((padded: Array[Double], cols: Int, rows: Int) => {
+    val (v, n) = TileMath.idwFill(padded, cols, rows, pad = 2)
     (0 until cols * rows).map(i => FocalSC(v(i), n(i)))
   })
 
@@ -514,8 +514,8 @@ object Raster {
         (col("i") / cols).cast("int").as("py"),
         col("sc.wsum").as("v"), col("sc.wn").cast("int").as("n_src"))
 
-  private val focalSumCountUdf = udf((padded: Seq[Double], cols: Int, rows: Int, pad: Int, r: Int) => {
-    val (s, c) = TileMath.focalSumCount(padded.toArray, cols, rows, pad, r)
+  private val focalSumCountUdf = udf((padded: Array[Double], cols: Int, rows: Int, pad: Int, r: Int) => {
+    val (s, c) = TileMath.focalSumCount(padded, cols, rows, pad, r)
     (0 until cols * rows).map(i => FocalSC(s(i), c(i)))
   })
 
@@ -533,8 +533,8 @@ object Raster {
         (col("i") / cols).cast("int").as("py"),
         col("sc.wsum").as("wsum"), col("sc.wn").as("wn"))
 
-  private val rookMomentsUdf = udf((padded: Seq[Double], cols: Int, rows: Int) =>
-    TileMath.rookMoments(padded.toArray, cols, rows, pad = 1).toSeq)
+  private val rookMomentsUdf = udf((padded: Array[Double], cols: Int, rows: Int) =>
+    TileMath.rookMoments(padded, cols, rows, pad = 1))
 
   /** Per-tile rook-adjacency pair moments (Σ xi·xj, Σ xi, ordered-pair
     * count) off the standard pad=1 halo exchange — the distributed leg
@@ -549,12 +549,12 @@ object Raster {
         element_at(col("m"), 2).as("xw"),
         element_at(col("m"), 3).as("w"))
 
-  private val tpiUdf = udf((padded: Seq[Double], cols: Int, rows: Int) =>
-    TileMath.terrainIndex(padded.toArray, cols, rows, 1, 0).toSeq)
-  private val triUdf = udf((padded: Seq[Double], cols: Int, rows: Int) =>
-    TileMath.terrainIndex(padded.toArray, cols, rows, 1, 1).toSeq)
-  private val lapUdf = udf((padded: Seq[Double], cols: Int, rows: Int) =>
-    TileMath.terrainIndex(padded.toArray, cols, rows, 1, 2).toSeq)
+  private val tpiUdf = udf((padded: Array[Double], cols: Int, rows: Int) =>
+    TileMath.terrainIndex(padded, cols, rows, 1, 0))
+  private val triUdf = udf((padded: Array[Double], cols: Int, rows: Int) =>
+    TileMath.terrainIndex(padded, cols, rows, 1, 1))
+  private val lapUdf = udf((padded: Array[Double], cols: Int, rows: Int) =>
+    TileMath.terrainIndex(padded, cols, rows, 1, 2))
 
   /** Fused local-relief indices — TPI, TRI and the 4-neighbor Laplacian
     * (TileMath.terrainIndex) off ONE pad=1 halo exchange, same fusion
@@ -575,8 +575,8 @@ object Raster {
         (col("pos") % cols).as("px"), (col("pos") / cols).cast("int").as("py"),
         col("t.tpis").as("tpi"), col("t.tris").as("tri"), col("t.laps").as("lap"))
 
-  private val focalModeUdf = udf((padded: Seq[Double], cols: Int, rows: Int) =>
-    TileMath.focalMode(padded.toArray, cols, rows, 1).toSeq)
+  private val focalModeUdf = udf((padded: Array[Double], cols: Int, rows: Int) =>
+    TileMath.focalMode(padded, cols, rows, 1))
 
   /** Majority (focal-mode) filter over a CLASS raster — the standard
     * post-classification smoothing pass land-use maps run after the
@@ -590,8 +590,8 @@ object Raster {
       .select(col("tile_col"), col("tile_row"),
         focalModeUdf(col("padded"), lit(cols), lit(rows)).as("cells"))
 
-  private val downsampleUdf = udf((cells: Seq[Double], cols: Int, rows: Int) =>
-    TileMath.downsample2(cells.toArray, cols, rows).toSeq)
+  private val downsampleUdf = udf((cells: Array[Double], cols: Int, rows: Int) =>
+    TileMath.downsample2(cells, cols, rows))
 
   /** One pyramid level up (R6/A9, GeotiffToPyramid.scala:58-69): each
     * tile downsamples 2x locally, then 4 quadrants assemble into the
@@ -629,9 +629,9 @@ object Raster {
     val f = 1 << dz
     val cubic = kernel == CubicConvolution
     val nn = kernel == NearestNeighbor
-    val upUdf = udf((cells: Seq[Double], cols: Int, rows: Int, cx: Int, cy: Int, dz: Int) =>
-      (if (nn) TileMath.upsampleChildNN(cells.toArray, cols, rows, cx, cy, dz)
-       else TileMath.upsampleChildInterp(cells.toArray, cols, rows, cx, cy, dz, cubic)).toSeq)
+    val upUdf = udf((cells: Array[Double], cols: Int, rows: Int, cx: Int, cy: Int, dz: Int) =>
+      if (nn) TileMath.upsampleChildNN(cells, cols, rows, cx, cy, dz)
+      else TileMath.upsampleChildInterp(cells, cols, rows, cx, cy, dz, cubic))
     val offsets = array((for (cy <- 0 until f; cx <- 0 until f)
       yield struct(lit(cx).as("cx"), lit(cy).as("cy"))): _*)
     val parents = targetBounds.fold(tiles) { case (c0, r0, c1, r1) =>
@@ -726,7 +726,7 @@ object Raster {
   /** The ONE pixel-feature assembly core (the pivot contract: missing
     * band => None slot, all-NoData pixels dropped) — shared by both the
     * band-row and zipped representations so the policy cannot diverge. */
-  private def assembleFeatures(byBand: IndexedSeq[Seq[Double]],
+  private def assembleFeatures(byBand: IndexedSeq[Array[Double]],
                                cols: Int): Seq[(Int, Int, Seq[Option[Double]])] = {
     val nBands = byBand.length
     val n = byBand.iterator.filter(_ != null).map(_.length).nextOption().getOrElse(0)
@@ -742,7 +742,7 @@ object Raster {
   }
 
   private def featFromBandsKernel =
-    udf((bands: Seq[Seq[Double]], cols: Int) => assembleFeatures(bands.toIndexedSeq, cols))
+    udf((bands: Seq[Array[Double]], cols: Int) => assembleFeatures(bands.toIndexedSeq, cols))
 
   /** [[pixelFeatures]] off an already-zipped multiband layer: when the
     * stack is STORED zipped (one catalog write of the bands column),
@@ -761,8 +761,8 @@ object Raster {
     * row per cell with >= 1 data band out; missing bands are null (the
     * pivot contract). */
   private def featKernel(nBands: Int) =
-    udf((bands: Seq[(Int, Seq[Double])], cols: Int) => {
-      val byBand = new Array[Seq[Double]](nBands)
+    udf((bands: Seq[(Int, Array[Double])], cols: Int) => {
+      val byBand = new Array[Array[Double]](nBands)
       bands.foreach { case (b, cells) => if (b >= 0 && b < nBands) byBand(b) = cells }
       assembleFeatures(scala.collection.immutable.ArraySeq.unsafeWrapArray(byBand), cols)
     })

@@ -47,7 +47,7 @@ object Spatial {
     * comparisons, same division order, so identical float behavior);
     * 2.6x faster than the interpreted HOF on the gate (BASELINE.md). */
   val pointInRingKernel: org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf((px: Double, py: Double, xs: Seq[Double], ys: Seq[Double]) => {
+    udf((px: Double, py: Double, xs: Array[Double], ys: Array[Double]) => {
       val n = xs.length
       var crossings = 0
       var i = 0

@@ -17,6 +17,12 @@ import graft.core.TileMath
   * buffer is a mutable primitive array, partials merge cell-wise, so a
   * 65k-pixel tile never materializes as 65k grouped rows (the reference's
   * `groupByKey` anti-pattern we deliberately avoid — SURVEY §4.2).
+  *
+  * Input rows carry tile cells as `Array[Double]`, never `Seq[Double]`:
+  * Spark 4's encoder decodes a `Seq` field into a `List`, so `cells(i)`
+  * walks from the head on every read and a per-cell copy loop turns
+  * quadratic (~2e9 steps per 256x256 tile). An `Array` field decodes
+  * with one primitive copy (`toDoubleArray`).
   */
 object TileAggregators {
 
@@ -43,7 +49,7 @@ object TileAggregators {
     def outputEncoder: Encoder[Seq[Double]] = outEnc
   }
 
-  case class NeighborIn(dcol: Int, drow: Int, cells: Seq[Double])
+  case class NeighborIn(dcol: Int, drow: Int, cells: Array[Double])
 
   /** Halo exchange assembly: the target tile plus pad-wide margins of its
     * 8 neighbors → one padded (cols+2*pad) x (rows+2*pad) array. Input
@@ -61,15 +67,11 @@ object TileAggregators {
       // sits at target-local (dcol*cols + xn, drow*rows + yn)
       val (xlo, xhi, ylo, yhi) = TileMath.haloBounds(n.dcol, n.drow, cols, rows, pad)
       val w = xhi - xlo
+      val tx = n.dcol * cols + xlo + pad
       var yn = ylo
       while (yn < yhi) {
         val ty = n.drow * rows + yn + pad
-        var xn = xlo
-        while (xn < xhi) {
-          val tx = n.dcol * cols + xn + pad
-          b(tx + ty * pc) = n.cells((xn - xlo) + (yn - ylo) * w)
-          xn += 1
-        }
+        System.arraycopy(n.cells, (yn - ylo) * w, b, tx + ty * pc, w)
         yn += 1
       }
       b
@@ -84,7 +86,7 @@ object TileAggregators {
     def outputEncoder: Encoder[Seq[Double]] = outEnc
   }
 
-  case class QuadIn(qx: Int, qy: Int, cells: Seq[Double])
+  case class QuadIn(qx: Int, qy: Int, cells: Array[Double])
 
   /** Pyramid assembly: four downsampled child quadrants (each
     * cols/2 x rows/2, quadrant position qx, qy in 0..1) → parent tile. */
@@ -95,11 +97,7 @@ object TileAggregators {
     def reduce(b: Array[Double], q: QuadIn): Array[Double] = {
       var y = 0
       while (y < hr) {
-        var x = 0
-        while (x < hc) {
-          b((q.qx * hc + x) + (q.qy * hr + y) * cols) = q.cells(x + y * hc)
-          x += 1
-        }
+        System.arraycopy(q.cells, y * hc, b, q.qx * hc + (q.qy * hr + y) * cols, hc)
         y += 1
       }
       b

@@ -106,6 +106,9 @@ class TileServer(spark: SparkSession, catalogRoot: String, layer: String,
   }
 
   private var server: HttpServer = _
+  // the request pool's threads are non-daemon: stop() must shut it down
+  // or a JVM that served tiles never exits
+  private[serve] var pool: java.util.concurrent.ExecutorService = _
 
   private def respond(ex: HttpExchange, contentType: String, body: Array[Byte]): Unit = {
     ex.getResponseHeaders.add("Content-Type", contentType)
@@ -148,12 +151,21 @@ class TileServer(spark: SparkSession, catalogRoot: String, layer: String,
         } finally ex.close()
       }
     })
-    server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(4))
+    pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    server.setExecutor(pool)
     server.start()
     server.getAddress.getPort
   }
 
-  def stop(): Unit = if (server != null) server.stop(0)
+  /** Stop the HTTP server, then its request pool (in-flight requests
+    * finish first). */
+  def stop(): Unit = {
+    if (server != null) server.stop(0)
+    if (pool != null) {
+      pool.shutdown()
+      pool.awaitTermination(10, java.util.concurrent.TimeUnit.SECONDS)
+    }
+  }
 }
 
 /** Driver app (ServeLayerAsMap parity): args catalogDir layer [port]. */

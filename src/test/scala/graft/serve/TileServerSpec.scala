@@ -52,4 +52,19 @@ class TileServerSpec extends AnyFunSuite {
         meta.contains(""""maxCol":1"""), meta)
     } finally srv.stop()
   }
+
+  test("stop() shuts down the request pool so the JVM can exit") {
+    val root = java.nio.file.Files.createTempDirectory("graft_serve_stop").toString
+    val srv = new TileServer(spark, root, "none", 8)
+    srv.stop() // before start: a no-op
+    val port = srv.start()
+    val conn = new java.net.URI(s"http://127.0.0.1:$port/").toURL
+      .openConnection().asInstanceOf[java.net.HttpURLConnection]
+    assert(conn.getResponseCode == 200) // a request ran on the pool
+    conn.disconnect()
+    val pool = srv.pool
+    assert(!pool.isShutdown)
+    srv.stop()
+    assert(pool.isTerminated)
+  }
 }
