@@ -62,8 +62,8 @@ class CatalogTxn(store: LayerStore) {
     withLocks(ordered) {
       val bindings = ordered.map { w =>
         store.writeVersion(w.name, w.zoom) { path =>
-          store.writeTo(w.tiles, path)
-          if (w.withAttributes) store.writeAttrs(path, w.tileSize, w.crs, w.binWidth)
+          store.writeTo(w.tiles, path,
+            Option.when(w.withAttributes)(AttrSpec(w.tileSize, w.crs, w.binWidth)))
         }
         // under this layer's lock our publish IS the live pointer
         val v = store.currentVersion(w.name, w.zoom).getOrElse(

@@ -1,8 +1,15 @@
 package graft.catalog
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, GraftSqlShim, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.functions.ZOrderKey.zorder
+
+/** What a publish records in its `_attributes.json` sidecar besides the
+  * data-derived stats: tile geometry, CRS and requested bin width. */
+private[catalog] final case class AttrSpec(tileSize: Int, crs: String, binWidth: Double)
 
 /** Parquet-backed tile-layer catalog — the engine's spine (SURVEY §1.3).
   *
@@ -268,17 +275,18 @@ class LayerStore(spark: SparkSession, val root: String,
   /** K1: versioned write with Z-curve ordering (api/package.scala:130-146),
     * then the `_attributes.json` sidecar (metadata + exact binned
     * histogram — Utils.scala:85-89 persists `histogramData` so the tile
-    * server never re-aggregates the layer). The sidecar lives INSIDE the
-    * version dir: underscore-prefixed files are invisible to Spark's
-    * parquet scan, and the pointer swap publishes data + attributes
-    * together. */
+    * server never re-aggregates the layer). The sidecar is computed in
+    * one job from the checkpoint blocks the write itself read (see
+    * [[checkpointed]]), never by reading the written parquet back. It
+    * lives INSIDE the version dir: underscore-prefixed files are
+    * invisible to Spark's parquet scan, and the pointer swap publishes
+    * data + attributes together. */
   def write(tiles: DataFrame, name: String, zoom: Int,
             tileSize: Int = graft.core.TileMath.DefaultTileSize,
             crs: String = "EPSG:4326", binWidth: Double = 1.0,
             withAttributes: Boolean = true): Unit = withLayerLock(name, zoom) {
     writeVersion(name, zoom) { path =>
-      writeTo(tiles, path)
-      if (withAttributes) writeAttrs(path, tileSize, crs, binWidth)
+      writeTo(tiles, path, Option.when(withAttributes)(AttrSpec(tileSize, crs, binWidth)))
     }
   }
 
@@ -298,7 +306,7 @@ class LayerStore(spark: SparkSession, val root: String,
     * parallelism. `spark.graft.write.targetPartitionBytes` (default
     * 128 MB of cached-block bytes, i.e. smaller on disk after parquet
     * encoding) tunes the file size goal. */
-  private def writeParts(rdds: Seq[org.apache.spark.rdd.RDD[_]]): Int = {
+  private def writeParts(rdds: Seq[RDD[_]]): Int = {
     val n = spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
     val target = spark.conf
       .get("spark.graft.write.targetPartitionBytes", (128L << 20).toString).toLong
@@ -309,96 +317,41 @@ class LayerStore(spark: SparkSession, val root: String,
     else math.max(1, math.min(n.toLong, bytes / target + 1).toInt)
   }
 
-  private[catalog] def writeTo(tiles: DataFrame, path: String): Unit = {
+  /** Z-ordered parquet write of `tiles` into `path`, plus its sidecar
+    * when `attrs` is set. The sidecar schema is the written one made
+    * nullable — exactly what a parquet read-back reports. */
+  private[catalog] def writeTo(tiles: DataFrame, path: String, attrs: Option[AttrSpec]): Unit = {
     val zk = zorder(col("tile_col").cast("int"), col("tile_row").cast("int"))
-    // r12: repartitionByRange needs a RangePartitioner SAMPLING pass,
-    // which would execute the (arbitrarily expensive) input lineage a
-    // second time per write — eager-checkpoint the input so the sample
-    // job and the write job both read cached blocks, and free the
-    // blocks once the write has materialized them into parquet.
-    // The explicit count also keeps AQE from coalescing a BIG write to
-    // one task; the measured-size floor keeps a small one off 32 tiny
-    // files.
-    val (t, tRdds) = graft.ops.Materialize.checkpointFresh(tiles)
-    try t
-      .repartitionByRange(writeParts(tRdds), zk)
-      .sortWithinPartitions(zk)
-      .write.mode(SaveMode.Overwrite).parquet(path)
-    finally tRdds.foreach(_.unpersist(blocking = false))
+    // The explicit count keeps AQE from coalescing a BIG write to one
+    // task; the measured-size floor keeps a small one off 32 tiny files.
+    checkpointed(tiles, path, attrs)(GraftSqlShim.asNullable) { (t, tRdds) =>
+      t.repartitionByRange(writeParts(tRdds), zk)
+        .sortWithinPartitions(zk)
+        .write.mode(SaveMode.Overwrite).parquet(path)
+    }
   }
 
-  /** Compute + persist the sidecar from the just-written parquet (reading
-    * back prunes to exactly the needed columns; the input lineage might
-    * be arbitrarily expensive to re-evaluate). Two bounded jobs: a
-    * key-column scan for bounds, one pixel pass for the histogram. */
-  /** Driver-side histogram rows are bounded by value-range / binWidth,
-    * not layer size — but an adversarial range (e.g. raw timestamps at
-    * binWidth 1) would still blow the driver. Cap the bin count; the
-    * effective width widens to keep the sidecar O(MaxBins). */
-  private val MaxBins = 65536
-
-  private[catalog] def writeAttrs(path: String, tileSize: Int, crs: String, binWidth: Double): Unit = {
-    val tiles = spark.read.parquet(path)
-    val schemaJson = tiles.schema.json // read() supplies it -> no footer-inference job
-    // layers without a flat `cells` column (e.g. a zipped multiband
-    // `bands` layer) still get a sidecar — bounds + schema, no
-    // histogram — instead of failing after the data job already ran
-    if (!tiles.columns.contains("cells")) {
-      val b = tiles.agg(
-        min(col("tile_col")).as("c0"), max(col("tile_col")).as("c1"),
-        min(col("tile_row")).as("r0"), max(col("tile_row")).as("r1"),
-        count(lit(1)).as("n")).head()
-      val attrs = LayerAttributes(
-        cellType = "float64", crs = crs, tileCols = tileSize, tileRows = tileSize,
-        minCol = if (b.isNullAt(0)) 0 else b.getInt(0),
-        maxCol = if (b.isNullAt(1)) -1 else b.getInt(1),
-        minRow = if (b.isNullAt(2)) 0 else b.getInt(2),
-        maxRow = if (b.isNullAt(3)) -1 else b.getInt(3),
-        nTiles = b.getLong(4), nCells = 0L,
-        minV = 0.0, maxV = 0.0, binWidth = binWidth, // json4s can't round-trip NaN
-        bins = Seq.empty, counts = Seq.empty,
-        extent =
-          if (b.isNullAt(0)) Seq.empty
-          else Seq(b.getInt(0).toDouble * tileSize, b.getInt(2).toDouble * tileSize,
-                   (b.getInt(1) + 1).toDouble * tileSize, (b.getInt(3) + 1).toDouble * tileSize),
-        schemaJson = Some(schemaJson))
-      Files.write(Paths.get(s"$path/_attributes.json"),
-        LayerAttributes.toJson(attrs).getBytes("UTF-8")): Unit
-      return
-    }
-    val dataCells = filter(col("cells"), x => not(isnan(x)))
-    val b = tiles.agg(
-      min(col("tile_col")).as("c0"), max(col("tile_col")).as("c1"),
-      min(col("tile_row")).as("r0"), max(col("tile_row")).as("r1"),
-      count(lit(1)).as("n"),
-      min(array_min(dataCells)).as("vmin"), max(array_max(dataCells)).as("vmax")).head()
-    val effWidth =
-      if (b.isNullAt(5) || b.isNullAt(6)) binWidth
-      else math.max(binWidth, (b.getDouble(6) - b.getDouble(5)) / MaxBins)
-    val hist = graft.ops.Raster.pixelize(tiles, tileSize)
-      .groupBy(floor(col("v") / effWidth).cast("long").as("bin"))
-      .agg(count(lit(1)).as("n"), min(col("v")).as("mn"), max(col("v")).as("mx"))
-      .collect() // <= MaxBins + 1 rows by construction
-    val attrs = LayerAttributes(
-      cellType = "float64", crs = crs, tileCols = tileSize, tileRows = tileSize,
-      minCol = if (b.isNullAt(0)) 0 else b.getInt(0),
-      maxCol = if (b.isNullAt(1)) -1 else b.getInt(1),
-      minRow = if (b.isNullAt(2)) 0 else b.getInt(2),
-      maxRow = if (b.isNullAt(3)) -1 else b.getInt(3),
-      nTiles = b.getLong(4),
-      nCells = hist.map(_.getLong(1)).sum,
-      minV = if (hist.isEmpty) 0.0 else hist.map(_.getDouble(2)).min, // 0.0: json4s can't round-trip NaN
-      maxV = if (hist.isEmpty) 0.0 else hist.map(_.getDouble(3)).max,
-      binWidth = effWidth,
-      bins = hist.map(_.getLong(0)).toSeq.sorted,
-      counts = hist.sortBy(_.getLong(0)).map(_.getLong(1)).toSeq,
-      extent =
-        if (b.isNullAt(0)) Seq.empty
-        else Seq(b.getInt(0).toDouble * tileSize, b.getInt(2).toDouble * tileSize,
-                 (b.getInt(1) + 1).toDouble * tileSize, (b.getInt(3) + 1).toDouble * tileSize),
-      schemaJson = Some(schemaJson))
-    Files.write(Paths.get(s"$path/_attributes.json"),
-      LayerAttributes.toJson(attrs).getBytes("UTF-8")): Unit
+  /** r12: repartitionByRange needs a RangePartitioner SAMPLING pass,
+    * which would execute the (arbitrarily expensive) input lineage a
+    * second time per write — so eager-checkpoint the input, and the
+    * sample job and the write job both read cached blocks. Once `write`
+    * has succeeded, the sidecar is built from those same blocks in one
+    * job ([[LayerAttributes.fromRows]]), with `schema` mapping the
+    * written schema to the one recorded. The blocks are freed in every
+    * case; a failed write leaves no sidecar. */
+  private def checkpointed(tiles: DataFrame, path: String, attrs: Option[AttrSpec])
+                          (schema: StructType => StructType)
+                          (write: (DataFrame, Seq[RDD[_]]) => Unit): Unit = {
+    val (t, tRdds) = graft.ops.Materialize.checkpointFresh(tiles)
+    try {
+      write(t, tRdds)
+      attrs.foreach { a =>
+        val sidecar = LayerAttributes.fromRows(tRdds.head.asInstanceOf[RDD[InternalRow]],
+          t.schema, a.tileSize, a.crs, a.binWidth, schema(t.schema).json)
+        Files.write(Paths.get(s"$path/_attributes.json"),
+          LayerAttributes.toJson(sidecar).getBytes("UTF-8")): Unit
+      }
+    } finally tRdds.foreach(_.unpersist(blocking = false))
   }
 
   /** S9: read the attribute sidecar of the live version (None for
@@ -430,22 +383,23 @@ class LayerStore(spark: SparkSession, val root: String,
       // spreads over many tasks by hilbert range.
       val hk = graft.functions.HilbertKey.hilbert(
         col("tile_col").cast("int"), col("tile_row").cast("int"))
-      // r12: checkpoint before the range sampling pass — see writeTo.
-      // The partition count deliberately STAYS the session constant
-      // here (not the measured-size form): `time` is the leading range
-      // key, so a low count makes one task own whole month dirs and
-      // write their files serially — measured 411 ms (32 tasks) ->
-      // 1.5 s (1 task) on the bench layer. The dynamic partitionBy
-      // bounds file count at ~(tasks + months) either way.
+      // r12: checkpoint before the range sampling pass — see
+      // checkpointed. The partition count deliberately STAYS the
+      // session constant here (not the measured-size form): `time` is
+      // the leading range key, so a low count makes one task own whole
+      // month dirs and write their files serially — measured 411 ms
+      // (32 tasks) -> 1.5 s (1 task) on the bench layer. The dynamic
+      // partitionBy bounds file count at ~(tasks + months) either way.
+      // The sidecar schema is read back: the `time` partition column is
+      // typed by inference on read.
       val n = spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
-      val (t, tRdds) = graft.ops.Materialize.checkpointFresh(tiles)
-      try t
-        .repartitionByRange(n, col("time"), hk)
-        .sortWithinPartitions(col("time"), hk)
-        .write.mode(SaveMode.Overwrite).partitionBy("time")
-        .parquet(path)
-      finally tRdds.foreach(_.unpersist(blocking = false))
-      if (withAttributes) writeAttrs(path, tileSize, crs, binWidth)
+      val attrs = Option.when(withAttributes)(AttrSpec(tileSize, crs, binWidth))
+      checkpointed(tiles, path, attrs)(_ => spark.read.parquet(path).schema) { (t, _) =>
+        t.repartitionByRange(n, col("time"), hk)
+          .sortWithinPartitions(col("time"), hk)
+          .write.mode(SaveMode.Overwrite).partitionBy("time")
+          .parquet(path)
+      }
     }
   }
 
@@ -533,8 +487,7 @@ class LayerStore(spark: SparkSession, val root: String,
       if (base.isEmpty) incoming
       else graft.ops.Raster.mergeLayers(read(name, zoom), incoming)
     writeVersion(name, zoom, fence = Some(base.map(_._1).getOrElse(0L))) { path =>
-      writeTo(toWrite, path)
-      if (withAttributes) writeAttrs(path, tileSize, crs, binWidth)
+      writeTo(toWrite, path, Option.when(withAttributes)(AttrSpec(tileSize, crs, binWidth)))
     }
   }
 

@@ -7,9 +7,11 @@ import graft.core.{PolyRaster, TileMath}
 object PolyBurnAggregator {
 
   /** Flattened polygon input row for one (feature x tile) pair: vertex
-    * arrays + ring offsets (start index of each ring), last-wins seq. */
-  case class PolyIn(tileCol: Int, tileRow: Int, xs: Seq[Double], ys: Seq[Double],
-                    ringOffsets: Seq[Int], value: Double, seq: Long)
+    * arrays + ring offsets (start index of each ring), last-wins seq.
+    * Arrays, not Seq: the encoder decodes a Seq field into a List, and
+    * [[toRings]] indexes every vertex. */
+  case class PolyIn(tileCol: Int, tileRow: Int, xs: Array[Double], ys: Array[Double],
+                    ringOffsets: Array[Int], value: Double, seq: Long)
 
   private def toRings(p: PolyIn): Seq[PolyRaster.Ring] = {
     val offs = p.ringOffsets :+ p.xs.length

@@ -184,7 +184,7 @@ object Similarity {
     // ordering in the replaced Window.
     val centsBc = vectors.sparkSession.sparkContext.broadcast(
       cb.map(_._2.toArray))
-    val assignKernel = udf((emb: Seq[Float]) => {
+    val assignKernel = udf((emb: Array[Float]) => {
       // r12 null guard (ADVICE): the replaced Window path was
       // null-safe — CosineSimilarity yields null on null input and the
       // nulls-first ascending argmin assigned cluster 0. Match that
@@ -501,11 +501,11 @@ object Similarity {
     * products stay < 2^42 and 2^63 holds past 10^6 rows per dimension
     * pair; for cluster cardinalities swap accumulation to DECIMAL(38).
     */
-  class GramAgg(d: Int) extends Aggregator[Seq[Float], Array[Long], GramOut] {
+  class GramAgg(d: Int) extends Aggregator[Array[Float], Array[Long], GramOut] {
     private val nProds = d * (d + 1) / 2
     def zero: Array[Long] = new Array[Long](1 + d + nProds)
 
-    def reduce(b: Array[Long], v: Seq[Float]): Array[Long] = {
+    def reduce(b: Array[Long], v: Array[Float]): Array[Long] = {
       if (v == null) return b
       require(v.length == d, s"embedding dim ${v.length} != $d")
       val q = new Array[Long](d)
@@ -675,7 +675,7 @@ object Similarity {
     // null-propagating like the expression-tree form it replaced; a
     // short vector is a caller bug — fail with the dimensions, not an
     // opaque IndexOutOfBounds from the hot loop
-    val f = udf((v: Seq[Float]) => {
+    val f = udf((v: Array[Float]) => {
       if (v == null) null
       else {
         require(r.isEmpty || v.length >= r(0).length,

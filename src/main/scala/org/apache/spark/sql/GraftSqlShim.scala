@@ -10,6 +10,10 @@ object GraftSqlShim {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** `StructType.asNullable` (spark-private): the schema a parquet
+    * read-back reports for data written with schema `s`. */
+  def asNullable(s: types.StructType): types.StructType = s.asNullable
+
   /** Block until all queued listener events are delivered — lets tests
     * read SparkListener-collected metrics deterministically. */
   def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =

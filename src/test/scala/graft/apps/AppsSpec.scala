@@ -82,24 +82,9 @@ class AppsSpec extends AnyFunSuite {
     assert(store.zoomsOf("stack").isEmpty)
 
     // RenderTile must take its color breaks from the _attributes sidecar:
-    // the only Spark job allowed is the single-tile point read. Count
-    // ONLY this thread's jobs (job groups are thread-local) — suites
-    // share one SparkContext and may run in parallel, so a bare
-    // job counter also sees other suites' jobs (r12 flake fix).
-    var jobs = 0
-    val jl = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(j.properties)
-          .exists(_.getProperty("spark.jobGroup.id") == "rendertile-probe")) jobs += 1
-    }
-    spark.sparkContext.addSparkListener(jl)
-    try {
-      spark.sparkContext.setJobGroup("rendertile-probe", "RenderTile job-count probe")
+    // the only Spark job allowed is the single-tile point read.
+    val jobs = graft.SparkTestBase.jobsIn("rendertile-probe") {
       RenderTile.run(spark, Array(catalog, "nir", "5", "0", "0", s"$dir/tile.png"))
-      org.apache.spark.sql.GraftSqlShim.drainListenerBus(spark.sparkContext)
-    } finally {
-      spark.sparkContext.clearJobGroup()
-      spark.sparkContext.removeSparkListener(jl)
     }
     assert(jobs <= 1, s"RenderTile ran $jobs jobs; breaks must come from the _attributes sidecar")
     val img = javax.imageio.ImageIO.read(new java.io.File(s"$dir/tile.png"))

@@ -187,6 +187,20 @@ class LayerStoreSpec extends AnyFunSuite {
     assert(m.minV == 100.0 && m.bins.head == 50L)
   }
 
+  test("the attribute sidecar costs at most one job per publish") {
+    val store = freshStore()
+    val t = tiles(0)
+    val without = graft.SparkTestBase.jobsIn("sidecar-off") {
+      store.write(t, "j", 1, tileSize = TS, withAttributes = false)
+    }
+    val withAttrs = graft.SparkTestBase.jobsIn("sidecar-on") {
+      store.write(t, "j", 2, tileSize = TS, withAttributes = true)
+    }
+    assert(store.readAttributes("j", 2).exists(_.nTiles == 4))
+    assert(withAttrs <= without + 1,
+      s"sidecar added ${withAttrs - without} jobs; build it from the checkpoint blocks, not a read-back")
+  }
+
   test("space-time layer: Hilbert-sorted write, time-pruned read, sidecar rides along") {
     val store = freshStore()
     val st = (for (t <- Seq("2024-01", "2024-02"); tc <- 0 to 1; px <- 0 until TS; py <- 0 until TS)

@@ -129,7 +129,7 @@ class AggregatorLawsSpec extends AnyFunSuite {
     forAll(Gen.listOfN(5, triGen), 100) { tris =>
       val polys = tris.zipWithIndex.map { case ((x, y, w, v), i) =>
         PolyBurnAggregator.PolyIn(0, 0,
-          Seq(x, x + w, x), Seq(y, y, y + w), Seq(0), v, i.toLong)
+          Array(x, x + w, x), Array(y, y, y + w), Array(0), v, i.toLong)
       }
       val whole = polys.foldLeft(agg.zero)(agg.reduce)
       val partials = polys.reverse.grouped(2).map(_.foldLeft(agg.zero)(agg.reduce)).toList

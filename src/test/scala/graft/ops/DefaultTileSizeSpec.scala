@@ -113,6 +113,10 @@ class DefaultTileSizeSpec extends AnyFunSuite {
     assert(decodedClass(TileAggregators.NeighborIn(0, 1, c))(_.cells) == classOf[Array[Double]])
     assert(decodedClass(TileAggregators.QuadIn(1, 0, c))(_.cells) == classOf[Array[Double]])
     assert(decodedClass(graft.grid.Reproject.SrcTileIn(0, 0, 1, 1, c))(_.cells) == classOf[Array[Double]])
+    val poly = PolyBurnAggregator.PolyIn(0, 0, c, c, Array(0), 1.0, 0L)
+    assert(decodedClass(poly)(_.xs) == classOf[Array[Double]])
+    assert(decodedClass(poly)(_.ys) == classOf[Array[Double]])
+    assert(decodedClass(poly)(_.ringOffsets) == classOf[Array[Int]])
   }
 
   test("quantile breaks are monotone and span the value range") {

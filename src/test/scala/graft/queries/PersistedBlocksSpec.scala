@@ -46,6 +46,40 @@ class PersistedBlocksSpec extends AnyFunSuite {
       assert(residual(name) == 0, s"$name leaked persistent RDDs")
   }
 
+  test("catalog publishes free their checkpoint blocks, also when the parquet write throws") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.lit
+    import graft.catalog.{CatalogTxn, LayerStore, TxnWrite}
+    val store = new LayerStore(spark,
+      java.nio.file.Files.createTempDirectory("graft_blocks").toString)
+    def tiles(v: Double) = graft.ops.Raster.assemble(
+      (for (tc <- 0 to 1; px <- 0 until 4; py <- 0 until 4)
+        yield (tc, 0, px, py, v + px)).toDF("tile_col", "tile_row", "px", "py", "v"), 4, 4)
+    def noResidue(what: String)(f: => Unit): Unit = {
+      val before = spark.sparkContext.getPersistentRDDs.size
+      f
+      assert(spark.sparkContext.getPersistentRDDs.size == before, s"$what left persistent RDDs")
+    }
+    noResidue("write")(store.write(tiles(0), "p", 1, tileSize = 4))
+    noResidue("merge")(store.merge(tiles(5), "p", 1, tileSize = 4))
+    noResidue("writeSpaceTime")(
+      store.writeSpaceTime(tiles(0).withColumn("time", lit("2024-01")), "st", 1, tileSize = 4))
+    noResidue("txn commit")(new CatalogTxn(store).commit(
+      Seq(TxnWrite("a", 1, tiles(1), tileSize = 4), TxnWrite("b", 1, tiles(2), tileSize = 4))))
+    // parquet cannot store a CalendarInterval column: the write throws
+    // after the checkpoint, and neither blocks nor a sidecar may survive
+    noResidue("failed write")(intercept[Exception](store.write(
+      tiles(0).withColumn("bad", org.apache.spark.sql.functions.expr("make_interval(0, 0, 0, 1)")),
+      "x", 1, tileSize = 4)))
+    assert(!store.exists("x", 1))
+    val zoomDir = java.nio.file.Paths.get(s"${store.root}/tiles/layer_name=x/zoom=1")
+    val sidecars =
+      if (!java.nio.file.Files.exists(zoomDir)) 0L
+      else java.nio.file.Files.walk(zoomDir)
+        .filter(_.getFileName.toString == "_attributes.json").count()
+    assert(sidecars == 0L, "a failed write left an _attributes.json behind")
+  }
+
   test("connectedComponents (local path) leaves zero persistent blocks") {
     import spark.implicits._
     val edges = (1L until 50L).map(i => (i, i + 1)).toDF("a", "b")

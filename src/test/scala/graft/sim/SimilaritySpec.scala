@@ -391,7 +391,7 @@ class SimilaritySpec extends AnyFunSuite {
     val prods = for { i <- 0 until d; j <- i until d }
       yield vecs.map(v => q(v(i)) * q(v(j))).sum
     val agg = new Similarity.GramAgg(d)
-    val whole = vecs.foldLeft(agg.zero)((b, v) => agg.reduce(b, v.toSeq))
+    val whole = vecs.foldLeft(agg.zero)((b, v) => agg.reduce(b, v))
     val out = agg.finish(whole)
     assert(out.n == n && out.sums == sums && out.prods == prods)
     // split/merge law
@@ -401,8 +401,8 @@ class SimilaritySpec extends AnyFunSuite {
       val cut = 1 + r.nextInt(shuffled.length - 1)
       val (l, rr) = shuffled.splitAt(cut)
       val merged = agg.merge(
-        l.foldLeft(agg.zero)((b, v) => agg.reduce(b, v.toSeq)),
-        rr.foldLeft(agg.zero)((b, v) => agg.reduce(b, v.toSeq)))
+        l.foldLeft(agg.zero)((b, v) => agg.reduce(b, v)),
+        rr.foldLeft(agg.zero)((b, v) => agg.reduce(b, v)))
       assert(merged.toSeq == whole.toSeq)
     }
     // distributed == driver fold
@@ -423,7 +423,7 @@ class SimilaritySpec extends AnyFunSuite {
       Array.tabulate(d)(j => a * u(j) + (rnd.nextGaussian() * 0.02).toFloat)
     }
     val agg = new Similarity.GramAgg(d)
-    val g = agg.finish(vecs.foldLeft(agg.zero)((b, v) => agg.reduce(b, v.toSeq)))
+    val g = agg.finish(vecs.foldLeft(agg.zero)((b, v) => agg.reduce(b, v)))
     val c = Similarity.covarianceFromGram(g, d)
     // naive covariance of the QUANTIZED values, scaled back
     def q(f: Float): Double = math.floor(f.toDouble * 1048576.0)
