@@ -97,18 +97,18 @@ object CostDistance {
       .select(col("gx").cast("long").as("gx"), col("gy").cast("long").as("gy"),
         col("cost").cast("long").as("cost"),
         when(col("src"), 0L).otherwise(-1L).as("dist")))
-    // r12 scale-adaptive tiling (guide §1.2): the converged fixpoint is
-    // TILING-INDEPENDENT (the unique solution of the capped Bellman
-    // equations over positive entry costs), so below
-    // `spark.graft.iter.localEdgeLimit` cells the whole grid becomes
-    // ONE tile — round 1's per-tile Dijkstra is then globally exact and
-    // the loop exits after the round-2 no-change check: 2 rounds
-    // instead of ~tile-graph-diameter rounds of 1-2-task jobs, through
-    // the IDENTICAL code path (no second implementation to drift).
-    // Past the gate the tiling is unchanged.
-    val localLimit = spark.conf
-      .get("spark.graft.iter.localEdgeLimit", (1L << 21).toString).toLong
-    val ts = if (state.count() <= localLimit) 1L << 40 else tileSize.toLong
+    // scale-adaptive tiling ([[LocalGraph]] size gate): the converged
+    // fixpoint is TILING-INDEPENDENT (the unique solution of the capped
+    // Bellman equations over positive entry costs), so at or under the
+    // gate the whole grid becomes ONE tile — round 1's per-tile Dijkstra
+    // is then globally exact and the loop exits after the round-2
+    // no-change check, through the IDENTICAL code path. Past the gate
+    // the tiling is unchanged.
+    val limit = LocalGraph.limit(spark)
+    val n = state.count()
+    val oneTile = n <= limit
+    LocalGraph.record("costDistance", if (oneTile) "one-tile" else "tiled", n, limit)
+    val ts = if (oneTile) 1L << 40 else tileSize.toLong
     var changed = 1L
     var it = 0
     while (changed > 0 && it < maxIter) {

@@ -39,20 +39,4 @@ object Materialize {
     }
     (ck.sparkSession.createDataFrame(ck.rdd, ck.schema), rdds)
   }
-
-  /** Collect the first `width` LONG columns of every row as flat
-    * primitive-long chunks (one long[] per partition, row-major) — the
-    * de-boxed collect for the size-gated local paths of the iterative
-    * operators (CC / BFS / SSSP / flow accumulation): 8 bytes per
-    * value on the driver instead of ~10x that in boxed Row graphs.
-    * Executor-side Row boxing is transient and GC-local. */
-  def collectLongs(df: DataFrame, width: Int): Array[Array[Long]] =
-    df.rdd.mapPartitions { it =>
-      val buf = new scala.collection.mutable.ArrayBuilder.ofLong
-      it.foreach { r =>
-        var i = 0
-        while (i < width) { buf += r.getLong(i); i += 1 }
-      }
-      Iterator(buf.result())
-    }.collect()
 }

@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import graft.core.TileMath
 
@@ -225,6 +226,36 @@ object Raster {
         (col("pos") % cols).as("px"), (col("pos") / cols).cast("int").as("py"),
         col("g.gxs").as("gx"), col("g.gys").as("gy"), col("g.ds").as("d8"))
 
+  /** The D8 step of direction code d (0-7 clockwise from E, as
+    * [[flowDir]] emits them; any other code is no step). */
+  private def d8dx(d: Int): Long = if (d == 0 || d == 1 || d == 7) 1L else if (d >= 3 && d <= 5) -1L else 0L
+  private def d8dy(d: Int): Long = if (d >= 1 && d <= 3) 1L else if (d >= 5 && d <= 7) -1L else 0L
+  private def d8dx(dir: Column): Column = when(dir.isin(0, 1, 7), 1).when(dir.isin(3, 4, 5), -1).otherwise(0)
+  private def d8dy(dir: Column): Column = when(dir.isin(1, 2, 3), 1).when(dir.isin(5, 6, 7), -1).otherwise(0)
+
+  /** Collected (gx, gy, dir) rows as cell coordinates plus each cell's
+    * D8 parent index: -1 for a pit, or when the parent cell is not in
+    * the emitted region (the distributed paths' left_semi). */
+  private def d8Parents(chunks: Array[Array[Long]]): (Array[Long], Array[Long], Array[Int]) = {
+    val n = chunks.iterator.map(_.length / 3).sum
+    val gx = new Array[Long](n); val gy = new Array[Long](n); val dir = new Array[Int](n)
+    val idx = new scala.collection.mutable.HashMap[(Long, Long), Int]()
+    var i = 0
+    chunks.foreach { arr =>
+      var r = 0
+      while (r < arr.length) {
+        gx(i) = arr(r); gy(i) = arr(r + 1); dir(i) = arr(r + 2).toInt
+        idx((gx(i), gy(i))) = i
+        i += 1; r += 3
+      }
+    }
+    val parent = Array.tabulate(n) { c =>
+      val d = dir(c)
+      if (d < 0) -1 else idx.getOrElse((gx(c) + d8dx(d), gy(c) + d8dy(d)), -1)
+    }
+    (gx, gy, parent)
+  }
+
   /** D8 flow ACCUMULATION over a flow-direction field: for every cell,
     * the number of cells (itself included) whose flow path drains
     * through it — the catchment-size raster hydrology builds on top of
@@ -242,149 +273,103 @@ object Raster {
     * joins would otherwise double the analyzed plan per round, and a
     * raw localCheckpoint would let the inherited size estimate's
     * bit-length multiply per round — see the Materialize scaladoc)
-    * with superseded checkpoint blocks freed explicitly. */
+    * with superseded checkpoint blocks freed explicitly.
+    * Scale-adaptive: at or under the [[LocalGraph]] size gate the same
+    * peeling runs driver-side. */
   def flowAccumulation(flow: DataFrame, maxIter: Int = 64): DataFrame = {
-    import graft.ops.Materialize.{checkpointFresh, collectLongs}
-    val spark = flow.sparkSession
-    // r12 (guide §1.2/§2, the connectedComponents treatment extended):
-    // the leaf-peeling loop ran ~5 serialized 1-2-task jobs per round x
-    // rounds = longest flow path (Prof: 93 jobs at sf0.1) — pure
-    // orchestration at raster sizes below the gate. Under
-    // `spark.graft.iter.localEdgeLimit` the SAME round-based peeling
-    // (identical maxIter bail semantics: a cell's acc on bail = 1 +
-    // deliveries received so far) runs driver-side over primitive
-    // arrays; above the gate the distributed loop is unchanged.
-    val localLimit = spark.conf
-      .get("spark.graft.iter.localEdgeLimit", (1L << 21).toString).toLong
-    val coordsLong = Seq("gx", "gy").forall(c =>
-      flow.schema(c).dataType == org.apache.spark.sql.types.LongType)
+    import graft.ops.Materialize.checkpointFresh
     // a null dir behaves exactly like a pit on both paths: the
     // distributed branch's `dir >= 0` predicate already rejects null,
     // and the coalesce keeps the primitive collect NPE-free
     val (flowCk, flowRdds) = checkpointFresh(
       flow.select(col("gx"), col("gy"),
         coalesce(col("dir").cast("long"), lit(-1L)).as("dir")))
-    if (coordsLong && flowCk.count() <= localLimit) {
-      val chunks = collectLongs(flowCk, 3)
-      flowRdds.foreach(_.unpersist(blocking = false))
-      val n = chunks.iterator.map(_.length / 3).sum
-      val gxA = new Array[Long](n); val gyA = new Array[Long](n)
-      val dirA = new Array[Int](n)
-      val idx = new scala.collection.mutable.HashMap[(Long, Long), Int]()
-      var i = 0
-      chunks.foreach { arr =>
-        var r = 0
-        while (r < arr.length) {
-          gxA(i) = arr(r); gyA(i) = arr(r + 1); dirA(i) = arr(r + 2).toInt
-          idx((gxA(i), gyA(i))) = i
-          i += 1; r += 3
-        }
-      }
-      // parent edge per cell (D8: at most one), only if the parent cell
-      // is in the emitted region (the distributed left_semi)
-      val parentA = Array.fill(n)(-1)
-      val pending = new Array[Int](n) // children not yet delivered
-      i = 0
-      while (i < n) {
-        val d = dirA(i)
-        if (d >= 0) {
-          val px = gxA(i) + (if (d == 0 || d == 1 || d == 7) 1L else if (d >= 3 && d <= 5) -1L else 0L)
-          val py = gyA(i) + (if (d >= 1 && d <= 3) 1L else if (d >= 5 && d <= 7) -1L else 0L)
-          idx.get((px, py)).foreach { p => parentA(i) = p; pending(p) += 1 }
-        }
-        i += 1
-      }
-      // round-based peeling, wave k == the distributed loop's round k:
-      // a frontier cell finalizes (done) and delivers its acc to its
-      // parent; a parent whose LAST child just delivered joins the next
-      // wave. On a maxIter bail, undone cells keep acc = 1 + deliveries
-      // received so far — exactly the distributed partial-union output.
-      val acc = Array.fill(n)(1L)
-      val done = new Array[Boolean](n)
-      var frontier = new scala.collection.mutable.ArrayBuffer[Int]()
-      i = 0
-      while (i < n) { if (pending(i) == 0) frontier += i; i += 1 }
-      var it = 0
-      while (frontier.nonEmpty && it < maxIter) {
-        val next = new scala.collection.mutable.ArrayBuffer[Int]()
-        frontier.foreach { c =>
-          done(c) = true
-          val p = parentA(c)
-          if (p >= 0) {
-            acc(p) += acc(c)
-            pending(p) -= 1
-            if (pending(p) == 0) next += p
+    LocalGraph.gate("flowAccumulation", flowCk, flowRdds, 3) match {
+      case Some(chunks) =>
+        // the SAME round-based peeling, wave k == the distributed loop's
+        // round k: a frontier cell finalizes (done) and delivers its acc
+        // to its parent; a parent whose LAST child just delivered joins
+        // the next wave. On a maxIter bail, undone cells keep acc = 1 +
+        // deliveries received so far — exactly the distributed
+        // partial-union output.
+        val (gxA, gyA, parentA) = d8Parents(chunks)
+        val n = gxA.length
+        val pending = new Array[Int](n) // children not yet delivered
+        parentA.foreach(p => if (p >= 0) pending(p) += 1)
+        val acc = Array.fill(n)(1L)
+        val done = new Array[Boolean](n)
+        var frontier = (0 until n).filter(pending(_) == 0)
+        var it = 0
+        while (frontier.nonEmpty && it < maxIter) {
+          val next = new scala.collection.mutable.ArrayBuffer[Int]()
+          frontier.foreach { c =>
+            done(c) = true
+            val p = parentA(c)
+            if (p >= 0) {
+              acc(p) += acc(c)
+              pending(p) -= 1
+              if (pending(p) == 0) next += p
+            }
           }
+          frontier = next.toIndexedSeq
+          it += 1
         }
-        frontier = next
-        it += 1
-      }
-      i = 0
-      var undelivered = 0
-      while (i < n) { if (!done(i) && parentA(i) >= 0) undelivered += 1; i += 1 }
-      if (undelivered > 0)
-        org.slf4j.LoggerFactory.getLogger("graft.ops.Raster").warn(
-          s"flowAccumulation exited at maxIter=$maxIter with $undelivered edges undelivered — " +
-            "accumulations downstream of them are partial; raise maxIter")
-      val out = new Array[org.apache.spark.sql.Row](n)
-      i = 0
-      while (i < n) { out(i) = org.apache.spark.sql.Row(gxA(i), gyA(i), acc(i)); i += 1 }
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("gx",
-          org.apache.spark.sql.types.LongType, nullable = true),
-        org.apache.spark.sql.types.StructField("gy",
-          org.apache.spark.sql.types.LongType, nullable = true),
-        org.apache.spark.sql.types.StructField("acc",
-          org.apache.spark.sql.types.LongType, nullable = true)))
-      return spark.createDataFrame(spark.sparkContext.parallelize(
-        out.toIndexedSeq, math.max(1, math.min(spark.sparkContext.defaultParallelism,
-          n / 65536 + 1))), schema)
+        val undelivered = (0 until n).count(i => !done(i) && parentA(i) >= 0)
+        if (undelivered > 0)
+          org.slf4j.LoggerFactory.getLogger("graft.ops.Raster").warn(
+            s"flowAccumulation exited at maxIter=$maxIter with $undelivered edges undelivered — " +
+              "accumulations downstream of them are partial; raise maxIter")
+        LocalGraph.frame(flow.sparkSession,
+          Array.tabulate(n)(i => Row(gxA(i), gyA(i), acc(i))),
+          Seq("gx" -> LongType, "gy" -> LongType, "acc" -> LongType))
+      case None =>
+        val nodes = flowCk.select(col("gx"), col("gy"))
+        val edges = flowCk.where(col("dir") >= 0)
+          .select(col("gx").as("cgx"), col("gy").as("cgy"),
+            (col("gx") + d8dx(col("dir"))).as("pgx"), (col("gy") + d8dy(col("dir"))).as("pgy"))
+          .join(nodes.select(col("gx").as("pgx"), col("gy").as("pgy")), Seq("pgx", "pgy"), "left_semi")
+        var (partial, partialRdds) = checkpointFresh(nodes.withColumn("acc", lit(1L)))
+        var (rem, remRdds) = checkpointFresh(edges)
+        // partial/rem supersede the input checkpoint — free it
+        flowRdds.foreach(_.unpersist(blocking = false))
+        var prevRdds = partialRdds ++ remRdds
+        var finals = List.empty[DataFrame]
+        var remCount = rem.count()
+        var it = 0
+        while (remCount > 0 && it < maxIter) {
+          val hasIncoming = rem.select(col("pgx").as("gx"), col("pgy").as("gy")).distinct()
+          val (frontier, _) = checkpointFresh(
+            partial.join(hasIncoming, Seq("gx", "gy"), "left_anti"))
+          finals ::= frontier
+          val delivered = frontier
+            .join(rem, frontier("gx") === rem("cgx") && frontier("gy") === rem("cgy"))
+            .groupBy(col("pgx").as("gx"), col("pgy").as("gy"))
+            .agg(sum(col("acc")).as("delta"))
+          val (np, npRdds) = checkpointFresh(partial.join(hasIncoming, Seq("gx", "gy"), "left_semi")
+            .join(delivered, Seq("gx", "gy"), "left")
+            .select(col("gx"), col("gy"), (col("acc") + coalesce(col("delta"), lit(0L))).as("acc")))
+          partial = np
+          val (nr, nrRdds) = checkpointFresh(
+            rem.join(frontier.select(col("gx").as("cgx"), col("gy").as("cgy")),
+              Seq("cgx", "cgy"), "left_anti"))
+          rem = nr
+          remRdds = nrRdds
+          remCount = rem.count()
+          // free ONLY the superseded partial/rem blocks; every frontier
+          // stays alive — it is part of the final result union
+          prevRdds.foreach(_.unpersist(blocking = false))
+          prevRdds = npRdds ++ nrRdds
+          it += 1
+        }
+        if (remCount > 0)
+          org.slf4j.LoggerFactory.getLogger("graft.ops.Raster").warn(
+            s"flowAccumulation exited at maxIter=$maxIter with $remCount edges undelivered — " +
+              "accumulations downstream of them are partial; raise maxIter")
+        // the result reads the frontiers and partial, never rem
+        remRdds.foreach(_.unpersist(blocking = false))
+        finals ::= partial // empty on clean exit; partial sums under maxIter bail
+        finals.reduce(_ unionByName _)
     }
-    val dx = when(col("dir").isin(0, 1, 7), 1).when(col("dir").isin(3, 4, 5), -1).otherwise(0)
-    val dy = when(col("dir").isin(1, 2, 3), 1).when(col("dir").isin(5, 6, 7), -1).otherwise(0)
-    val nodes = flowCk.select(col("gx"), col("gy"))
-    val edges = flowCk.where(col("dir") >= 0)
-      .select(col("gx").as("cgx"), col("gy").as("cgy"),
-        (col("gx") + dx).as("pgx"), (col("gy") + dy).as("pgy"))
-      .join(nodes.select(col("gx").as("pgx"), col("gy").as("pgy")), Seq("pgx", "pgy"), "left_semi")
-    var (partial, partialRdds) = checkpointFresh(nodes.withColumn("acc", lit(1L)))
-    var (rem, remRdds) = checkpointFresh(edges)
-    // partial/rem supersede the input checkpoint — free it (r12 review)
-    flowRdds.foreach(_.unpersist(blocking = false))
-    var prevRdds = partialRdds ++ remRdds
-    var finals = List.empty[DataFrame]
-    var remCount = rem.count()
-    var it = 0
-    while (remCount > 0 && it < maxIter) {
-      val hasIncoming = rem.select(col("pgx").as("gx"), col("pgy").as("gy")).distinct()
-      val (frontier, _) = checkpointFresh(
-        partial.join(hasIncoming, Seq("gx", "gy"), "left_anti"))
-      finals ::= frontier
-      val delivered = frontier
-        .join(rem, frontier("gx") === rem("cgx") && frontier("gy") === rem("cgy"))
-        .groupBy(col("pgx").as("gx"), col("pgy").as("gy"))
-        .agg(sum(col("acc")).as("delta"))
-      val (np, npRdds) = checkpointFresh(partial.join(hasIncoming, Seq("gx", "gy"), "left_semi")
-        .join(delivered, Seq("gx", "gy"), "left")
-        .select(col("gx"), col("gy"), (col("acc") + coalesce(col("delta"), lit(0L))).as("acc")))
-      partial = np
-      val (nr, nrRdds) = checkpointFresh(
-        rem.join(frontier.select(col("gx").as("cgx"), col("gy").as("cgy")),
-          Seq("cgx", "cgy"), "left_anti"))
-      rem = nr
-      remCount = rem.count()
-      // free ONLY the superseded partial/rem blocks; every frontier
-      // stays alive — it is part of the final result union
-      prevRdds.foreach(_.unpersist(blocking = false))
-      prevRdds = npRdds ++ nrRdds
-      it += 1
-    }
-    if (remCount > 0)
-      org.slf4j.LoggerFactory.getLogger("graft.ops.Raster").warn(
-        s"flowAccumulation exited at maxIter=$maxIter with $remCount edges undelivered — " +
-          "accumulations downstream of them are partial; raise maxIter")
-    finals ::= partial // empty on clean exit; partial sums under maxIter bail
-    finals.reduce(_ unionByName _)
   }
 
   /** Watershed BASIN labeling over a D8 flow field: every cell is
@@ -401,95 +386,56 @@ object Raster {
     * round count is the LONGEST PATH — doubling is the right tool here
     * because basin labels need only the root, not per-step sums).
     * D8 descends strictly, so the forest is acyclic and the fixed
-    * point is stable. Plan discipline: checkpointFresh per round. */
+    * point is stable. Plan discipline: checkpointFresh per round.
+    * Scale-adaptive: at or under the [[LocalGraph]] size gate the
+    * parent chains are walked driver-side. */
   def basinLabel(flow: DataFrame, rounds: Int = 6): DataFrame = {
-    import graft.ops.Materialize.{checkpointFresh, collectLongs}
-    val spark = flow.sparkSession
-    // r12 scale-adaptive local path (same gate family as
-    // flowAccumulation): after k doubling rounds the distributed
-    // pointer table holds each cell's ancestor at exactly min(2^k,
-    // distance-to-root) steps — the local path walks each cell's
-    // parent chain for at most 2^rounds steps, stopping at the root,
-    // which is the identical function of the input.
-    val localLimit = spark.conf
-      .get("spark.graft.iter.localEdgeLimit", (1L << 21).toString).toLong
-    val coordsLong = Seq("gx", "gy").forall(c =>
-      flow.schema(c).dataType == org.apache.spark.sql.types.LongType)
+    import graft.ops.Materialize.checkpointFresh
     // a null dir behaves exactly like a pit on both paths: the
     // distributed branch's `dir >= 0` predicate already rejects null,
     // and the coalesce keeps the primitive collect NPE-free
     val (flowCk, flowRdds) = checkpointFresh(
       flow.select(col("gx"), col("gy"),
         coalesce(col("dir").cast("long"), lit(-1L)).as("dir")))
-    if (coordsLong && flowCk.count() <= localLimit) {
-      val chunks = collectLongs(flowCk, 3)
-      flowRdds.foreach(_.unpersist(blocking = false))
-      val n = chunks.iterator.map(_.length / 3).sum
-      val gxA = new Array[Long](n); val gyA = new Array[Long](n)
-      val dirA = new Array[Int](n)
-      val idx = new scala.collection.mutable.HashMap[(Long, Long), Int]()
-      var i = 0
-      chunks.foreach { arr =>
-        var r = 0
-        while (r < arr.length) {
-          gxA(i) = arr(r); gyA(i) = arr(r + 1); dirA(i) = arr(r + 2).toInt
-          idx((gxA(i), gyA(i))) = i
-          i += 1; r += 3
+    LocalGraph.gate("basinLabel", flowCk, flowRdds, 3) match {
+      case Some(chunks) =>
+        // after k doubling rounds the distributed pointer table holds
+        // each cell's ancestor at exactly min(2^k, distance-to-root)
+        // steps, so walking each cell's parent chain for at most
+        // 2^rounds steps, stopping at the root, is the identical function
+        val (gxA, gyA, parentA) = d8Parents(chunks)
+        val maxSteps = 1L << rounds
+        LocalGraph.frame(flow.sparkSession, Array.tabulate(gxA.length) { i =>
+          var c = i
+          var steps = 0L
+          while (steps < maxSteps && parentA(c) >= 0) { c = parentA(c); steps += 1 }
+          Row(gxA(i), gyA(i), gxA(c), gyA(c))
+        }, Seq("gx" -> LongType, "gy" -> LongType, "bx" -> LongType, "by" -> LongType))
+      case None =>
+        val nodes = flowCk.select(col("gx"), col("gy"))
+        val parent = flowCk.where(col("dir") >= 0)
+          .select(col("gx"), col("gy"),
+            (col("gx") + d8dx(col("dir"))).as("px"), (col("gy") + d8dy(col("dir"))).as("py"))
+          .join(nodes.select(col("gx").as("px"), col("gy").as("py")), Seq("px", "py"), "left_semi")
+        var (p, prevRdds) = checkpointFresh(
+          nodes.join(parent, Seq("gx", "gy"), "left")
+            .select(col("gx"), col("gy"),
+              coalesce(col("px"), col("gx")).as("px"),
+              coalesce(col("py"), col("gy")).as("py")))
+        flowRdds.foreach(_.unpersist(blocking = false)) // p supersedes the input
+        for (_ <- 1 to rounds) {
+          val (np, npRdds) = checkpointFresh(
+            p.join(
+              p.select(col("gx").as("px"), col("gy").as("py"),
+                col("px").as("ppx"), col("py").as("ppy")),
+              Seq("px", "py"))
+              .select(col("gx"), col("gy"), col("ppx").as("px"), col("ppy").as("py")))
+          prevRdds.foreach(_.unpersist(blocking = false))
+          prevRdds = npRdds
+          p = np
         }
-      }
-      val parentA = Array.tabulate(n) { c =>
-        val d = dirA(c)
-        if (d < 0) c
-        else {
-          val px = gxA(c) + (if (d == 0 || d == 1 || d == 7) 1L else if (d >= 3 && d <= 5) -1L else 0L)
-          val py = gyA(c) + (if (d >= 1 && d <= 3) 1L else if (d >= 5 && d <= 7) -1L else 0L)
-          idx.getOrElse((px, py), c) // off-layer parent: own root
-        }
-      }
-      val maxSteps = 1L << rounds
-      val out = new Array[org.apache.spark.sql.Row](n)
-      i = 0
-      while (i < n) {
-        var c = i
-        var s = 0L
-        while (s < maxSteps && parentA(c) != c) { c = parentA(c); s += 1 }
-        out(i) = org.apache.spark.sql.Row(gxA(i), gyA(i), gxA(c), gyA(c))
-        i += 1
-      }
-      val lt = org.apache.spark.sql.types.LongType
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("gx", lt, nullable = true),
-        org.apache.spark.sql.types.StructField("gy", lt, nullable = true),
-        org.apache.spark.sql.types.StructField("bx", lt, nullable = true),
-        org.apache.spark.sql.types.StructField("by", lt, nullable = true)))
-      return spark.createDataFrame(spark.sparkContext.parallelize(
-        out.toIndexedSeq, math.max(1, math.min(spark.sparkContext.defaultParallelism,
-          n / 65536 + 1))), schema)
+        p.select(col("gx"), col("gy"), col("px").as("bx"), col("py").as("by"))
     }
-    val dx = when(col("dir").isin(0, 1, 7), 1).when(col("dir").isin(3, 4, 5), -1).otherwise(0)
-    val dy = when(col("dir").isin(1, 2, 3), 1).when(col("dir").isin(5, 6, 7), -1).otherwise(0)
-    val nodes = flowCk.select(col("gx"), col("gy"))
-    val parent = flowCk.where(col("dir") >= 0)
-      .select(col("gx"), col("gy"), (col("gx") + dx).as("px"), (col("gy") + dy).as("py"))
-      .join(nodes.select(col("gx").as("px"), col("gy").as("py")), Seq("px", "py"), "left_semi")
-    var (p, prevRdds) = checkpointFresh(
-      nodes.join(parent, Seq("gx", "gy"), "left")
-        .select(col("gx"), col("gy"),
-          coalesce(col("px"), col("gx")).as("px"),
-          coalesce(col("py"), col("gy")).as("py")))
-    flowRdds.foreach(_.unpersist(blocking = false)) // p supersedes the input
-    for (_ <- 1 to rounds) {
-      val (np, npRdds) = checkpointFresh(
-        p.join(
-          p.select(col("gx").as("px"), col("gy").as("py"),
-            col("px").as("ppx"), col("py").as("ppy")),
-          Seq("px", "py"))
-          .select(col("gx"), col("gy"), col("ppx").as("px"), col("ppy").as("py")))
-      prevRdds.foreach(_.unpersist(blocking = false))
-      prevRdds = npRdds
-      p = np
-    }
-    p.select(col("gx"), col("gy"), col("px").as("bx"), col("py").as("by"))
   }
 
   case class FocalSC(wsum: Double, wn: Double)

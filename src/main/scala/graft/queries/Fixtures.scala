@@ -27,22 +27,6 @@ object Fixtures {
   def table(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
 
-  /** r12: formerly a single-split scan fan-out
-    * (`repartition(defaultParallelism, key)` when the file fit one scan
-    * split). The driver's cold local[32] bench measured it REGRESSIVE —
-    * 45/53 tail-visible queries >10% slower (geomean 0.42x), suite wall
-    * 294s -> 479s, with NEGATIVE 8->32-core scaling confined to the
-    * fanned text/similarity families: the explicit exchange multiplied per-stage
-    * task count by 32 on sub-second queries and was re-paid on every
-    * materialization of the subtree (the warm per-query minima that
-    * justified it hid the cold scheduler/JIT cost). Reader is now
-    * exactly [[table]]; the `key` parameter is kept so the ~50 call
-    * sites document which column a future fan-out would have to hash
-    * on, should a measured case ever justify one. */
-  def tableFanned(s: SparkSession, dir: String, name: String,
-                  key: String): DataFrame =
-    table(s, dir, name)
-
   /** Exact decimal-summed double: deterministic across engines AT ANY
     * MAGNITUDE the engine will see.
     * IMPORTANT: feed it decimal-arithmetic expressions built from

@@ -309,7 +309,7 @@ object MiscQueries {
     * every sampled pixel exactly. */
   val mediaFeatures: Q = (s, dir) => {
     val media = graft.multimodal.Media
-      .mediaFromDocuments(tableFanned(s, dir, "documents", "doc_id"))
+      .mediaFromDocuments(table(s, dir, "documents"))
     graft.multimodal.Media.extractFeatures(media)
       .select(col("doc_id"), col("width"), col("height"),
         posexplode(col("features")).as(Seq("j", "f")))
@@ -331,7 +331,7 @@ object MiscQueries {
     * plane == formula). */
   val mediaResize: Q = (s, dir) => {
     val media = graft.multimodal.Media
-      .mediaFromDocuments(tableFanned(s, dir, "documents", "doc_id"))
+      .mediaFromDocuments(table(s, dir, "documents"))
     graft.multimodal.Media.resize(media, 4, 4)
       .select(col("doc_id"), posexplode(col("pixels")).as(Seq("i", "pix")))
   }
@@ -355,7 +355,7 @@ object MiscQueries {
     * dedup at 100 TB ships 8-byte hashes, never pixels. */
   val phashDedup: Q = (s, dir) => {
     val media = graft.multimodal.Media
-      .mediaFromDocuments(tableFanned(s, dir, "documents", "doc_id"))
+      .mediaFromDocuments(table(s, dir, "documents"))
     val hashed = graft.multimodal.Media.aHash(media, 4, 4)
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("phash"))
     hashed.withColumn("n_same", count(lit(1)).over(w))
@@ -411,7 +411,7 @@ object MiscQueries {
     * counts. No oracle (SGD boundary predictions are float-order
     * sensitive); gated rows-only + unit-tested accuracy floor. */
   val mlConfusion: Q = (s, dir) =>
-    graft.ml.Classify.trainPredictCounts(tableFanned(s, dir, "embeddings", "vec_id"))
+    graft.ml.Classify.trainPredictCounts(table(s, dir, "embeddings"))
 
   /** M2/M3 ORACLED trainer twin: the same OVA train→predict→confusion
     * surface as m_ml_confusion, but the per-class linear model is the
@@ -421,7 +421,7 @@ object MiscQueries {
     * matrix hash-matches the oracle, which re-trains relationally from
     * the same split. */
   val svmFixedpoint: Q = (s, dir) =>
-    graft.ml.Classify.fixedPointConfusion(tableFanned(s, dir, "embeddings", "vec_id"))
+    graft.ml.Classify.fixedPointConfusion(table(s, dir, "embeddings"))
 
   val svmFixedpointSql: String = {
     val ks = 1 to 4
@@ -493,7 +493,7 @@ object MiscQueries {
     * training pipeline can re-derive anywhere. */
   val stratifiedSplit: Q = (s, dir) => {
     val keep = graft.text.TextOps.hashBucket(col("vec_id"), 2) === 0
-    tableFanned(s, dir, "embeddings", "vec_id")
+    table(s, dir, "embeddings")
       .groupBy(col("label"))
       .agg(count(lit(1)).as("n_total"),
         sum(when(keep, 1L).otherwise(0L)).as("n_kept"))
@@ -730,7 +730,7 @@ object MiscQueries {
     * 10^8 unique model scores. Same tie-aware Mann-Whitney identity and
     * exact long arithmetic as m_auc; one final IEEE division. */
   val aucContinuous: Q = (s, dir) => {
-    val g = tableFanned(s, dir, "embeddings", "vec_id")
+    val g = table(s, dir, "embeddings")
       .select(element_at(col("embedding"), 1).as("score"),
         when(col("label") >= 5, 1L).otherwise(0L).as("y"))
       .groupBy(col("score"))
@@ -818,7 +818,7 @@ object MiscQueries {
     * Counts are exact longs; precision/recall are one IEEE division
     * each, bit-identical in any engine. */
   val prContinuous: Q = (s, dir) => {
-    val g = tableFanned(s, dir, "embeddings", "vec_id")
+    val g = table(s, dir, "embeddings")
       .select(element_at(col("embedding"), 1).as("score"),
         when(col("label") >= 5, 1L).otherwise(0L).as("y"))
       .groupBy(col("score"))

@@ -917,7 +917,7 @@ object RelationalQueries {
 
   /** A7: numClasses = max(label) (SVMMultiClass.scala:95). */
   val numClasses: Q = (s, dir) =>
-    tableFanned(s, dir, "embeddings", "vec_id").agg((max(col("label")) + 1).as("num_classes"))
+    table(s, dir, "embeddings").agg((max(col("label")) + 1).as("num_classes"))
 
   val numClassesSql: String =
     "SELECT MAX(label) + 1 AS num_classes FROM embeddings"

@@ -29,7 +29,7 @@ object SimQueries {
 
   /** Brute-force cosine top-k: the exact ANN baseline. */
   val annBrute: Q = (s, dir) => {
-    val e = tableFanned(s, dir, "embeddings", "vec_id")
+    val e = table(s, dir, "embeddings")
     Similarity.bruteForceTopK(e.where(col("vec_id") < NQ), e, K)
       .select(col("qid"), col("cid"), col("cos"), col("rank"))
   }
@@ -55,7 +55,7 @@ object SimQueries {
     * Zero-norm vectors are excluded on both sides (cosine undefined —
     * and the engines disagree on 0/0: NaN vs NULL). */
   val annMedia: Q = (s, dir) => {
-    val media = graft.multimodal.Media.mediaFromDocuments(tableFanned(s, dir, "documents", "doc_id"))
+    val media = graft.multimodal.Media.mediaFromDocuments(table(s, dir, "documents"))
     val feats = graft.multimodal.Media.extractFeatures(media)
       .select(col("doc_id").as("vec_id"), col("features").as("embedding"))
       .where(Similarity.norm2(col("embedding")) > 0)
@@ -116,7 +116,7 @@ object SimQueries {
     * full corpus). */
   def knnPredictions(s: SparkSession, dir: String): DataFrame = {
     val b = graft.text.TextOps.hashBucket(col("vec_id"), 10)
-    val e = tableFanned(s, dir, "embeddings", "vec_id")
+    val e = table(s, dir, "embeddings")
     val test = e.where(b === 9)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"), col("label"))
     val train = e.where(b =!= 9)
@@ -141,7 +141,7 @@ object SimQueries {
   def knnPredictionsIvf(s: SparkSession, dir: String, indexPath: String,
                         nprobe: Int): DataFrame = {
     val b = graft.text.TextOps.hashBucket(col("vec_id"), 10)
-    val e = tableFanned(s, dir, "embeddings", "vec_id")
+    val e = table(s, dir, "embeddings")
     val test = e.where(b === 9)
     val labels = e.where(b =!= 9).select(col("vec_id").as("cid"), col("label").as("nl"))
     val probed = Similarity.ivfProbe(
@@ -177,7 +177,7 @@ object SimQueries {
         s"${java.lang.ProcessHandle.current().pid()}_$dirKey"
       val b = graft.text.TextOps.hashBucket(col("vec_id"), 10)
       Similarity.buildIvfIndexDet(
-        tableFanned(s, dir, "embeddings", "vec_id").where(b =!= 9)
+        table(s, dir, "embeddings").where(b =!= 9)
           .select(col("vec_id"), col("embedding")),
         base, IvfNList)
       base
@@ -343,7 +343,7 @@ object SimQueries {
     * random-hyperplane bucket (leading-dim signs degrade on correlated
     * dims; Rademacher planes mix every dimension into each bit). */
   val annLsh: Q = (s, dir) => {
-    val e = tableFanned(s, dir, "embeddings", "vec_id")
+    val e = table(s, dir, "embeddings")
     Similarity.lshTopK(e.where(col("vec_id") < NQ), e, K, Planes)
       .select(col("qid"), col("cid"), col("cos"), col("rank"))
   }
@@ -370,7 +370,7 @@ object SimQueries {
     * cosine >= threshold (the vector-side dedup mode next to
     * MinHash/SimHash on text). */
   val cosineDedup: Q = (s, dir) =>
-    Similarity.cosineNearDupPairs(tableFanned(s, dir, "embeddings", "vec_id"), Planes, DupThreshold)
+    Similarity.cosineNearDupPairs(table(s, dir, "embeddings"), Planes, DupThreshold)
 
   val cosineDedupSql: String =
     s"""WITH b AS (SELECT vec_id, embedding, $bucketSql AS bucket FROM embeddings),
@@ -393,7 +393,7 @@ object SimQueries {
     val lsh = annLsh(s, dir).select(col("qid"), col("cid"))
     val hits = brute.join(lsh, Seq("qid", "cid"), "left_semi")
       .groupBy(col("qid")).agg(count(lit(1)).as("n_hits"))
-    tableFanned(s, dir, "embeddings", "vec_id").where(col("vec_id") < NQ)
+    table(s, dir, "embeddings").where(col("vec_id") < NQ)
       .select(col("vec_id").as("qid"))
       .join(hits, Seq("qid"), "left")
       .select(col("qid"), coalesce(col("n_hits"), lit(0L)).as("n_hits"),
@@ -435,7 +435,7 @@ object SimQueries {
     * instead of thresholded — so the gate additionally pins the
     * deterministic per-node cut (ties on cid). */
   val knnGraph: Q = (s, dir) =>
-    Similarity.knnGraph(tableFanned(s, dir, "embeddings", "vec_id"), Planes, K)
+    Similarity.knnGraph(table(s, dir, "embeddings"), Planes, K)
 
   val knnGraphSql: String =
     s"""WITH b AS (SELECT vec_id, embedding, $bucketSql AS bucket FROM embeddings),
@@ -456,7 +456,7 @@ object SimQueries {
     * rendered via bigint bit patterns. Here: group by the exact float
     * sequence using a portable textual form. */
   val vecDedup: Q = (s, dir) =>
-    tableFanned(s, dir, "embeddings", "vec_id")
+    table(s, dir, "embeddings")
       .groupBy(col("label"))
       .agg(count(lit(1)).as("n_vectors"),
         Fixtures.dsum(transform(col("embedding"), x => x.cast("double"))
@@ -524,7 +524,7 @@ object SimQueries {
     * per-candidate explode), the probe join touches only the probed
     * clusters' rows, exact cosine + top-k inside. */
   val annIvf: Q = (s, dir) => {
-    val e = tableFanned(s, dir, "embeddings", "vec_id")
+    val e = table(s, dir, "embeddings")
     val assigned = e.select(col("vec_id").as("cid"), col("embedding").as("ce"),
       clusterOf((0 until NLIST).map(j => centScore(col("embedding"), j))).as("cluster"))
     val q = e.where(col("vec_id") < NQ)
@@ -588,7 +588,7 @@ object SimQueries {
     * the corpus against itself anywhere. */
   val centroidConfusion: Q = (s, dir) => {
     val b = graft.text.TextOps.hashBucket(col("vec_id"), 10)
-    val e = tableFanned(s, dir, "embeddings", "vec_id")
+    val e = table(s, dir, "embeddings")
     val dims = e.where(b =!= 9)
       .select(col("label"), posexplode(col("embedding")).as(Seq("pos", "v")))
       .select(col("label"), col("pos"),
@@ -655,7 +655,7 @@ object SimQueries {
         .zipWithIndex.map { case ((i, j), k) => (k, i, j) }
       s.createDataFrame(rows).toDF("k", "i", "j")
     }
-    tableFanned(s, dir, "embeddings", "vec_id")
+    table(s, dir, "embeddings")
       .agg(Similarity.gram(col("embedding"), d).as("g"))
       .select(col("g.n").as("n"), col("g.sums").as("sums"),
         posexplode(col("g.prods")).as(Seq("k", "sxy")))
@@ -699,7 +699,7 @@ object SimQueries {
     * plans the same [[Similarity.gram]] aggregation. */
   private def pc1FixedPoint(s: SparkSession, dir: String): Array[Long] = {
     val d = DIM
-    val g = tableFanned(s, dir, "embeddings", "vec_id")
+    val g = table(s, dir, "embeddings")
       .agg(Similarity.gram(col("embedding"), d).as("g"))
       .select(col("g.n"), col("g.sums"), col("g.prods")).head()
     val n = BigInt(g.getLong(0))
@@ -777,7 +777,7 @@ object SimQueries {
   val pcaScores: Q = (s, dir) => {
     val SFP = 1048576L
     val pc1 = pc1FixedPoint(s, dir)
-    tableFanned(s, dir, "embeddings", "vec_id")
+    table(s, dir, "embeddings")
       .select(col("vec_id"),
         transform(col("embedding"), x => floor(x.cast("double") * SFP).cast("long")).as("q"))
       .withColumn("pc1", typedLit(pc1.toSeq))
@@ -816,7 +816,7 @@ object SimQueries {
     * Zero vectors are undefined under amax scaling and filtered
     * identically on both sides. */
   val quantizeErr: Q = (s, dir) => {
-    val d = tableFanned(s, dir, "embeddings", "vec_id")
+    val d = table(s, dir, "embeddings")
       .select(col("vec_id"), transform(col("embedding"), x => x.cast("double")).as("e"))
       .withColumn("amax", aggregate(col("e"), lit(0.0), (a, x) => greatest(a, abs(x))))
       .where(col("amax") > 0)
@@ -862,7 +862,7 @@ object SimQueries {
     * int8 column — 4x less scan + bandwidth — and the float column is
     * touched only for PREF survivors per query. */
   val annQuantized: Q = (s, dir) => {
-    val base = tableFanned(s, dir, "embeddings", "vec_id")
+    val base = table(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding"),
         transform(col("embedding"), x => x.cast("double")).as("e"))
       .withColumn("amax", aggregate(col("e"), lit(0.0), (a, x) => greatest(a, abs(x))))
@@ -944,7 +944,7 @@ object SimQueries {
     * 4x-smaller int8 column; the float column is touched per
     * survivor. */
   val rangeSearch: Q = (s, dir) => {
-    val base = tableFanned(s, dir, "embeddings", "vec_id")
+    val base = table(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding"),
         transform(col("embedding"), x => x.cast("double")).as("e"))
       .withColumn("amax", aggregate(col("e"), lit(0.0), (a, x) => greatest(a, abs(x))))
@@ -1042,7 +1042,7 @@ object SimQueries {
     * At 100 TB the scored scan is the codes column — bytes per vector —
     * and the float column is read for PREF rows per query. */
   val annPq: Q = (s, dir) => {
-    val base = tableFanned(s, dir, "embeddings", "vec_id").select(col("vec_id"), col("embedding"),
+    val base = table(s, dir, "embeddings").select(col("vec_id"), col("embedding"),
       transform(col("embedding"), x => x.cast("double")).as("e"))
     val withArrs = (0 until PQ_M).foldLeft(base)((df, m) =>
       df.withColumn(s"arr_$m", pqScores(col("e"), m)))
@@ -1137,7 +1137,7 @@ object SimQueries {
         element_at(col("embedding"), j + 1).cast("double") * lit(sign)
       }.reduceLeft(_ + _).as(s"p$m")
     }
-    tableFanned(s, dir, "embeddings", "vec_id").select(col("vec_id") +: cols: _*)
+    table(s, dir, "embeddings").select(col("vec_id") +: cols: _*)
   }
 
   val randomProjSql: String = {
@@ -1167,7 +1167,7 @@ object SimQueries {
     * column + a TakeOrdered C; the greedy loop runs on C rows, driver-
     * bounded by construction. */
   val mmrRerank: Q = (s, dir) => {
-    val base = tableFanned(s, dir, "embeddings", "vec_id")
+    val base = table(s, dir, "embeddings")
       .select(col("vec_id"),
         transform(col("embedding"), x => x.cast("double")).as("e"))
       .withColumn("amax", aggregate(col("e"), lit(0.0), (a, x) => greatest(a, abs(x))))
@@ -1270,7 +1270,7 @@ object SimQueries {
     * projection; the trained-rotation path swaps the literal matrix
     * for the PCA one. */
   val annOpq: Q = (s, dir) => {
-    val base = tableFanned(s, dir, "embeddings", "vec_id").select(col("vec_id"), col("embedding"),
+    val base = table(s, dir, "embeddings").select(col("vec_id"), col("embedding"),
       transform(col("embedding"), x => x.cast("double")).as("e"))
       .withColumn("er", array((0 until DIM).map(i =>
         lit(OpqSign(i).toDouble) * col("e").getItem(OpqPerm(i))): _*))
@@ -1367,7 +1367,7 @@ object SimQueries {
     * one hash. */
   val semDedup: Q = (s, dir) => {
     val scores = array((0 until NLIST).map(j => centScore(col("embedding"), j)): _*)
-    val assigned = tableFanned(s, dir, "embeddings", "vec_id")
+    val assigned = table(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding"), scores.as("s"))
       .select(col("vec_id"), col("embedding"),
         (array_position(col("s"), array_max(col("s"))) - 1).cast("int").as("cluster"))
@@ -1406,7 +1406,7 @@ object SimQueries {
     * groupBy — k·d rows out regardless of corpus size; iterating =
     * re-running with the emitted centroids as the next literals. */
   val kmeansStep: Q = (s, dir) => {
-    val e = tableFanned(s, dir, "embeddings", "vec_id")
+    val e = table(s, dir, "embeddings")
     // argmax via ONE scores array + first-occurrence position — the
     // s_ann_pq lesson: a LEAST/CASE comparison chain re-inlines every
     // score expression O(k²) times and blows the codegen budget (the
@@ -1457,7 +1457,7 @@ object SimQueries {
   val dectreeStump: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
     val D = 4
-    val e = tableFanned(s, dir, "embeddings", "vec_id")
+    val e = table(s, dir, "embeddings")
     val pairs = e.select(col("label"),
         explode(array((1 to D).map(d => struct(lit(d).as("dim"),
           floor(element_at(col("embedding"), d).cast("double") * 8).cast("long")
@@ -1532,7 +1532,7 @@ object SimQueries {
     import org.apache.spark.sql.expressions.Window
     val D = 4
     val W0 = 1048576L
-    val e = tableFanned(s, dir, "embeddings", "vec_id")
+    val e = table(s, dir, "embeddings")
       .select(col("vec_id"), (col("label") % 2).cast("int").as("y"), col("embedding"))
     val pairs = e.select(col("vec_id"), col("y"),
         explode(array((1 to D).map(d => struct(lit(d).as("dim"),
@@ -1665,7 +1665,7 @@ object SimQueries {
     * pass, one (dim)-keyed aggregation with conditional sums — 64
     * rows out at any corpus size. */
   val embedDrift: Q = (s, dir) => {
-    val cells = tableFanned(s, dir, "embeddings", "vec_id")
+    val cells = table(s, dir, "embeddings")
       .select(graft.text.TextOps.hashBucket(col("vec_id"), 2).cast("int").as("half"),
         posexplode(col("embedding")).as(Seq("pos", "v")))
       .select(col("half"), col("pos"),
@@ -1717,7 +1717,7 @@ object SimQueries {
   val featureGini: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
     val D = 8
-    val pairs = tableFanned(s, dir, "embeddings", "vec_id").select(col("label"),
+    val pairs = table(s, dir, "embeddings").select(col("label"),
         explode(array((1 to D).map(d => struct(lit(d).as("dim"),
           floor(element_at(col("embedding"), d).cast("double") * 8).cast("long")
             .as("v"))): _*)).as("p"))
@@ -1795,7 +1795,7 @@ object SimQueries {
     * (zero joins), one groupBy on (m, code, pos) — 512 output rows
     * regardless of corpus size. */
   val pqTrain: Q = (s, dir) => {
-    val base = tableFanned(s, dir, "embeddings", "vec_id").select(col("vec_id"),
+    val base = table(s, dir, "embeddings").select(col("vec_id"),
       transform(col("embedding"), x => x.cast("double")).as("e"))
     val withCodes = (0 until PQ_M).foldLeft(base)((df, m) =>
       df.withColumn(s"arr_$m", pqScores(col("e"), m))
@@ -1855,7 +1855,7 @@ object SimQueries {
     * the edge where a fold contains no rows of some label. */
   val kfoldCv: Q = (s, dir) => {
     val F = 4
-    val e = tableFanned(s, dir, "embeddings", "vec_id")
+    val e = table(s, dir, "embeddings")
       .select(col("vec_id"), col("label"), col("embedding"),
         graft.text.TextOps.hashBucket(col("vec_id"), F).cast("int").as("fold"))
     val cells = e.select(col("fold"), col("label"),
@@ -1945,7 +1945,7 @@ object SimQueries {
     * via a 5-row window at the end. */
   val permImportance: Q = (s, dir) => {
     val D = 4
-    val e = tableFanned(s, dir, "embeddings", "vec_id")
+    val e = table(s, dir, "embeddings")
     // class centroids over the FULL corpus, fixed-point means
     val dims = e.select(col("label"), posexplode(col("embedding")).as(Seq("pos", "v")))
       .select(col("label"), col("pos"),
@@ -2048,7 +2048,7 @@ object SimQueries {
     * corpus size, which is exactly why graph search beats scanning. */
   val greedySearch: Q = (s, dir) => {
     val Steps = 4
-    val e = tableFanned(s, dir, "embeddings", "vec_id")
+    val e = table(s, dir, "embeddings")
     val edges = Similarity.knnGraph(e, Planes, K)
       .select(col("qid").as("src"), col("cid").as("dst"))
     val emb = e.select(col("vec_id").as("nid"),
@@ -2128,7 +2128,7 @@ object SimQueries {
     * so the added index cost is ~12% — and the walk still touches
     * nq·k rows per hop, never the corpus. */
   val hnswSearch: Q = (s, dir) => {
-    val e = tableFanned(s, dir, "embeddings", "vec_id")
+    val e = table(s, dir, "embeddings")
     val edges0 = Similarity.knnGraph(e, Planes, K)
       .select(col("qid").as("src"), col("cid").as("dst"))
     val edges1 = Similarity.knnGraph(e.where(col("vec_id") % 8 === 0), Planes, K)
@@ -2225,7 +2225,7 @@ object SimQueries {
     * Output: pick order, id, and the max-cos-to-chosen at selection
     * time (the shrinking coverage radius). */
   val diversitySample: Q = (s, dir) => {
-    val emb = tableFanned(s, dir, "embeddings", "vec_id")
+    val emb = table(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding"))
     var chosen = Seq(NQ.toLong) // the fixed seed every graph gate uses
     val picks = Seq.newBuilder[(Int, Long, Double)]
@@ -2276,7 +2276,7 @@ object SimQueries {
     * over a DERIVED metric; the oracle rebuilds the same bins
     * relationally with a zero-filled label×bin grid. */
   val marginHist: Q = (s, dir) => {
-    val e = tableFanned(s, dir, "embeddings", "vec_id")
+    val e = table(s, dir, "embeddings")
     val dims = e.select(col("label"), posexplode(col("embedding")).as(Seq("pos", "v")))
       .select(col("label"), col("pos"),
         floor(col("v").cast("double") * CentScale).as("q"))
@@ -2423,7 +2423,7 @@ object SimQueries {
     * Queries whose label has no other member vanish (inner join) —
     * the honest "zero results under this filter" semantics. */
   val annFiltered: Q = (s, dir) => {
-    val e = tableFanned(s, dir, "embeddings", "vec_id")
+    val e = table(s, dir, "embeddings")
     val q = e.where(col("vec_id") < NQ)
       .select(col("vec_id").as("qid"), col("label").as("ql"), col("embedding").as("qe"))
     val scored = e.select(col("vec_id").as("cid"), col("label").as("cl"), col("embedding").as("ce"))
@@ -2460,7 +2460,7 @@ object SimQueries {
     * back over the corpus scan). Integer phase 1 + strict-fold cosine
     * phase 2 keep it bitwise across engines. */
   val annBinary: Q = (s, dir) => {
-    val e = tableFanned(s, dir, "embeddings", "vec_id")
+    val e = table(s, dir, "embeddings")
     def pack(lo: Int): org.apache.spark.sql.Column =
       aggregate(sequence(lit(lo), lit(lo + 31)), lit(0L),
         (acc, i) => acc * 2 + when(element_at(col("embedding"), i).cast("double") > 0.0, 1L)
@@ -2479,7 +2479,7 @@ object SimQueries {
       .select(col("qid"), col("cid"), col("hamming"))
     // rerank: fetch full vectors only for pool survivors (broadcast the
     // tiny pool over the corpus scan, then attach the 8 query vectors)
-    val qe = tableFanned(s, dir, "embeddings", "vec_id").where(col("vec_id") < NQ)
+    val qe = table(s, dir, "embeddings").where(col("vec_id") < NQ)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))
     val rer = e.select(col("vec_id").as("cid"), col("embedding").as("ce"))
       .join(broadcast(pool), Seq("cid"))
@@ -2534,7 +2534,7 @@ object SimQueries {
     * THE shape: cluster-partitioned codes column scan, nq·nprobe-
     * bounded probe, full vectors touched for PREF rows per query. */
   val annIvfPq: Q = (s, dir) => {
-    val base = tableFanned(s, dir, "embeddings", "vec_id").select(col("vec_id"), col("embedding"),
+    val base = table(s, dir, "embeddings").select(col("vec_id"), col("embedding"),
       transform(col("embedding"), x => x.cast("double")).as("e"))
     // corpus side: coarse cluster + PQ codes + code-norm sum
     val withArrs = (0 until PQ_M).foldLeft(base)((df, m) =>
@@ -2645,7 +2645,7 @@ object SimQueries {
     * bounded by construction. Counts are exact integers; lift/capture
     * are one fixed-shape division each. */
   val liftCurve: Q = (s, dir) => {
-    val e = tableFanned(s, dir, "embeddings", "vec_id")
+    val e = table(s, dir, "embeddings")
     val cent = e.where(col("label") === 0)
       .select(posexplode(col("embedding")).as(Seq("pos", "v")))
       .select(col("pos"), floor(col("v").cast("double") * CentScale).as("q"))
@@ -2719,7 +2719,7 @@ object SimQueries {
     * this gate reports whether that saving costs ranking quality.
     * Queries keep a row even at zero overlap (left join → hits 0). */
   val matryoshka: Q = (s, dir) => {
-    val e = tableFanned(s, dir, "embeddings", "vec_id")
+    val e = table(s, dir, "embeddings")
     val truth = annBrute(s, dir).select(col("qid"), col("cid"))
     val et = e.select(col("vec_id"), slice(col("embedding"), 1, MrlDim).as("emb16"))
     val q = et.where(col("vec_id") < NQ)

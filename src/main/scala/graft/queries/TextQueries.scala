@@ -1,6 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{IntegerType, LongType}
 import org.apache.spark.sql.functions._
 import graft.text.TextOps
 import Fixtures._
@@ -33,12 +34,8 @@ object TextQueries {
       |  list_filter(string_split(text, ' '), t -> t <> '') AS toks
       |FROM documents)""".stripMargin
 
-  // tableFanned: the tokenize/shingle/hash kernels downstream of this
-  // reader are the text family's hot path; a single-split documents
-  // file would serialize them all (see Fixtures.tableFanned — no-op at
-  // real scale).
   private def docs(s: SparkSession, dir: String): DataFrame =
-    tableFanned(s, dir, "documents", "doc_id").select(col("doc_id"), col("text"),
+    table(s, dir, "documents").select(col("doc_id"), col("text"),
       TextOps.tokens(col("text")).as("toks"))
 
   private val h60TokSql = TextOps.h60Sql("t.tok")
@@ -1003,95 +1000,60 @@ object TextQueries {
     * O(rounds) instead of 2^rounds re-derivations of the LSH pipeline
     * (each round references the previous survivor set TWICE — once per
     * endpoint). Output: every graph node, whether it survives four
-    * peels, and its degree within the surviving set. */
-  /** r12: same scale-adaptive split as [[bfsDist]] — the 4 fixed peel
-    * rounds each cost a join+agg+checkpoint of 1-2-task jobs at bench
-    * graph sizes. The local form replays the IDENTICAL 4 rounds
-    * (alive_i = nodes with >= KC sym-rows into alive_{i-1}) over the
-    * collected edge list; IterativeLocalPathsSpec pins both paths. */
+    * peels, and its degree within the surviving set.
+    *
+    * Scale-adaptive ([[graft.ops.LocalGraph]]): the local form replays
+    * the IDENTICAL 4 rounds (alive_i = nodes with >= KC sym-rows into
+    * alive_{i-1}) over the collected edge list. */
   val kcore: Q = (s, dir) => {
-    import graft.ops.Materialize.{checkpointFresh, collectLongs}
+    import graft.ops.LocalGraph
     val KC = 3
     val e = minhashLshStaged(s, dir).select(col("a"), col("b"))
-    val (eCk, eRdds) = checkpointFresh(e)
-    val localLimit = s.conf
-      .get("spark.graft.iter.localEdgeLimit", (1L << 21).toString).toLong
-    val bothLong = eCk.schema.fields.forall(
-      _.dataType == org.apache.spark.sql.types.LongType)
-    if (bothLong && eCk.count() <= localLimit) {
-      val chunks = collectLongs(eCk, 2)
-      eRdds.foreach(_.unpersist(blocking = false))
-      val idx = new scala.collection.mutable.LongMap[Int]()
-      val ids = new scala.collection.mutable.ArrayBuffer[Long]()
-      def nodeIdx(x: Long): Int = {
-        val ex = idx.getOrElse(x, -1)
-        if (ex >= 0) ex else { val i = ids.length; idx(x) = i; ids += x; i }
-      }
-      val adj = new scala.collection.mutable.ArrayBuffer[scala.collection.mutable.ArrayBuffer[Int]]()
-      def edge(u: Int, v: Int): Unit = {
-        while (adj.length <= math.max(u, v)) adj += new scala.collection.mutable.ArrayBuffer[Int]()
-        adj(u) += v; adj(v) += u
-      }
-      chunks.foreach { arr =>
-        var r = 0
-        while (r < arr.length) { edge(nodeIdx(arr(r)), nodeIdx(arr(r + 1))); r += 2 }
-      }
-      val n = ids.length
-      var alive = Array.fill(n)(true)
-      for (_ <- 1 to 4) {
-        val next = new Array[Boolean](n)
-        var v = 0
-        while (v < n) {
-          if (alive(v) && v < adj.length) {
-            var deg = 0
-            adj(v).foreach(u => if (alive(u)) deg += 1)
-            next(v) = deg >= KC
-          }
-          v += 1
+    val (eCk, eRdds) = graft.ops.Materialize.checkpointFresh(e)
+    LocalGraph.gate("kcore", eCk, eRdds, 2) match {
+      case Some(chunks) =>
+        val g = LocalGraph.graph(chunks, 2)
+        val adj = LocalGraph.undirected(g)
+        def aliveDeg(v: Int, alive: Array[Boolean]): Long = {
+          var deg = 0L
+          var k = adj.off(v)
+          while (k < adj.off(v + 1)) { if (alive(adj.nbr(k))) deg += 1; k += 1 }
+          deg
         }
-        alive = next
-      }
-      val out = new Array[org.apache.spark.sql.Row](n)
-      var v = 0
-      while (v < n) {
-        var deg = 0L
-        if (alive(v) && v < adj.length) adj(v).foreach(u => if (alive(u)) deg += 1)
-        out(v) = org.apache.spark.sql.Row(ids(v), if (alive(v)) 1 else 0, deg)
-        v += 1
-      }
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType, nullable = true),
-        org.apache.spark.sql.types.StructField("in_core",
-          org.apache.spark.sql.types.IntegerType, nullable = true),
-        org.apache.spark.sql.types.StructField("core_deg",
-          org.apache.spark.sql.types.LongType, nullable = true)))
-      s.createDataFrame(s.sparkContext.parallelize(out.toIndexedSeq,
-        math.max(1, math.min(s.sparkContext.defaultParallelism,
-          out.length / 65536 + 1))), schema)
-    } else {
-      val sym = eCk.unionByName(eCk.select(col("b").as("a"), col("a").as("b")))
-      val nodes = sym.select(col("a").as("v")).distinct()
-      var alive = nodes
-      for (_ <- 1 to 4) {
-        alive = sym
+        var alive = Array.fill(g.nodes)(true)
+        for (_ <- 1 to 4) {
+          val prev = alive
+          alive = Array.tabulate(g.nodes)(v => prev(v) && aliveDeg(v, prev) >= KC)
+        }
+        LocalGraph.frame(s, Array.tabulate(g.nodes) { v =>
+          Row(g.ids(v), if (alive(v)) 1 else 0, if (alive(v)) aliveDeg(v, alive) else 0L)
+        }, Seq("doc_id" -> LongType, "in_core" -> IntegerType, "core_deg" -> LongType))
+      case None =>
+        val sym = eCk.unionByName(eCk.select(col("b").as("a"), col("a").as("b")))
+        val nodes = sym.select(col("a").as("v")).distinct()
+        var alive = nodes
+        for (_ <- 1 to 4) {
+          alive = sym
+            .join(alive.select(col("v").as("a")), Seq("a"))
+            .join(alive.select(col("v").as("b")), Seq("b"))
+            .groupBy(col("a")).agg(count(lit(1)).as("deg"))
+            .where(col("deg") >= KC).select(col("a").as("v"))
+            .localCheckpoint(false)
+        }
+        val coreDeg = sym
           .join(alive.select(col("v").as("a")), Seq("a"))
           .join(alive.select(col("v").as("b")), Seq("b"))
-          .groupBy(col("a")).agg(count(lit(1)).as("deg"))
-          .where(col("deg") >= KC).select(col("a").as("v"))
-          .localCheckpoint(false)
-      }
-      val coreDeg = sym
-        .join(alive.select(col("v").as("a")), Seq("a"))
-        .join(alive.select(col("v").as("b")), Seq("b"))
-        .groupBy(col("a")).agg(count(lit(1)).as("core_deg"))
-        .select(col("a").as("v"), col("core_deg"))
-      nodes
-        .join(alive.withColumn("inc", lit(1)), Seq("v"), "left")
-        .join(coreDeg, Seq("v"), "left")
-        .select(col("v").as("doc_id"),
-          coalesce(col("inc"), lit(0)).as("in_core"),
-          coalesce(col("core_deg"), lit(0L)).as("core_deg"))
+          .groupBy(col("a")).agg(count(lit(1)).as("core_deg"))
+          .select(col("a").as("v"), col("core_deg"))
+        // the returned plan reads eCk (through `sym`) lazily, so no
+        // point inside this query can free its blocks: they live
+        // as long as the caller's plan
+        nodes
+          .join(alive.withColumn("inc", lit(1)), Seq("v"), "left")
+          .join(coreDeg, Seq("v"), "left")
+          .select(col("v").as("doc_id"),
+            coalesce(col("inc"), lit(0)).as("in_core"),
+            coalesce(col("core_deg"), lit(0L)).as("core_deg"))
     }
   }
 
@@ -2331,100 +2293,65 @@ object TextQueries {
     * the output in both engines. */
   private val BfsMaxHops = 6
 
-  /** r12 (guide §1.2/§2, the connectedComponents treatment extended):
-    * the BFS loop is pure orchestration at small graph sizes — each
-    * hop was 2 eager checkpoints + a count over 1-2-task jobs. Under
-    * `spark.graft.iter.localEdgeLimit` (default 2^21 edges, primitive
-    * collect — same heap contract as the CC gate) the loop runs as a
-    * driver-side BFS over flat long arrays; above it, the distributed
-    * frontier loop is unchanged. Hop values are identical by
-    * construction (min-hop BFS both ways, same seed rule, same cap);
-    * IterativeLocalPathsSpec pins both paths bit-for-bit. */
+  /** Scale-adaptive ([[graft.ops.LocalGraph]]): at or under the size
+    * gate the hops run as a driver-side BFS; hop values are identical by
+    * construction (min-hop BFS both ways, same seed rule, same cap). */
   val bfsDist: Q = (s, dir) => {
-    import graft.ops.Materialize.{checkpointFresh, collectLongs}
+    import graft.ops.LocalGraph
+    import graft.ops.Materialize.checkpointFresh
     val e = minhashLshStaged(s, dir).select(col("a"), col("b"))
     val (eCk, eRdds) = checkpointFresh(e)
-    val localLimit = s.conf
-      .get("spark.graft.iter.localEdgeLimit", (1L << 21).toString).toLong
-    val bothLong = eCk.schema.fields.forall(
-      _.dataType == org.apache.spark.sql.types.LongType)
-    if (bothLong && eCk.count() <= localLimit) {
-      val chunks = collectLongs(eCk, 2)
-      eRdds.foreach(_.unpersist(blocking = false))
-      // index the node universe; adjacency over both directions
-      val idx = new scala.collection.mutable.LongMap[Int]()
-      val ids = new scala.collection.mutable.ArrayBuffer[Long]()
-      def nodeIdx(x: Long): Int = {
-        val ex = idx.getOrElse(x, -1)
-        if (ex >= 0) ex else { val i = ids.length; idx(x) = i; ids += x; i }
-      }
-      val adj = new scala.collection.mutable.ArrayBuffer[scala.collection.mutable.ArrayBuffer[Int]]()
-      def edge(u: Int, v: Int): Unit = {
-        while (adj.length <= math.max(u, v)) adj += new scala.collection.mutable.ArrayBuffer[Int]()
-        adj(u) += v; adj(v) += u
-      }
-      chunks.foreach { arr =>
-        var r = 0
-        while (r < arr.length) { edge(nodeIdx(arr(r)), nodeIdx(arr(r + 1))); r += 2 }
-      }
-      val distA = Array.fill(ids.length)(-1)
-      var frontier = new scala.collection.mutable.ArrayBuffer[Int]()
-      var i = 0
-      while (i < ids.length) {
-        if (ids(i) % 5 == 0) { distA(i) = 0; frontier += i }
-        i += 1
-      }
-      var hop = 1
-      while (hop <= BfsMaxHops && frontier.nonEmpty) {
-        val next = new scala.collection.mutable.ArrayBuffer[Int]()
-        frontier.foreach { u =>
-          if (u < adj.length) adj(u).foreach { v =>
-            if (distA(v) < 0) { distA(v) = hop; next += v }
+    LocalGraph.gate("bfsDist", eCk, eRdds, 2) match {
+      case Some(chunks) =>
+        val g = LocalGraph.graph(chunks, 2)
+        val adj = LocalGraph.undirected(g)
+        val distA = Array.fill(g.nodes)(-1)
+        var frontier = (0 until g.nodes).filter(i => g.ids(i) % 5 == 0)
+        frontier.foreach(distA(_) = 0)
+        var hop = 1
+        while (hop <= BfsMaxHops && frontier.nonEmpty) {
+          val next = scala.collection.mutable.ArrayBuffer[Int]()
+          frontier.foreach { u =>
+            var k = adj.off(u)
+            while (k < adj.off(u + 1)) {
+              val v = adj.nbr(k)
+              if (distA(v) < 0) { distA(v) = hop; next += v }
+              k += 1
+            }
           }
+          frontier = next.toIndexedSeq; hop += 1
         }
-        frontier = next; hop += 1
-      }
-      val out = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
-      i = 0
-      while (i < ids.length) {
-        if (distA(i) >= 0) out += org.apache.spark.sql.Row(ids(i), distA(i))
-        i += 1
-      }
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType, nullable = true),
-        org.apache.spark.sql.types.StructField("dist",
-          org.apache.spark.sql.types.IntegerType, nullable = true)))
-      s.createDataFrame(s.sparkContext.parallelize(out.toIndexedSeq,
-        math.max(1, math.min(s.sparkContext.defaultParallelism,
-          out.length / 65536 + 1))), schema)
-    } else {
-      // the edge list is re-read every round: the eager checkpoint
-      // above serves every hop
-      val sym = eCk.unionByName(eCk.select(col("b").as("a"), col("a").as("b")))
-      val seeds = sym.select(col("a").as("v")).distinct()
-        .where(col("v") % 5 === 0).withColumn("d", lit(0))
-      var (dist, distRdds) = checkpointFresh(seeds)
-      var (frontier, frontRdds) = checkpointFresh(dist)
-      var hop = 1
-      var frontierSize = frontier.count()
-      while (hop <= BfsMaxHops && frontierSize > 0) {
-        val cand = frontier.join(sym.select(col("a").as("v"), col("b")), Seq("v"))
-          .select(col("b").as("v")).distinct()
-          .join(dist, Seq("v"), "left_anti")
-          .withColumn("d", lit(hop))
-        val (nf, nfRdds) = checkpointFresh(cand)
-        val (nd, ndRdds) = checkpointFresh(dist.unionByName(nf))
-        frontierSize = nf.count()
-        (distRdds ++ frontRdds).foreach(_.unpersist(blocking = false))
-        distRdds = ndRdds; frontRdds = nfRdds
-        dist = nd; frontier = nf
-        hop += 1
-      }
-      // the returned plan reads only the dist checkpoint — free the
-      // edge-set blocks, the largest frame in the query (r12 review)
-      eRdds.foreach(_.unpersist(blocking = false))
-      dist.select(col("v").as("doc_id"), col("d").cast("int").as("dist"))
+        LocalGraph.frame(s, (0 until g.nodes).filter(distA(_) >= 0)
+          .map(i => Row(g.ids(i), distA(i))).toArray,
+          Seq("doc_id" -> LongType, "dist" -> IntegerType))
+      case None =>
+        // the edge list is re-read every round: the eager checkpoint
+        // above serves every hop
+        val sym = eCk.unionByName(eCk.select(col("b").as("a"), col("a").as("b")))
+        val seeds = sym.select(col("a").as("v")).distinct()
+          .where(col("v") % 5 === 0).withColumn("d", lit(0))
+        var (dist, distRdds) = checkpointFresh(seeds)
+        var (frontier, frontRdds) = checkpointFresh(dist)
+        var hop = 1
+        var frontierSize = frontier.count()
+        while (hop <= BfsMaxHops && frontierSize > 0) {
+          val cand = frontier.join(sym.select(col("a").as("v"), col("b")), Seq("v"))
+            .select(col("b").as("v")).distinct()
+            .join(dist, Seq("v"), "left_anti")
+            .withColumn("d", lit(hop))
+          val (nf, nfRdds) = checkpointFresh(cand)
+          val (nd, ndRdds) = checkpointFresh(dist.unionByName(nf))
+          frontierSize = nf.count()
+          (distRdds ++ frontRdds).foreach(_.unpersist(blocking = false))
+          distRdds = ndRdds; frontRdds = nfRdds
+          dist = nd; frontier = nf
+          hop += 1
+        }
+        // the returned plan reads only the dist checkpoint — free the
+        // edge-set blocks, the largest frame in the query, and the last
+        // (empty) frontier
+        (eRdds ++ frontRdds).foreach(_.unpersist(blocking = false))
+        dist.select(col("v").as("doc_id"), col("d").cast("int").as("dist"))
     }
   }
 
@@ -2458,113 +2385,76 @@ object TextQueries {
     * to d < cap so the semantics stay aligned even at the boundary. */
   private val SsspCap = 100L
 
-  /** r12: same scale-adaptive split as [[bfsDist]]. The local form is
-    * multi-source Dijkstra with the identical d < SsspCap relaxation
-    * cap; with strictly positive integer weights every prefix of a
-    * below-cap path is itself below-cap, so capped Dijkstra and the
-    * capped frontier Bellman-Ford reach the identical fixed point
-    * (min path cost per reachable node, nodes at >= cap excluded). */
+  /** Scale-adaptive like [[bfsDist]]. The local form is multi-source
+    * Dijkstra with the identical d < SsspCap relaxation cap; with
+    * strictly positive integer weights every prefix of a below-cap path
+    * is itself below-cap, so capped Dijkstra and the capped frontier
+    * Bellman-Ford reach the identical fixed point (min path cost per
+    * reachable node, nodes at >= cap excluded). */
   val sssp: Q = (s, dir) => {
-    import graft.ops.Materialize.{checkpointFresh, collectLongs}
+    import graft.ops.LocalGraph
+    import graft.ops.Materialize.checkpointFresh
     val pw = shinglePairsFront(s, dir).select(col("a"), col("b"),
       (lit(11L) - expr("(10L * inter) div (na + nb - inter)")).as("w"))
     val (pwCk, pwRdds) = checkpointFresh(pw)
-    val localLimit = s.conf
-      .get("spark.graft.iter.localEdgeLimit", (1L << 21).toString).toLong
-    val bothLong = pwCk.schema.fields.forall(
-      _.dataType == org.apache.spark.sql.types.LongType)
-    if (bothLong && pwCk.count() <= localLimit) {
-      val chunks = collectLongs(pwCk, 3)
-      pwRdds.foreach(_.unpersist(blocking = false))
-      val idx = new scala.collection.mutable.LongMap[Int]()
-      val ids = new scala.collection.mutable.ArrayBuffer[Long]()
-      def nodeIdx(x: Long): Int = {
-        val ex = idx.getOrElse(x, -1)
-        if (ex >= 0) ex else { val i = ids.length; idx(x) = i; ids += x; i }
-      }
-      val adjN = new scala.collection.mutable.ArrayBuffer[scala.collection.mutable.ArrayBuffer[Int]]()
-      val adjW = new scala.collection.mutable.ArrayBuffer[scala.collection.mutable.ArrayBuffer[Long]]()
-      def grow(n: Int): Unit = while (adjN.length <= n) {
-        adjN += new scala.collection.mutable.ArrayBuffer[Int]()
-        adjW += new scala.collection.mutable.ArrayBuffer[Long]()
-      }
-      chunks.foreach { arr =>
-        var r = 0
-        while (r < arr.length) {
-          val u = nodeIdx(arr(r)); val v = nodeIdx(arr(r + 1)); val w = arr(r + 2)
-          grow(math.max(u, v))
-          adjN(u) += v; adjW(u) += w
-          adjN(v) += u; adjW(v) += w
-          r += 3
+    LocalGraph.gate("sssp", pwCk, pwRdds, 3) match {
+      case Some(chunks) =>
+        val g = LocalGraph.graph(chunks, 3, weighted = true)
+        val adj = LocalGraph.undirected(g)
+        val distA = Array.fill(g.nodes)(Long.MaxValue)
+        val pq = new java.util.PriorityQueue[(Long, Int)](11,
+          new java.util.Comparator[(Long, Int)] {
+            def compare(x: (Long, Int), y: (Long, Int)): Int =
+              java.lang.Long.compare(x._1, y._1)
+          })
+        var i = 0
+        while (i < g.nodes) {
+          if (g.ids(i) % 7 == 0) { distA(i) = 0L; pq.add((0L, i)) }
+          i += 1
         }
-      }
-      val distA = Array.fill(ids.length)(Long.MaxValue)
-      val pq = new java.util.PriorityQueue[(Long, Int)](11,
-        new java.util.Comparator[(Long, Int)] {
-          def compare(x: (Long, Int), y: (Long, Int)): Int =
-            java.lang.Long.compare(x._1, y._1)
-        })
-      var i = 0
-      while (i < ids.length) {
-        if (ids(i) % 7 == 0) { distA(i) = 0L; pq.add((0L, i)) }
-        i += 1
-      }
-      while (!pq.isEmpty) {
-        val (d, u) = pq.poll()
-        if (d == distA(u) && u < adjN.length) {
-          val ns = adjN(u); val ws = adjW(u)
-          var j = 0
-          while (j < ns.length) {
-            val nd = d + ws(j)
-            if (nd < SsspCap && nd < distA(ns(j))) {
-              distA(ns(j)) = nd; pq.add((nd, ns(j)))
+        while (!pq.isEmpty) {
+          val (d, u) = pq.poll()
+          if (d == distA(u)) {
+            var k = adj.off(u)
+            while (k < adj.off(u + 1)) {
+              val v = adj.nbr(k); val nd = d + adj.weight(k)
+              if (nd < SsspCap && nd < distA(v)) { distA(v) = nd; pq.add((nd, v)) }
+              k += 1
             }
-            j += 1
           }
         }
-      }
-      val out = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
-      i = 0
-      while (i < ids.length) {
-        if (distA(i) < SsspCap) out += org.apache.spark.sql.Row(ids(i), distA(i).toInt)
-        i += 1
-      }
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType, nullable = true),
-        org.apache.spark.sql.types.StructField("dist",
-          org.apache.spark.sql.types.IntegerType, nullable = true)))
-      s.createDataFrame(s.sparkContext.parallelize(out.toIndexedSeq,
-        math.max(1, math.min(s.sparkContext.defaultParallelism,
-          out.length / 65536 + 1))), schema)
-    } else {
-      val sym = pwCk.unionByName(pwCk.select(col("b").as("a"), col("a").as("b"), col("w")))
-      val seeds = sym.select(col("a").as("v")).distinct()
-        .where(col("v") % 7 === 0).withColumn("d", lit(0L))
-      var (dist, distRdds) = checkpointFresh(seeds)
-      var (front, frontRdds) = checkpointFresh(seeds)
-      var frontierSize = front.count()
-      while (frontierSize > 0) {
-        val relax = front.join(sym, col("v") === col("a"))
-          .select(col("b").as("v"), (col("d") + col("w")).as("nd"))
-          .where(col("nd") < SsspCap)
-          .groupBy(col("v")).agg(min(col("nd")).as("nd"))
-        val improved = relax
-          .join(dist.withColumnRenamed("d", "d0"), Seq("v"), "left")
-          .where(col("d0").isNull || col("nd") < col("d0"))
-          .select(col("v"), col("nd").as("d"))
-        val (nf, nfRdds) = checkpointFresh(improved)
-        val (nd, ndRdds) = checkpointFresh(
-          dist.unionByName(nf).groupBy(col("v")).agg(min(col("d")).as("d")))
-        frontierSize = nf.count()
-        (distRdds ++ frontRdds).foreach(_.unpersist(blocking = false))
-        distRdds = ndRdds; frontRdds = nfRdds
-        dist = nd; front = nf
-      }
-      // free the weighted edge set — the returned plan reads only dist
-      pwRdds.foreach(_.unpersist(blocking = false))
-      dist.where(col("d") < SsspCap)
-        .select(col("v").as("doc_id"), col("d").cast("int").as("dist"))
+        LocalGraph.frame(s, (0 until g.nodes).filter(distA(_) < SsspCap)
+          .map(i => Row(g.ids(i), distA(i).toInt)).toArray,
+          Seq("doc_id" -> LongType, "dist" -> IntegerType))
+      case None =>
+        val sym = pwCk.unionByName(pwCk.select(col("b").as("a"), col("a").as("b"), col("w")))
+        val seeds = sym.select(col("a").as("v")).distinct()
+          .where(col("v") % 7 === 0).withColumn("d", lit(0L))
+        var (dist, distRdds) = checkpointFresh(seeds)
+        var (front, frontRdds) = checkpointFresh(seeds)
+        var frontierSize = front.count()
+        while (frontierSize > 0) {
+          val relax = front.join(sym, col("v") === col("a"))
+            .select(col("b").as("v"), (col("d") + col("w")).as("nd"))
+            .where(col("nd") < SsspCap)
+            .groupBy(col("v")).agg(min(col("nd")).as("nd"))
+          val improved = relax
+            .join(dist.withColumnRenamed("d", "d0"), Seq("v"), "left")
+            .where(col("d0").isNull || col("nd") < col("d0"))
+            .select(col("v"), col("nd").as("d"))
+          val (nf, nfRdds) = checkpointFresh(improved)
+          val (nd, ndRdds) = checkpointFresh(
+            dist.unionByName(nf).groupBy(col("v")).agg(min(col("d")).as("d")))
+          frontierSize = nf.count()
+          (distRdds ++ frontRdds).foreach(_.unpersist(blocking = false))
+          distRdds = ndRdds; frontRdds = nfRdds
+          dist = nd; front = nf
+        }
+        // free the weighted edge set and the last (empty) frontier — the
+        // returned plan reads only dist
+        (pwRdds ++ frontRdds).foreach(_.unpersist(blocking = false))
+        dist.where(col("d") < SsspCap)
+          .select(col("v").as("doc_id"), col("d").cast("int").as("dist"))
     }
   }
 

@@ -383,21 +383,13 @@ object TextOps {
     * Deterministic: the component label IS the minimum node id.
     * Returns (node, cluster), one row per input-edge endpoint.
     *
-    * SCALE-ADAPTIVE EXECUTION (r11, guide §1.2/§5; hardened r12): the
-    * normalized distinct edge set — self-loops kept, so it carries the
-    * whole node universe — is materialized (and counted, one job over
-    * cached blocks) before the loop either way. When the count is at or
-    * under `spark.graft.cc.localEdgeLimit` (default 2^21; collected as
-    * primitive longs — see the heap math at the gate), the
-    * star loop collapses to a single driver-side union-find: the
-    * distributed loop's cost at that size is pure orchestration — the
-    * sf0.1 profile showed 70-130 serialized 1-2-task jobs of 30-400 ms
-    * each per CC gate, against milliseconds of actual union-find work —
-    * while past the limit (the sf10/sf100 dedup graphs, ~replica² edge
-    * growth) the loop runs exactly as before. This is the same
-    * adapt-from-actual-size contract AQE applies to join strategies,
-    * applied to the iteration driver; the label VALUES are identical
-    * by construction (min node id per component both ways). */
+    * SCALE-ADAPTIVE EXECUTION: the normalized distinct edge set —
+    * self-loops kept, so it carries the whole node universe — is
+    * materialized before the loop either way; at or under the
+    * [[graft.ops.LocalGraph]] size gate the star loop collapses to one
+    * driver-side union-find, past it the loop runs as below. The label
+    * VALUES are identical by construction (min node id per component
+    * both ways). */
   def connectedComponents(edges: org.apache.spark.sql.DataFrame,
                           maxIter: Int = 25): org.apache.spark.sql.DataFrame = {
     import graft.ops.Materialize.checkpointFresh
@@ -420,8 +412,6 @@ object TextOps {
     val (e0, e0Rdds) = checkpointFresh(
       edges.select(least(col("a"), col("b")).as("a"),
         greatest(col("a"), col("b")).as("b")).distinct())
-    val nodes = e0.select(col("a").as("node"))
-      .unionByName(e0.select(col("b").as("node"))).distinct()
     // one phase: hang the selected neighbors of each center u under
     // m = min(neighborhood ∪ u). Every emitted edge is (m, v) with
     // m < v, so the (a < b) normalization is free.
@@ -442,110 +432,74 @@ object TextOps {
               .select(col("m").as("a"), col("u").as("b")))
       kept.distinct()
     }
-    val spark = edges.sparkSession
-    val localLimit = spark.conf
-      .get("spark.graft.cc.localEdgeLimit", (1L << 21).toString).toLong
-    val bothLong = e0.schema.fields.forall(
-      _.dataType == org.apache.spark.sql.types.LongType)
-    // r12 (VERDICT #10 / ADVICE #1): the gate now counts the
-    // SELF-LOOP-INCLUSIVE normalized set, so the node universe is
-    // bounded by 2x the gated count — a self-loop-heavy input can no
-    // longer pass a small non-self edge count while collecting an
-    // unbounded node set. The collect is PRIMITIVE (flat long[] chunks,
-    // 16 bytes/edge), not boxed Rows (~10x that). Real heap math at
-    // the 2^21 default: 32 MB of edge longs + <=4.2M-entry LongMap
-    // (~100 MB backing) + ids/parent (~50 MB) + output Rows for <=4.2M
-    // nodes (~180 MB transient) — worst case under 400 MB against the
-    // 8 GB driver; the former 2^22-of-boxed-Rows default was ~1 GB+.
-    if (bothLong && e0.count() <= localLimit) {
-      // driver union-find (path halving) over the cached edge blocks
-      val chunks = graft.ops.Materialize.collectLongs(e0, 2)
-      e0Rdds.foreach(_.unpersist(blocking = false))
-      val nEst = chunks.iterator.map(_.length / 2).sum
-      val idx = new scala.collection.mutable.LongMap[Int](nEst * 2)
-      val ids = new scala.collection.mutable.ArrayBuffer[Long](nEst)
-      val parent = new scala.collection.mutable.ArrayBuffer[Int](nEst)
-      def nodeIdx(x: Long): Int = {
-        val existing = idx.getOrElse(x, -1)
-        if (existing >= 0) existing
-        else { val i = ids.length; idx(x) = i; ids += x; parent += i; i }
-      }
-      def find(x0: Int): Int = {
-        var x = x0
-        while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
-        x
-      }
-      chunks.foreach { arr =>
-        var r = 0
-        while (r < arr.length) {
-          val ia = nodeIdx(arr(r)); val ib = nodeIdx(arr(r + 1))
-          // a self-loop row only registers its node in the universe
-          if (arr(r) != arr(r + 1)) {
-            val ra = find(ia); val rb = find(ib)
-            if (ra != rb) parent(rb) = ra
-          }
-          r += 2
+    graft.ops.LocalGraph.gate("connectedComponents", e0, e0Rdds, 2) match {
+      case Some(chunks) =>
+        // union-find with path halving; a self-loop only registers its node
+        val g = graft.ops.LocalGraph.graph(chunks, 2)
+        val parent = Array.range(0, g.nodes)
+        def find(x0: Int): Int = {
+          var x = x0
+          while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+          x
         }
-      }
-      // label of a component = min node id over its members
-      val minOf = new Array[Long](ids.length)
-      java.util.Arrays.fill(minOf, Long.MaxValue)
-      var i = 0
-      while (i < ids.length) {
-        val root = find(i)
-        if (ids(i) < minOf(root)) minOf(root) = ids(i)
-        i += 1
-      }
-      val out = new Array[org.apache.spark.sql.Row](ids.length)
-      i = 0
-      while (i < ids.length) {
-        out(i) = org.apache.spark.sql.Row(ids(i), minOf(find(i)))
-        i += 1
-      }
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("node",
-          org.apache.spark.sql.types.LongType, nullable = true),
-        org.apache.spark.sql.types.StructField("cluster",
-          org.apache.spark.sql.types.LongType, nullable = true)))
-      val slices = math.max(1, math.min(spark.sparkContext.defaultParallelism,
-        out.length / 65536 + 1))
-      return spark.createDataFrame(
-        spark.sparkContext.parallelize(out.toIndexedSeq, slices), schema)
-    }
+        var k = 0
+        while (k < g.src.length) {
+          val ra = find(g.src(k)); val rb = find(g.dst(k))
+          if (ra != rb) parent(rb) = ra
+          k += 1
+        }
+        // label of a component = min node id over its members
+        val minOf = Array.fill(g.nodes)(Long.MaxValue)
+        var i = 0
+        while (i < g.nodes) {
+          val root = find(i)
+          if (g.ids(i) < minOf(root)) minOf(root) = g.ids(i)
+          i += 1
+        }
+        graft.ops.LocalGraph.frame(edges.sparkSession,
+          Array.tabulate(g.nodes)(i => org.apache.spark.sql.Row(g.ids(i), minOf(find(i)))),
+          Seq("node" -> org.apache.spark.sql.types.LongType,
+            "cluster" -> org.apache.spark.sql.types.LongType))
+      case None =>
+        var e = e0.where(col("a") =!= col("b"))
+        var prevRdds: Seq[org.apache.spark.rdd.RDD[_]] = Nil
 
-    var e = e0.where(col("a") =!= col("b"))
-    var prevRdds: Seq[org.apache.spark.rdd.RDD[_]] = Nil
-
-    var changed = 1L
-    var it = 0
-    while (changed > 0 && it < maxIter) {
-      val (e2, r2) = checkpointFresh(star(star(e, large = true), large = false))
-      // the star map's fixed points are exactly the disjoint
-      // min-centered star sets, and (with a < b normalization) E is one
-      // iff every b has a unique parent AND no node is both parent and
-      // child (depth-1 forest whose root is its star's minimum). Testing
-      // THAT on e2 alone detects convergence the round it happens — no
-      // edge-set diff against the previous round, no verification round.
-      val stat = e2.agg(count(lit(1)).as("n"), countDistinct(col("b")).as("nb")).first()
-      changed =
-        if (stat.getLong(0) != stat.getLong(1)) 1L
-        else e2.select(col("a"))
-          .join(e2.select(col("b").as("a")), Seq("a"), "left_semi").count()
-      prevRdds.foreach(_.unpersist(blocking = false)) // superseded round's blocks
-      prevRdds = r2
-      e = e2
-      it += 1
+        var changed = 1L
+        var it = 0
+        while (changed > 0 && it < maxIter) {
+          val (e2, r2) = checkpointFresh(star(star(e, large = true), large = false))
+          // the star map's fixed points are exactly the disjoint
+          // min-centered star sets, and (with a < b normalization) E is one
+          // iff every b has a unique parent AND no node is both parent and
+          // child (depth-1 forest whose root is its star's minimum). Testing
+          // THAT on e2 alone detects convergence the round it happens — no
+          // edge-set diff against the previous round, no verification round.
+          val stat = e2.agg(count(lit(1)).as("n"), countDistinct(col("b")).as("nb")).first()
+          changed =
+            if (stat.getLong(0) != stat.getLong(1)) 1L
+            else e2.select(col("a"))
+              .join(e2.select(col("b").as("a")), Seq("a"), "left_semi").count()
+          prevRdds.foreach(_.unpersist(blocking = false)) // superseded round's blocks
+          prevRdds = r2
+          e = e2
+          it += 1
+        }
+        if (changed > 0)
+          org.slf4j.LoggerFactory.getLogger("graft.text.TextOps").warn(
+            s"connectedComponents exited at maxIter=$maxIter with the edge set still contracting — " +
+              "clusters may be under-merged; raise maxIter")
+        // at the fixed point stars are disjoint (one center per node); the
+        // min-agg only matters on a maxIter bail, where it keeps the output
+        // one row per node
+        val centers = e.groupBy(col("b").as("node")).agg(min(col("a")).as("cluster"))
+        val nodes = e0.select(col("a").as("node"))
+          .unionByName(e0.select(col("b").as("node"))).distinct()
+        // the returned plan reads e0 (through `nodes`) and the last
+        // round's blocks lazily, so no point inside this function can
+        // free them: they live as long as the caller's plan
+        nodes.join(centers, Seq("node"), "left")
+          .select(col("node"), coalesce(col("cluster"), col("node")).as("cluster"))
     }
-    if (changed > 0)
-      org.slf4j.LoggerFactory.getLogger("graft.text.TextOps").warn(
-        s"connectedComponents exited at maxIter=$maxIter with the edge set still contracting — " +
-          "clusters may be under-merged; raise maxIter")
-    // at the fixed point stars are disjoint (one center per node); the
-    // min-agg only matters on a maxIter bail, where it keeps the output
-    // one row per node
-    val centers = e.groupBy(col("b").as("node")).agg(min(col("a")).as("cluster"))
-    nodes.join(centers, Seq("node"), "left")
-      .select(col("node"), coalesce(col("cluster"), col("node")).as("cluster"))
   }
 
   /** Dedup survivorship from a PRE-COMPUTED cluster table — the

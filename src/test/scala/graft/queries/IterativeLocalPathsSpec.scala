@@ -3,11 +3,9 @@ package graft.queries
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestBase.spark
 
-/** r12: the scale-adaptive local execution of the remaining iterative
-  * gates (t_sssp, t_bfs_dist, r_flow_accum — the
-  * connectedComponents treatment extended per the r11 verdict). Each
-  * test runs the SAME query through the driver-local path (default
-  * `spark.graft.iter.localEdgeLimit`) and the distributed loop
+/** The scale-adaptive local execution of every iterative gate
+  * ([[graft.ops.LocalGraph]]). Each test runs the SAME query through
+  * the driver-local path (default size gate) and the distributed loop
   * (limit = 0) and asserts bit-for-bit equal result sets, so the two
   * executions can never drift. The oracle gate then pins the shared
   * semantics against DuckDB. */
@@ -25,9 +23,15 @@ class IterativeLocalPathsSpec extends AnyFunSuite {
     val s2 = spark.newSession()
     def rows() = fn(s2, sf).collect().map(_.toSeq).toSet
     val local = rows() // default limit: small graphs take the local path
-    s2.conf.set("spark.graft.iter.localEdgeLimit", "0")
+    s2.conf.set(graft.ops.LocalGraph.LimitKey, "0")
     val dist = rows()
     (local, dist)
+  }
+
+  test("t_dedup_clusters: local union-find == distributed star contraction") {
+    val (local, dist) = runBoth("t_dedup_clusters")
+    assert(local.nonEmpty)
+    assert(local == dist)
   }
 
   test("t_sssp: local capped Dijkstra == distributed capped Bellman-Ford") {
@@ -78,7 +82,7 @@ class IterativeLocalPathsSpec extends AnyFunSuite {
       graft.ops.Raster.flowAccumulation(chain, maxIter = 3)
         .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     val local = run()
-    s2.conf.set("spark.graft.iter.localEdgeLimit", "0")
+    s2.conf.set(graft.ops.LocalGraph.LimitKey, "0")
     val dist = run()
     assert(local == dist)
     // the full run (default maxIter) finishes the chain: sink holds 7

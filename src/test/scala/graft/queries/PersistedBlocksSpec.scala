@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.SparkSession
 import graft.SparkTestBase.spark
 
 /** r12 unpersist discipline (r11 verdict what's-wrong #3): eager
@@ -20,13 +21,18 @@ class PersistedBlocksSpec extends AnyFunSuite {
 
   private val sf = "/root/testdata/sf0.001"
 
-  /** Residual persistent-RDD growth of one extra query invocation. */
-  private def residual(name: String): Int = {
+  /** Residual persistent-RDD growth of one extra query invocation on
+    * session `s`. The result frame is held until the count is read:
+    * the context cleaner frees the blocks of an unreachable plan, so a
+    * GC in between would otherwise hide part of the residual. */
+  private def residual(name: String, s: SparkSession = spark): Int = {
     val fn = graft.SparkEntry.queries(name)
-    fn(spark, sf).count() // warm: fronts built, first-run residue paid
+    fn(s, sf).count() // warm: fronts built, first-run residue paid
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    fn(spark, sf).count()
+    val df = fn(s, sf)
+    df.count()
     val after = spark.sparkContext.getPersistentRDDs.keySet
+    java.lang.ref.Reference.reachabilityFence(df)
     (after -- before).size
   }
 
@@ -88,5 +94,28 @@ class PersistedBlocksSpec extends AnyFunSuite {
     graft.text.TextOps.connectedComponents(edges).count()
     val after = spark.sparkContext.getPersistentRDDs.keySet
     assert((after -- before).isEmpty)
+  }
+
+  test("the distributed-path iterative gates keep their pinned residual") {
+    // exactly the blocks each returned plan reads: CC its normalized
+    // edge set and last round, k-core its edge set and four lazily
+    // checkpointed survivor rounds (both plans read the edge set
+    // lazily, so no point inside them can free it), BFS/SSSP the
+    // distance table, flow accumulation its four rounds' frontiers and
+    // partial sums, basin and cost distance their last round. A block
+    // no plan reads must be freed before the gate returns: left to the
+    // context cleaner, it would make this count depend on GC timing.
+    val s2 = spark.newSession() // conf isolation — see IterativeLocalPathsSpec
+    s2.conf.set(graft.ops.LocalGraph.LimitKey, "0")
+    val want = Map("t_dedup_clusters" -> 2, "t_kcore" -> 5, "t_bfs_dist" -> 1,
+      "t_sssp" -> 1, "r_flow_accum" -> 5, "r_basin_label" -> 1, "r_cost_distance" -> 1)
+    val sc = spark.sparkContext
+    val start = sc.getPersistentRDDs.keySet
+    // free what the runs left, now: a later size check must not see the
+    // context cleaner collect it
+    try assert(want.map { case (name, _) => name -> residual(name, s2) } == want)
+    finally sc.getPersistentRDDs.foreach { case (id, rdd) =>
+      if (!start(id)) rdd.unpersist(blocking = true)
+    }
   }
 }

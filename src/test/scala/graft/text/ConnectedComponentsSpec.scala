@@ -52,15 +52,18 @@ class ConnectedComponentsSpec extends AnyFunSuite {
 
   test("local union-find path and distributed star loop agree bit-for-bit") {
     // chains, a triangle, duplicate + reversed edges, and a node that
-    // appears ONLY in a self-loop (owes an output row labeled by itself)
-    val edges = (Seq((2L, 1L), (2L, 3L), (4L, 3L), (10L, 11L), (11L, 10L),
+    // appears ONLY in a self-loop (owes an output row labeled by itself).
+    // The conf flip goes to a CHILD session (see IterativeLocalPathsSpec)
+    // and the edges are built in it: the gate reads edges.sparkSession.
+    val s2 = spark.newSession()
+    val edges = s2.createDataFrame(Seq((2L, 1L), (2L, 3L), (4L, 3L), (10L, 11L), (11L, 10L),
       (20L, 21L), (21L, 22L), (22L, 20L), (30L, 30L)) ++
       (100L until 160L).map(i => (i + 1, i))).toDF("a", "b")
     def run(): Map[Long, Long] =
       TextOps.connectedComponents(edges).as[(Long, Long)].collect().toMap
     val local = run() // default limit: takes the driver union-find path
-    spark.conf.set("spark.graft.cc.localEdgeLimit", "0")
-    val dist = try run() finally spark.conf.unset("spark.graft.cc.localEdgeLimit")
+    s2.conf.set(graft.ops.LocalGraph.LimitKey, "0")
+    val dist = run()
     assert(local == dist)
     assert(local(30L) == 30L && local(4L) == 1L && local(160L) == 100L)
   }
