@@ -1,17 +1,27 @@
 package graft.sources
 
+import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.SparkTestBase.spark
 
-/** S1 on the reference's own sample raster (read-only input data) +
-  * the §3.1 ingest lifecycle end-to-end. */
+/** S1 + the §3.1 ingest lifecycle end-to-end. LZW is checked against
+  * the JDK's own TIFF encoder; the tests on the reference's own sample
+  * raster read it through [[readSample]], which cancels them (naming
+  * the path) where the reference checkout is absent. */
 class GeoTiffSpec extends AnyFunSuite {
 
   val sample = "/root/reference/data/rast.tif"
 
+  /** The reference sample, decoded; cancels the calling test when the
+    * file is absent. */
+  def readSample(): GeoTiff.Raster = {
+    assume(Files.isRegularFile(Paths.get(sample)), s"reference sample $sample is absent")
+    GeoTiff.read(sample)
+  }
+
   test("decodes the reference sample raster (LZW float64 strips)") {
-    val r = GeoTiff.read(sample)
+    val r = readSample()
     assert(r.meta.width == 479 && r.meta.height == 283)
     assert(r.meta.bits == 64 && r.meta.sampleFormat == 3)
     assert(r.cells.length == 479 * 283)
@@ -20,15 +30,64 @@ class GeoTiffSpec extends AnyFunSuite {
     // plausible raster: finite values, nonconstant
     assert(data.forall(v => !v.isInfinite))
     assert(data.distinct.length > 1)
+    // the strip decode is stable: a second decode is identical
+    assert(java.util.Arrays.equals(r.cells, readSample().cells))
+    // the reference sample has no CRS expectations broken by the GeoKey read
+    assert(r.meta.epsg.isEmpty || r.meta.epsg.exists(_ > 0))
+  }
+
+  /** Single-band float64 image encoded by the JDK's TIFF writer with
+    * LZW compression. */
+  def jdkLzwTif(w: Int, h: Int, cells: Array[Double]): Array[Byte] = {
+    import java.awt.image._
+    val raster = java.awt.image.Raster.createWritableRaster(
+      new BandedSampleModel(DataBuffer.TYPE_DOUBLE, w, h, 1),
+      new DataBufferDouble(cells, cells.length), null)
+    val cm = new ComponentColorModel(java.awt.color.ColorSpace.getInstance(
+      java.awt.color.ColorSpace.CS_GRAY), false, false, java.awt.Transparency.OPAQUE,
+      DataBuffer.TYPE_DOUBLE)
+    val writer = javax.imageio.ImageIO.getImageWritersByFormatName("tiff").next()
+    val param = writer.getDefaultWriteParam
+    param.setCompressionMode(javax.imageio.ImageWriteParam.MODE_EXPLICIT)
+    param.setCompressionType("LZW")
+    val bos = new java.io.ByteArrayOutputStream()
+    val ios = javax.imageio.ImageIO.createImageOutputStream(bos)
+    try {
+      writer.setOutput(ios)
+      writer.write(null, new javax.imageio.IIOImage(
+        new BufferedImage(cm, raster, false, null), null, null), param)
+    } finally { ios.close(); writer.dispose() }
+    bos.toByteArray
+  }
+
+  /** Value count of StripOffsets (273) in a classic TIFF's first IFD
+    * (0 if absent). */
+  def stripCount(bytes: Array[Byte]): Int = {
+    val bb = java.nio.ByteBuffer.wrap(bytes).order(
+      if (bytes(0) == 'I') java.nio.ByteOrder.LITTLE_ENDIAN else java.nio.ByteOrder.BIG_ENDIAN)
+    val ifd = bb.getInt(4)
+    (0 until (bb.getShort(ifd) & 0xFFFF)).map(ifd + 2 + 12 * _)
+      .collectFirst { case o if (bb.getShort(o) & 0xFFFF) == 273 => bb.getInt(o + 4) }
+      .getOrElse(0)
   }
 
   test("LZW round-trip against a known pattern") {
-    // decode of an uncompressed strip equals identity path: compress a
-    // tiny pattern with our own encoder-free check — instead verify the
-    // real file's strip decode is stable (twice identical)
-    val a = GeoTiff.read(sample).cells
-    val b = GeoTiff.read(sample).cells
-    assert(java.util.Arrays.equals(a, b))
+    // 320 KiB of float64 with NaN holes: the JDK writer splits it into
+    // several strips, each long enough to widen codes 9 -> 12 bits and
+    // to emit Clear codes when the table fills
+    val w = 1024; val h = 40
+    val cells = Array.tabulate(w * h) { i =>
+      val x = i % w; val y = i / w
+      if ((x * 7 + y * 13) % 97 == 0) Double.NaN else (x % 64) * 0.5 + y * 100.0
+    }
+    val bytes = jdkLzwTif(w, h, cells)
+    assert(bytes.length < w * h * 8 / 2, s"LZW ${bytes.length} vs raw ${w * h * 8}")
+    assert(stripCount(bytes) > 1, "expected a multi-strip file")
+    val r = GeoTiff.decode(bytes)
+    assert(r.meta.width == w && r.meta.height == h)
+    assert(r.meta.bits == 64 && r.meta.sampleFormat == 3)
+    assert(r.cells.map(java.lang.Double.doubleToLongBits).toSeq ==
+      cells.map(java.lang.Double.doubleToLongBits).toSeq)
   }
 
   test("PackBits: decodes the TIFF 6.0 spec's worked example") {
@@ -227,7 +286,7 @@ class GeoTiffSpec extends AnyFunSuite {
     assert(r.cells.map(java.lang.Double.doubleToLongBits).toSeq ==
       cells.map(java.lang.Double.doubleToLongBits).toSeq)
     // and a full read -> write -> read cycle on the reference raster
-    val orig = GeoTiff.read(sample)
+    val orig = readSample()
     val back = GeoTiff.decode(GeoTiff.encode(orig.meta.width, orig.meta.height, orig.cells,
       orig.meta.originX, orig.meta.originY, orig.meta.cellW, orig.meta.cellH))
     assert(back.cells.map(java.lang.Double.doubleToLongBits).toSeq ==
@@ -243,9 +302,6 @@ class GeoTiffSpec extends AnyFunSuite {
     // projected: web mercator + a UTM zone round-trip through the key
     assert(GeoTiff.decode(GeoTiff.encode(3, 2, cells, epsg = 3857)).meta.epsg.contains(3857))
     assert(GeoTiff.decode(GeoTiff.encode(3, 2, cells, epsg = 32633)).meta.epsg.contains(32633))
-    // the reference sample has no CRS expectations broken by the change
-    assert(GeoTiff.read(sample).meta.epsg.isEmpty ||
-      GeoTiff.read(sample).meta.epsg.exists(_ > 0))
   }
 
   test("GeoKeyDirectory: ProjectedCSType wins over the datum's GeographicType") {
@@ -383,7 +439,7 @@ class GeoTiffSpec extends AnyFunSuite {
   test("ingest lifecycle §3.1: tif -> pixels -> tiles -> catalog -> histogram") {
     import spark.implicits._
     val ts = 64
-    val raster = GeoTiff.read(sample)
+    val raster = readSample()
     val px = GeoTiff.toPixels(spark, raster, ts)
     val tiles = graft.ops.Raster.assemble(px, ts, ts)
     val root = java.nio.file.Files.createTempDirectory("graft_tif").toString
