@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Physical-plan snapshots for cross-round regression diffs: one
   * normalized `plans/<query>.txt` per SparkEntry query (expression IDs,
@@ -26,38 +25,25 @@ object PlanDump {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val queries = Launch.queries(args.drop(1).toSeq) // optional query-name filter
+    val spark = Launch.session("PlanDump", cpus = 8, logLevel = "ERROR")
     val outDir = java.nio.file.Paths.get("plans")
     java.nio.file.Files.createDirectories(outDir)
-    val only = args.drop(1).toSet // optional query-name filter
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.isEmpty || only(n) }
-      .foreach { case (name, fn) =>
-      try {
-        // capture the pre-materialization plans of the eager two-phase
-        // gates (graft.ops.Ranking records its INPUT plan per call):
-        // their final snapshot is a Scan ExistingRDD stub, so without
-        // these the upstream aggregation shape would be invisible to
-        // the cross-round plan diff
-        val buf = scala.collection.mutable.Buffer.empty[(String, String)]
-        graft.ops.Ranking.captureTo.set(buf)
-        val df = try fn(spark, sfDir) finally graft.ops.Ranking.captureTo.remove()
-        val txt = normalize(df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode))
-        java.nio.file.Files.write(outDir.resolve(s"$name.txt"), txt.getBytes("UTF-8"))
-        buf.toSeq.zipWithIndex.foreach { case ((stage, p), i) =>
-          java.nio.file.Files.write(outDir.resolve(s"${name}__pre${i + 1}_$stage.txt"),
-            normalize(p).getBytes("UTF-8"))
-        }
-      } catch {
-        case e: Throwable => System.err.println(s"[plandump] $name failed: ${e.getMessage}")
+    Launch.forEach("plandump", queries) { (name, fn) =>
+      // capture the pre-materialization plans of the eager two-phase
+      // gates (graft.ops.Ranking records its INPUT plan per call):
+      // their final snapshot is a Scan ExistingRDD stub, so without
+      // these the upstream aggregation shape would be invisible to
+      // the cross-round plan diff
+      val buf = scala.collection.mutable.Buffer.empty[(String, String)]
+      graft.ops.Ranking.captureTo.set(buf)
+      val df = try fn(spark, sfDir) finally graft.ops.Ranking.captureTo.remove()
+      val txt = normalize(df.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode))
+      java.nio.file.Files.write(outDir.resolve(s"$name.txt"), txt.getBytes("UTF-8"))
+      buf.toSeq.zipWithIndex.foreach { case ((stage, p), i) =>
+        java.nio.file.Files.write(outDir.resolve(s"${name}__pre${i + 1}_$stage.txt"),
+          normalize(p).getBytes("UTF-8"))
       }
     }
     println(s"PLANDUMP_DONE ${SparkEntry.queries.size}")

@@ -1,90 +1,115 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.scheduler._
+
 import scala.collection.mutable
 
-/** Per-query profiling harness for the optimization rounds: runs a query
-  * like QBench (same session shape, same `.count()` action) but attaches a
-  * listener that attributes wall time to Spark jobs vs driver-side gaps
-  * (planning, codegen, driver logic), and reports per-job task time,
-  * shuffle bytes and spill. Usage:
-  *   sbt "runMain graft.Prof <sfDir> <reps> <name> [name...]"
-  * Measurement-only tooling — never on any query path. */
+import org.apache.spark.scheduler._
+import org.apache.spark.sql.{GraftSqlShim, SparkSession}
+
+/** Per-query profile for optimization work. Each rep of each named query
+  * reports:
+  *  - `build`: the query function's call, which returns the frame;
+  *  - `plan`: physical planning of that frame (`executedPlan`; under AQE
+  *    it submits no job);
+  *  - `action`: the full result through a `noop` sink;
+  *  - `wall` = build + action;
+  *  - the jobs each phase starts, with their task time, shuffle and
+  *    spill. Builder jobs are eager: checkpoints, collects and
+  *    fixed-point loops run before the frame returns, so a build time
+  *    with builder jobs scales with data, not only with planning. Every
+  *    parquet read also runs one small builder job (`parquet at …`):
+  *    Spark reads a footer for the schema;
+  *  - `gap`: wall time no job covers (planning, codegen, driver logic).
+  *
+  * Usage: `sbt "runMain graft.Prof <sfDir> <reps> <name> [name...]"`.
+  * Measurement only, never on a query path. */
 object Prof {
+  /** One job: its phase, its description or else its call site, and
+    * what its tasks did. */
+  final class Job(val id: Int, val phase: String, val start: Long, val desc: String) {
+    var end = 0L; var nTasks = 0; var taskTimeMs = 0L
+    var inputB = 0L; var shufReadB = 0L; var shufWriteB = 0L; var spillB = 0L
+    def ms: Long = (end - start).max(0L)
+  }
+
+  /** One rep's phase times (ms) and jobs. */
+  final case class Rep(buildMs: Double, planMs: Double, actionMs: Double, jobs: Seq[Job]) {
+    def wallMs: Double = buildMs + actionMs
+    def builderJobs: Int = jobs.count(_.phase == "build")
+    def actionJobs: Int = jobs.count(_.phase == "action")
+    def jobMs: Long = jobs.map(_.ms).sum
+    def gapMs: Double = wallMs - jobMs
+  }
+
+  /** Local property naming the phase; jobs without it are not ours. */
+  private val PhaseKey = "graft.prof.phase"
+
+  /** Builds, plans and runs `fn` once, recording its jobs by phase. */
+  def measure(spark: SparkSession, sfDir: String, fn: Launch.Query): Rep = {
+    val sc = spark.sparkContext
+    val jobs = mutable.LinkedHashMap.empty[Int, Job]
+    val stageToJob = mutable.Map.empty[Int, Job]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        for (p <- Option(e.properties); phase <- Option(p.getProperty(PhaseKey))) {
+          // nothing sets job descriptions; the result stage's name is
+          // the job's call site
+          val j = new Job(e.jobId, phase, e.time,
+            Option(p.getProperty("spark.job.description"))
+              .getOrElse(e.stageInfos.maxBy(_.stageId).name))
+          jobs(e.jobId) = j
+          e.stageIds.foreach(stageToJob(_) = j)
+        }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        jobs.get(e.jobId).foreach(_.end = e.time)
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        for (j <- stageToJob.get(e.stageId); m <- Option(e.taskMetrics)) {
+          j.nTasks += 1
+          j.taskTimeMs += m.executorRunTime
+          j.inputB += m.inputMetrics.bytesRead
+          j.shufReadB += m.shuffleReadMetrics.totalBytesRead
+          j.shufWriteB += m.shuffleWriteMetrics.bytesWritten
+          j.spillB += m.diskBytesSpilled
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(PhaseKey, "build")
+      val t0 = System.nanoTime()
+      val df = fn(spark, sfDir)
+      val t1 = System.nanoTime()
+      sc.setLocalProperty(PhaseKey, "action")
+      df.queryExecution.executedPlan
+      val t2 = System.nanoTime()
+      df.write.format("noop").mode("overwrite").save()
+      val t3 = System.nanoTime()
+      sc.setLocalProperty(PhaseKey, null)
+      // the listener is fed asynchronously: count once every event is in
+      GraftSqlShim.drainListenerBus(sc)
+      Rep((t1 - t0) / 1e6, (t2 - t1) / 1e6, (t3 - t2) / 1e6, jobs.values.toSeq)
+    } finally {
+      sc.setLocalProperty(PhaseKey, null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val reps = args(1).toInt
-    val names = args.drop(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    case class JobRec(id: Int, start: Long, var end: Long = 0L,
-                      var nTasks: Int = 0, var taskTimeMs: Long = 0L,
-                      var shufReadB: Long = 0L, var shufWriteB: Long = 0L,
-                      var inputB: Long = 0L, var spillB: Long = 0L,
-                      var desc: String = "")
-    val jobs = mutable.LinkedHashMap.empty[Int, JobRec]
-    val stageToJob = mutable.Map.empty[Int, Int]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.synchronized {
-        val r = JobRec(e.jobId, e.time)
-        r.desc = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
-        jobs(e.jobId) = r
-        e.stageIds.foreach(sid => stageToJob(sid) = e.jobId)
-      }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = jobs.synchronized {
-        jobs.get(e.jobId).foreach(_.end = e.time)
-      }
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = jobs.synchronized {
-        for (jid <- stageToJob.get(e.stageId); r <- jobs.get(jid);
-             m <- Option(e.taskMetrics)) {
-          r.nTasks += 1
-          r.taskTimeMs += m.executorRunTime
-          r.shufReadB += m.shuffleReadMetrics.totalBytesRead
-          r.shufWriteB += m.shuffleWriteMetrics.bytesWritten
-          r.inputB += m.inputMetrics.bytesRead
-          r.spillB += m.diskBytesSpilled
-        }
-      }
-    }
-
-    // session warm-up identical to QBench
-    try SparkEntry.queries.headOption.foreach { case (_, fn) => fn(spark, sfDir).count(): Unit }
-    catch { case _: Throwable => () }
-
-    spark.sparkContext.addSparkListener(listener)
-    for (name <- names) {
-      val fn = SparkEntry.queries(name)
+    val queries = Launch.queries(args.drop(2).toSeq)
+    val spark = Launch.session("Prof")
+    Launch.warmUp("prof", spark, sfDir)
+    Launch.forEach("prof", queries) { (name, fn) =>
       for (rep <- 1 to reps) {
-        jobs.synchronized { jobs.clear(); stageToJob.clear() }
-        val t0 = System.nanoTime()
-        val df = fn(spark, sfDir)
-        val tPlanBuilt = System.nanoTime()
-        df.count()
-        val t1 = System.nanoTime()
-        Thread.sleep(200) // let listener events drain
-        val wallMs = (t1 - t0) / 1e6
-        val buildMs = (tPlanBuilt - t0) / 1e6
-        jobs.synchronized {
-          val jobMs = jobs.values.map(r => (r.end - r.start).max(0L)).sum
-          println(f"PROF $name rep=$rep wall=${wallMs}%.0fms build=${buildMs}%.0fms " +
-            f"jobs=${jobs.size} jobTime=${jobMs}ms gap=${wallMs - jobMs}%.0fms")
-          if (rep == reps) { // detail only on last (warmest) rep
-            jobs.values.foreach { r =>
-              println(f"  job ${r.id}%4d ${(r.end - r.start)}%6dms tasks=${r.nTasks}%4d " +
-                f"taskTime=${r.taskTimeMs}%6dms in=${r.inputB / 1024}%7dK " +
-                f"sr=${r.shufReadB / 1024}%7dK sw=${r.shufWriteB / 1024}%7dK " +
-                f"spill=${r.spillB / 1024}%6dK ${r.desc.take(60)}")
-            }
-          }
+        val r = measure(spark, sfDir, fn)
+        val eager = if (r.builderJobs > 0) "  EAGER: build time includes jobs" else ""
+        println(f"PROF $name rep=$rep wall=${r.wallMs}%.0fms build=${r.buildMs}%.0fms " +
+          f"plan=${r.planMs}%.0fms action=${r.actionMs}%.0fms builderJobs=${r.builderJobs} " +
+          f"actionJobs=${r.actionJobs} jobTime=${r.jobMs}ms gap=${r.gapMs}%.0fms$eager")
+        if (rep == reps) r.jobs.foreach { j => // detail only on the last (warmest) rep
+          println(f"  job ${j.id}%4d ${j.phase}%-6s ${j.ms}%6dms tasks=${j.nTasks}%4d " +
+            f"taskTime=${j.taskTimeMs}%6dms in=${j.inputB / 1024}%7dK " +
+            f"sr=${j.shufReadB / 1024}%7dK sw=${j.shufWriteB / 1024}%7dK " +
+            f"spill=${j.spillB / 1024}%6dK ${j.desc.take(60)}")
         }
       }
     }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,39 +7,26 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     // optional 3rd+ args: run only the named queries (local iteration;
     // the driver always passes exactly two)
-    val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val queries = Launch.queries(args.drop(2).toSeq)
+    val spark = Launch.session("Verify")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.filter(kv => only.isEmpty || only(kv._1)).foreach { case (name, fn) =>
+    Launch.forEach("verify", queries) { (name, fn) =>
       // Deterministic row order (sorted by all columns, by name) so the
       // compare is stable however the driver hashes.
-      try {
-        val df = fn(spark, sfDir)
-        val ordered = df.orderBy(df.columns.sorted.map(org.apache.spark.sql.functions.col).toIndexedSeq: _*)
-        ordered.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-        // Exact Catalyst result types beside the parquet: a driver-side
-        // hash mismatch can then be diffed on TYPE vs VALUE without
-        // guessing (round-7 lesson: DuckDB HUGEINT vs Spark BIGINT was
-        // invisible in pandas-coerced value compares).
-        // MUST be underscore-prefixed: pyarrow/pandas directory reads fail
-        // on any non-`_`-prefixed foreign file in a parquet dir (this
-        // exact sidecar, unprefixed, zeroed the round-8 driver artifact).
-        Files.writeString(Paths.get(s"$outDir/$name/_schema.json"),
-          df.schema.fields.sortBy(_.name)
-            .map(f => s"""\"${f.name}\": \"${f.dataType.sql}\"""")
-            .mkString("{", ", ", "}"))
-      }
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
+      val df = fn(spark, sfDir)
+      val ordered = df.orderBy(df.columns.sorted.map(org.apache.spark.sql.functions.col).toIndexedSeq: _*)
+      ordered.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+      // Exact Catalyst result types beside the parquet: a driver-side
+      // hash mismatch can then be diffed on TYPE vs VALUE without
+      // guessing (round-7 lesson: DuckDB HUGEINT vs Spark BIGINT was
+      // invisible in pandas-coerced value compares).
+      // MUST be underscore-prefixed: pyarrow/pandas directory reads fail
+      // on any non-`_`-prefixed foreign file in a parquet dir (this
+      // exact sidecar, unprefixed, zeroed the round-8 driver artifact).
+      Files.writeString(Paths.get(s"$outDir/$name/_schema.json"),
+        df.schema.fields.sortBy(_.name)
+          .map(f => s"""\"${f.name}\": \"${f.dataType.sql}\"""")
+          .mkString("{", ", ", "}"))
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -2,31 +2,21 @@ package graft.apps
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Launch
 import graft.catalog.LayerStore
 import graft.ops.{Export, Histograms, Raster}
 
 /** The reference's job surface as thin drivers (SURVEY §7.1 step 7) —
   * same CLI arg shapes as the originals. Each reference `main(args)`
   * example job maps to one object here; the heavy lifting lives in
-  * graft.ops / graft.catalog so these stay ~10 lines.
+  * graft.ops / graft.catalog so these stay ~10 lines. Each `main`
+  * (session, run, stop) is inherited from [[graft.Launch.Job]].
   *
   * Tile size follows the reference default 256 (Utils.scala:21) unless
   * overridden by GRAFT_TILE_SIZE (test fixtures use small grids).
   */
 object Apps {
   def tileSize: Int = sys.env.getOrElse("GRAFT_TILE_SIZE", "256").toInt
-
-  def session(app: String): SparkSession = {
-    val s = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName(app)
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
 
   def readPixels(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
@@ -36,13 +26,8 @@ object Apps {
 
 /** Ingest (GeotiffTilingExample.scala:30-64 analog): raster pixels →
   * tiled layer in the catalog. args: pixelParquet catalogDir layerName zoom */
-object IngestLayer {
-  def main(args: Array[String]): Unit = {
-    val spark = Apps.session("IngestLayer")
-    try run(spark, args) finally spark.stop()
-  }
-
-  def run(spark: org.apache.spark.sql.SparkSession, args: Array[String]): Unit = {
+object IngestLayer extends Launch.Job {
+  def run(spark: SparkSession, args: Array[String]): Unit = {
     val Array(input, catalog, layer, zoom) = args.take(4)
     val ts = Apps.tileSize
     val tiles = Raster.assemble(Apps.readPixels(spark, input), ts, ts)
@@ -53,13 +38,8 @@ object IngestLayer {
 /** NDVI (NDVILayerExample.scala:28-104 analog): join NIR+Red layers,
   * cell-wise NDVI, write + histogram stats.
   * args: catalogDir nirLayer redLayer outLayer zoom */
-object NdviLayer {
-  def main(args: Array[String]): Unit = {
-    val spark = Apps.session("NdviLayer")
-    try run(spark, args) finally spark.stop()
-  }
-
-  def run(spark: org.apache.spark.sql.SparkSession, args: Array[String]): Unit = {
+object NdviLayer extends Launch.Job {
+  def run(spark: SparkSession, args: Array[String]): Unit = {
     val Array(catalog, nir, red, out, zoom) = args.take(5)
     val ts = Apps.tileSize
     val store = new LayerStore(spark, catalog)
@@ -76,13 +56,8 @@ object NdviLayer {
 
 /** Convolve (ConvolveLayerExample.scala:28-80 analog): focal mean with
   * circular kernel. args: catalogDir layer outLayer zoom radius */
-object ConvolveLayer {
-  def main(args: Array[String]): Unit = {
-    val spark = Apps.session("ConvolveLayer")
-    try run(spark, args) finally spark.stop()
-  }
-
-  def run(spark: org.apache.spark.sql.SparkSession, args: Array[String]): Unit = {
+object ConvolveLayer extends Launch.Job {
+  def run(spark: SparkSession, args: Array[String]): Unit = {
     val Array(catalog, layer, out, zoom, radius) = args.take(5)
     val ts = Apps.tileSize
     val store = new LayerStore(spark, catalog)
@@ -93,13 +68,8 @@ object ConvolveLayer {
 
 /** Pyramid (LayerToPyramid.scala:28-68 analog): build all zoom levels
   * down to 0. args: catalogDir layer maxZoom */
-object PyramidLayer {
-  def main(args: Array[String]): Unit = {
-    val spark = Apps.session("PyramidLayer")
-    try run(spark, args) finally spark.stop()
-  }
-
-  def run(spark: org.apache.spark.sql.SparkSession, args: Array[String]): Unit = {
+object PyramidLayer extends Launch.Job {
+  def run(spark: SparkSession, args: Array[String]): Unit = {
     val Array(catalog, layer, maxZoom) = args.take(3)
     val ts = Apps.tileSize
     val store = new LayerStore(spark, catalog)
@@ -113,13 +83,8 @@ object PyramidLayer {
 
 /** Update/upsert (LayerUpdaterExample.scala:28-60 analog).
   * args: catalogDir sourcePixels layer zoom */
-object UpdateLayer {
-  def main(args: Array[String]): Unit = {
-    val spark = Apps.session("UpdateLayer")
-    try run(spark, args) finally spark.stop()
-  }
-
-  def run(spark: org.apache.spark.sql.SparkSession, args: Array[String]): Unit = {
+object UpdateLayer extends Launch.Job {
+  def run(spark: SparkSession, args: Array[String]): Unit = {
     val Array(catalog, input, layer, zoom) = args.take(4)
     val ts = Apps.tileSize
     val store = new LayerStore(spark, catalog)
@@ -129,13 +94,8 @@ object UpdateLayer {
 
 /** Pixelize + keyed CSV handoff (TilePixelingToCSVExample analog, K8).
   * args: catalogDir layer zoom outCsvPath */
-object PixelizeLayer {
-  def main(args: Array[String]): Unit = {
-    val spark = Apps.session("PixelizeLayer")
-    try run(spark, args) finally spark.stop()
-  }
-
-  def run(spark: org.apache.spark.sql.SparkSession, args: Array[String]): Unit = {
+object PixelizeLayer extends Launch.Job {
+  def run(spark: SparkSession, args: Array[String]): Unit = {
     val Array(catalog, layer, zoom, out) = args.take(4)
     val ts = Apps.tileSize
     val store = new LayerStore(spark, catalog)
@@ -149,13 +109,8 @@ object PixelizeLayer {
 
 /** Export (LayerToGeotiff.scala:28-130 analog): tiled or stitched.
   * args: catalogDir layer zoom outDir [stitched] */
-object ExportLayer {
-  def main(args: Array[String]): Unit = {
-    val spark = Apps.session("ExportLayer")
-    try run(spark, args) finally spark.stop()
-  }
-
-  def run(spark: org.apache.spark.sql.SparkSession, args: Array[String]): Unit = {
+object ExportLayer extends Launch.Job {
+  def run(spark: SparkSession, args: Array[String]): Unit = {
     val Array(catalog, layer, zoom, out) = args.take(4)
     val stitched = args.length > 4 && args(4) == "stitched"
     val ts = Apps.tileSize
@@ -170,13 +125,8 @@ object ExportLayer {
 /** Serve-layer point render (ServeLayerAsMap.scala analog, minus the
   * HTTP actor): render one tile to PNG with histogram quantile breaks.
   * args: catalogDir layer zoom tileCol tileRow outPng */
-object RenderTile {
-  def main(args: Array[String]): Unit = {
-    val spark = Apps.session("RenderTile")
-    try run(spark, args) finally spark.stop()
-  }
-
-  def run(spark: org.apache.spark.sql.SparkSession, args: Array[String]): Unit = {
+object RenderTile extends Launch.Job {
+  def run(spark: SparkSession, args: Array[String]): Unit = {
     val Array(catalog, layer, zoom, tc, tr, out) = args.take(6)
     val ts = Apps.tileSize
     val store = new LayerStore(spark, catalog)
@@ -191,13 +141,8 @@ object RenderTile {
 }
 
 /** WordCount (WordCount.scala:17-27 parity). args: inTextFile outDir */
-object WordCountApp {
-  def main(args: Array[String]): Unit = {
-    val spark = Apps.session("WordCountApp")
-    try run(spark, args) finally spark.stop()
-  }
-
-  def run(spark: org.apache.spark.sql.SparkSession, args: Array[String]): Unit = {
+object WordCountApp extends Launch.Job {
+  def run(spark: SparkSession, args: Array[String]): Unit = {
     val Array(in, out) = args.take(2)
     spark.read.text(in)
       .select(explode(split(col("value"), " ")).as("word"))
@@ -210,13 +155,8 @@ object WordCountApp {
 
 /** Delete a layer or one zoom of it (DeleteLayer.scala:16-41 analog).
   * args: catalogDir layerName [zoom] */
-object DeleteLayerApp {
-  def main(args: Array[String]): Unit = {
-    val spark = Apps.session("DeleteLayerApp")
-    try run(spark, args) finally spark.stop()
-  }
-
-  def run(spark: org.apache.spark.sql.SparkSession, args: Array[String]): Unit = {
+object DeleteLayerApp extends Launch.Job {
+  def run(spark: SparkSession, args: Array[String]): Unit = {
     val store = new LayerStore(spark, args(0))
     store.delete(args(1), args.lift(2).map(_.toInt))
   }
@@ -227,13 +167,8 @@ object DeleteLayerApp {
   * reproject leg lives in grid.Reproject/Crs; here layers already share
   * the grid, as in ManySingleBandLayersToMultibandLayer).
   * args: catalogDir outLayer zoom inLayer1 inLayer2 [...] */
-object StackLayers {
-  def main(args: Array[String]): Unit = {
-    val spark = Apps.session("StackLayers")
-    try run(spark, args) finally spark.stop()
-  }
-
-  def run(spark: org.apache.spark.sql.SparkSession, args: Array[String]): Unit = {
+object StackLayers extends Launch.Job {
+  def run(spark: SparkSession, args: Array[String]): Unit = {
     val Array(catalog, out, zoom) = args.take(3)
     val store = new LayerStore(spark, catalog)
     val stacked = Raster.stackBands(args.drop(3).toIndexedSeq.map(store.read(_, zoom.toInt)))
@@ -245,13 +180,8 @@ object StackLayers {
   * (ShapefilePolygonRasterizer.scala:40-74 analog): GeoJSON (or
   * converted shapefile) polygons → scanline burn → catalog layer.
   * args: featureGeojson burnAttribute catalogDir layerName zoom */
-object RasterizeShapes {
-  def main(args: Array[String]): Unit = {
-    val spark = Apps.session("RasterizeShapes")
-    try run(spark, args) finally spark.stop()
-  }
-
-  def run(spark: org.apache.spark.sql.SparkSession, args: Array[String]): Unit = {
+object RasterizeShapes extends Launch.Job {
+  def run(spark: SparkSession, args: Array[String]): Unit = {
     val Array(input, attribute, catalog, layer, zoom) = args.take(5)
     val ts = Apps.tileSize
     val feats = graft.sources.GeoJson.readFeatures(spark, input, attribute)
@@ -262,13 +192,8 @@ object RasterizeShapes {
 
 /** Resample a layer to a deeper zoom (ZoomResampleLayer.scala:42-60
   * analog). args: catalogDir layerName fromZoom toZoom */
-object ZoomResampleApp {
-  def main(args: Array[String]): Unit = {
-    val spark = Apps.session("ZoomResampleApp")
-    try run(spark, args) finally spark.stop()
-  }
-
-  def run(spark: org.apache.spark.sql.SparkSession, args: Array[String]): Unit = {
+object ZoomResampleApp extends Launch.Job {
+  def run(spark: SparkSession, args: Array[String]): Unit = {
     val Array(catalog, layer, fromZoom, toZoom) = args.take(4)
     val ts = Apps.tileSize
     val store = new LayerStore(spark, catalog)

@@ -56,8 +56,8 @@ object MiscQueries {
     store.merge(incoming, "band_tt", 9)
     // last two retained sequences, POSITION-labeled 1/2: the scratch
     // store accumulates publishes when one process reruns the query
-    // (QBench reps), so absolute sequence numbers drift while the
-    // oracle's statement (pre-merge, post-merge) does not
+    // (repeated runs in one process), so absolute sequence numbers
+    // drift while the oracle's statement (pre-merge, post-merge) does not
     val seqs = store.publishedVersions("band_tt", 9).map(_._1).takeRight(2)
     seqs.zipWithIndex.map { case (q, idx) => graft.ops.Raster
         .pixelize(store.readVersion("band_tt", 9, q), TS)
@@ -165,7 +165,8 @@ object MiscQueries {
     store.merge(incoming, "band_vd", 9)
     // last two retained sequences, not literal 1/2: the scratch store
     // accumulates publishes when one process runs the query repeatedly
-    // (QBench reps), and older sequences are GC'd by retention
+    // (repeated runs in one process), and older sequences are GC'd by
+    // retention
     val seqs = store.publishedVersions("band_vd", 9).map(_._1).takeRight(2)
     store.readDiff("band_vd", 9, seqs.head, seqs.last)
   }

@@ -232,7 +232,7 @@ object TextQueries {
     // per element, and slice() copies O(n) per outer element (O(n^2)
     // array churn per posting list) — the kernel emits the same pairs
     // in one allocation-light pass
-    val pairsKernel = udf((ds: Seq[Long]) => {
+    val pairsKernel = udf((ds: Array[Long]) => {
       val n = ds.length
       val out = Seq.newBuilder[(Long, Long)]
       var i = 0

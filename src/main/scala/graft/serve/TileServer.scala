@@ -169,11 +169,11 @@ class TileServer(spark: SparkSession, catalogRoot: String, layer: String,
 }
 
 /** Driver app (ServeLayerAsMap parity): args catalogDir layer [port]. */
-object ServeLayer {
-  def main(args: Array[String]): Unit = {
+object ServeLayer extends graft.Launch.Job {
+  /** Serves until the JVM is stopped. */
+  def run(spark: SparkSession, args: Array[String]): Unit = {
     val Array(catalog, layer) = args.take(2)
     val port = if (args.length > 2) args(2).toInt else 8080
-    val spark = graft.apps.Apps.session("ServeLayer")
     val bound = new TileServer(spark, catalog, layer, graft.apps.Apps.tileSize).start(port)
     println(s"serving layer '$layer' on http://127.0.0.1:$bound/{zoom}/{x}/{y}")
     Thread.currentThread().join()

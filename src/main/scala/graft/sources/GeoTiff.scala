@@ -98,6 +98,7 @@ object GeoTiff {
     var pixScale: Option[(Double, Double)] = None
     var tiePoint: Option[(Double, Double)] = None
     var planarConfig = 1
+    var predictor = 1
     var epsg: Option[Int] = None
     var jpegTables: Option[Array[Byte]] = None
 
@@ -132,6 +133,7 @@ object GeoTiff {
         case 324 => tileOffsets = values(o, typ, cnt)
         case 325 => tileCounts = values(o, typ, cnt)
         case 284 => planarConfig = values(o, typ, cnt)(0).toInt
+        case 317 => predictor = values(o, typ, cnt)(0).toInt
         case 339 => sampleFormat = values(o, typ, cnt)(0).toInt
         case 33550 => val b = dataBase(o, 12, cnt); pixScale = Some((f64(b), f64(b + 8)))
         case 33922 => val b = dataBase(o, 12, cnt); tiePoint = Some((f64(b + 24), f64(b + 32)))
@@ -158,6 +160,10 @@ object GeoTiff {
     }
     require(spp == 1 || planarConfig == 1,
       s"multiband requires chunky layout (PlanarConfiguration=1), got $planarConfig")
+    // a differencing predictor (2 horizontal, 3 floating point) would
+    // need undoing after decompression; reject it rather than return
+    // differences as cells
+    if (predictor != 1) throw new UnsupportedOperationException(s"TIFF predictor $predictor")
 
     val bytesPerSample = bits / 8
     val out = new Array[Double](width * height * spp)

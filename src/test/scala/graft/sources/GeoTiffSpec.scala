@@ -90,6 +90,44 @@ class GeoTiffSpec extends AnyFunSuite {
       cells.map(java.lang.Double.doubleToLongBits).toSeq)
   }
 
+  test("a differencing predictor fails loudly instead of decoding to wrong cells") {
+    // 8-bit LZW gradient from the JDK encoder with Predictor=2
+    // (horizontal differencing) added to its default metadata: the
+    // strips hold differences, so a plain decode would return them as
+    // cells
+    import javax.imageio.plugins.tiff.{BaselineTIFFTagSet, TIFFDirectory, TIFFField}
+    val w = 64; val h = 16
+    val img = new java.awt.image.BufferedImage(w, h, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
+    for (y <- 0 until h; x <- 0 until w) img.getRaster.setSample(x, y, 0, x * 3 + y)
+    val writer = javax.imageio.ImageIO.getImageWritersByFormatName("tiff").next()
+    val param = writer.getDefaultWriteParam
+    param.setCompressionMode(javax.imageio.ImageWriteParam.MODE_EXPLICIT)
+    param.setCompressionType("LZW")
+    val dir = TIFFDirectory.createFromMetadata(writer.getDefaultImageMetadata(
+      javax.imageio.ImageTypeSpecifier.createFromRenderedImage(img), param))
+    dir.addTIFFField(new TIFFField(
+      BaselineTIFFTagSet.getInstance.getTag(BaselineTIFFTagSet.TAG_PREDICTOR), 2))
+    val bos = new java.io.ByteArrayOutputStream()
+    val ios = javax.imageio.ImageIO.createImageOutputStream(bos)
+    try {
+      writer.setOutput(ios)
+      writer.write(null, new javax.imageio.IIOImage(img, null, dir.getAsMetadata), param)
+    } finally { ios.close(); writer.dispose() }
+    val bytes = bos.toByteArray
+    assert(shortTag(bytes, 317).contains(2), "the writer did not emit Predictor=2")
+    val e = intercept[UnsupportedOperationException](GeoTiff.decode(bytes))
+    assert(e.getMessage == "TIFF predictor 2")
+  }
+
+  /** Inline SHORT value of `tag` in a classic TIFF's first IFD. */
+  def shortTag(bytes: Array[Byte], tag: Int): Option[Int] = {
+    val bb = java.nio.ByteBuffer.wrap(bytes).order(
+      if (bytes(0) == 'I') java.nio.ByteOrder.LITTLE_ENDIAN else java.nio.ByteOrder.BIG_ENDIAN)
+    val ifd = bb.getInt(4)
+    (0 until (bb.getShort(ifd) & 0xFFFF)).map(ifd + 2 + 12 * _)
+      .collectFirst { case o if (bb.getShort(o) & 0xFFFF) == tag => bb.getShort(o + 8) & 0xFFFF }
+  }
+
   test("PackBits: decodes the TIFF 6.0 spec's worked example") {
     // The packed stream and its 24-byte expansion straight from the
     // PackBits section of the TIFF 6.0 specification.

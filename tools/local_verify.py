@@ -45,7 +45,9 @@ def main():
         if "[success]" not in r.stdout:
             print(r.stdout[-4000:]); print(r.stderr[-4000:])
             sys.exit("Verify run failed")
-        for line in r.stdout.splitlines():
+        # runMain prints the program's stderr on sbt's stderr, so the
+        # `[verify] <name> failed` lines arrive there
+        for line in (r.stdout + r.stderr).splitlines():
             if "[verify]" in line:
                 print(line)
 
