@@ -1,6 +1,7 @@
 package graft.catalog
 
 import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StructType}
 import org.json4s.NoTypeHints
@@ -76,7 +77,8 @@ object LayerAttributes {
   val MaxBins = 65536
 
   /** The sidecar of a layer, built from the rows it was written from
-    * (the write's checkpoint blocks) instead of re-reading the parquet.
+    * (the cached rows of the write's checkpoint frame `ck`, see
+    * [[graft.ops.Materialize]]) instead of re-reading the parquet.
     *
     * One job: every partition returns its tile count, key bounds,
     * non-NaN value range and bin counts at `binWidth`. Per partition
@@ -88,8 +90,10 @@ object LayerAttributes {
     * Cells are the non-null, non-NaN elements of `cells` (ARRAY<DOUBLE>);
     * a layer without a `cells` column (e.g. a zipped multiband `bands`
     * layer) gets bounds + schema and an empty histogram. */
-  def fromRows(rows: RDD[InternalRow], schema: StructType, tileSize: Int, crs: String,
+  def fromRows(ck: DataFrame, tileSize: Int, crs: String,
                binWidth: Double, schemaJson: String): LayerAttributes = {
+    val rows = graft.ops.Materialize.blocks(ck)
+    val schema = ck.schema
     def field(name: String, ok: org.apache.spark.sql.types.DataType => Boolean): Int = {
       val i = schema.fieldIndex(name)
       require(ok(schema(i).dataType),

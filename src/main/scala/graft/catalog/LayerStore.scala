@@ -1,8 +1,6 @@
 package graft.catalog
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, GraftSqlShim, SaveMode, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import graft.functions.ZOrderKey.zorder
@@ -109,11 +107,18 @@ class LayerStore(spark: SparkSession, val root: String,
       // (now stale) listing may already be outside the retention window
       // and mid-GC — falling back to it would serve a dying version
       val (s, p) = entries.maxBy(_._1)
-      try return Some((s, new String(Files.readAllBytes(p), "UTF-8").trim))
-      catch { case _: java.io.IOException => attempts += 1 } // raced a publish: re-list
+      readPointer(p) match {
+        case Some(v) => return Some((s, v))
+        case None => attempts += 1 // raced a publish: re-list
+      }
     }
     None
   }
+
+  /** A pointer file's version name; None once it is gone (GC'd). */
+  private def readPointer(p: Path): Option[String] =
+    try Some(new String(Files.readAllBytes(p), "UTF-8").trim)
+    catch { case _: java.io.IOException => None }
 
   /** Pre-pointer-sequence layout compat: a store written before the
     * fenced-publish change has a single `_current` file instead of
@@ -121,14 +126,8 @@ class LayerStore(spark: SparkSession, val root: String,
     * sorts above it); the next publish migrates it to `_ptr-00000000`
     * BEFORE its GC runs, so the old live version enters the retention
     * window instead of being deleted as an unreferenced orphan. */
-  private def legacyCurrent(name: String, zoom: Int): Option[(Long, String)] = {
-    val legacy = Paths.get(s"${zoomDir(name, zoom)}/_current")
-    try {
-      if (Files.exists(legacy))
-        Some((0L, new String(Files.readAllBytes(legacy), "UTF-8").trim))
-      else None
-    } catch { case _: java.io.IOException => None }
-  }
+  private def legacyCurrent(name: String, zoom: Int): Option[(Long, String)] =
+    readPointer(Paths.get(s"${zoomDir(name, zoom)}/_current")).map((0L, _))
 
   /** The live version dir name (e.g. "v-00000003"), if published. */
   def currentVersion(name: String, zoom: Int): Option[String] =
@@ -140,10 +139,7 @@ class LayerStore(spark: SparkSession, val root: String,
     * file vanishes mid-listing (publish-time GC race) is simply
     * omitted: it was already outside the retention window. */
   def publishedVersions(name: String, zoom: Int): Seq[(Long, String)] =
-    pointerEntries(name, zoom).sortBy(_._1).flatMap { case (s, p) =>
-      try Some((s, new String(Files.readAllBytes(p), "UTF-8").trim))
-      catch { case _: java.io.IOException => None }
-    }
+    pointerEntries(name, zoom).sortBy(_._1).flatMap { case (s, p) => readPointer(p).map((s, _)) }
 
   /** Changed tiles between two retained sequences — the CDC read over
     * the version store: full-outer join of the pinned snapshots on the
@@ -238,17 +234,28 @@ class LayerStore(spark: SparkSession, val root: String,
     val base: Long = fence.orElse(currentPtr(name, zoom).map(_._1)).getOrElse(0L)
     val v = nextVersionName(name, zoom)
     writer(s"$dir/$v") // fully durable before the pointer appears
-    def fenced() = new IllegalStateException(
-      s"layer ($name, $zoom) was published past sequence $base since this write began " +
-        "— aborting to avoid a lost update (was this writer's lock broken as stale?)")
-    // cheap fast-fail; the createLink below is the real gate
-    if (currentPtr(name, zoom).map(_._1).getOrElse(0L) > base) { rmTree(new java.io.File(s"$dir/$v")); throw fenced() }
-    val tmp = Paths.get(s"$dir/_ptr.tmp-$v")
-    Files.write(tmp, v.getBytes("UTF-8"))
+    def fenced(): Nothing = {
+      rmTree(new java.io.File(s"$dir/$v"))
+      throw new IllegalStateException(
+        s"layer ($name, $zoom) was published past sequence $base since this write began " +
+          "— aborting to avoid a lost update (was this writer's lock broken as stale?)")
+    }
+    // cheap fast-fail; the claim's createLink is the real gate
+    if (currentPtr(name, zoom).map(_._1).getOrElse(0L) > base) fenced()
+    publish(name, zoom, base, v, Paths.get(s"$dir/_ptr.tmp-$v"))(fenced())
+  }
+
+  /** The fenced claim of [[writeVersion]] and [[rollback]]: hard-link
+    * `tmp` (holding `version`) as pointer `base + 1`, or run `fenced`
+    * (which throws) if that sequence is taken; then retention GC. */
+  private def publish(name: String, zoom: Int, base: Long, version: String, tmp: Path)
+                     (fenced: => Nothing): Unit = {
+    val dir = zoomDir(name, zoom)
+    Files.write(tmp, version.getBytes("UTF-8"))
     try Files.createLink(ptrPath(name, zoom, base + 1), tmp)
     catch {
       case _: java.nio.file.FileAlreadyExistsException =>
-        Files.deleteIfExists(tmp); rmTree(new java.io.File(s"$dir/$v")); throw fenced()
+        Files.deleteIfExists(tmp); fenced
     }
     Files.deleteIfExists(tmp)
     // migrate a pre-sequence `_current` pointer into the sequence as 0,
@@ -262,10 +269,7 @@ class LayerStore(spark: SparkSession, val root: String,
     val entries = pointerEntries(name, zoom)
     val maxSeq = entries.map(_._1).max
     val (keepPtrs, dropPtrs) = entries.partition(_._1 > maxSeq - retainVersions)
-    val keepVersions = keepPtrs.flatMap { case (_, p) =>
-      try Some(new String(Files.readAllBytes(p), "UTF-8").trim)
-      catch { case _: java.io.IOException => None }
-    }.toSet
+    val keepVersions = keepPtrs.flatMap { case (_, p) => readPointer(p) }.toSet
     dropPtrs.foreach { case (_, p) => Files.deleteIfExists(p): Unit }
     listVersions(name, zoom)
       .filterNot(keepVersions.contains)
@@ -306,27 +310,31 @@ class LayerStore(spark: SparkSession, val root: String,
     * parallelism. `spark.graft.write.targetPartitionBytes` (default
     * 128 MB of cached-block bytes, i.e. smaller on disk after parquet
     * encoding) tunes the file size goal. */
-  private def writeParts(rdds: Seq[RDD[_]]): Int = {
+  private def writeParts(ck: DataFrame): Int = {
     val n = spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
     val target = spark.conf
       .get("spark.graft.write.targetPartitionBytes", (128L << 20).toString).toLong
-    val ids = rdds.map(_.id).toSet
+    val id = graft.ops.Materialize.blocks(ck).id
     val bytes = spark.sparkContext.getRDDStorageInfo
-      .filter(i => ids(i.id)).map(i => i.memSize + i.diskSize).sum
+      .filter(_.id == id).map(i => i.memSize + i.diskSize).sum
     if (bytes <= 0L) n
     else math.max(1, math.min(n.toLong, bytes / target + 1).toInt)
   }
+
+  // layout keys: spatial layers range on zorder, space-time on (time, hilbert)
+  private def zKey = zorder(col("tile_col").cast("int"), col("tile_row").cast("int"))
+  private def hKey =
+    graft.functions.HilbertKey.hilbert(col("tile_col").cast("int"), col("tile_row").cast("int"))
 
   /** Z-ordered parquet write of `tiles` into `path`, plus its sidecar
     * when `attrs` is set. The sidecar schema is the written one made
     * nullable — exactly what a parquet read-back reports. */
   private[catalog] def writeTo(tiles: DataFrame, path: String, attrs: Option[AttrSpec]): Unit = {
-    val zk = zorder(col("tile_col").cast("int"), col("tile_row").cast("int"))
     // The explicit count keeps AQE from coalescing a BIG write to one
     // task; the measured-size floor keeps a small one off 32 tiny files.
-    checkpointed(tiles, path, attrs)(GraftSqlShim.asNullable) { (t, tRdds) =>
-      t.repartitionByRange(writeParts(tRdds), zk)
-        .sortWithinPartitions(zk)
+    checkpointed(tiles, path, attrs)(GraftSqlShim.asNullable) { t =>
+      t.repartitionByRange(writeParts(t), zKey)
+        .sortWithinPartitions(zKey)
         .write.mode(SaveMode.Overwrite).parquet(path)
     }
   }
@@ -341,17 +349,17 @@ class LayerStore(spark: SparkSession, val root: String,
     * case; a failed write leaves no sidecar. */
   private def checkpointed(tiles: DataFrame, path: String, attrs: Option[AttrSpec])
                           (schema: StructType => StructType)
-                          (write: (DataFrame, Seq[RDD[_]]) => Unit): Unit = {
-    val (t, tRdds) = graft.ops.Materialize.checkpointFresh(tiles)
+                          (write: DataFrame => Unit): Unit = {
+    val t = graft.ops.Materialize.checkpointFresh(tiles)
     try {
-      write(t, tRdds)
+      write(t)
       attrs.foreach { a =>
-        val sidecar = LayerAttributes.fromRows(tRdds.head.asInstanceOf[RDD[InternalRow]],
-          t.schema, a.tileSize, a.crs, a.binWidth, schema(t.schema).json)
+        val sidecar = LayerAttributes.fromRows(t, a.tileSize, a.crs, a.binWidth,
+          schema(t.schema).json)
         Files.write(Paths.get(s"$path/_attributes.json"),
           LayerAttributes.toJson(sidecar).getBytes("UTF-8")): Unit
       }
-    } finally tRdds.foreach(_.unpersist(blocking = false))
+    } finally graft.ops.Materialize.free(t)
   }
 
   /** S9: read the attribute sidecar of the live version (None for
@@ -381,8 +389,6 @@ class LayerStore(spark: SparkSession, val root: String,
       // dir holds a few hilbert-contiguous files (file-level pruning
       // for the bbox, bounded file count), and a huge month still
       // spreads over many tasks by hilbert range.
-      val hk = graft.functions.HilbertKey.hilbert(
-        col("tile_col").cast("int"), col("tile_row").cast("int"))
       // r12: checkpoint before the range sampling pass — see
       // checkpointed. The partition count deliberately STAYS the
       // session constant here (not the measured-size form): `time` is
@@ -394,9 +400,9 @@ class LayerStore(spark: SparkSession, val root: String,
       // typed by inference on read.
       val n = spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
       val attrs = Option.when(withAttributes)(AttrSpec(tileSize, crs, binWidth))
-      checkpointed(tiles, path, attrs)(_ => spark.read.parquet(path).schema) { (t, _) =>
-        t.repartitionByRange(n, col("time"), hk)
-          .sortWithinPartitions(col("time"), hk)
+      checkpointed(tiles, path, attrs)(_ => spark.read.parquet(path).schema) { t =>
+        t.repartitionByRange(n, col("time"), hKey)
+          .sortWithinPartitions(col("time"), hKey)
           .write.mode(SaveMode.Overwrite).partitionBy("time")
           .parquet(path)
       }
@@ -586,13 +592,6 @@ class LayerStore(spark: SparkSession, val root: String,
     }
   }
 
-  /** Compaction — the small-file problem at scale: a long upsert
-    * history leaves a version with many small parquet files, and on an
-    * object store every file is a request + a seek. Rewrites the live
-    * version into ~[[targetBytes]]-sized files (computed from the
-    * actual on-disk size, not a guessed partition count) and publishes
-    * it like any other write; readers never see an intermediate state
-    * and the pre-compaction version survives until the next publish. */
   /** ROLLBACK: make a retained older sequence live again by publishing
     * a NEW pointer that names the old sequence's version dir — a
     * re-point, never a data copy (versions are immutable, so two
@@ -611,32 +610,19 @@ class LayerStore(spark: SparkSession, val root: String,
           s"retained: ${retained.map(_._1).mkString("[", ", ", "]")}"))
     val base = currentPtr(name, zoom).map(_._1).getOrElse(0L)
     if (base == toSeq) return // already live
-    val dir = zoomDir(name, zoom)
-    val tmp = Paths.get(s"$dir/_ptr.tmp-rb-$toSeq")
-    Files.write(tmp, v.getBytes("UTF-8"))
-    try Files.createLink(ptrPath(name, zoom, base + 1), tmp)
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        Files.deleteIfExists(tmp)
-        throw new IllegalStateException(
-          s"layer ($name, $zoom) was published past sequence $base during rollback — aborting")
-    }
-    Files.deleteIfExists(tmp): Unit
-    // GC like writeVersion: drop pointers outside the retention window,
-    // then any version dir no retained pointer names
-    val entries = pointerEntries(name, zoom)
-    val maxSeq = entries.map(_._1).max
-    val (keepPtrs, dropPtrs) = entries.partition(_._1 > maxSeq - retainVersions)
-    val keepVersions = keepPtrs.flatMap { case (_, p) =>
-      try Some(new String(Files.readAllBytes(p), "UTF-8").trim)
-      catch { case _: java.io.IOException => None }
-    }.toSet
-    dropPtrs.foreach { case (_, p) => Files.deleteIfExists(p): Unit }
-    listVersions(name, zoom)
-      .filterNot(keepVersions.contains)
-      .foreach(d => rmTree(new java.io.File(s"$dir/$d")))
+    publish(name, zoom, base, v, Paths.get(s"${zoomDir(name, zoom)}/_ptr.tmp-rb-$toSeq"))(
+      throw new IllegalStateException(
+        s"layer ($name, $zoom) was published past sequence $base during rollback — aborting"))
   }
 
+  /** Compaction — the small-file problem at scale: a long upsert
+    * history leaves a version with many small parquet files, and on an
+    * object store every file is a request + a seek. Rewrites the live
+    * version into ~[[targetBytes]]-sized files (computed from the
+    * actual on-disk size, not a guessed partition count) and publishes
+    * it like any other write; readers never see an intermediate state
+    * and the pre-compaction version survives until the next publish.
+    * Files keep the writers' range layout, one contiguous key slice each. */
   def compact(name: String, zoom: Int, targetBytes: Long = 128L << 20): Unit =
     withLayerLock(name, zoom) {
       val basePtr = currentPtr(name, zoom).map(_._1).getOrElse(0L) // fence anchor
@@ -651,22 +637,16 @@ class LayerStore(spark: SparkSession, val root: String,
         sz(new java.io.File(live))
       }
       val nFiles = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-      val tiles = spark.read.parquet(live)
+      val tiles = readPath(live)
       val spaceTime = tiles.columns.contains("time")
       writeVersion(name, zoom, fence = Some(basePtr)) { path =>
-        // preserve the layer's layout contract: space-time layers keep
-        // their time partition dirs (readSpaceTime's pruning) and
-        // time-major Hilbert order; spatial layers keep the zorder sort
         val writer =
           if (spaceTime)
-            tiles.repartition(nFiles, col("time"))
-              .sortWithinPartitions(col("time"),
-                graft.functions.HilbertKey.hilbert(col("tile_col").cast("int"), col("tile_row").cast("int")))
+            tiles.repartitionByRange(nFiles, col("time"), hKey)
+              .sortWithinPartitions(col("time"), hKey)
               .write.partitionBy("time")
           else
-            tiles.repartition(nFiles, col("tile_col"), col("tile_row"))
-              .sortWithinPartitions(zorder(col("tile_col").cast("int"), col("tile_row").cast("int")))
-              .write
+            tiles.repartitionByRange(nFiles, zKey).sortWithinPartitions(zKey).write
         writer.mode(SaveMode.Overwrite).parquet(path)
         val attrs = Paths.get(s"$live/_attributes.json")
         if (Files.exists(attrs)) // metadata unchanged by compaction

@@ -93,7 +93,7 @@ object CostDistance {
     val spark = cells.sparkSession
     import spark.implicits._
 
-    var (state, prevRdds) = Materialize.checkpointFresh(cells
+    var ck = Materialize.checkpointFresh(cells
       .select(col("gx").cast("long").as("gx"), col("gy").cast("long").as("gy"),
         col("cost").cast("long").as("cost"),
         when(col("src"), 0L).otherwise(-1L).as("dist")))
@@ -105,13 +105,14 @@ object CostDistance {
     // no-change check, through the IDENTICAL code path. Past the gate
     // the tiling is unchanged.
     val limit = LocalGraph.limit(spark)
-    val n = state.count()
+    val n = ck.count()
     val oneTile = n <= limit
     LocalGraph.record("costDistance", if (oneTile) "one-tile" else "tiled", n, limit)
     val ts = if (oneTile) 1L << 40 else tileSize.toLong
     var changed = 1L
     var it = 0
     while (changed > 0 && it < maxIter) {
+      val state = ck.select(col("gx"), col("gy"), col("cost"), col("dist"))
       val own = state
         .withColumn("tx", expr(s"gx div $ts")).withColumn("ty", expr(s"gy div $ts"))
         .withColumn("halo", lit(false))
@@ -134,16 +135,15 @@ object CostDistance {
             Cell(gx, gy, cost, dist, halo)
           }, cap))
         .toDF()
-      val (ck, ckRdds) = Materialize.checkpointFresh(relaxed)
-      changed = ck.agg(sum(col("changed"))).first().getLong(0)
-      state = ck.select(col("gx"), col("gy"), col("cost"), col("dist"))
-      prevRdds.foreach(_.unpersist(blocking = false))
-      prevRdds = ckRdds
+      val next = Materialize.checkpointFresh(relaxed)
+      changed = next.agg(sum(col("changed"))).first().getLong(0)
+      Materialize.free(ck)
+      ck = next
       it += 1
     }
     if (changed > 0)
       org.slf4j.LoggerFactory.getLogger("graft.ops.CostDistance").warn(
         s"costDistance exited at maxIter=$maxIter still relaxing — distances may be partial")
-    state.where(col("dist") >= 0).select(col("gx"), col("gy"), col("dist"))
+    ck.where(col("dist") >= 0).select(col("gx"), col("gy"), col("dist"))
   }
 }

@@ -104,16 +104,15 @@ object DbscanIncrement {
     val spark = batch.sparkSession
 
     // r12 unpersist discipline: every eager checkpoint in this method
-    // is fully consumed by the front writes below — capture the backing
-    // RDDs and free them before returning instead of pinning storage
-    // for the session lifetime.
+    // is fully consumed by the front writes below — free them before
+    // returning instead of pinning storage for the session lifetime.
     import graft.ops.Materialize.checkpointFresh
-    val (delta, deltaRdds) = checkpointFresh(batch.groupBy(col("px"), col("py"))
+    val delta = checkpointFresh(batch.groupBy(col("px"), col("py"))
       .agg(count(lit(1)).as("cnt_d"), min(col("pid")).as("minpid")))
 
     // 1. position front: counts grow, posid keeps its first-batch min
     val positions = readFront(spark, st.positionsRoot, posSchema)
-    val (mergedPos, mergedRdds) = checkpointFresh(
+    val mergedPos = checkpointFresh(
       positions.join(delta, Seq("px", "py"), "full_outer")
         .select(col("px"), col("py"),
           (coalesce(col("cnt"), lit(0L)) + coalesce(col("cnt_d"), lit(0L))).as("cnt"),
@@ -149,12 +148,12 @@ object DbscanIncrement {
       .where(inDisk("qx", "qy", "px", "py", eps2))
       .groupBy(col("qid")).agg((sum(col("cnt")) - 1).as("nn"))
       .select(col("qid").as("posid"), col("nn"))
-    val (nnNext, nnRdds) = checkpointFresh(nnExisting.unionByName(nnNew))
+    val nnNext = checkpointFresh(nnExisting.unionByName(nnNew))
     writeFront(nnNext, st.nnRoot)
 
     // 3. coreness transitions (monotone: only off→on)
     val coreLab = readFront(spark, st.coreLabRoot, labSchema)
-    val (newlyCore, newlyRdds) = checkpointFresh(nnNext.where(col("nn") >= minNn)
+    val newlyCore = checkpointFresh(nnNext.where(col("nn") >= minNn)
       .join(coreLab.select(col("posid")), Seq("posid"), "left_anti")
       .join(mergedPos, Seq("posid"))
       .select(col("posid"), col("px"), col("py")))
@@ -188,8 +187,7 @@ object DbscanIncrement {
       .select(col("posid"), coalesce(col("new_cluster"), col("cluster")).as("cluster"))
       .unionByName(newLab)
     writeFront(updated, st.coreLabRoot)
-    (deltaRdds ++ mergedRdds ++ nnRdds ++ newlyRdds)
-      .foreach(_.unpersist(blocking = false))
+    graft.ops.Materialize.free(delta, mergedPos, nnNext, newlyCore)
   }
 
   /** The maintained core assignment at POINT granularity: join the

@@ -2,7 +2,6 @@ package graft.ops
 
 import scala.collection.mutable
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 
@@ -49,13 +48,12 @@ object LocalGraph {
   def record(gate: String, path: String, rows: Long, limit: Long): Unit =
     log.info(s"gate=$gate path=$path rows=$rows limit=$limit")
 
-  /** The gate decision over an already-checkpointed frame: when its
-    * first `width` columns are LONG and its row count is at or under
-    * the limit, collect those columns as primitive chunks, free the
-    * checkpoint blocks `ckRdds`, and return the chunks. Otherwise
-    * return None and leave the blocks to the distributed loop. */
-  def gate(name: String, ck: DataFrame, ckRdds: Seq[RDD[_]],
-           width: Int): Option[Array[Array[Long]]] = {
+  /** The gate decision over a [[Materialize.checkpointFresh]] frame:
+    * when its first `width` columns are LONG and its row count is at or
+    * under the limit, collect those columns as primitive chunks, free
+    * the checkpoint, and return the chunks. Otherwise return None and
+    * leave the checkpoint to the distributed loop. */
+  def gate(name: String, ck: DataFrame, width: Int): Option[Array[Array[Long]]] = {
     val lim = limit(ck.sparkSession)
     if (!ck.schema.fields.take(width).forall(_.dataType == LongType)) {
       record(name, "distributed", -1L, lim)
@@ -67,16 +65,19 @@ object LocalGraph {
         None
       } else {
         // one long[] per partition, row-major: 8 bytes per value on the
-        // driver; executor-side Row boxing is transient and GC-local
-        val chunks = ck.rdd.mapPartitions { it =>
+        // driver, read straight off the cached rows
+        val chunks = Materialize.blocks(ck).mapPartitions { it =>
           val buf = new mutable.ArrayBuilder.ofLong
           it.foreach { r =>
             var i = 0
-            while (i < width) { buf += r.getLong(i); i += 1 }
+            while (i < width) { // a null would read as 0: fail like Row.getLong
+              if (r.isNullAt(i)) throw new NullPointerException(s"Value at index $i is null")
+              buf += r.getLong(i); i += 1
+            }
           }
           Iterator(buf.result())
         }.collect()
-        ckRdds.foreach(_.unpersist(blocking = false))
+        Materialize.free(ck)
         record(name, "local", rows, lim)
         Some(chunks)
       }

@@ -281,10 +281,10 @@ object Raster {
     // a null dir behaves exactly like a pit on both paths: the
     // distributed branch's `dir >= 0` predicate already rejects null,
     // and the coalesce keeps the primitive collect NPE-free
-    val (flowCk, flowRdds) = checkpointFresh(
+    val flowCk = checkpointFresh(
       flow.select(col("gx"), col("gy"),
         coalesce(col("dir").cast("long"), lit(-1L)).as("dir")))
-    LocalGraph.gate("flowAccumulation", flowCk, flowRdds, 3) match {
+    LocalGraph.gate("flowAccumulation", flowCk, 3) match {
       case Some(chunks) =>
         // the SAME round-based peeling, wave k == the distributed loop's
         // round k: a frontier cell finalizes (done) and delivers its acc
@@ -328,45 +328,39 @@ object Raster {
           .select(col("gx").as("cgx"), col("gy").as("cgy"),
             (col("gx") + d8dx(col("dir"))).as("pgx"), (col("gy") + d8dy(col("dir"))).as("pgy"))
           .join(nodes.select(col("gx").as("pgx"), col("gy").as("pgy")), Seq("pgx", "pgy"), "left_semi")
-        var (partial, partialRdds) = checkpointFresh(nodes.withColumn("acc", lit(1L)))
-        var (rem, remRdds) = checkpointFresh(edges)
-        // partial/rem supersede the input checkpoint — free it
-        flowRdds.foreach(_.unpersist(blocking = false))
-        var prevRdds = partialRdds ++ remRdds
+        var partial = checkpointFresh(nodes.withColumn("acc", lit(1L)))
+        var rem = checkpointFresh(edges)
+        Materialize.free(flowCk) // partial/rem supersede the input checkpoint
         var finals = List.empty[DataFrame]
         var remCount = rem.count()
         var it = 0
         while (remCount > 0 && it < maxIter) {
           val hasIncoming = rem.select(col("pgx").as("gx"), col("pgy").as("gy")).distinct()
-          val (frontier, _) = checkpointFresh(
+          val frontier = checkpointFresh(
             partial.join(hasIncoming, Seq("gx", "gy"), "left_anti"))
           finals ::= frontier
           val delivered = frontier
             .join(rem, frontier("gx") === rem("cgx") && frontier("gy") === rem("cgy"))
             .groupBy(col("pgx").as("gx"), col("pgy").as("gy"))
             .agg(sum(col("acc")).as("delta"))
-          val (np, npRdds) = checkpointFresh(partial.join(hasIncoming, Seq("gx", "gy"), "left_semi")
+          val np = checkpointFresh(partial.join(hasIncoming, Seq("gx", "gy"), "left_semi")
             .join(delivered, Seq("gx", "gy"), "left")
             .select(col("gx"), col("gy"), (col("acc") + coalesce(col("delta"), lit(0L))).as("acc")))
-          partial = np
-          val (nr, nrRdds) = checkpointFresh(
+          val nr = checkpointFresh(
             rem.join(frontier.select(col("gx").as("cgx"), col("gy").as("cgy")),
               Seq("cgx", "cgy"), "left_anti"))
-          rem = nr
-          remRdds = nrRdds
-          remCount = rem.count()
+          remCount = nr.count()
           // free ONLY the superseded partial/rem blocks; every frontier
           // stays alive — it is part of the final result union
-          prevRdds.foreach(_.unpersist(blocking = false))
-          prevRdds = npRdds ++ nrRdds
+          Materialize.free(partial, rem)
+          partial = np; rem = nr
           it += 1
         }
         if (remCount > 0)
           org.slf4j.LoggerFactory.getLogger("graft.ops.Raster").warn(
             s"flowAccumulation exited at maxIter=$maxIter with $remCount edges undelivered — " +
               "accumulations downstream of them are partial; raise maxIter")
-        // the result reads the frontiers and partial, never rem
-        remRdds.foreach(_.unpersist(blocking = false))
+        Materialize.free(rem) // the result reads the frontiers and partial, never rem
         finals ::= partial // empty on clean exit; partial sums under maxIter bail
         finals.reduce(_ unionByName _)
     }
@@ -394,10 +388,10 @@ object Raster {
     // a null dir behaves exactly like a pit on both paths: the
     // distributed branch's `dir >= 0` predicate already rejects null,
     // and the coalesce keeps the primitive collect NPE-free
-    val (flowCk, flowRdds) = checkpointFresh(
+    val flowCk = checkpointFresh(
       flow.select(col("gx"), col("gy"),
         coalesce(col("dir").cast("long"), lit(-1L)).as("dir")))
-    LocalGraph.gate("basinLabel", flowCk, flowRdds, 3) match {
+    LocalGraph.gate("basinLabel", flowCk, 3) match {
       case Some(chunks) =>
         // after k doubling rounds the distributed pointer table holds
         // each cell's ancestor at exactly min(2^k, distance-to-root)
@@ -417,21 +411,20 @@ object Raster {
           .select(col("gx"), col("gy"),
             (col("gx") + d8dx(col("dir"))).as("px"), (col("gy") + d8dy(col("dir"))).as("py"))
           .join(nodes.select(col("gx").as("px"), col("gy").as("py")), Seq("px", "py"), "left_semi")
-        var (p, prevRdds) = checkpointFresh(
+        var p = checkpointFresh(
           nodes.join(parent, Seq("gx", "gy"), "left")
             .select(col("gx"), col("gy"),
               coalesce(col("px"), col("gx")).as("px"),
               coalesce(col("py"), col("gy")).as("py")))
-        flowRdds.foreach(_.unpersist(blocking = false)) // p supersedes the input
+        Materialize.free(flowCk) // p supersedes the input
         for (_ <- 1 to rounds) {
-          val (np, npRdds) = checkpointFresh(
+          val np = checkpointFresh(
             p.join(
               p.select(col("gx").as("px"), col("gy").as("py"),
                 col("px").as("ppx"), col("py").as("ppy")),
               Seq("px", "py"))
               .select(col("gx"), col("gy"), col("ppx").as("px"), col("ppy").as("py")))
-          prevRdds.foreach(_.unpersist(blocking = false))
-          prevRdds = npRdds
+          Materialize.free(p)
           p = np
         }
         p.select(col("gx"), col("gy"), col("px").as("bx"), col("py").as("by"))

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * AQE's skew-join handling covers sort-merge joins at runtime; these
   * are for the two places AQE can't help: skewed *aggregations* (one
   * hot key overwhelms a single reducer) and repeated joins on the same
-  * key (pay the exchange once by bucketing the table).
+  * key (pay the exchange once by bucketing the table, see [[Bucketing]]).
   */
 object Skew {
 
@@ -41,13 +41,4 @@ object Skew {
     val replicated = small.withColumn("_salt", explode(sequence(lit(0), lit(buckets - 1))))
     saltedBig.join(replicated, Seq(key, "_salt")).drop("_salt")
   }
-
-  /** Bucketed table write: pre-shuffles once by `key` into `buckets`
-    * files per partition so future equi-joins/aggs on `key` between
-    * co-bucketed tables need no exchange. Requires a table (not path)
-    * sink — bucket metadata lives in the catalog. */
-  def writeBucketed(df: DataFrame, table: String, key: String, buckets: Int): Unit =
-    df.write.mode("overwrite")
-      .bucketBy(buckets, key).sortBy(key)
-      .saveAsTable(table)
 }

@@ -1364,13 +1364,11 @@ object RasterQueries {
   }
 
   /** Core-position labels (posid, cluster) — the expensive CC stage of
-    * DBSCAN, shared by both gates. */
-  /** Returns the label frame plus the checkpoint RDDs backing it, so
-    * the (sole) caller — the front writer, which fully materializes the
-    * frame into parquet — can free the blocks afterwards (r12
-    * unpersist discipline). */
-  private def dbscanCoreLab(s: SparkSession, dir: String)
-      : (DataFrame, Seq[org.apache.spark.rdd.RDD[_]]) = {
+    * DBSCAN, shared by both gates. Returns the label frame plus the
+    * checkpoint frames it reads, so the (sole) caller — the front
+    * writer, which fully materializes the frame into parquet — can
+    * free them afterwards (r12 unpersist discipline). */
+  private def dbscanCoreLab(s: SparkSession, dir: String): (DataFrame, Seq[DataFrame]) = {
     import graft.ops.Materialize.checkpointFresh
     val pos = dbscanPts(s, dir).groupBy(col("px"), col("py"))
       .agg(count(lit(1)).as("cnt"), min(col("pid")).as("posid"))
@@ -1380,9 +1378,9 @@ object RasterQueries {
     // (|positions| x |eps-disk| rows at ANY data scale, the
     // coincident-point contraction's invariant), so the checkpoint is
     // small forever. Same for the core-position set (3 consumers).
-    val (pairs, pairRdds) = checkpointFresh(dbscanPosPairs(pos))
+    val pairs = checkpointFresh(dbscanPosPairs(pos))
     val nn = pairs.groupBy(col("qid")).agg((sum(col("ccnt")) - 1).as("nn"))
-    val (corePos, coreRdds) = checkpointFresh(nn.where(col("nn") >= 3).select(col("qid")))
+    val corePos = checkpointFresh(nn.where(col("nn") >= 3).select(col("qid")))
     val edges = pairs.select(col("qid").as("a"), col("cid").as("b"))
       .where(col("a") < col("b"))
       .join(corePos.select(col("qid").as("a")), Seq("a"))
@@ -1391,7 +1389,7 @@ object RasterQueries {
     val lab = corePos
       .join(cc.select(col("node").as("qid"), col("cluster")), Seq("qid"), "left")
       .select(col("qid").as("posid"), coalesce(col("cluster"), col("qid")).as("cluster"))
-    (lab, pairRdds ++ coreRdds)
+    (lab, Seq(pairs, corePos))
   }
 
   /** MATERIALIZED core-label front: the cluster assignment (posid,
@@ -1410,12 +1408,12 @@ object RasterQueries {
         .take(8).map(b => f"$b%02x").mkString
       val base = s"${System.getProperty("java.io.tmpdir")}/graft_dbscanfront_" +
         s"${java.lang.ProcessHandle.current().pid()}_$dirKey"
-      val (lab, rdds) = dbscanCoreLab(s, dir)
+      val (lab, checkpoints) = dbscanCoreLab(s, dir)
       lab.write.mode("overwrite").parquet(base)
       // the parquet front now holds the result; nothing references the
       // checkpoint blocks — free them instead of pinning storage for
       // the session lifetime
-      rdds.foreach(_.unpersist(blocking = false))
+      graft.ops.Materialize.free(checkpoints: _*)
       base
     })
     s.read.parquet(path)

@@ -1539,7 +1539,7 @@ object SimQueries {
           floor(element_at(col("embedding"), d).cast("double") * 8).cast("long")
             .as("v"))): _*)).as("p"))
       .select(col("vec_id"), col("y"), col("p.dim").as("dim"), col("p.v").as("v"))
-      .localCheckpoint(false)
+      .localCheckpoint(false) // lazy, no build-time job (TextOps.pageRank's scaladoc)
     // best stump under per-row weights: (dim, v, lpred, rpred,
     // wcorrect, wtot) — binary labels, tie-break pred 0, then (dim, v)
     def bestStump(w: DataFrame): DataFrame = {

@@ -379,7 +379,7 @@ object TextQueries {
     // key). perDoc IS the only materialization of the shingling pass:
     // every downstream consumer (collapse, df census, prefix, verify)
     // derives from these cached doc-level array rows.
-    val (perDoc, perDocRdds) = checkpointFresh(docs(s, dir)
+    val perDoc = checkpointFresh(docs(s, dir)
       .select(col("doc_id"), explode(array_distinct(TextOps.shingles3(col("toks")))).as("shs"))
       .select(col("doc_id"), TextOps.h60(col("shs")).as("sh"))
       .groupBy(col("doc_id"))
@@ -387,15 +387,15 @@ object TextQueries {
       .select(col("doc_id"), col("set"),
         md5(concat_ws(",", col("set").cast("array<string>")).cast("binary")).as("sk"),
         size(col("set")).cast("long").as("len")))
-    val (groups, _) = checkpointFresh(perDoc.groupBy(col("sk"))
+    val groups = checkpointFresh(perDoc.groupBy(col("sk"))
       .agg(min(col("doc_id")).as("rep"), collect_list(col("doc_id")).as("members"),
         max(col("len")).as("len"))
       .select(col("rep"), col("members"), col("len")))
     val mem = groups.select(col("rep"), explode(col("members")).as("doc"))
     // one row per distinct set: the rep's sorted shingle array
-    val (repSets, _) = checkpointFresh(perDoc.select(col("doc_id"), col("set"))
+    val repSets = checkpointFresh(perDoc.select(col("doc_id"), col("set"))
       .join(groups.select(col("rep").as("doc_id")), Seq("doc_id"), "left_semi"))
-    perDocRdds.foreach(_.unpersist(blocking = false))
+    graft.ops.Materialize.free(perDoc)
     val repSh = repSets.select(col("doc_id"), explode(col("set")).as("sh"))
     val dfc = repSh.groupBy(col("sh")).agg(count(lit(1)).as("dfc"))
     val sizes = groups.select(col("rep").as("doc_id"), col("len"))
@@ -1009,8 +1009,8 @@ object TextQueries {
     import graft.ops.LocalGraph
     val KC = 3
     val e = minhashLshStaged(s, dir).select(col("a"), col("b"))
-    val (eCk, eRdds) = graft.ops.Materialize.checkpointFresh(e)
-    LocalGraph.gate("kcore", eCk, eRdds, 2) match {
+    val eCk = graft.ops.Materialize.checkpointFresh(e)
+    LocalGraph.gate("kcore", eCk, 2) match {
       case Some(chunks) =>
         val g = LocalGraph.graph(chunks, 2)
         val adj = LocalGraph.undirected(g)
@@ -1038,7 +1038,7 @@ object TextQueries {
             .join(alive.select(col("v").as("b")), Seq("b"))
             .groupBy(col("a")).agg(count(lit(1)).as("deg"))
             .where(col("deg") >= KC).select(col("a").as("v"))
-            .localCheckpoint(false)
+            .localCheckpoint(false) // lazy, no build-time job (TextOps.pageRank's scaladoc)
         }
         val coreDeg = sym
           .join(alive.select(col("v").as("a")), Seq("a"))
@@ -1486,7 +1486,7 @@ object TextQueries {
     // doc_id-only frame (8 bytes/row at any corpus size) makes every
     // consumer a cached-block scan; the final plan scans
     // documents.parquet exactly once (the lang/n_tokens projection).
-    val (s1, _) = graft.ops.Materialize.checkpointFresh(
+    val s1 = graft.ops.Materialize.checkpointFresh(
       table(s, dir, "documents").join(kept, Seq("doc_id"))
         .groupBy(md5(col("text").cast("binary")).as("ch"))
         .agg(min(col("doc_id")).as("doc_id"))
@@ -2297,11 +2297,11 @@ object TextQueries {
     * gate the hops run as a driver-side BFS; hop values are identical by
     * construction (min-hop BFS both ways, same seed rule, same cap). */
   val bfsDist: Q = (s, dir) => {
-    import graft.ops.LocalGraph
+    import graft.ops.{LocalGraph, Materialize}
     import graft.ops.Materialize.checkpointFresh
     val e = minhashLshStaged(s, dir).select(col("a"), col("b"))
-    val (eCk, eRdds) = checkpointFresh(e)
-    LocalGraph.gate("bfsDist", eCk, eRdds, 2) match {
+    val eCk = checkpointFresh(e)
+    LocalGraph.gate("bfsDist", eCk, 2) match {
       case Some(chunks) =>
         val g = LocalGraph.graph(chunks, 2)
         val adj = LocalGraph.undirected(g)
@@ -2330,8 +2330,8 @@ object TextQueries {
         val sym = eCk.unionByName(eCk.select(col("b").as("a"), col("a").as("b")))
         val seeds = sym.select(col("a").as("v")).distinct()
           .where(col("v") % 5 === 0).withColumn("d", lit(0))
-        var (dist, distRdds) = checkpointFresh(seeds)
-        var (frontier, frontRdds) = checkpointFresh(dist)
+        var dist = checkpointFresh(seeds)
+        var frontier = checkpointFresh(dist)
         var hop = 1
         var frontierSize = frontier.count()
         while (hop <= BfsMaxHops && frontierSize > 0) {
@@ -2339,18 +2339,17 @@ object TextQueries {
             .select(col("b").as("v")).distinct()
             .join(dist, Seq("v"), "left_anti")
             .withColumn("d", lit(hop))
-          val (nf, nfRdds) = checkpointFresh(cand)
-          val (nd, ndRdds) = checkpointFresh(dist.unionByName(nf))
+          val nf = checkpointFresh(cand)
+          val nd = checkpointFresh(dist.unionByName(nf))
           frontierSize = nf.count()
-          (distRdds ++ frontRdds).foreach(_.unpersist(blocking = false))
-          distRdds = ndRdds; frontRdds = nfRdds
+          Materialize.free(dist, frontier)
           dist = nd; frontier = nf
           hop += 1
         }
         // the returned plan reads only the dist checkpoint — free the
         // edge-set blocks, the largest frame in the query, and the last
         // (empty) frontier
-        (eRdds ++ frontRdds).foreach(_.unpersist(blocking = false))
+        Materialize.free(eCk, frontier)
         dist.select(col("v").as("doc_id"), col("d").cast("int").as("dist"))
     }
   }
@@ -2392,12 +2391,12 @@ object TextQueries {
     * Bellman-Ford reach the identical fixed point (min path cost per
     * reachable node, nodes at >= cap excluded). */
   val sssp: Q = (s, dir) => {
-    import graft.ops.LocalGraph
+    import graft.ops.{LocalGraph, Materialize}
     import graft.ops.Materialize.checkpointFresh
     val pw = shinglePairsFront(s, dir).select(col("a"), col("b"),
       (lit(11L) - expr("(10L * inter) div (na + nb - inter)")).as("w"))
-    val (pwCk, pwRdds) = checkpointFresh(pw)
-    LocalGraph.gate("sssp", pwCk, pwRdds, 3) match {
+    val pwCk = checkpointFresh(pw)
+    LocalGraph.gate("sssp", pwCk, 3) match {
       case Some(chunks) =>
         val g = LocalGraph.graph(chunks, 3, weighted = true)
         val adj = LocalGraph.undirected(g)
@@ -2430,8 +2429,8 @@ object TextQueries {
         val sym = pwCk.unionByName(pwCk.select(col("b").as("a"), col("a").as("b"), col("w")))
         val seeds = sym.select(col("a").as("v")).distinct()
           .where(col("v") % 7 === 0).withColumn("d", lit(0L))
-        var (dist, distRdds) = checkpointFresh(seeds)
-        var (front, frontRdds) = checkpointFresh(seeds)
+        var dist = checkpointFresh(seeds)
+        var front = checkpointFresh(seeds)
         var frontierSize = front.count()
         while (frontierSize > 0) {
           val relax = front.join(sym, col("v") === col("a"))
@@ -2442,17 +2441,16 @@ object TextQueries {
             .join(dist.withColumnRenamed("d", "d0"), Seq("v"), "left")
             .where(col("d0").isNull || col("nd") < col("d0"))
             .select(col("v"), col("nd").as("d"))
-          val (nf, nfRdds) = checkpointFresh(improved)
-          val (nd, ndRdds) = checkpointFresh(
+          val nf = checkpointFresh(improved)
+          val nd = checkpointFresh(
             dist.unionByName(nf).groupBy(col("v")).agg(min(col("d")).as("d")))
           frontierSize = nf.count()
-          (distRdds ++ frontRdds).foreach(_.unpersist(blocking = false))
-          distRdds = ndRdds; frontRdds = nfRdds
+          Materialize.free(dist, front)
           dist = nd; front = nf
         }
         // free the weighted edge set and the last (empty) frontier — the
         // returned plan reads only dist
-        (pwRdds ++ frontRdds).foreach(_.unpersist(blocking = false))
+        Materialize.free(pwCk, front)
         dist.where(col("d") < SsspCap)
           .select(col("v").as("doc_id"), col("d").cast("int").as("dist"))
     }

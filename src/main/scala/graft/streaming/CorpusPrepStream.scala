@@ -97,6 +97,9 @@ object CorpusPrepStream {
     if (batch.isEmpty) return
     val spark = batch.sparkSession
     val b = batch.persist()
+    // what the batch persists or checkpoints, freed in `finally` also
+    // when a stage throws part-way
+    var bandsB, s1new, nb: DataFrame = null
     try {
       // per-doc pure appends (stage 1)
       b.select(col("doc_id"), col("lang"),
@@ -104,7 +107,7 @@ object CorpusPrepStream {
         .write.mode("append").parquet(st.docMetaPath)
       val sigs = SigFrontStream.sigRows(b)
       sigs.write.mode("append").parquet(st.sigFrontPath)
-      val bandsB = SigFrontStream.bandRows(sigs).persist()
+      bandsB = SigFrontStream.bandRows(sigs).persist()
       bandsB.write.mode("append").parquet(st.bandFrontPath)
 
       // stage 2: quality gate + exact-dedup claims vs the hash front
@@ -122,13 +125,13 @@ object CorpusPrepStream {
       // the anti-join → empty) for every later consumer in this batch.
       // The checkpoint truncates the lineage so nothing downstream
       // re-reads the front.
-      val s1new = hashed.join(seen, Seq("ch"), "left_anti")
-        .select(col("doc_id"), col("ch")).localCheckpoint(true)
+      s1new = graft.ops.Materialize.checkpointFresh(hashed.join(seen, Seq("ch"), "left_anti")
+        .select(col("doc_id"), col("ch")))
       s1new.select(col("ch")).write.mode("append").parquet(st.hashFrontPath)
 
       // stage 3: incremental CC over the survivor band graph
       val clusters = readClusters(spark, st)
-      val nb = bandsB.join(s1new.select(col("doc_id")), Seq("doc_id")).persist()
+      nb = bandsB.join(s1new.select(col("doc_id")), Seq("doc_id")).persist()
       val e1 = nb.select(col("band"), col("key"), col("doc_id").as("a"))
         .join(nb.select(col("band"), col("key"), col("doc_id").as("b")), Seq("band", "key"))
         .where(col("a") < col("b")).select(col("a"), col("b"))
@@ -152,8 +155,12 @@ object CorpusPrepStream {
         .unionByName(newClusters)
       val next = latestClustersVersion(st) + 1
       updated.write.mode("overwrite").parquet(s"${st.clustersRoot}/v$next")
-      nb.unpersist(); bandsB.unpersist()
-    } finally b.unpersist()
+    } finally {
+      if (nb != null) nb.unpersist()
+      if (s1new != null) graft.ops.Materialize.free(s1new)
+      if (bandsB != null) bandsB.unpersist()
+      b.unpersist()
+    }
   }
 
   /** The corpus-prep keeper view over the maintained fronts:

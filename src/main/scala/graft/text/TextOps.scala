@@ -409,7 +409,7 @@ object TextOps {
     // old shape re-executed the full input edge lineage a second time
     // for `nodes` (once per local collect, and again in the final join
     // of the distributed path).
-    val (e0, e0Rdds) = checkpointFresh(
+    val e0 = checkpointFresh(
       edges.select(least(col("a"), col("b")).as("a"),
         greatest(col("a"), col("b")).as("b")).distinct())
     // one phase: hang the selected neighbors of each center u under
@@ -432,7 +432,7 @@ object TextOps {
               .select(col("m").as("a"), col("u").as("b")))
       kept.distinct()
     }
-    graft.ops.LocalGraph.gate("connectedComponents", e0, e0Rdds, 2) match {
+    graft.ops.LocalGraph.gate("connectedComponents", e0, 2) match {
       case Some(chunks) =>
         // union-find with path halving; a self-loop only registers its node
         val g = graft.ops.LocalGraph.graph(chunks, 2)
@@ -462,12 +462,11 @@ object TextOps {
             "cluster" -> org.apache.spark.sql.types.LongType))
       case None =>
         var e = e0.where(col("a") =!= col("b"))
-        var prevRdds: Seq[org.apache.spark.rdd.RDD[_]] = Nil
 
         var changed = 1L
         var it = 0
         while (changed > 0 && it < maxIter) {
-          val (e2, r2) = checkpointFresh(star(star(e, large = true), large = false))
+          val e2 = checkpointFresh(star(star(e, large = true), large = false))
           // the star map's fixed points are exactly the disjoint
           // min-centered star sets, and (with a < b normalization) E is one
           // iff every b has a unique parent AND no node is both parent and
@@ -479,8 +478,8 @@ object TextOps {
             if (stat.getLong(0) != stat.getLong(1)) 1L
             else e2.select(col("a"))
               .join(e2.select(col("b").as("a")), Seq("a"), "left_semi").count()
-          prevRdds.foreach(_.unpersist(blocking = false)) // superseded round's blocks
-          prevRdds = r2
+          // the superseded round's blocks; round 1 read e0, which the result reads
+          if (it > 0) graft.ops.Materialize.free(e)
           e = e2
           it += 1
         }
@@ -549,6 +548,8 @@ object TextOps {
     * first execution and are scoped to the checkpoint RDDs' lifetime
     * (same storage trade connectedComponents makes for its edge list). */
   def pageRank(edges: org.apache.spark.sql.DataFrame, iters: Int = 3): org.apache.spark.sql.DataFrame = {
+    // lazy checkpoints (see above) truncate the plan without a job at
+    // build time, so they stay outside Materialize's eager seam
     val sym = edges.select(col("a").as("x"), col("b").as("y"))
       .unionByName(edges.select(col("b").as("x"), col("a").as("y")))
       .distinct().localCheckpoint(false)
@@ -568,10 +569,11 @@ object TextOps {
         .crossJoin(nRow)
         .select(col("w"),
           (lit(0.15) / col("n_nodes") + lit(0.85) * col("in_r")).as("r"))
-      // lazy checkpoint BETWEEN iterations: the final plan stays one
-      // iteration deep instead of nesting all prior iterations; the
-      // last iteration is returned un-truncated so callers (and the
-      // plans/ audit) still see the real join+agg shape
+      // lazy checkpoint BETWEEN iterations (no build-time job): the
+      // final plan stays one iteration deep instead of nesting all
+      // prior iterations; the last iteration is returned un-truncated
+      // so callers (and the plans/ audit) still see the real join+agg
+      // shape
       r = if (k == iters) next else next.localCheckpoint(false)
     }
     r

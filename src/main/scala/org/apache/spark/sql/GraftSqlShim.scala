@@ -14,6 +14,10 @@ object GraftSqlShim {
     * read-back reports for data written with schema `s`. */
   def asNullable(s: types.StructType): types.StructType = s.asNullable
 
+  /** A frame over a logical plan (`Dataset.ofRows` is sql-private). */
+  def ofRows(s: SparkSession, plan: catalyst.plans.logical.LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(s.asInstanceOf[classic.SparkSession], plan)
+
   /** Block until all queued listener events are delivered — lets tests
     * read SparkListener-collected metrics deterministically. */
   def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =

@@ -477,6 +477,27 @@ class LayerStoreSpec extends AnyFunSuite {
     assert(snapshot.count() == 64)
   }
 
+  test("compact keeps the range layout: every file holds a disjoint zorder key range") {
+    val store = freshStore()
+    val big = Raster.assemble(
+      (for (tc <- 0 to 7; tr <- 0 to 7; px <- 0 until TS; py <- 0 until TS)
+        yield (tc, tr, px, py, (tc * tr + px).toDouble))
+        .toDF("tile_col", "tile_row", "px", "py", "v"), TS, TS)
+    store.write(big, "z", 2, tileSize = TS)
+    val bytes = new java.io.File(s"${store.root}/tiles/layer_name=z/zoom=2/${store.currentVersion("z", 2).get}")
+      .listFiles().filter(_.getName.endsWith(".parquet")).map(_.length()).sum
+    store.compact("z", 2, targetBytes = bytes / 4 + 1)
+    val zk = graft.functions.ZOrderKey.zorder($"tile_col", $"tile_row")
+    val ranges = store.read("z", 2).select(input_file_name().as("f"), zk.as("z"))
+      .groupBy($"f").agg(min($"z"), max($"z"))
+      .as[(String, Long, Long)].collect().sortBy(_._2)
+    assert(ranges.length >= 2, s"expected several files, got ${ranges.length}")
+    ranges.sliding(2).foreach { case Array(a, b) =>
+      assert(a._3 < b._2, s"files overlap in zorder: ${a._1} [${a._2}, ${a._3}] vs ${b._1} [${b._2}, ${b._3}]")
+    }
+    assert(store.read("z", 2).count() == 64)
+  }
+
   test("vacuum sweeps crash debris but never the live version") {
     val store = freshStore()
     store.write(tiles(0), "v", 1)

@@ -11,8 +11,8 @@ import graft.SparkTestBase.{jobsIn, spark}
   * flips go to child sessions (see IterativeLocalPathsSpec). */
 class LocalGraphSpec extends AnyFunSuite {
 
-  private def resident(rdds: Seq[org.apache.spark.rdd.RDD[_]]): Boolean =
-    rdds.forall(r => spark.sparkContext.getPersistentRDDs.contains(r.id))
+  private def resident(ck: org.apache.spark.sql.DataFrame): Boolean =
+    spark.sparkContext.getPersistentRDDs.contains(Materialize.blocks(ck).id)
 
   test("row count == limit takes the local path and frees the blocks; limit - 1 does not") {
     val s2 = spark.newSession()
@@ -20,29 +20,29 @@ class LocalGraphSpec extends AnyFunSuite {
     val df = s2.createDataFrame(rows).toDF("a", "b", "c").repartition(3)
 
     s2.conf.set(LocalGraph.LimitKey, "10")
-    val (ck, ckRdds) = Materialize.checkpointFresh(df)
-    assert(ckRdds.nonEmpty && resident(ckRdds))
-    val chunks = LocalGraph.gate("spec", ck, ckRdds, 2)
+    val ck = Materialize.checkpointFresh(df)
+    assert(resident(ck))
+    val chunks = LocalGraph.gate("spec", ck, 2)
     assert(chunks.map(_.flatten.grouped(2).map(p => (p(0), p(1))).toSet) ==
       Some(rows.map(r => (r._1, r._2)).toSet))
-    assert(!resident(ckRdds), "the local path must free the checkpoint blocks")
+    assert(!resident(ck), "the local path must free the checkpoint blocks")
 
     s2.conf.set(LocalGraph.LimitKey, "9")
-    val (ck9, ck9Rdds) = Materialize.checkpointFresh(df)
-    assert(LocalGraph.gate("spec", ck9, ck9Rdds, 2).isEmpty)
-    assert(resident(ck9Rdds), "the distributed path owns the blocks")
-    ck9Rdds.foreach(_.unpersist(blocking = false))
+    val ck9 = Materialize.checkpointFresh(df)
+    assert(LocalGraph.gate("spec", ck9, 2).isEmpty)
+    assert(resident(ck9), "the distributed path owns the blocks")
+    Materialize.free(ck9)
   }
 
   test("a non-LONG leading column goes distributed without counting") {
     val s2 = spark.newSession()
     val df = s2.createDataFrame((1 to 5).map(i => (i, i.toLong))).toDF("a", "b")
-    val (ck, ckRdds) = Materialize.checkpointFresh(df)
+    val ck = Materialize.checkpointFresh(df)
     var got: Option[Array[Array[Long]]] = Some(Array.empty)
-    assert(jobsIn("local-graph-non-long") { got = LocalGraph.gate("spec", ck, ckRdds, 2) } == 0)
+    assert(jobsIn("local-graph-non-long") { got = LocalGraph.gate("spec", ck, 2) } == 0)
     assert(got.isEmpty)
-    assert(resident(ckRdds))
-    ckRdds.foreach(_.unpersist(blocking = false))
+    assert(resident(ck))
+    Materialize.free(ck)
   }
 
   test("node ids are dense and in first-seen order; the adjacency lists both directions") {

@@ -38,8 +38,8 @@ class SkewSpec extends AnyFunSuite {
       .select($"l_orderkey", $"l_quantity")
     val o = spark.read.parquet(s"$sf/orders.parquet")
       .select($"o_orderkey", $"o_totalprice")
-    Skew.writeBucketed(li, "li_bucketed", "l_orderkey", 4)
-    Skew.writeBucketed(o.withColumnRenamed("o_orderkey", "l_orderkey"), "o_bucketed", "l_orderkey", 4)
+    Bucketing.writeBucketed(li, "li_bucketed", "l_orderkey", 4)
+    Bucketing.writeBucketed(o.withColumnRenamed("o_orderkey", "l_orderkey"), "o_bucketed", "l_orderkey", 4)
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

@@ -97,4 +97,29 @@ class StreamingCorpusPrepSpec extends AnyFunSuite {
       .as[(Long, Long, Long, Long)].collect().sorted.toVector
     assert(chunkGot == chunkExpected, "chained chunk-dedup branch diverged from t_line_dedup")
   }
+
+  test("a batch frees what it persists and checkpoints, also when it throws part-way") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_cps_blocks").toString
+    val batch = spark.read.parquet(s"$dir/documents.parquet")
+      .select($"doc_id", $"text", $"lang").where($"doc_id" < 40)
+    val sc = spark.sparkContext
+    // the batch frame is held until the count is read, so a GC cannot
+    // free a leaked block before it is counted
+    def persistedAfter(f: => Unit): Int = {
+      val before = sc.getPersistentRDDs.keySet
+      f
+      val left = (sc.getPersistentRDDs.keySet -- before).size
+      java.lang.ref.Reference.reachabilityFence(batch)
+      left
+    }
+    assert(persistedAfter(CorpusPrepStream.ingestBatch(batch, CorpusPrepStream.State(s"$tmp/ok"))) == 0)
+
+    // a non-numeric entry in the cluster versions makes stage 3 throw,
+    // after the band rows are persisted and the survivors checkpointed
+    val broken = CorpusPrepStream.State(s"$tmp/broken")
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"${broken.clustersRoot}/vtmp"))
+    assert(persistedAfter(intercept[NumberFormatException](
+      CorpusPrepStream.ingestBatch(batch, broken))) == 0)
+    assert(new java.io.File(broken.hashFrontPath).exists(), "the batch must fail after stage 2")
+  }
 }
