@@ -174,7 +174,7 @@ class LayerStore(spark: SparkSession, val root: String,
       throw new NoSuchElementException(
         s"layer ($name, $zoom) has no retained sequence $seq; " +
           s"retained: ${retained.map(_._1).mkString("[", ", ", "]")}"))
-    readPath(s"${zoomDir(name, zoom)}/$v")
+    readAt(name, zoom, v)
   }
 
   /** Resolves to the LIVE version dir only. An unpublished layer maps
@@ -364,8 +364,12 @@ class LayerStore(spark: SparkSession, val root: String,
 
   /** S9: read the attribute sidecar of the live version (None for
     * unpublished layers). */
-  def readAttributes(name: String, zoom: Int): Option[LayerAttributes] = {
-    val f = Paths.get(s"${dataPath(name, zoom)}/_attributes.json")
+  def readAttributes(name: String, zoom: Int): Option[LayerAttributes] =
+    attributesAt(dataPath(name, zoom))
+
+  /** The attribute sidecar of one version dir, if it has one. */
+  private def attributesAt(path: String): Option[LayerAttributes] = {
+    val f = Paths.get(s"$path/_attributes.json")
     if (Files.exists(f))
       Some(LayerAttributes.fromJson(new String(Files.readAllBytes(f), "UTF-8")))
     else None
@@ -443,18 +447,24 @@ class LayerStore(spark: SparkSession, val root: String,
     readPath(dataPath(name, zoom))
 
   /** Sidecar-schema'd parquet read of one version dir (shared by the
-    * live [[read]] and the pinned [[readVersion]]). */
+    * live [[read]] and the pinned [[readAt]]). */
   private[catalog] def readPath(path: String): DataFrame = {
-    val schema = {
-      val f = Paths.get(s"$path/_attributes.json")
-      if (Files.exists(f))
-        LayerAttributes.fromJson(new String(Files.readAllBytes(f), "UTF-8")).schemaJson
-          .map(js => org.apache.spark.sql.types.DataType.fromJson(js)
-            .asInstanceOf[org.apache.spark.sql.types.StructType])
-      else None
-    }
+    val schema = attributesAt(path).flatMap(_.schemaJson)
+      .map(js => org.apache.spark.sql.types.DataType.fromJson(js)
+        .asInstanceOf[org.apache.spark.sql.types.StructType])
     schema.fold(spark.read)(s => spark.read.schema(s)).parquet(path)
   }
+
+  /** Tiles of one version dir, named as [[currentVersion]] returns it.
+    * A reader that resolves the live version once and reads tiles and
+    * sidecar through it (see [[readAttributesAt]]) sees one version even
+    * when a publish lands in between. */
+  def readAt(name: String, zoom: Int, version: String): DataFrame =
+    readPath(s"${zoomDir(name, zoom)}/$version")
+
+  /** The attribute sidecar of one version dir (see [[readAt]]). */
+  def readAttributesAt(name: String, zoom: Int, version: String): Option[LayerAttributes] =
+    attributesAt(s"${zoomDir(name, zoom)}/$version")
 
   /** S10: point lookup of a single tile — parquet predicate pushdown +
     * zorder-sorted row groups replace the reference's indexed

@@ -179,11 +179,20 @@ object Export {
     java.nio.file.Files.writeString(java.nio.file.Paths.get(path + ".meta.json"), metaJson)
   }
 
-  /** K11: render one tile to PNG with a heat-map color ramp over the
-    * given quantile breaks (ServeLayerAsMap.scala:88-94: colorMap from
-    * the stored histogram's quantileBreaks(10)). Pure JDK ImageIO. */
+  /** K11: render one tile to a PNG file; see [[renderPngTo]]. */
   def renderPng(cells: Seq[Double], cols: Int, rows: Int, breaks: Seq[Double],
                 outFile: String): Unit = {
+    val out = new java.io.BufferedOutputStream(new java.io.FileOutputStream(outFile))
+    try renderPngTo(cells, cols, rows, breaks, out) finally out.close()
+  }
+
+  /** K11: render one tile as PNG into `out` with a heat-map color ramp
+    * over the given quantile breaks (ServeLayerAsMap.scala:88-94:
+    * colorMap from the stored histogram's quantileBreaks(10)). Pure JDK
+    * ImageIO, encoded in memory: `ImageIO.write` to a bare stream would
+    * cache through a temp file. The file form writes the same bytes. */
+  def renderPngTo(cells: Seq[Double], cols: Int, rows: Int, breaks: Seq[Double],
+                  out: java.io.OutputStream): Unit = {
     val img = new java.awt.image.BufferedImage(cols, rows, java.awt.image.BufferedImage.TYPE_INT_ARGB)
     val nb = breaks.length
     var y = 0
@@ -204,6 +213,14 @@ object Export {
       }
       y += 1
     }
-    javax.imageio.ImageIO.write(img, "png", new java.io.File(outFile))
+    val writer = javax.imageio.ImageIO.getImageWritersByFormatName("png").next()
+    val ios = new javax.imageio.stream.MemoryCacheImageOutputStream(out)
+    try {
+      writer.setOutput(ios)
+      writer.write(img)
+    } finally {
+      writer.dispose()
+      ios.close()
+    }
   }
 }

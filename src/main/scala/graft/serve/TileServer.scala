@@ -1,50 +1,52 @@
 package graft.serve
 
+import com.google.common.cache.CacheBuilder
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.col
 import graft.catalog.LayerStore
 import graft.ops.{Export, Histograms}
 
 /** The reference's tile-serving surface (ServeLayerAsMap.scala:61-124:
   * an HTTP actor on the driver answering /{zoom}/{x}/{y} with a PNG
   * rendered through the stored histogram's quantile breaks). Rebuilt on
-  * the JDK's built-in HttpServer — no Spark job per request: tiles come
-  * from the catalog's pruned point-read path, and a small LRU keeps hot
-  * tiles on the driver exactly like the reference's HadoopValueReader
-  * block cache.
+  * the JDK's built-in HttpServer. Each tile request resolves the live
+  * version of its zoom (one dir listing, one pointer-file read) and is
+  * answered from an LRU of rendered PNGs keyed by (zoom, version, x, y):
+  * a hit runs zero Spark jobs; a miss runs one point-read job on that
+  * version dir (the catalog's pruned read standing in for the
+  * reference's HadoopValueReader), shared by every request for the same
+  * key that arrives while it runs. A publish changes the key, and a
+  * rollback brings the old one back, so no tile outlives its version.
   */
 class TileServer(spark: SparkSession, catalogRoot: String, layer: String,
                  tileSize: Int = graft.core.TileMath.DefaultTileSize) {
 
   private val store = new LayerStore(spark, catalogRoot)
 
-  private val breaksCache = scala.collection.concurrent.TrieMap.empty[Int, Seq[Double]]
-  private val tileCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[(Int, Int, Int), Option[Seq[Double]]](64, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[(Int, Int, Int), Option[Seq[Double]]]) =
-        size() > 256
-    })
+  // Guava's get(key, loader) runs one loader per missing key; concurrent
+  // requests for that key wait for it instead of reading the tile again
+  private val pngs = CacheBuilder.newBuilder().maximumSize(256)
+    .build[(Int, String, Int, Int), Option[Array[Byte]]]()
+  private val metas = CacheBuilder.newBuilder().maximumSize(4)
+    .build[Seq[(Int, String)], String]()
 
-  /** Color breaks from the persisted `_attributes` histogram — zero Spark
-    * jobs, like the reference reading `histogramData` back
-    * (ServeLayerAsMap.scala:90-92). Falls back to a live quantile
-    * aggregation only for pre-sidecar layers. */
-  private def breaks(zoom: Int): Seq[Double] =
-    breaksCache.getOrElseUpdate(zoom,
-      store.readAttributes(layer, zoom).map(_.quantileBreaks(10)).getOrElse(
-        Histograms.quantileBreaks(store.read(layer, zoom), tileSize, 10)))
-
-  private def tile(zoom: Int, x: Int, y: Int): Option[Seq[Double]] = {
-    val k = (zoom, x, y)
-    val cached = tileCache.get(k)
-    if (cached != null) cached
-    else {
-      val loaded = store.readTile(layer, zoom, x, y)
-        .select("cells").collect().headOption.map(_.getSeq[Double](0))
-      tileCache.put(k, loaded)
-      loaded
-    }
-  }
+  /** PNG of tile (x, y) of version `v`, None if `v` has no such tile.
+    * Tile and breaks both come from `v`, never from the version live at
+    * read time: a publish landing during the read must not put another
+    * version's bytes under this key. Breaks come from `v`'s persisted
+    * `_attributes` histogram (ServeLayerAsMap.scala:90-92 reads
+    * `histogramData` back the same way); only a pre-sidecar layer falls
+    * back to a live quantile aggregation. */
+  private def render(zoom: Int, v: String, x: Int, y: Int): Option[Array[Byte]] =
+    store.readAt(layer, zoom, v).where(col("tile_col") === x && col("tile_row") === y)
+      .select("cells").collect().headOption.map { r =>
+        val breaks = store.readAttributesAt(layer, zoom, v).map(_.quantileBreaks(10))
+          .getOrElse(Histograms.quantileBreaks(store.readAt(layer, zoom, v), tileSize, 10))
+        val out = new java.io.ByteArrayOutputStream()
+        Export.renderPngTo(r.getSeq[Double](0), tileSize, tileSize, breaks, out)
+        out.toByteArray
+      }
 
   /** The slippy-map page (the reference serves a Leaflet index.html,
     * ServeLayerAsMap.scala + static/index.html; this build is offline so
@@ -96,13 +98,17 @@ class TileServer(spark: SparkSession, catalogRoot: String, layer: String,
        |</script></body></html>""".stripMargin
 
   /** Layer metadata for the map page: available zooms + tile bounds,
-    * straight from the attribute sidecars (zero Spark jobs). */
+    * straight from the attribute sidecars (zero Spark jobs), parsed
+    * again only when a zoom's live version changes. */
   private def metaJson: String = {
-    val zooms = store.zoomsOf(layer).flatMap { z =>
-      store.readAttributes(layer, z).map(a =>
-        s"""{"zoom":$z,"minCol":${a.minCol},"maxCol":${a.maxCol},"minRow":${a.minRow},"maxRow":${a.maxRow}}""")
-    }
-    s"""{"layer":"$layer","tileSize":$tileSize,"zooms":[${zooms.mkString(",")}]}"""
+    val live = store.zoomsOf(layer).flatMap(z => store.currentVersion(layer, z).map((z, _)))
+    metas.get(live, () => {
+      val zooms = live.flatMap { case (z, v) =>
+        store.readAttributesAt(layer, z, v).map(a =>
+          s"""{"zoom":$z,"minCol":${a.minCol},"maxCol":${a.maxCol},"minRow":${a.minRow},"maxRow":${a.maxRow}}""")
+      }
+      s"""{"layer":"$layer","tileSize":$tileSize,"zooms":[${zooms.mkString(",")}]}"""
+    })
   }
 
   private var server: HttpServer = _
@@ -119,6 +125,12 @@ class TileServer(spark: SparkSession, catalogRoot: String, layer: String,
   /** Start serving the map page (/), layer metadata (/meta) and
     * /{zoom}/{x}/{y} PNG tiles; returns the bound port. */
   def start(port: Int = 0): Int = {
+    // TCP_NODELAY on the accepted sockets: the exchange writes headers
+    // and body as two segments, so without it Nagle's algorithm and the
+    // client's delayed ACK stall every response by ~40 ms. The JDK reads
+    // this once, when the first HttpServer is created in the JVM; it has
+    // no other switch for it.
+    System.setProperty("sun.net.httpserver.nodelay", "true")
     server = HttpServer.create(new java.net.InetSocketAddress("127.0.0.1", port), 0)
     server.createContext("/", new HttpHandler {
       override def handle(ex: HttpExchange): Unit = {
@@ -130,20 +142,19 @@ class TileServer(spark: SparkSession, catalogRoot: String, layer: String,
           }
           if (parts.length != 3) { ex.sendResponseHeaders(404, -1); return }
           val (z, x, y) = (parts(0).toInt, parts(1).toInt, parts(2).toInt)
-          tile(z, x, y) match {
+          store.currentVersion(layer, z) match {
             case None => ex.sendResponseHeaders(204, -1)
-            case Some(cells) =>
-              val tmp = java.io.File.createTempFile("graft_tile", ".png")
-              try {
-                Export.renderPng(cells, tileSize, tileSize, breaks(z), tmp.getAbsolutePath)
-                val bytes = java.nio.file.Files.readAllBytes(tmp.toPath)
-                ex.getResponseHeaders.add("Content-Type", "image/png")
-                // tiles are immutable per published version: let the
-                // browser cache them instead of re-fetching on re-render
-                ex.getResponseHeaders.add("Cache-Control", "max-age=3600")
-                ex.sendResponseHeaders(200, bytes.length.toLong)
-                ex.getResponseBody.write(bytes)
-              } finally tmp.delete()
+            case Some(v) =>
+              // the URL names no version, so the browser must revalidate;
+              // the version dir is the tile's ETag (versions are immutable)
+              val etag = "\"" + v + "\""
+              ex.getResponseHeaders.add("ETag", etag)
+              ex.getResponseHeaders.add("Cache-Control", "no-cache")
+              if (etag == ex.getRequestHeaders.getFirst("If-None-Match")) ex.sendResponseHeaders(304, -1)
+              else pngs.get((z, v, x, y), () => render(z, v, x, y)) match {
+                case None => ex.sendResponseHeaders(204, -1)
+                case Some(png) => respond(ex, "image/png", png)
+              }
           }
         } catch {
           case _: NumberFormatException => ex.sendResponseHeaders(400, -1)

@@ -61,10 +61,14 @@ class PersistedBlocksSpec extends AnyFunSuite {
     def tiles(v: Double) = graft.ops.Raster.assemble(
       (for (tc <- 0 to 1; px <- 0 until 4; py <- 0 until 4)
         yield (tc, 0, px, py, v + px)).toDF("tile_col", "tile_row", "px", "py", "v"), 4, 4)
+    // compare ids, not counts: the context cleaner may free an earlier
+    // test's leftover block during a publish, and a lower count would
+    // both fail with no leak and hide a block the publish did leak
     def noResidue(what: String)(f: => Unit): Unit = {
-      val before = spark.sparkContext.getPersistentRDDs.size
+      val before = spark.sparkContext.getPersistentRDDs.keySet
       f
-      assert(spark.sparkContext.getPersistentRDDs.size == before, s"$what left persistent RDDs")
+      val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(left.isEmpty, s"$what left persistent RDDs $left")
     }
     noResidue("write")(store.write(tiles(0), "p", 1, tileSize = 4))
     noResidue("merge")(store.merge(tiles(5), "p", 1, tileSize = 4))
