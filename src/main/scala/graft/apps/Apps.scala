@@ -36,12 +36,12 @@ object IngestLayer extends Launch.Job {
 }
 
 /** NDVI (NDVILayerExample.scala:28-104 analog): join NIR+Red layers,
-  * cell-wise NDVI, write + histogram stats.
+  * cell-wise NDVI, write, print the cell count and range from the
+  * sidecar the write built (no second pass over the layer).
   * args: catalogDir nirLayer redLayer outLayer zoom */
 object NdviLayer extends Launch.Job {
   def run(spark: SparkSession, args: Array[String]): Unit = {
     val Array(catalog, nir, red, out, zoom) = args.take(5)
-    val ts = Apps.tileSize
     val store = new LayerStore(spark, catalog)
     val ndvi = store.read(nir, zoom.toInt).withColumnRenamed("cells", "nir")
       .join(store.read(red, zoom.toInt).withColumnRenamed("cells", "red"),
@@ -50,7 +50,8 @@ object NdviLayer extends Launch.Job {
         Raster.ndviCells(col("nir"), col("red")).as("cells"))
     store.delete(out, Some(zoom.toInt))
     store.write(ndvi, out, zoom.toInt)
-    Histograms.statistics(store.read(out, zoom.toInt), ts).show()
+    store.readAttributes(out, zoom.toInt).foreach(a =>
+      println(s"n_cells=${a.nCells} min_v=${a.minV} max_v=${a.maxV}"))
   }
 }
 

@@ -172,12 +172,11 @@ class CatalogTxn(store: LayerStore) {
     layers.map { k =>
       val df = resolved.get(k) match {
         case Some((seq, v)) =>
-          val p = s"${store.zoomDir(k._1, k._2)}/$v"
-          if (!Files.isDirectory(Paths.get(p)))
+          if (!Files.isDirectory(Paths.get(store.zoomDir(k._1, k._2), v)))
             throw new IllegalStateException(
               s"transaction $seq pinned version $v of $k, but later publishes GC'd it " +
                 "— raise retainVersions to cover your longest snapshot reader")
-          store.readPath(p)
+          store.readAt(k._1, k._2, v)
         case None if afterAsOf(k) =>
           throw new IllegalStateException(
             s"layer $k has no committed state at sequence <= ${asOf.get}: its first " +

@@ -448,7 +448,7 @@ class LayerStore(spark: SparkSession, val root: String,
 
   /** Sidecar-schema'd parquet read of one version dir (shared by the
     * live [[read]] and the pinned [[readAt]]). */
-  private[catalog] def readPath(path: String): DataFrame = {
+  private def readPath(path: String): DataFrame = {
     val schema = attributesAt(path).flatMap(_.schemaJson)
       .map(js => org.apache.spark.sql.types.DataType.fromJson(js)
         .asInstanceOf[org.apache.spark.sql.types.StructType])

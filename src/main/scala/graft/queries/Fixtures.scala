@@ -27,6 +27,40 @@ object Fixtures {
   def table(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
 
+  /** Root of the suite's per-process scratch, `<java.io.tmpdir>/graft_<pid>`,
+    * so concurrent JVMs never share a catalog. Created on first use, when
+    * its delete is registered with Hadoop's shutdown-hook manager below
+    * Spark's priority (40): it runs after `SparkContext.stop`. */
+  private lazy val scratchRoot: java.nio.file.Path = {
+    import java.nio.file.{Files, Path, Paths}
+    val root = Files.createDirectories(Paths.get(System.getProperty("java.io.tmpdir"),
+      s"graft_${ProcessHandle.current().pid()}"))
+    org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(() =>
+      if (Files.exists(root)) {
+        val paths = Files.walk(root)
+        try paths.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(Files.delete(_))
+        finally paths.close()
+      }, 30)
+    root
+  }
+
+  /** `<scratch root>/<name>_<MD5 of dataDir's absolute path, 16 hex digits>`:
+    * two aliases of one dir share a path, two dirs never do. */
+  def scratch(dataDir: String, name: String): String = {
+    val abs = java.nio.file.Paths.get(dataDir).toAbsolutePath.normalize.toString
+    val key = java.security.MessageDigest.getInstance("MD5").digest(abs.getBytes("UTF-8"))
+      .take(8).map(b => f"$b%02x").mkString
+    s"$scratchRoot/${name}_$key"
+  }
+
+  private val fronts = new java.util.concurrent.ConcurrentHashMap[String, String]()
+
+  /** The [[scratch]] path of a front that `build` writes at most once per
+    * process; a `build` that throws runs again on the next call. A
+    * `build` must not call `front` (one map holds every front). */
+  def front(dataDir: String, name: String)(build: String => Unit): String =
+    fronts.computeIfAbsent(scratch(dataDir, name), path => { build(path); path })
+
   /** Exact decimal-summed double: deterministic across engines AT ANY
     * MAGNITUDE the engine will see.
     * IMPORTANT: feed it decimal-arithmetic expressions built from

@@ -8,19 +8,12 @@ import Fixtures._
 object MiscQueries {
   type Q = (SparkSession, String) => DataFrame
 
-  private val pid = ProcessHandle.current().pid()
-
-  /** Per-process path: Bench and Verify must not race on the same
-    * scratch catalog. */
-  private def tmpCatalog(dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_catalog_${pid}_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
-
   /** K1 + S3: write the band-A layer through the catalog (zorder-sorted,
     * partitioned parquet), read it back pruned, pixelize. Round-trip
     * must be the identity — exercises the storage spine inside the
     * correctness gate. */
   val catalogRoundtrip: Q = (s, dir) => {
-    val store = new graft.catalog.LayerStore(s, tmpCatalog(dir))
+    val store = new graft.catalog.LayerStore(s, scratch(dir, "catalog"))
     store.write(tilesA(s, dir), "band_a", 10)
     graft.ops.Raster.pixelize(store.read("band_a", 10), TS)
   }
@@ -50,7 +43,7 @@ object MiscQueries {
   }
 
   val timeTravel: Q = (s, dir) => {
-    val store = new graft.catalog.LayerStore(s, tmpCatalog(dir) + "_tt")
+    val store = new graft.catalog.LayerStore(s, scratch(dir, "catalog_tt"))
     val (existing, incoming) = overlayPair(s, dir)
     store.write(existing, "band_tt", 9)
     store.merge(incoming, "band_tt", 9)
@@ -83,7 +76,7 @@ object MiscQueries {
     * the live view. Same position-not-absolute-sequence discipline as
     * c_time_travel (reruns accumulate publishes). */
   val rollbackGate: Q = (s, dir) => {
-    val store = new graft.catalog.LayerStore(s, tmpCatalog(dir) + "_rb")
+    val store = new graft.catalog.LayerStore(s, scratch(dir, "catalog_rb"))
     val (existing, incoming) = overlayPair(s, dir)
     store.write(existing, "band_rb", 9)
     store.merge(incoming, "band_rb", 9)
@@ -114,7 +107,7 @@ object MiscQueries {
     * row set would diverge. Rerun-safe: each rerun appends a fresh
     * transaction and the newest record wins. */
   val txnSnapshot: Q = (s, dir) => {
-    val store = new graft.catalog.LayerStore(s, tmpCatalog(dir) + "_tx")
+    val store = new graft.catalog.LayerStore(s, scratch(dir, "catalog_tx"))
     val txn = new graft.catalog.CatalogTxn(store)
     val (existing, incoming) = overlayPair(s, dir)
     txn.commit(Seq( // attrs skipped: the gate tests txn semantics, not sidecars
@@ -144,7 +137,7 @@ object MiscQueries {
     * idempotent (incoming-wins where defined), and compact republishes
     * like any other write. */
   val compactRoundtrip: Q = (s, dir) => {
-    val store = new graft.catalog.LayerStore(s, tmpCatalog(dir) + "_cp")
+    val store = new graft.catalog.LayerStore(s, scratch(dir, "catalog_cp"))
     val (existing, incoming) = overlayPair(s, dir)
     store.write(existing, "band_cp", 9, withAttributes = false)
     store.merge(incoming, "band_cp", 9, withAttributes = false)
@@ -159,7 +152,7 @@ object MiscQueries {
        |FROM pxk""".stripMargin
 
   val versionDiff: Q = (s, dir) => {
-    val store = new graft.catalog.LayerStore(s, tmpCatalog(dir) + "_vd")
+    val store = new graft.catalog.LayerStore(s, scratch(dir, "catalog_vd"))
     val (existing, incoming) = overlayPair(s, dir)
     store.write(existing, "band_vd", 9)
     store.merge(incoming, "band_vd", 9)
@@ -205,7 +198,7 @@ object MiscQueries {
   /** S10: point read of one tile after a catalog write (the tile-server
     * path, ServeLayerAsMap.scala:33,111). */
   val pointRead: Q = (s, dir) => {
-    val store = new graft.catalog.LayerStore(s, tmpCatalog(dir) + "_pt")
+    val store = new graft.catalog.LayerStore(s, scratch(dir, "catalog_pt"))
     store.write(tilesA(s, dir), "band_a", 10)
     graft.ops.Raster.pixelize(store.readTile("band_a", 10, 1, 2), TS)
   }
@@ -219,7 +212,7 @@ object MiscQueries {
     * columns; the zorder-sorted row groups make this an indexed range
     * read without an index structure. */
   val bboxRead: Q = (s, dir) => {
-    val store = new graft.catalog.LayerStore(s, tmpCatalog(dir) + "_bb")
+    val store = new graft.catalog.LayerStore(s, scratch(dir, "catalog_bb"))
     store.write(tilesA(s, dir), "band_a", 10)
     graft.ops.Raster.pixelize(store.readRange("band_a", 10, 1, 1, 2, 3), TS)
   }
@@ -238,7 +231,7 @@ object MiscQueries {
     * oracle recomputes the filtered pixels relationally, so the hash
     * match proves pruning lost nothing. */
   val spacetimeRange: Q = (s, dir) => {
-    val store = new graft.catalog.LayerStore(s, tmpCatalog(dir) + "_str")
+    val store = new graft.catalog.LayerStore(s, scratch(dir, "catalog_str"))
     val px = table(s, dir, "lineitem").groupBy(
         date_format(col("l_shipdate"), "yyyy-MM").as("time"),
         (col("l_orderkey") % 4).cast("int").as("tile_col"),
@@ -281,7 +274,7 @@ object MiscQueries {
     * (Utils.scala:85-89 / ServeLayerAsMap.scala:90-92). */
   val attributes: Q = (s, dir) => {
     import s.implicits._
-    val store = new graft.catalog.LayerStore(s, tmpCatalog(dir) + "_attr")
+    val store = new graft.catalog.LayerStore(s, scratch(dir, "catalog_attr"))
     store.write(tilesA(s, dir), "band_a", 10, tileSize = TS, binWidth = 8.0)
     val a = store.readAttributes("band_a", 10).get
     a.bins.zip(a.counts).toDF("bin", "n")
@@ -515,7 +508,7 @@ object MiscQueries {
     * the oracle. At scale this is metadata-only: no rewrite of v1
     * files ever happens. */
   val schemaMerge: Q = (s, dir) => {
-    val base = tmpCatalog(dir) + "_schevo"
+    val base = scratch(dir, "catalog_schevo")
     val li = table(s, dir, "lineitem")
     li.where(col("l_orderkey") % 2 === 0)
       .select(col("l_orderkey"), col("l_linenumber"), dec2(col("l_extendedprice")).as("price"))
@@ -549,7 +542,7 @@ object MiscQueries {
     * source, so the gate proves the ORC write→read cycle is lossless
     * across all five types. */
   val orcRoundtrip: Q = (s, dir) => {
-    val base = tmpCatalog(dir) + "_orc"
+    val base = scratch(dir, "catalog_orc")
     table(s, dir, "lineitem")
       .select(col("l_orderkey"), col("l_linenumber"), col("l_returnflag"),
         dec2(col("l_extendedprice")).as("price"), col("l_shipdate"))
@@ -579,7 +572,7 @@ object MiscQueries {
     * original source, so the gate proves the codec cycle is lossless
     * across the five core types. */
   val zstdRoundtrip: Q = (s, dir) => {
-    val base = tmpCatalog(dir) + "_zstd"
+    val base = scratch(dir, "catalog_zstd")
     table(s, dir, "lineitem")
       .select(col("l_orderkey"), col("l_linenumber"), col("l_returnflag"),
         dec2(col("l_extendedprice")).as("price"), col("l_shipdate"))
@@ -612,7 +605,7 @@ object MiscQueries {
     * documents the boundary instead of hiding it). */
   val jsonRoundtrip: Q = (s, dir) => {
     import org.apache.spark.sql.types._
-    val base = tmpCatalog(dir) + "_json"
+    val base = scratch(dir, "catalog_json")
     table(s, dir, "lineitem")
       .select(col("l_orderkey"), col("l_linenumber"), col("l_returnflag"),
         dec2(col("l_extendedprice")).as("price"),
@@ -647,7 +640,7 @@ object MiscQueries {
     * partitions survived and the refreshed one changed — static
     * overwrite semantics (truncate-all) would fail it loudly. */
   val partitionOverwrite: Q = (s, dir) => {
-    val base = tmpCatalog(dir) + "_dpo"
+    val base = scratch(dir, "catalog_dpo")
     val li = table(s, dir, "lineitem").select(col("l_orderkey"), col("l_linenumber"),
       dec2(col("l_extendedprice")).as("price"), col("l_returnflag"))
     li.write.mode("overwrite").partitionBy("l_returnflag").parquet(base)

@@ -977,21 +977,8 @@ object RasterQueries {
     * not a CC loop each re-runs. r_region_label itself stays fully
     * in-plan (it oracles the derivation); values are exact integers
     * through the parquet round-trip, so consumer hashes are unchanged. */
-  private val regionFrontPaths = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  def regionLabelFront(s: SparkSession, dir: String): DataFrame = {
-    // canonical-path key: see TextQueries.shinglePairsFront
-    val path = regionFrontPaths.computeIfAbsent(
-      new java.io.File(dir).getAbsolutePath, abs => {
-      val dirKey = java.security.MessageDigest.getInstance("MD5")
-        .digest(abs.getBytes("UTF-8"))
-        .take(8).map(b => f"$b%02x").mkString
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_regionfront_" +
-        s"${java.lang.ProcessHandle.current().pid()}_$dirKey"
-      regionLabel(s, dir).write.mode("overwrite").parquet(base)
-      base
-    })
-    s.read.parquet(path)
-  }
+  def regionLabelFront(s: SparkSession, dir: String): DataFrame =
+    s.read.parquet(front(dir, "regionfront")(regionLabel(s, dir).write.mode("overwrite").parquet(_)))
 
   val regionLabelSql: String = {
     val w = 4 * TS
@@ -1398,26 +1385,15 @@ object RasterQueries {
     * READS instead of re-running the CC loop (same pattern as
     * sigFront / regionLabelFront). r_dbscan_core stays fully in-plan
     * (it oracles the CC derivation). */
-  private val dbscanFrontPaths = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  def dbscanCoreLabFront(s: SparkSession, dir: String): DataFrame = {
-    // canonical-path key: see TextQueries.shinglePairsFront
-    val path = dbscanFrontPaths.computeIfAbsent(
-      new java.io.File(dir).getAbsolutePath, abs => {
-      val dirKey = java.security.MessageDigest.getInstance("MD5")
-        .digest(abs.getBytes("UTF-8"))
-        .take(8).map(b => f"$b%02x").mkString
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_dbscanfront_" +
-        s"${java.lang.ProcessHandle.current().pid()}_$dirKey"
+  def dbscanCoreLabFront(s: SparkSession, dir: String): DataFrame =
+    s.read.parquet(front(dir, "dbscanfront") { path =>
       val (lab, checkpoints) = dbscanCoreLab(s, dir)
-      lab.write.mode("overwrite").parquet(base)
+      lab.write.mode("overwrite").parquet(path)
       // the parquet front now holds the result; nothing references the
       // checkpoint blocks — free them instead of pinning storage for
       // the session lifetime
       graft.ops.Materialize.free(checkpoints: _*)
-      base
     })
-    s.read.parquet(path)
-  }
 
   // COINCIDENT-POINT CONTRACTION (round-8 100x-probe fix): coreness
   // and cluster membership are functions of the POSITION, not the

@@ -167,22 +167,11 @@ object SimQueries {
     * deterministic Forgy codebook (see
     * [[Similarity.buildIvfIndexDet]]) keeps the probe SQL-expressible,
     * so the gates that consume it stay hash-oracled. */
-  private val ivfFrontPaths = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def ivfIndexFront(s: SparkSession, dir: String): String = {
-    val key = new java.io.File(dir).getAbsolutePath
-    ivfFrontPaths.computeIfAbsent(key, _ => {
-      val dirKey = java.security.MessageDigest.getInstance("MD5")
-        .digest(key.getBytes("UTF-8")).take(8).map(b => f"$b%02x").mkString
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_ivffront_" +
-        s"${java.lang.ProcessHandle.current().pid()}_$dirKey"
-      val b = graft.text.TextOps.hashBucket(col("vec_id"), 10)
-      Similarity.buildIvfIndexDet(
-        table(s, dir, "embeddings").where(b =!= 9)
-          .select(col("vec_id"), col("embedding")),
-        base, IvfNList)
-      base
-    })
-  }
+  private def ivfIndexFront(s: SparkSession, dir: String): String =
+    front(dir, "ivffront")(Similarity.buildIvfIndexDet(
+      table(s, dir, "embeddings").where(graft.text.TextOps.hashBucket(col("vec_id"), 10) =!= 9)
+        .select(col("vec_id"), col("embedding")),
+      _, IvfNList))
 
   /** Pruned-probe predictions: [[knnPredictionsIvf]] over the
     * deterministic persisted index — each query scores

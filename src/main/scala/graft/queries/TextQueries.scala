@@ -262,23 +262,8 @@ object TextQueries {
     * fully in-plan (it oracles the whole posting-list derivation);
     * exact integers through the parquet round-trip keep every
     * consumer's hash unchanged. */
-  private val pairFrontPaths = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  def shinglePairsFront(s: SparkSession, dir: String): DataFrame = {
-    // map key = canonical path (not the raw string): two aliases of the
-    // same dir must share one entry, or the second recomputes and
-    // overwrites the parquet while the first is reading it
-    val path = pairFrontPaths.computeIfAbsent(
-      new java.io.File(dir).getAbsolutePath, abs => {
-      val dirKey = java.security.MessageDigest.getInstance("MD5")
-        .digest(abs.getBytes("UTF-8"))
-        .take(8).map(b => f"$b%02x").mkString
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_pairfront_" +
-        s"${java.lang.ProcessHandle.current().pid()}_$dirKey"
-      shinglePairs(s, dir).write.mode("overwrite").parquet(base)
-      base
-    })
-    s.read.parquet(path)
-  }
+  def shinglePairsFront(s: SparkSession, dir: String): DataFrame =
+    s.read.parquet(front(dir, "pairfront")(shinglePairs(s, dir).write.mode("overwrite").parquet(_)))
 
   val ngramJaccard: Q = (s, dir) =>
     shinglePairs(s, dir).select(col("a"), col("b"),
@@ -592,21 +577,8 @@ object TextQueries {
     * oracle-gated end to end. Values are bit-identical to the inline
     * form (same kernel, exact integers through a parquet round-trip),
     * so every consumer's hash is unchanged. */
-  private val sigFrontPaths = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  def sigFront(s: SparkSession, dir: String): DataFrame = {
-    // canonical-path key: see shinglePairsFront
-    val path = sigFrontPaths.computeIfAbsent(
-      new java.io.File(dir).getAbsolutePath, abs => {
-      val dirKey = java.security.MessageDigest.getInstance("MD5")
-        .digest(abs.getBytes("UTF-8"))
-        .take(8).map(b => f"$b%02x").mkString
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_sigfront_" +
-        s"${java.lang.ProcessHandle.current().pid()}_$dirKey"
-      sigsInline(s, dir).write.mode("overwrite").parquet(base)
-      base
-    })
-    s.read.parquet(path)
-  }
+  def sigFront(s: SparkSession, dir: String): DataFrame =
+    s.read.parquet(front(dir, "sigfront")(sigsInline(s, dir).write.mode("overwrite").parquet(_)))
 
   /** Banding + candidate pairing over a signature relation — the LSH
     * stage, parameterized by where the signatures come from (in-plan
@@ -750,20 +722,13 @@ object TextQueries {
     * contains ZERO MinHash/LSH/CC work — two key joins and a
     * partial-agg groupBy over (doc_id, cluster, n_chars). Same final
     * table as t_dedup_keeper, same oracle shape. Side-effecting by
-    * design (the materialization IS the point): the tmp path is
-    * per-process+per-dir like the catalog gates' tmpCatalog, rewritten
+    * design (the materialization IS the point): the path is the
+    * per-process, per-dir [[Fixtures.scratch]] path, rewritten
     * idempotently (mode=overwrite) on every invocation — including the
-    * plan-audit pass — and reclaimed with the OS tmpdir, the same
-    * lifecycle every c_* catalog gate has. */
+    * plan-audit pass — and deleted at JVM exit, the same lifecycle
+    * every c_* catalog gate has. */
   val keeperFromClusterTable: Q = (s, dir) => {
-    // collision-free dir key: hash the absolute path, not a lossy
-    // [^a-zA-Z0-9]->'_' sanitization (".../sf0.1" and ".../sf0_1"
-    // collided under the old scheme when one process touched both)
-    val dirKey = java.security.MessageDigest.getInstance("MD5")
-      .digest(new java.io.File(dir).getAbsolutePath.getBytes("UTF-8"))
-      .take(8).map(b => f"$b%02x").mkString
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft_clusters_" +
-      s"${java.lang.ProcessHandle.current().pid()}_$dirKey"
+    val base = scratch(dir, "clusters")
     dedupClusters(s, dir).write.mode("overwrite").parquet(base)
     TextOps.keeperFromClusters(
       table(s, dir, "documents").select(col("doc_id"), col("n_chars")),
@@ -995,7 +960,7 @@ object TextQueries {
     * than k alive neighbors; rounds are pure integer joins + counts,
     * so both engines replay them bit-identically and the oracle
     * unrolls the same four rounds as chained CTEs. The symmetrized
-    * edge list and each round's survivor set are localCheckpoint'd
+    * edge list and each round's survivor set are checkpointed
     * (the connectedComponents discipline): the unrolled plan stays
     * O(rounds) instead of 2^rounds re-derivations of the LSH pipeline
     * (each round references the previous survivor set TWICE — once per
@@ -1031,14 +996,17 @@ object TextQueries {
       case None =>
         val sym = eCk.unionByName(eCk.select(col("b").as("a"), col("a").as("b")))
         val nodes = sym.select(col("a").as("v")).distinct()
+        // eager rounds: once round i has run, no plan reads round i-1,
+        // so the result holds only the edge set and the last round
         var alive = nodes
-        for (_ <- 1 to 4) {
-          alive = sym
+        for (i <- 1 to 4) {
+          val next = graft.ops.Materialize.checkpointFresh(sym
             .join(alive.select(col("v").as("a")), Seq("a"))
             .join(alive.select(col("v").as("b")), Seq("b"))
             .groupBy(col("a")).agg(count(lit(1)).as("deg"))
-            .where(col("deg") >= KC).select(col("a").as("v"))
-            .localCheckpoint(false) // lazy, no build-time job (TextOps.pageRank's scaladoc)
+            .where(col("deg") >= KC).select(col("a").as("v")))
+          if (i > 1) graft.ops.Materialize.free(alive)
+          alive = next
         }
         val coreDeg = sym
           .join(alive.select(col("v").as("a")), Seq("a"))

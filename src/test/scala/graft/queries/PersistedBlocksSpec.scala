@@ -102,16 +102,16 @@ class PersistedBlocksSpec extends AnyFunSuite {
 
   test("the distributed-path iterative gates keep their pinned residual") {
     // exactly the blocks each returned plan reads: CC its normalized
-    // edge set and last round, k-core its edge set and four lazily
-    // checkpointed survivor rounds (both plans read the edge set
-    // lazily, so no point inside them can free it), BFS/SSSP the
-    // distance table, flow accumulation its four rounds' frontiers and
-    // partial sums, basin and cost distance their last round. A block
-    // no plan reads must be freed before the gate returns: left to the
-    // context cleaner, it would make this count depend on GC timing.
+    // edge set and last round, k-core its edge set and last survivor
+    // round (both plans read the edge set lazily, so no point inside
+    // them can free it), BFS/SSSP the distance table, flow
+    // accumulation its four rounds' frontiers and partial sums, basin
+    // and cost distance their last round. A block no plan reads must
+    // be freed before the gate returns: left to the context cleaner, it
+    // would make this count depend on GC timing.
     val s2 = spark.newSession() // conf isolation — see IterativeLocalPathsSpec
     s2.conf.set(graft.ops.LocalGraph.LimitKey, "0")
-    val want = Map("t_dedup_clusters" -> 2, "t_kcore" -> 5, "t_bfs_dist" -> 1,
+    val want = Map("t_dedup_clusters" -> 2, "t_kcore" -> 2, "t_bfs_dist" -> 1,
       "t_sssp" -> 1, "r_flow_accum" -> 5, "r_basin_label" -> 1, "r_cost_distance" -> 1)
     val sc = spark.sparkContext
     val start = sc.getPersistentRDDs.keySet

@@ -183,13 +183,13 @@ class PlanInvariantsSpec extends AnyFunSuite {
     // The round-8 materialized-front generalization: the signature
     // table is derived ONCE per process (sigFront) and persisted;
     // every downstream dedup/graph gate's plan must READ it (a
-    // graft_sigfront parquet scan) and contain zero in-plan MinHash
+    // sigfront_ parquet scan) and contain zero in-plan MinHash
     // derivation. t_minhash_sig / t_minhash_lsh stay fully in-plan —
     // they are the gates that oracle the derivation itself.
     val staged = Seq("t_corpus_prep", "t_triangles", "t_label_prop", "t_lsh_verify",
       "t_lsh_recall")
     for (name <- staged)
-      assert(plans(name).contains("graft_sigfront"),
+      assert(plans(name).contains("/sigfront_"),
         s"$name must consume the materialized signature front")
     // CC-consumer dedup gates: at sf0.001 the scale-adaptive CC runs
     // eagerly (local union-find), so the final plan is a Scan
@@ -198,7 +198,7 @@ class PlanInvariantsSpec extends AnyFunSuite {
     for (name <- Seq("t_dedup_clusters", "t_dedup_keeper")) {
       val all = plans(name) +
         subPlans.getOrElse(name, Nil).map(_._2).mkString("\n")
-      assert(all.contains("graft_sigfront"),
+      assert(all.contains("/sigfront_"),
         s"$name must consume the materialized signature front " +
           "(final plan or captured cc_edges pre-plan)")
     }
@@ -211,29 +211,29 @@ class PlanInvariantsSpec extends AnyFunSuite {
       assert(plans(name).contains("Scan ExistingRDD"),
         s"$name must run off its checkpointed (front-derived) edge list")
     for (name <- Seq("t_minhash_sig", "t_minhash_lsh"))
-      assert(!plans(name).contains("graft_sigfront"),
+      assert(!plans(name).contains("/sigfront_"),
         s"$name must derive signatures in-plan (it oracles the derivation)")
     // the raster twin: zonal stats and sieve consume the materialized
     // region-label front; the labeling gate derives it in-plan
     for (name <- Seq("r_region_stats", "r_sieve_filter"))
-      assert(plans(name).contains("graft_regionfront"),
+      assert(plans(name).contains("/regionfront_"),
         s"$name must consume the materialized region-label front")
-    assert(!plans("r_region_label").contains("graft_regionfront"),
+    assert(!plans("r_region_label").contains("/regionfront_"),
       "r_region_label must derive the labeling in-plan (it oracles the CC loop)")
     // the shingle candidate-pair front: containment and the recall
     // audit consume it; the Jaccard gate derives the posting-list
     // pipeline in-plan (t_sssp's checkpointed loop hides the scan)
     for (name <- Seq("t_containment", "t_lsh_recall"))
-      assert(plans(name).contains("graft_pairfront"),
+      assert(plans(name).contains("/pairfront_"),
         s"$name must consume the materialized candidate-pair front")
-    assert(!plans("t_ngram_jaccard").contains("graft_pairfront"),
+    assert(!plans("t_ngram_jaccard").contains("/pairfront_"),
       "t_ngram_jaccard must derive the posting lists in-plan (it oracles them)")
     // the DBSCAN core-label front: BOTH gates read the cluster
     // assignment (each hashes its full output against a fully
     // relational oracle, so the CC derivation stays oracle-gated
     // without a derivation-only gate)
     for (name <- Seq("r_dbscan_core", "r_dbscan_labels"))
-      assert(plans(name).contains("graft_dbscanfront"),
+      assert(plans(name).contains("/dbscanfront_"),
         s"$name must consume the materialized core-label front")
   }
 
@@ -246,7 +246,7 @@ class PlanInvariantsSpec extends AnyFunSuite {
     // (the exact O(test x train) path lives only in SimilaritySpec).
     for (name <- Seq("m_knn_confusion", "m_prf_report")) {
       val p = plans(name)
-      assert(p.contains("graft_ivffront"),
+      assert(p.contains("/ivffront_"),
         s"$name must read the persisted det-IVF index front")
       assert(p.contains("PartitionFilters"),
         s"$name must partition-prune the assignment scan by probed cluster")
