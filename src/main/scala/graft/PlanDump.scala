@@ -11,7 +11,7 @@ object PlanDump {
     plan
       .replaceAll("#\\d+[L]?", "#N") // expression ids
       .replaceAll("codegen id : \\d+", "codegen id : N") // stage numbering drifts with session job order
-      .replaceAll("@[0-9a-f]{6,}", "@obj") // JVM identity hashes (udaf instances)
+      .replaceAll("@[0-9a-f]+\\b", "@obj") // JVM identity hashes (udaf instances)
       .replaceAll("RDD\\[\\d+\\]", "RDD[N]") // session-scoped RDD ids
       .replaceAll("Lambda\\$\\d+/0x[0-9a-f]+", "Lambda\\$N") // JIT lambda class names
       .replaceAll("[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}", "<uuid>")

@@ -3,11 +3,11 @@ package graft.catalog
 import org.apache.spark.sql.DataFrame
 import java.nio.file.{Files, Path, Paths}
 
-/** One staged layer write inside a [[CatalogTxn.commit]]. */
+/** One staged layer write inside a [[CatalogTxn.commit]], published
+  * like [[LayerStore.write]]: in its key's layout, with its sidecar. */
 final case class TxnWrite(name: String, zoom: Int, tiles: DataFrame,
                           tileSize: Int = graft.core.TileMath.DefaultTileSize,
-                          crs: String = "EPSG:4326", binWidth: Double = 1.0,
-                          withAttributes: Boolean = true)
+                          crs: String = "EPSG:4326", binWidth: Double = 1.0)
 
 /** Cross-layer atomic commits over [[LayerStore]]'s per-layer versioned
   * publish — the catalog-level transaction log.
@@ -62,8 +62,7 @@ class CatalogTxn(store: LayerStore) {
     withLocks(ordered) {
       val bindings = ordered.map { w =>
         store.writeVersion(w.name, w.zoom) { path =>
-          store.writeTo(w.tiles, path,
-            Option.when(w.withAttributes)(AttrSpec(w.tileSize, w.crs, w.binWidth)))
+          store.writeTo(w.tiles, path, w.tileSize, w.crs, w.binWidth)
         }
         // under this layer's lock our publish IS the live pointer
         val v = store.currentVersion(w.name, w.zoom).getOrElse(

@@ -1,13 +1,9 @@
 package graft.catalog
 
-import org.apache.spark.sql.{DataFrame, GraftSqlShim, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, GraftSqlShim, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import graft.functions.ZOrderKey.zorder
-
-/** What a publish records in its `_attributes.json` sidecar besides the
-  * data-derived stats: tile geometry, CRS and requested bin width. */
-private[catalog] final case class AttrSpec(tileSize: Int, crs: String, binWidth: Double)
 
 /** Parquet-backed tile-layer catalog — the engine's spine (SURVEY §1.3).
   *
@@ -17,11 +13,14 @@ private[catalog] final case class AttrSpec(tileSize: Int, crs: String, binWidth:
   *  - one parquet dataset per (layer_name, zoom), resolved through a
   *    version manifest (below) → partition-dir pruning replaces the
   *    attribute-store lookup + index range read;
-  *  - rows sorted by zorder(tile_col, tile_row) within partitions before
-  *    write (ZCurveKeyIndexMethod analog, api/package.scala:143) so
-  *    parquet row-group min/max stats prune point/range reads;
+  *  - one layout rule, the key picking the index as in the reference
+  *    (api/package.scala:130-152): a frame with a `time` column is
+  *    sorted on (time, hilbert) in `time=` dirs (HilbertKeyIndexMethod),
+  *    any other on zorder (ZCurveKeyIndexMethod), so parquet min/max
+  *    stats prune point/range reads;
   *  - per-(layer, zoom) metadata + zoom-0 histogram as a JSON sidecar
-  *    `_attributes` inside the version dir (Utils.scala:85-89).
+  *    `_attributes` inside the version dir (Utils.scala:85-89), written
+  *    by every publish.
   *
   * == Versioned publish (crash atomicity + snapshot isolation) ==
   *
@@ -102,7 +101,7 @@ class LayerStore(spark: SparkSession, val root: String,
     var attempts = 0
     while (attempts < 8) {
       val entries = pointerEntries(name, zoom)
-      if (entries.isEmpty) return legacyCurrent(name, zoom)
+      if (entries.isEmpty) return None
       // resolve ONLY this listing's max: an older entry from the same
       // (now stale) listing may already be outside the retention window
       // and mid-GC — falling back to it would serve a dying version
@@ -119,15 +118,6 @@ class LayerStore(spark: SparkSession, val root: String,
   private def readPointer(p: Path): Option[String] =
     try Some(new String(Files.readAllBytes(p), "UTF-8").trim)
     catch { case _: java.io.IOException => None }
-
-  /** Pre-pointer-sequence layout compat: a store written before the
-    * fenced-publish change has a single `_current` file instead of
-    * `_ptr-*` sequence files. Read it as sequence 0 (every new claim
-    * sorts above it); the next publish migrates it to `_ptr-00000000`
-    * BEFORE its GC runs, so the old live version enters the retention
-    * window instead of being deleted as an unreferenced orphan. */
-  private def legacyCurrent(name: String, zoom: Int): Option[(Long, String)] =
-    readPointer(Paths.get(s"${zoomDir(name, zoom)}/_current")).map((0L, _))
 
   /** The live version dir name (e.g. "v-00000003"), if published. */
   def currentVersion(name: String, zoom: Int): Option[String] =
@@ -247,7 +237,9 @@ class LayerStore(spark: SparkSession, val root: String,
 
   /** The fenced claim of [[writeVersion]] and [[rollback]]: hard-link
     * `tmp` (holding `version`) as pointer `base + 1`, or run `fenced`
-    * (which throws) if that sequence is taken; then retention GC. */
+    * (which throws) if that sequence is taken; then the publish record
+    * (lock wait -1 when the caller holds no lock of this store) and
+    * retention GC. */
   private def publish(name: String, zoom: Int, base: Long, version: String, tmp: Path)
                      (fenced: => Nothing): Unit = {
     val dir = zoomDir(name, zoom)
@@ -258,11 +250,10 @@ class LayerStore(spark: SparkSession, val root: String,
         Files.deleteIfExists(tmp); fenced
     }
     Files.deleteIfExists(tmp)
-    // migrate a pre-sequence `_current` pointer into the sequence as 0,
-    // so the GC below sees the old live version as retained, not orphaned
-    try Files.move(Paths.get(s"$dir/_current"), ptrPath(name, zoom, 0L),
-      StandardCopyOption.ATOMIC_MOVE): Unit
-    catch { case _: java.io.IOException => () } // none, or another writer migrated
+    val files = parquetFiles(s"$dir/$version")
+    LayerStore.log.info(s"publish layer=$name zoom=$zoom seq=${base + 1} version=$version " +
+      s"files=${files.size} bytes=${files.map(_.length).sum} " +
+      s"lock_wait_ms=${lockWaits.getOrDefault((name, zoom), -1L)}")
     // GC: keep the newest retainVersions pointers and their versions.
     // Re-list AFTER publishing — if a successor has already advanced
     // past us, its view of the keep-set wins for anything we might race.
@@ -276,49 +267,19 @@ class LayerStore(spark: SparkSession, val root: String,
       .foreach(d => rmTree(new java.io.File(s"$dir/$d")))
   }
 
-  /** K1: versioned write with Z-curve ordering (api/package.scala:130-146),
-    * then the `_attributes.json` sidecar (metadata + exact binned
-    * histogram — Utils.scala:85-89 persists `histogramData` so the tile
-    * server never re-aggregates the layer). The sidecar is computed in
-    * one job from the checkpoint blocks the write itself read (see
-    * [[checkpointed]]), never by reading the written parquet back. It
-    * lives INSIDE the version dir: underscore-prefixed files are
-    * invisible to Spark's parquet scan, and the pointer swap publishes
-    * data + attributes together. */
+  /** K1: versioned write in the key's [[layout]], then the
+    * `_attributes.json` sidecar (metadata + exact binned histogram —
+    * Utils.scala:85-89 persists `histogramData` so the tile server never
+    * re-aggregates the layer), built from the write's own checkpoint
+    * blocks ([[writeTo]]). It lives INSIDE the version dir:
+    * underscore-prefixed files are invisible to Spark's parquet scan, and
+    * the pointer swap publishes data + attributes together. */
   def write(tiles: DataFrame, name: String, zoom: Int,
             tileSize: Int = graft.core.TileMath.DefaultTileSize,
-            crs: String = "EPSG:4326", binWidth: Double = 1.0,
-            withAttributes: Boolean = true): Unit = withLayerLock(name, zoom) {
+            crs: String = "EPSG:4326", binWidth: Double = 1.0): Unit = withLayerLock(name, zoom) {
     writeVersion(name, zoom) { path =>
-      writeTo(tiles, path, Option.when(withAttributes)(AttrSpec(tileSize, crs, binWidth)))
+      writeTo(tiles, path, tileSize, crs, binWidth)
     }
-  }
-
-  // r11 (guide §6): RANGE-partition on the space-filling key instead of
-  // hash-partitioning on the tile key. Hash placement scattered every
-  // zorder range across all files, so file-level min/max stats never
-  // pruned anything (only row groups within a file were clustered);
-  // range placement makes each FILE a contiguous zorder slice — bbox
-  // and point reads now skip whole files, and the shuffle cost is the
-  // same one exchange.
-  /** Write-side partition count derived from the MEASURED bytes of the
-    * (just-checkpointed) input instead of a constant (guide §2/§6:
-    * scale-adaptive partitioning, 128 MB-1 GB output files): a small
-    * layer gets few large files — fewer write tasks, fewer leaf files
-    * to list, fewer scan tasks for every reader — while a layer bigger
-    * than partitions x target keeps the session's full write
-    * parallelism. `spark.graft.write.targetPartitionBytes` (default
-    * 128 MB of cached-block bytes, i.e. smaller on disk after parquet
-    * encoding) tunes the file size goal. */
-  private def writeParts(ck: DataFrame): Int = {
-    val n = spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
-    val target = spark.conf
-      .get("spark.graft.write.targetPartitionBytes", (128L << 20).toString).toLong
-    val id = graft.ops.Materialize.blocks(ck).id
-    val bytes = spark.sparkContext.getRDDStorageInfo
-      .filter(_.id == id).map(i => i.memSize + i.diskSize).sum
-    if (bytes <= 0L) n
-    else math.max(1, math.min(n.toLong, bytes / target + 1).toInt)
   }
 
   // layout keys: spatial layers range on zorder, space-time on (time, hilbert)
@@ -326,39 +287,61 @@ class LayerStore(spark: SparkSession, val root: String,
   private def hKey =
     graft.functions.HilbertKey.hilbert(col("tile_col").cast("int"), col("tile_row").cast("int"))
 
-  /** Z-ordered parquet write of `tiles` into `path`, plus its sidecar
-    * when `attrs` is set. The sidecar schema is the written one made
-    * nullable — exactly what a parquet read-back reports. */
-  private[catalog] def writeTo(tiles: DataFrame, path: String, attrs: Option[AttrSpec]): Unit = {
-    // The explicit count keeps AQE from coalescing a BIG write to one
-    // task; the measured-size floor keeps a small one off 32 tiny files.
-    checkpointed(tiles, path, attrs)(GraftSqlShim.asNullable) { t =>
-      t.repartitionByRange(writeParts(t), zKey)
-        .sortWithinPartitions(zKey)
-        .write.mode(SaveMode.Overwrite).parquet(path)
-    }
+  /** The one layout of every publish (see the class doc), range-placed
+    * on its key (r11, guide §6): unlike a hash on the tile key, each
+    * FILE is one contiguous key slice, so bbox and point reads skip
+    * whole files and a month's dir holds a few files, not one per
+    * (task x month). The explicit `parts` keeps AQE from coalescing a
+    * big write to one task. */
+  private def layout(t: DataFrame, parts: Int): DataFrameWriter[Row] =
+    if (t.columns.contains("time"))
+      t.repartitionByRange(parts, col("time"), hKey).sortWithinPartitions(col("time"), hKey)
+        .write.mode(SaveMode.Overwrite).partitionBy("time")
+    else
+      t.repartitionByRange(parts, zKey).sortWithinPartitions(zKey).write.mode(SaveMode.Overwrite)
+
+  /** Write-side partition count of a checkpoint `ck`. A spatial layer's
+    * count follows the MEASURED bytes of its cached blocks (guide §2/§6:
+    * scale-adaptive partitioning, 128 MB-1 GB output files): a small
+    * layer gets few large files — fewer write tasks, fewer leaf files to
+    * list, fewer scan tasks for every reader — while a layer bigger than
+    * partitions x [[LayerStore.TargetFileBytes]] keeps the session's
+    * full write parallelism. A space-time layer keeps the session count:
+    * `time` is the leading range key, so a low count makes one task own
+    * whole month dirs and write their files serially — measured 411 ms
+    * (32 tasks) -> 1.5 s (1 task) on the bench layer — and the dynamic
+    * `time=` partitioning bounds the file count at ~(tasks + months)
+    * either way. */
+  private def writeParts(ck: DataFrame): Int = {
+    val n = spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
+    if (ck.columns.contains("time")) return n
+    val id = graft.ops.Materialize.blocks(ck).id
+    val bytes = spark.sparkContext.getRDDStorageInfo
+      .filter(_.id == id).map(i => i.memSize + i.diskSize).sum
+    if (bytes <= 0L) n
+    else math.max(1, math.min(n.toLong, bytes / LayerStore.TargetFileBytes + 1).toInt)
   }
 
-  /** r12: repartitionByRange needs a RangePartitioner SAMPLING pass,
-    * which would execute the (arbitrarily expensive) input lineage a
-    * second time per write — so eager-checkpoint the input, and the
-    * sample job and the write job both read cached blocks. Once `write`
-    * has succeeded, the sidecar is built from those same blocks in one
-    * job ([[LayerAttributes.fromRows]]), with `schema` mapping the
-    * written schema to the one recorded. The blocks are freed in every
-    * case; a failed write leaves no sidecar. */
-  private def checkpointed(tiles: DataFrame, path: String, attrs: Option[AttrSpec])
-                          (schema: StructType => StructType)
-                          (write: DataFrame => Unit): Unit = {
+  /** The publish body of write, merge and a transaction: eager-checkpoint
+    * `tiles` (r12: the range placement's sampling pass would otherwise
+    * run the arbitrarily expensive input lineage a second time), write it
+    * in its [[layout]] into `path`, then build the sidecar from the same
+    * blocks in one job ([[LayerAttributes.fromRows]]), recording tile
+    * geometry, CRS and requested bin width besides the data. The recorded
+    * schema is the checkpoint's made nullable with `time` moved last —
+    * what a parquet read-back of the written dir reports, since parquet
+    * puts partition columns last. The blocks are freed in every case; a
+    * failed write leaves no sidecar. */
+  private[catalog] def writeTo(tiles: DataFrame, path: String,
+                               tileSize: Int, crs: String, binWidth: Double): Unit = {
     val t = graft.ops.Materialize.checkpointFresh(tiles)
     try {
-      write(t)
-      attrs.foreach { a =>
-        val sidecar = LayerAttributes.fromRows(t, a.tileSize, a.crs, a.binWidth,
-          schema(t.schema).json)
-        Files.write(Paths.get(s"$path/_attributes.json"),
-          LayerAttributes.toJson(sidecar).getBytes("UTF-8")): Unit
-      }
+      layout(t, writeParts(t)).parquet(path)
+      val (time, data) = t.schema.fields.partition(_.name == "time")
+      val schema = GraftSqlShim.asNullable(StructType(data ++ time))
+      val sidecar = LayerAttributes.fromRows(t, tileSize, crs, binWidth, schema.json)
+      Files.write(Paths.get(s"$path/_attributes.json"),
+        LayerAttributes.toJson(sidecar).getBytes("UTF-8")): Unit
     } finally graft.ops.Materialize.free(t)
   }
 
@@ -373,44 +356,6 @@ class LayerStore(spark: SparkSession, val root: String,
     if (Files.exists(f))
       Some(LayerAttributes.fromJson(new String(Files.readAllBytes(f), "UTF-8")))
     else None
-  }
-
-  /** K1 space-time variant: SpaceTimeKey layers sort by Hilbert distance
-    * within each time bucket (HilbertKeyIndexMethod,
-    * api/package.scala:148-152) and partition additionally by time. The
-    * `_attributes` sidecar (histogram over all time slices + schema)
-    * rides along like the spatial write. */
-  def writeSpaceTime(tiles: DataFrame, name: String, zoom: Int,
-                     tileSize: Int = graft.core.TileMath.DefaultTileSize,
-                     crs: String = "EPSG:4326", binWidth: Double = 1.0,
-                     withAttributes: Boolean = true): Unit = withLayerLock(name, zoom) {
-    writeVersion(name, zoom) { path =>
-      // r11 (guide §6): range placement on (time, hilbert) instead of a
-      // hash on (time, tile key). The hash spread every time value over
-      // every task, so the dynamic partitionBy opened one tiny file per
-      // (task x month) — O(partitions x months) files; a range keeps
-      // each task on a contiguous (time, hilbert) slice, so a month's
-      // dir holds a few hilbert-contiguous files (file-level pruning
-      // for the bbox, bounded file count), and a huge month still
-      // spreads over many tasks by hilbert range.
-      // r12: checkpoint before the range sampling pass — see
-      // checkpointed. The partition count deliberately STAYS the
-      // session constant here (not the measured-size form): `time` is
-      // the leading range key, so a low count makes one task own whole
-      // month dirs and write their files serially — measured 411 ms
-      // (32 tasks) -> 1.5 s (1 task) on the bench layer. The dynamic
-      // partitionBy bounds file count at ~(tasks + months) either way.
-      // The sidecar schema is read back: the `time` partition column is
-      // typed by inference on read.
-      val n = spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
-      val attrs = Option.when(withAttributes)(AttrSpec(tileSize, crs, binWidth))
-      checkpointed(tiles, path, attrs)(_ => spark.read.parquet(path).schema) { t =>
-        t.repartitionByRange(n, col("time"), hKey)
-          .sortWithinPartitions(col("time"), hKey)
-          .write.mode(SaveMode.Overwrite).partitionBy("time")
-          .parquet(path)
-      }
-    }
   }
 
   /** Time-pruned read: the `time` predicate prunes partition dirs; the
@@ -484,7 +429,11 @@ class LayerStore(spark: SparkSession, val root: String,
         col("tile_row") >= r0 && col("tile_row") <= r1)
 
   /** K2: merge/upsert — read live version, cell-wise incoming-wins merge,
-    * publish as a new version (api/package.scala:328-385).
+    * publish as a new version (api/package.scala:328-385). Spatial
+    * layers only: the cell merge joins on (tile_col, tile_row), so a
+    * `time` column in the live layer (read from its sidecar schema, no
+    * job) or in `incoming` throws IllegalArgumentException instead of
+    * mixing time slices into a layer with no time dimension.
     *
     * Durability: the merged output is fully written to a fresh version
     * dir while the source version's files stay untouched, so a cache
@@ -494,16 +443,18 @@ class LayerStore(spark: SparkSession, val root: String,
     * in which the layer is missing or half-swapped. */
   def merge(incoming: DataFrame, name: String, zoom: Int,
             tileSize: Int = graft.core.TileMath.DefaultTileSize,
-            crs: String = "EPSG:4326", binWidth: Double = 1.0,
-            withAttributes: Boolean = true): Unit = withLayerLock(name, zoom) {
+            crs: String = "EPSG:4326", binWidth: Double = 1.0): Unit = withLayerLock(name, zoom) {
     // the fence anchors HERE, where the base is resolved: the publish
     // will only succeed if no other version lands in between
     val base = currentPtr(name, zoom)
-    val toWrite =
-      if (base.isEmpty) incoming
-      else graft.ops.Raster.mergeLayers(read(name, zoom), incoming)
+    val live = base.map(_ => read(name, zoom))
+    if ((incoming.columns ++ live.toSeq.flatMap(_.columns)).contains("time"))
+      throw new IllegalArgumentException(
+        s"cannot merge into layer ($name, $zoom): merge joins tiles on (tile_col, tile_row) " +
+          "and would mix the time slices of a space-time layer; write the layer instead")
+    val toWrite = live.fold(incoming)(graft.ops.Raster.mergeLayers(_, incoming))
     writeVersion(name, zoom, fence = Some(base.map(_._1).getOrElse(0L))) { path =>
-      writeTo(toWrite, path, Option.when(withAttributes)(AttrSpec(tileSize, crs, binWidth)))
+      writeTo(toWrite, path, tileSize, crs, binWidth)
     }
   }
 
@@ -539,6 +490,10 @@ class LayerStore(spark: SparkSession, val root: String,
   private def lockPath(name: String, zoom: Int): Path =
     Paths.get(s"$root/.locks/layer_name=$name-zoom=$zoom.lock")
 
+  /** How long each held lock of this store waited to be acquired, for
+    * the publish record; set on acquire, dropped before release. */
+  private val lockWaits = new java.util.concurrent.ConcurrentHashMap[(String, Int), Long]
+
   private[catalog] def withLayerLock[T](name: String, zoom: Int)(f: => T): T = {
     val lock = lockPath(name, zoom)
     Files.createDirectories(lock.getParent)
@@ -548,7 +503,8 @@ class LayerStore(spark: SparkSession, val root: String,
       lock.getFileName.toString + ".stage-" + java.util.UUID.randomUUID())
     Files.createDirectories(stage)
     Files.createFile(stage.resolve(s"owner-$token"))
-    val deadline = System.currentTimeMillis + lockWaitMs
+    val start = System.currentTimeMillis
+    val deadline = start + lockWaitMs
     var acquired = false
     try {
       while (!acquired) {
@@ -577,6 +533,7 @@ class LayerStore(spark: SparkSession, val root: String,
         }
       }
     } finally if (!acquired) rmTree(stage.toFile) // timed out: drop the staged claim
+    lockWaits.put((name, zoom), System.currentTimeMillis - start)
     val beating = new java.util.concurrent.atomic.AtomicBoolean(true)
     val hb = new Thread(() => {
       while (beating.get) {
@@ -592,6 +549,7 @@ class LayerStore(spark: SparkSession, val root: String,
     try f
     finally {
       beating.set(false); hb.interrupt()
+      lockWaits.remove((name, zoom))
       // Atomic release: our token file pins only OUR lock incarnation.
       // If the lock was broken and re-acquired, ownerFile is gone (it
       // moved with the grave) and the successor's token file makes the
@@ -628,36 +586,20 @@ class LayerStore(spark: SparkSession, val root: String,
   /** Compaction — the small-file problem at scale: a long upsert
     * history leaves a version with many small parquet files, and on an
     * object store every file is a request + a seek. Rewrites the live
-    * version into ~[[targetBytes]]-sized files (computed from the
-    * actual on-disk size, not a guessed partition count) and publishes
-    * it like any other write; readers never see an intermediate state
-    * and the pre-compaction version survives until the next publish.
-    * Files keep the writers' range layout, one contiguous key slice each. */
-  def compact(name: String, zoom: Int, targetBytes: Long = 128L << 20): Unit =
+    * version into ~`targetBytes`-sized files (the count computed from
+    * the actual on-disk size, not a guessed partition count) in the
+    * writers' [[layout]], one contiguous key slice per file, and
+    * publishes it like any other write; readers never see an
+    * intermediate state and the pre-compaction version survives until
+    * the next publish. */
+  def compact(name: String, zoom: Int, targetBytes: Long = LayerStore.TargetFileBytes): Unit =
     withLayerLock(name, zoom) {
       val basePtr = currentPtr(name, zoom).map(_._1).getOrElse(0L) // fence anchor
       val live = dataPath(name, zoom)
-      // size on parquet data bytes only — sidecar/_SUCCESS/checksum
-      // files are bookkeeping, not the thing being split
-      val bytes = {
-        def sz(f: java.io.File): Long =
-          if (f.isDirectory) f.listFiles().map(sz).sum
-          else if (f.getName.endsWith(".parquet")) f.length()
-          else 0L
-        sz(new java.io.File(live))
-      }
+      val bytes = parquetFiles(live).map(_.length).sum
       val nFiles = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-      val tiles = readPath(live)
-      val spaceTime = tiles.columns.contains("time")
       writeVersion(name, zoom, fence = Some(basePtr)) { path =>
-        val writer =
-          if (spaceTime)
-            tiles.repartitionByRange(nFiles, col("time"), hKey)
-              .sortWithinPartitions(col("time"), hKey)
-              .write.partitionBy("time")
-          else
-            tiles.repartitionByRange(nFiles, zKey).sortWithinPartitions(zKey).write
-        writer.mode(SaveMode.Overwrite).parquet(path)
+        layout(readPath(live), nFiles).parquet(path)
         val attrs = Paths.get(s"$live/_attributes.json")
         if (Files.exists(attrs)) // metadata unchanged by compaction
           Files.copy(attrs, Paths.get(s"$path/_attributes.json")): Unit
@@ -728,9 +670,27 @@ class LayerStore(spark: SparkSession, val root: String,
     rmTree(target)
   }
 
+  /** The parquet data files of a version dir, `time=` subdirs included
+    * — sidecar, `_SUCCESS` and checksum files are bookkeeping. */
+  private def parquetFiles(dir: String): Seq[java.io.File] = {
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk)
+      else if (f.getName.endsWith(".parquet")) Seq(f)
+      else Seq.empty
+    walk(new java.io.File(dir))
+  }
+
   // tolerates a concurrent rmTree of the same tree (listFiles → null)
   private def rmTree(f: java.io.File): Unit = if (f.exists()) {
     if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rmTree))
     f.delete(): Unit
   }
+}
+
+object LayerStore {
+  private val log = org.slf4j.LoggerFactory.getLogger("graft.catalog.LayerStore")
+
+  /** Output file size goal of a spatial publish (in cached-block bytes,
+    * i.e. smaller on disk after parquet encoding) and of [[compact]]. */
+  private val TargetFileBytes: Long = 128L << 20
 }

@@ -110,10 +110,10 @@ object MiscQueries {
     val store = new graft.catalog.LayerStore(s, scratch(dir, "catalog_tx"))
     val txn = new graft.catalog.CatalogTxn(store)
     val (existing, incoming) = overlayPair(s, dir)
-    txn.commit(Seq( // attrs skipped: the gate tests txn semantics, not sidecars
-      graft.catalog.TxnWrite("txn_a", 9, existing, withAttributes = false),
-      graft.catalog.TxnWrite("txn_b", 9, incoming, withAttributes = false)))
-    store.write(tilesB(s, dir), "txn_b", 9, withAttributes = false) // non-txn clobber
+    txn.commit(Seq(
+      graft.catalog.TxnWrite("txn_a", 9, existing),
+      graft.catalog.TxnWrite("txn_b", 9, incoming)))
+    store.write(tilesB(s, dir), "txn_b", 9) // non-txn clobber
     val snap = txn.readAtomic(Seq("txn_a" -> 9, "txn_b" -> 9))
     graft.ops.Raster.pixelize(snap("txn_a" -> 9), TS).withColumn("layer", lit("a"))
       .unionByName(
@@ -139,8 +139,8 @@ object MiscQueries {
   val compactRoundtrip: Q = (s, dir) => {
     val store = new graft.catalog.LayerStore(s, scratch(dir, "catalog_cp"))
     val (existing, incoming) = overlayPair(s, dir)
-    store.write(existing, "band_cp", 9, withAttributes = false)
-    store.merge(incoming, "band_cp", 9, withAttributes = false)
+    store.write(existing, "band_cp", 9)
+    store.merge(incoming, "band_cp", 9)
     store.compact("band_cp", 9)
     graft.ops.Raster.pixelize(store.read("band_cp", 9), TS)
   }
@@ -223,9 +223,10 @@ object MiscQueries {
        |WHERE tile_col BETWEEN 1 AND 2 AND tile_row BETWEEN 1 AND 3""".stripMargin
 
   /** K1/S10 space-time: write a month-keyed layer through the catalog
-    * (Hilbert-sorted within time partitions), then read it back with a
-    * time window + bbox — the reference's indexed space-time query
-    * (HilbertKeyIndexMethod, api/package.scala:148-152). The time
+    * (its `time` column picks the Hilbert sort within time partitions),
+    * then read it back with a time window + bbox — the reference's
+    * indexed space-time query (HilbertKeyIndexMethod,
+    * api/package.scala:148-152). The time
     * window prunes partition dirs; the bbox is pushed to the
     * Hilbert-sorted row groups (asserted in LayerStoreSpec). The
     * oracle recomputes the filtered pixels relationally, so the hash
@@ -243,7 +244,7 @@ object MiscQueries {
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[graft.ops.TileAggregators.PixelIn]())
     val tiles = px.groupBy(col("time"), col("tile_col"), col("tile_row"))
       .agg(asm(col("px"), col("py"), col("v")).as("cells"))
-    store.writeSpaceTime(tiles, "band_st", 9, tileSize = TS)
+    store.write(tiles, "band_st", 9, tileSize = TS)
     val out = store.readSpaceTimeRange("band_st", 9, "1994-01", "1994-12", 1, 1, 2, 3)
     out.select(col("time"), col("tile_col"), col("tile_row"),
         posexplode(col("cells")).as(Seq("i", "v")))
@@ -878,14 +879,17 @@ object MiscQueries {
     * fixed-order scalars, and the cross-cell SUM happens in DECIMAL —
     * so unlike ln-based metrics this gate is bitwise-deterministic
     * with NO quantization dodge. Scale: two margin aggregations + the
-    * cell aggregation, margins broadcast back onto cells. */
+    * cell aggregation, margins broadcast back onto cells. The category
+    * counts r and c are set sizes, not COUNT(DISTINCT): two distinct
+    * aggregates in one `agg` plan an Expand whose group order varies
+    * between JVMs. */
   val chi2: Q = (s, dir) => {
     val d = table(s, dir, "documents")
     val o = d.groupBy(col("lang"), col("source")).agg(count(lit(1)).as("o"))
     val rx = d.groupBy(col("lang")).agg(count(lit(1)).as("rx"))
     val cy = d.groupBy(col("source")).agg(count(lit(1)).as("cy"))
     val tot = d.agg(count(lit(1)).as("n"),
-      countDistinct(col("lang")).as("r"), countDistinct(col("source")).as("c"))
+      size(collect_set(col("lang"))).as("r"), size(collect_set(col("source"))).as("c"))
     val term = ((col("o") * col("o")).cast("double")
       / (col("rx") * col("cy")).cast("double")
       * col("n").cast("double")).cast("decimal(24,10)")

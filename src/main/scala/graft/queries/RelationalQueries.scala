@@ -978,17 +978,19 @@ object RelationalQueries {
     * finished order — the correlated EXISTS (another supplier was on
     * the order) + NOT EXISTS (no other supplier's line was returned)
     * pair. Spark runs the DECORRELATED plan: ONE per-order aggregate
-    * (distinct suppliers, distinct returned suppliers — both
-    * partial-aggregating counts over one lineitem shuffle) replaces
-    * both correlated subqueries, so lineitem is scanned twice and
-    * shuffled once instead of three self-join shuffles; the oracle
-    * keeps the textbook EXISTS/NOT EXISTS formulation, so the
-    * hash-match PROVES the decorrelation. Counts stay exact integers. */
+    * replaces both correlated subqueries, so lineitem is scanned twice
+    * instead of three self-join shuffles. It counts suppliers, and
+    * suppliers with a returned line, over the distinct (order,
+    * supplier) pairs with plain counts: two COUNT(DISTINCT)s would plan
+    * an Expand whose group order varies between JVMs. The oracle keeps
+    * the textbook EXISTS/NOT EXISTS formulation, so the hash-match
+    * PROVES the decorrelation. Counts stay exact integers. */
   val blameSupplier: Q = (s, dir) => {
     val li = table(s, dir, "lineitem")
-    val perOrder = li.groupBy(col("l_orderkey").as("ok"))
-      .agg(countDistinct(col("l_suppkey")).as("n_sup"),
-        countDistinct(when(col("l_returnflag") === "R", col("l_suppkey"))).as("n_r_sup"))
+    val perOrder = li.groupBy(col("l_orderkey").as("ok"), col("l_suppkey"))
+      .agg(max(when(col("l_returnflag") === "R", col("l_suppkey"))).as("r_sup"))
+      .groupBy(col("ok"))
+      .agg(count(col("l_suppkey")).as("n_sup"), count(col("r_sup")).as("n_r_sup"))
     li.where(col("l_returnflag") === "R")
       .join(table(s, dir, "orders").where(col("o_orderstatus") === "F"),
         col("l_orderkey") === col("o_orderkey"))

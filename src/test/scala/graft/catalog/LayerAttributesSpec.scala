@@ -34,7 +34,7 @@ class LayerAttributesSpec extends AnyFunSuite {
     LayerAttributes.fromJson(got)
   }
 
-  test("write, merge, writeSpaceTime and a txn commit match the read-back sidecar") {
+  test("write, merge, a space-time write and a txn commit match the read-back sidecar") {
     val store = freshStore()
     store.write(tiles(0), "a", 3, tileSize = TS, binWidth = 2.0)
     assert(assertMatchesReference(store, "a", 3, binWidth = 2.0).nCells == 64)
@@ -42,7 +42,7 @@ class LayerAttributesSpec extends AnyFunSuite {
     assert(assertMatchesReference(store, "a", 3, binWidth = 2.0).minV == 0.0)
     val st = tiles(1).withColumn("time", lit("2024-01"))
       .unionByName(tiles(2).withColumn("time", lit("2024-02")))
-    store.writeSpaceTime(st, "st", 4, tileSize = TS, crs = "EPSG:3857")
+    store.write(st, "st", 4, tileSize = TS, crs = "EPSG:3857")
     assert(assertMatchesReference(store, "st", 4, crs = "EPSG:3857").nTiles == 8)
     new CatalogTxn(store).commit(Seq(
       TxnWrite("t1", 1, tiles(5), tileSize = TS, binWidth = 0.5),

@@ -187,18 +187,52 @@ class LayerStoreSpec extends AnyFunSuite {
     assert(m.minV == 100.0 && m.bins.head == 50L)
   }
 
-  test("the attribute sidecar costs at most one job per publish") {
+  /** Two monthly slices of [[tiles]]: a space-time frame. */
+  def stTiles = tiles(1).withColumn("time", lit("2024-01"))
+    .unionByName(tiles(2).withColumn("time", lit("2024-02")))
+
+  test("jobs per publish are pinned, and no publish reads its written dir back") {
+    // pinned: a publish runs its checkpoint's jobs, the range sample,
+    // the parquet write and one sidecar job; the sidecar schema comes
+    // from the checkpoint, so no publish reads the written dir back
     val store = freshStore()
-    val t = tiles(0)
-    val without = graft.SparkTestBase.jobsIn("sidecar-off") {
-      store.write(t, "j", 1, tileSize = TS, withAttributes = false)
+    def jobs(what: String)(f: => Unit) = graft.SparkTestBase.jobsIn(what)(f)
+    assert(jobs("write")(store.write(tiles(0), "j", 1, tileSize = TS)) == 5)
+    assert(jobs("merge")(store.merge(tiles(100), "j", 1, tileSize = TS)) == 6)
+    assert(jobs("space-time write")(store.write(stTiles, "s", 1, tileSize = TS)) == 7)
+    assert(store.readAttributes("j", 1).exists(_.nTiles == 4))
+    assert(store.readAttributes("s", 1).exists(_.nTiles == 8))
+  }
+
+  test("merge into a space-time layer fails by name instead of dropping the time dimension") {
+    val store = freshStore()
+    store.write(stTiles, "stm", 1, tileSize = TS)
+    // the live layer's time column comes from its sidecar schema: no job
+    val rejected = graft.SparkTestBase.jobsIn("rejected merge") {
+      val live = intercept[IllegalArgumentException](store.merge(tiles(100), "stm", 1, tileSize = TS))
+      assert(live.getMessage.contains("(stm, 1)"))
     }
-    val withAttrs = graft.SparkTestBase.jobsIn("sidecar-on") {
-      store.write(t, "j", 2, tileSize = TS, withAttributes = true)
-    }
-    assert(store.readAttributes("j", 2).exists(_.nTiles == 4))
-    assert(withAttrs <= without + 1,
-      s"sidecar added ${withAttrs - without} jobs; build it from the checkpoint blocks, not a read-back")
+    assert(rejected == 0)
+    store.write(tiles(0), "sp", 1, tileSize = TS)
+    val in = intercept[IllegalArgumentException](store.merge(stTiles, "sp", 1, tileSize = TS))
+    assert(in.getMessage.contains("(sp, 1)"))
+    // neither layer moved
+    assert(store.publishedVersions("stm", 1).map(_._1) == Seq(1L))
+    assert(store.read("stm", 1).where($"time" === "2024-02").count() == 4)
+    assert(store.publishedVersions("sp", 1).map(_._1) == Seq(1L))
+  }
+
+  test("a transaction write with a time column publishes time partitions that readAtomic prunes") {
+    val store = freshStore()
+    val txn = new CatalogTxn(store)
+    txn.commit(Seq(TxnWrite("txt", 2, stTiles, tileSize = TS), TxnWrite("txs", 2, tiles(0), tileSize = TS)))
+    val v = new java.io.File(store.zoomDir("txt", 2), store.currentVersion("txt", 2).get)
+    assert(v.listFiles().filter(_.isDirectory).map(_.getName).sorted.toSeq ==
+      Seq("time=2024-01", "time=2024-02"))
+    val feb = txn.readAtomic(Seq("txt" -> 2))("txt" -> 2).where($"time" === "2024-02")
+    assert(feb.count() == 4)
+    val plan = feb.queryExecution.executedPlan.toString
+    assert(plan.contains("PartitionFilters") && plan.contains("time"), s"no time pruning:\n$plan")
   }
 
   test("space-time layer: Hilbert-sorted write, time-pruned read, sidecar rides along") {
@@ -208,7 +242,7 @@ class LayerStoreSpec extends AnyFunSuite {
       .toDF("time", "tile_col", "tile_row", "px", "py", "v")
     val tiles = Raster.assemble(st.where($"time" === "2024-01"), TS, TS).withColumn("time", lit("2024-01"))
       .unionByName(Raster.assemble(st.where($"time" === "2024-02"), TS, TS).withColumn("time", lit("2024-02")))
-    store.writeSpaceTime(tiles, "stl", 4, tileSize = TS)
+    store.write(tiles, "stl", 4, tileSize = TS)
     // full read sees both slices; time-pruned read sees one
     assert(store.readSpaceTime("stl", 4).count() == 4)
     val feb = store.readSpaceTime("stl", 4, Some("2024-02"))
@@ -365,30 +399,6 @@ class LayerStoreSpec extends AnyFunSuite {
     assert(store.readTile("rt", 1, 0, 0).select($"cells").as[Seq[Double]].head()(0) == 300.0)
   }
 
-  test("legacy _current pointer layout reads and migrates without data loss") {
-    val store = freshStore()
-    store.write(tiles(0), "lg", 1)
-    // rewrite the pointer into the OLD pre-sequence layout: one
-    // `_current` file, no `_ptr-*` sequence files
-    val zoomDir = java.nio.file.Paths.get(store.root + "/tiles/layer_name=lg/zoom=1")
-    val v = store.currentVersion("lg", 1).get
-    zoomDir.toFile.listFiles().filter(_.getName.startsWith("_ptr-"))
-      .foreach(f => assert(f.delete()))
-    java.nio.file.Files.write(zoomDir.resolve("_current"), v.getBytes("UTF-8"))
-    // legacy pointer resolves...
-    assert(store.currentVersion("lg", 1).contains(v))
-    assert(store.read("lg", 1).count() == 4)
-    // ...and a merge MERGES the legacy base instead of orphaning it
-    store.merge(tiles(100), "lg", 1)
-    assert(store.read("lg", 1).count() == 4)
-    assert(store.readTile("lg", 1, 0, 0).select($"cells").as[Seq[Double]].head()(0) == 100.0)
-    // the old pointer was migrated into the sequence and the old live
-    // version dir survived as the retained predecessor
-    assert(!java.nio.file.Files.exists(zoomDir.resolve("_current")))
-    assert(java.nio.file.Files.exists(zoomDir.resolve("_ptr-00000000")))
-    assert(java.nio.file.Files.exists(zoomDir.resolve(v)), "legacy live version must be retained")
-  }
-
   test("attribute histogram caps bin count: adversarial range widens the bins") {
     val store = freshStore()
     // values spread over ~4e9: binWidth 1.0 would mean 4 billion bins
@@ -426,7 +436,7 @@ class LayerStoreSpec extends AnyFunSuite {
       yield (t, tc, 0, px, py, 1.0 + px)).toDF("time", "tile_col", "tile_row", "px", "py", "v")
     val stTiles = Raster.assemble(st.where($"time" === "2024-01"), TS, TS).withColumn("time", lit("2024-01"))
       .unionByName(Raster.assemble(st.where($"time" === "2024-02"), TS, TS).withColumn("time", lit("2024-02")))
-    store.writeSpaceTime(stTiles, "stc", 4, tileSize = TS)
+    store.write(stTiles, "stc", 4, tileSize = TS)
     store.compact("stc", 4)
     val feb = store.readSpaceTime("stc", 4, Some("2024-02"))
     assert(feb.count() == 2)
@@ -439,7 +449,7 @@ class LayerStoreSpec extends AnyFunSuite {
     val store = freshStore()
     val zipped = graft.ops.Raster.zipBands(
       graft.ops.Raster.stackBands(Seq(tiles(0), tiles(50))), 2)
-    store.write(zipped, "mb", 2, tileSize = TS) // withAttributes default MUST not throw
+    store.write(zipped, "mb", 2, tileSize = TS) // the sidecar of a cell-less layer MUST not throw
     val a = store.readAttributes("mb", 2).get
     assert(a.nTiles == 4 && a.minCol == 0 && a.maxCol == 1)
     assert(a.bins.isEmpty && a.schemaJson.exists(_.contains("bands")))
@@ -534,7 +544,7 @@ class LayerStoreSpec extends AnyFunSuite {
     val tiles = Seq("2024-01", "2024-02", "2024-03").map(t =>
       Raster.assemble(st.where($"time" === t), TS, TS).withColumn("time", lit(t)))
       .reduce(_ unionByName _)
-    store.writeSpaceTime(tiles, "str", 4, tileSize = TS)
+    store.write(tiles, "str", 4, tileSize = TS)
     val df = store.readSpaceTimeRange("str", 4, "2024-02", "2024-03", 1, 0, 1, 0)
     assert(df.count() == 2) // tile (1,0) in feb and mar
     val plan = df.queryExecution.executedPlan.toString

@@ -214,7 +214,7 @@ class RasterOpsSpec extends AnyFunSuite {
     // a zipped stack persists like any layer (bands instead of cells)
     val root = java.nio.file.Files.createTempDirectory("graft_mb").toString
     val store = new graft.catalog.LayerStore(spark, root)
-    store.write(zipped, "mb", 3, withAttributes = false)
+    store.write(zipped, "mb", 3)
     val fromStore = Raster.pixelFeaturesFromBands(store.read("mb", 3), TS)
     val viaRows = Raster.pixelFeatures(stacked, TS, 2)
     def key(df: org.apache.spark.sql.DataFrame) = df.collect().map { r =>

@@ -72,8 +72,8 @@ class PersistedBlocksSpec extends AnyFunSuite {
     }
     noResidue("write")(store.write(tiles(0), "p", 1, tileSize = 4))
     noResidue("merge")(store.merge(tiles(5), "p", 1, tileSize = 4))
-    noResidue("writeSpaceTime")(
-      store.writeSpaceTime(tiles(0).withColumn("time", lit("2024-01")), "st", 1, tileSize = 4))
+    noResidue("space-time write")(
+      store.write(tiles(0).withColumn("time", lit("2024-01")), "st", 1, tileSize = 4))
     noResidue("txn commit")(new CatalogTxn(store).commit(
       Seq(TxnWrite("a", 1, tiles(1), tileSize = 4), TxnWrite("b", 1, tiles(2), tileSize = 4))))
     // parquet cannot store a CalendarInterval column: the write throws
