@@ -64,7 +64,7 @@ object Launch {
     }
 
   /** Runs the first query once, so the first timed query does not pay
-    * for the JVM, codegen and parquet-footer warm-up. */
+    * for the JVM, codegen and parquet-reader warm-up. */
   def warmUp(main: String, spark: SparkSession, sfDir: String): Unit =
     forEach(main, queries().take(1))((_, fn) => fn(spark, sfDir).count(): Unit): Unit
 }

@@ -15,9 +15,9 @@ import org.apache.spark.sql.{GraftSqlShim, SparkSession}
   *  - the jobs each phase starts, with their task time, shuffle and
   *    spill. Builder jobs are eager: checkpoints, collects and
   *    fixed-point loops run before the frame returns, so a build time
-  *    with builder jobs scales with data, not only with planning. Every
-  *    parquet read also runs one small builder job (`parquet at …`):
-  *    Spark reads a footer for the schema;
+  *    with builder jobs scales with data, not only with planning. A
+  *    parquet read runs none: `graft.sources.Parquet.read` takes its
+  *    schema from a footer on the driver;
   *  - `gap`: wall time no job covers (planning, codegen, driver logic).
   *
   * Usage: `sbt "runMain graft.Prof <sfDir> <reps> <name> [name...]"`.

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Launch
 import graft.catalog.LayerStore
-import graft.ops.{Export, Histograms, Raster}
+import graft.ops.{Export, Raster}
 
 /** The reference's job surface as thin drivers (SURVEY §7.1 step 7) —
   * same CLI arg shapes as the originals. Each reference `main(args)`
@@ -19,7 +19,7 @@ object Apps {
   def tileSize: Int = sys.env.getOrElse("GRAFT_TILE_SIZE", "256").toInt
 
   def readPixels(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    graft.sources.Parquet.read(spark, path)
       .select(col("tile_col").cast("int"), col("tile_row").cast("int"),
         col("px").cast("int"), col("py").cast("int"), col("v").cast("double"))
 }
@@ -133,8 +133,9 @@ object RenderTile extends Launch.Job {
     val store = new LayerStore(spark, catalog)
     // breaks come from the persisted _attributes histogram (zero jobs,
     // ServeLayerAsMap.scala:90-92 parity); only the point read runs a job
-    val breaks = store.readAttributes(layer, zoom.toInt).map(_.quantileBreaks(10))
-      .getOrElse(Histograms.quantileBreaks(store.read(layer, zoom.toInt), ts, 10))
+    val breaks = store.readAttributes(layer, zoom.toInt).getOrElse(throw new IllegalStateException(
+      s"layer ($layer, $zoom) version ${store.currentVersion(layer, zoom.toInt).getOrElse("-")} has no _attributes sidecar"))
+      .quantileBreaks(10)
     val tile = store.readTile(layer, zoom.toInt, tc.toInt, tr.toInt)
       .select(col("cells")).head().getSeq[Double](0)
     Export.renderPng(tile, ts, ts, breaks, out)

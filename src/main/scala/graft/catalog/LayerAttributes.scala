@@ -3,7 +3,7 @@ package graft.catalog
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType}
 import org.json4s.NoTypeHints
 import org.json4s.jackson.Serialization
 
@@ -36,8 +36,7 @@ case class LayerAttributes(
     binWidth: Double,
     bins: Seq[Long],
     counts: Seq[Long],
-    extent: Seq[Double],
-    schemaJson: Option[String] = None) {
+    extent: Seq[Double]) {
 
   /** GeoTrellis-style quantileBreaks(n) from the stored histogram: the
     * upper edge of the bin where the cumulative count crosses each
@@ -89,9 +88,8 @@ object LayerAttributes {
     *
     * Cells are the non-null, non-NaN elements of `cells` (ARRAY<DOUBLE>);
     * a layer without a `cells` column (e.g. a zipped multiband `bands`
-    * layer) gets bounds + schema and an empty histogram. */
-  def fromRows(ck: DataFrame, tileSize: Int, crs: String,
-               binWidth: Double, schemaJson: String): LayerAttributes = {
+    * layer) gets bounds and an empty histogram. */
+  def fromRows(ck: DataFrame, tileSize: Int, crs: String, binWidth: Double): LayerAttributes = {
     val rows = graft.ops.Materialize.blocks(ck)
     val schema = ck.schema
     def field(name: String, ok: org.apache.spark.sql.types.DataType => Boolean): Int = {
@@ -136,8 +134,7 @@ object LayerAttributes {
       extent =
         if (!keyed) Seq.empty
         else Seq(c0.toDouble * tileSize, r0.toDouble * tileSize,
-                 (c1 + 1).toDouble * tileSize, (r1 + 1).toDouble * tileSize),
-      schemaJson = Some(schemaJson))
+                 (c1 + 1).toDouble * tileSize, (r1 + 1).toDouble * tileSize))
   }
 
   /** One partition's share of the sidecar; `bins == null` when its bins

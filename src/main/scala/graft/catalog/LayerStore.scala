@@ -1,9 +1,9 @@
 package graft.catalog
 
-import org.apache.spark.sql.{DataFrame, DataFrameWriter, GraftSqlShim, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 import graft.functions.ZOrderKey.zorder
+import graft.sources.Parquet
 
 /** Parquet-backed tile-layer catalog — the engine's spine (SURVEY §1.3).
   *
@@ -327,19 +327,14 @@ class LayerStore(spark: SparkSession, val root: String,
     * run the arbitrarily expensive input lineage a second time), write it
     * in its [[layout]] into `path`, then build the sidecar from the same
     * blocks in one job ([[LayerAttributes.fromRows]]), recording tile
-    * geometry, CRS and requested bin width besides the data. The recorded
-    * schema is the checkpoint's made nullable with `time` moved last —
-    * what a parquet read-back of the written dir reports, since parquet
-    * puts partition columns last. The blocks are freed in every case; a
-    * failed write leaves no sidecar. */
+    * geometry, CRS and requested bin width besides the data. The blocks
+    * are freed in every case; a failed write leaves no sidecar. */
   private[catalog] def writeTo(tiles: DataFrame, path: String,
                                tileSize: Int, crs: String, binWidth: Double): Unit = {
     val t = graft.ops.Materialize.checkpointFresh(tiles)
     try {
       layout(t, writeParts(t)).parquet(path)
-      val (time, data) = t.schema.fields.partition(_.name == "time")
-      val schema = GraftSqlShim.asNullable(StructType(data ++ time))
-      val sidecar = LayerAttributes.fromRows(t, tileSize, crs, binWidth, schema.json)
+      val sidecar = LayerAttributes.fromRows(t, tileSize, crs, binWidth)
       Files.write(Paths.get(s"$path/_attributes.json"),
         LayerAttributes.toJson(sidecar).getBytes("UTF-8")): Unit
     } finally graft.ops.Materialize.free(t)
@@ -359,8 +354,8 @@ class LayerStore(spark: SparkSession, val root: String,
   }
 
   /** Time-pruned read: the `time` predicate prunes partition dirs; the
-    * sidecar schema (which includes the time partition column) skips
-    * footer inference like the spatial read. */
+    * schema comes from a footer on the driver like the spatial read's,
+    * with partition discovery appending `time`. */
   def readSpaceTime(name: String, zoom: Int, time: Option[String] = None): DataFrame = {
     val df = read(name, zoom)
     time.fold(df)(t => df.where(col("time") === t))
@@ -381,31 +376,21 @@ class LayerStore(spark: SparkSession, val root: String,
         col("tile_col") >= c0 && col("tile_col") <= c1 &&
         col("tile_row") >= r0 && col("tile_row") <= r1)
 
-  /** S3: pruned read of the live version of one (layer, zoom). The
-    * sidecar's persisted schema skips parquet footer inference (one
-    * fewer job per read — the attribute store playing the reference's
-    * Metadata role, api/package.scala:62-65). The returned frame is
-    * pinned to the resolved version dir: it stays valid across ONE
+  /** S3: pruned read of the live version of one (layer, zoom). Its schema
+    * comes from a footer read on the driver ([[graft.sources.Parquet.read]]):
+    * no job, like the reference's Metadata read (api/package.scala:62-65).
+    * The returned frame is pinned to the resolved version dir: it stays valid across ONE
     * subsequent merge/write (previous version retained), giving readers
     * a point-in-time snapshot instead of a mid-swap mixture. */
   def read(name: String, zoom: Int): DataFrame =
-    readPath(dataPath(name, zoom))
-
-  /** Sidecar-schema'd parquet read of one version dir (shared by the
-    * live [[read]] and the pinned [[readAt]]). */
-  private def readPath(path: String): DataFrame = {
-    val schema = attributesAt(path).flatMap(_.schemaJson)
-      .map(js => org.apache.spark.sql.types.DataType.fromJson(js)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-    schema.fold(spark.read)(s => spark.read.schema(s)).parquet(path)
-  }
+    Parquet.read(spark, dataPath(name, zoom))
 
   /** Tiles of one version dir, named as [[currentVersion]] returns it.
     * A reader that resolves the live version once and reads tiles and
     * sidecar through it (see [[readAttributesAt]]) sees one version even
     * when a publish lands in between. */
   def readAt(name: String, zoom: Int, version: String): DataFrame =
-    readPath(s"${zoomDir(name, zoom)}/$version")
+    Parquet.read(spark, s"${zoomDir(name, zoom)}/$version")
 
   /** The attribute sidecar of one version dir (see [[readAt]]). */
   def readAttributesAt(name: String, zoom: Int, version: String): Option[LayerAttributes] =
@@ -431,7 +416,7 @@ class LayerStore(spark: SparkSession, val root: String,
   /** K2: merge/upsert — read live version, cell-wise incoming-wins merge,
     * publish as a new version (api/package.scala:328-385). Spatial
     * layers only: the cell merge joins on (tile_col, tile_row), so a
-    * `time` column in the live layer (read from its sidecar schema, no
+    * `time` column in the live layer (its schema read from a footer, no
     * job) or in `incoming` throws IllegalArgumentException instead of
     * mixing time slices into a layer with no time dimension.
     *
@@ -599,7 +584,7 @@ class LayerStore(spark: SparkSession, val root: String,
       val bytes = parquetFiles(live).map(_.length).sum
       val nFiles = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
       writeVersion(name, zoom, fence = Some(basePtr)) { path =>
-        layout(readPath(live), nFiles).parquet(path)
+        layout(Parquet.read(spark, live), nFiles).parquet(path)
         val attrs = Paths.get(s"$live/_attributes.json")
         if (Files.exists(attrs)) // metadata unchanged by compaction
           Files.copy(attrs, Paths.get(s"$path/_attributes.json")): Unit

@@ -167,50 +167,24 @@ object Ranking {
     res
   }
 
-  /** Global running sum of a LONG column under a total ordering —
+  /** Global running sums of LONG columns under a total ordering —
     * `SUM(v) OVER (ORDER BY ... ROWS UNBOUNDED PRECEDING)` without the
     * single-partition Window that form plans as. Same two-phase shape
     * as [[withGlobalRanks]]: range-repartition + local sort, one P-row
     * per-partition sum summary to the driver, then a map-side pass
-    * that seeds each partition's accumulator with the prefix of the
+    * that seeds each partition's accumulators with the prefix of the
     * earlier partitions' sums. Exact for integer values (the running
     * sum is order-dependent only in the float world). Callers must
     * pass sort keys that form a TOTAL order — with ties the
     * within-group order, hence the intermediate sums, would be
     * partitioner-dependent. Cost: one range shuffle + two local
-    * passes; no task ever holds more than one partition. */
-  def withGlobalRunningSum(df: DataFrame, sortExprs: Seq[Column], valueCol: String): DataFrame = {
-    capture("withGlobalRunningSum", df)
-    val spark = df.sparkSession
-    val parted = df.repartitionByRange(sortExprs: _*).sortWithinPartitions(sortExprs: _*)
-    val schema = df.schema
-    val vIdx = schema.fieldIndex(valueCol)
-    require(schema(vIdx).dataType == LongType, s"$valueCol must be LONG")
-    val sums = parted.rdd.mapPartitionsWithIndex { (pid, it) =>
-      var s = 0L
-      while (it.hasNext) s += it.next().getLong(vIdx)
-      Iterator.single(pid -> s)
-    }.collect().sortBy(_._1)
-    val bases: Map[Int, Long] =
-      sums.map(_._1).zip(sums.map(_._2).scanLeft(0L)(_ + _)).toMap
-    val basesB = spark.sparkContext.broadcast(bases)
-    val outSchema = StructType(schema.fields :+
-      StructField("rsum", LongType, nullable = false))
-    val rows = parted.rdd.mapPartitionsWithIndex { (pid, it) =>
-      var acc = basesB.value.getOrElse(pid, 0L)
-      it.map { r => acc += r.getLong(vIdx); Row.fromSeq(r.toSeq :+ acc) }
-    }
-    spark.createDataFrame(rows, outSchema)
-  }
-
-  /** [[withGlobalRunningSum]] over SEVERAL LONG columns at once — one
-    * range shuffle, one summary pass, one map pass, however many
-    * prefix sums ride it (the PR-curve shape needs TP and FP together;
-    * two separate calls would pay the shuffle twice). Adds one
-    * `rsum_<col>` column per input. Also returns the GRAND TOTAL of
-    * each column: the driver already holds the per-partition sums for
-    * the prefix bases, so totals (e.g. the recall denominator) are
-    * free — no extra pass over the ranked output. */
+    * passes, however many sums ride it (the PR-curve shape needs TP
+    * and FP together; two calls would pay the shuffle twice); no task
+    * ever holds more than one partition. Adds one `rsum_<col>` column
+    * per input. Also returns the GRAND TOTAL of each column: the driver
+    * already holds the per-partition sums for the prefix bases, so
+    * totals (e.g. the recall denominator) are free — no extra pass
+    * over the ranked output. */
   def withGlobalRunningSums(df: DataFrame, sortExprs: Seq[Column],
                             valueCols: Seq[String]): (DataFrame, Seq[Long]) = {
     capture("withGlobalRunningSums", df)

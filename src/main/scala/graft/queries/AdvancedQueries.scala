@@ -749,24 +749,25 @@ object AdvancedQueries {
     * engine's double-literal folding (round 6 proved the folded α
     * chain is NOT bit-portable across DuckDB builds), so the hashed
     * projection carries only the exact integers; consumers derive the
-    * estimate from denom. */
+    * estimate from denom. Each key gets its own aggregation with ONE
+    * distinct count, joined on the flag: two distinct counts in one
+    * `agg` plan an Expand whose group order varies between JVMs. */
   val hllDistinct: Q = (s, dir) => {
-    def pieces(regs: String, suffix: String) = Seq(
-      expr(s"aggregate($regs, CAST(0 AS BIGINT), (acc, r) -> acc + shiftleft(CAST(1 AS BIGINT), 53 - r))")
-        .as(s"denom_$suffix"),
-      expr(s"aggregate($regs, CAST(0 AS BIGINT), (acc, r) -> acc + IF(r = 0, 1, 0))")
-        .as(s"zeros_$suffix"))
-    table(s, dir, "lineitem")
-      .select(col("l_returnflag"), col("l_partkey"), col("l_suppkey"),
-        graft.text.TextOps.h60(col("l_partkey").cast("string")).as("hp"),
-        graft.text.TextOps.h60(col("l_suppkey").cast("string")).as("hs"))
-      .groupBy(col("l_returnflag"))
-      .agg(countDistinct(col("l_partkey")).as("exact_parts"),
-        graft.ops.Sketches.hllSketch(col("hp"), 8).as("rp"),
-        countDistinct(col("l_suppkey")).as("exact_supps"),
-        graft.ops.Sketches.hllSketch(col("hs"), 8).as("rs"))
-      .select(Seq(col("l_returnflag"), col("exact_parts"), col("exact_supps")) ++
-        pieces("rp", "parts") ++ pieces("rs", "supps"): _*)
+    val li = table(s, dir, "lineitem")
+    def census(key: String, suffix: String): DataFrame = {
+      val regs = s"r_$suffix"
+      li.groupBy(col("l_returnflag"))
+        .agg(countDistinct(col(key)).as(s"exact_$suffix"),
+          graft.ops.Sketches.hllSketch(graft.text.TextOps.h60(col(key).cast("string")), 8).as(regs))
+        .select(col("l_returnflag"), col(s"exact_$suffix"),
+          expr(s"aggregate($regs, CAST(0 AS BIGINT), (acc, r) -> acc + shiftleft(CAST(1 AS BIGINT), 53 - r))")
+            .as(s"denom_$suffix"),
+          expr(s"aggregate($regs, CAST(0 AS BIGINT), (acc, r) -> acc + IF(r = 0, 1, 0))")
+            .as(s"zeros_$suffix"))
+    }
+    census("l_partkey", "parts").join(census("l_suppkey", "supps"), Seq("l_returnflag"))
+      .select(col("l_returnflag"), col("exact_parts"), col("exact_supps"),
+        col("denom_parts"), col("zeros_parts"), col("denom_supps"), col("zeros_supps"))
   }
 
   /** Register rebuild for one (source, group, key): CTE chain ending in
@@ -2554,7 +2555,7 @@ object AdvancedQueries {
     * a tied block = 2·rsum − t + 1, an integer), so every rank moment
     * is a LONG sum and the z chain is one fixed-order scalar
     * expression. The global rank prefix comes from
-    * [[graft.ops.Ranking.withGlobalRunningSum]] over the DISTINCT
+    * [[graft.ops.Ranking.withGlobalRunningSums]] over the DISTINCT
     * cent-value rollup (domain-bounded, total-ordered) — no
     * SinglePartition window — while the oracle states the textbook
     * running-sum window, so the hash-match also re-proves the
@@ -2568,11 +2569,11 @@ object AdvancedQueries {
         (dec2(col("value")) * 100).cast("long").as("cents"))
     val byVal = v.groupBy(col("cents"))
       .agg(count(lit(1)).as("t"), sum(col("g1")).cast("long").as("t1"))
-    val rs = graft.ops.Ranking.withGlobalRunningSum(byVal, Seq(col("cents")), "t")
+    val (rs, _) = graft.ops.Ranking.withGlobalRunningSums(byVal, Seq(col("cents")), Seq("t"))
     val m = rs.agg(
       sum(col("t1")).as("n1l"),
       sum(col("t") - col("t1")).as("n2l"),
-      sum(col("t1") * (lit(2L) * col("rsum") - col("t") + 1L)).as("r12"),
+      sum(col("t1") * (lit(2L) * col("rsum_t") - col("t") + 1L)).as("r12"),
       sum(col("t") * col("t") * col("t") - col("t")).as("tcorr"))
     val n1d = col("n1l").cast("double")
     val n2d = col("n2l").cast("double")
@@ -2624,8 +2625,8 @@ object AdvancedQueries {
       unix_micros(col("ts")).as("y"))
     def rankMap(key: String): DataFrame = {
       val byVal = base.groupBy(col(key)).agg(count(lit(1)).as("t"))
-      graft.ops.Ranking.withGlobalRunningSum(byVal, Seq(col(key)), "t")
-        .select(col(key), (lit(2L) * col("rsum") - col("t") + 1L).as(s"r_$key"))
+      graft.ops.Ranking.withGlobalRunningSums(byVal, Seq(col(key)), Seq("t"))._1
+        .select(col(key), (lit(2L) * col("rsum_t") - col("t") + 1L).as(s"r_$key"))
     }
     val withRanks = base.join(rankMap("x"), Seq("x")).join(rankMap("y"), Seq("y"))
     val m = withRanks.agg(
@@ -2725,16 +2726,14 @@ object AdvancedQueries {
     // rank tables are NODE-sized while e is EDGE-sized, and each of the
     // four per-round joins used to hash-shuffle the full edge set by
     // its key. The distinct-customer count is measured anyway (one job
-    // over cached e blocks, for h0); when it is at or under
-    // `spark.graft.hits.broadcastRankLimit` (default 2^22 — the
+    // over cached e blocks, for h0); when it is at or under 2^22 (the
     // supplier side is never larger than the customer side here), the
     // rank side is broadcast-hinted and NO round shuffles the edge set
     // at all (partial map-side aggregation leaves only the node-sized
     // agg exchange). Past the gate (billions of customers at 100 TB)
     // the shuffle plan is unchanged.
     val nCVal = e.select(col("c")).distinct().count()
-    val rankBc = nCVal <= s.conf
-      .get("spark.graft.hits.broadcastRankLimit", (1L << 22).toString).toLong
+    val rankBc = nCVal <= (1L << 22)
     def rank(df: DataFrame): DataFrame = if (rankBc) broadcast(df) else df
     // n = 0: no rows exist for the literal to matter — avoid the /0
     var h = e.select(col("c")).distinct()

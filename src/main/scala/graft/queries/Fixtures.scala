@@ -25,7 +25,7 @@ object Fixtures {
   val TS = 16
 
   def table(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    graft.sources.Parquet.read(s, s"$dir/$name.parquet")
 
   /** Root of the suite's per-process scratch, `<java.io.tmpdir>/graft_<pid>`,
     * so concurrent JVMs never share a catalog. Created on first use, when
@@ -126,7 +126,7 @@ object Fixtures {
     import org.apache.spark.sql.types._
     val path = s"$dir/events.parquet"
     try {
-      val native = s.read.parquet(path) // schema inference throws on NANOS
+      val native = graft.sources.Parquet.read(s, path) // the footer conversion throws on NANOS
       native.schema("ts").dataType match {
         case TimestampType => native
         // parquet MICROS without isAdjustedToUTC infers as NTZ; every

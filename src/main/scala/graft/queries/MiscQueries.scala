@@ -578,7 +578,7 @@ object MiscQueries {
       .select(col("l_orderkey"), col("l_linenumber"), col("l_returnflag"),
         dec2(col("l_extendedprice")).as("price"), col("l_shipdate"))
       .write.mode("overwrite").option("compression", "zstd").parquet(base)
-    s.read.parquet(base)
+    graft.sources.Parquet.read(s, base)
       .groupBy(col("l_returnflag"))
       .agg(count(lit(1)).as("n"),
         sum(col("l_orderkey")).as("sum_key"),
@@ -651,7 +651,7 @@ object MiscQueries {
         col("l_returnflag"))
       .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
       .partitionBy("l_returnflag").parquet(base)
-    s.read.parquet(base)
+    graft.sources.Parquet.read(s, base)
       .groupBy(col("l_returnflag"))
       .agg(count(lit(1)).as("n"), dsum(col("price")).as("sum_price"))
   }
@@ -720,7 +720,7 @@ object MiscQueries {
     * table is row-sized and a single-partition prefix-sum window over
     * it would be exactly the q_rfm scale killer. The prefix sum of
     * negatives-below instead rides
-    * [[graft.ops.Ranking.withGlobalRunningSum]] (range shuffle + two
+    * [[graft.ops.Ranking.withGlobalRunningSums]] (range shuffle + two
     * local passes, no single-partition stage) — the shape that survives
     * 10^8 unique model scores. Same tie-aware Mann-Whitney identity and
     * exact long arithmetic as m_auc; one final IEEE division. */
@@ -730,8 +730,8 @@ object MiscQueries {
         when(col("label") >= 5, 1L).otherwise(0L).as("y"))
       .groupBy(col("score"))
       .agg(sum(col("y")).as("p"), sum(lit(1L) - col("y")).as("n"))
-    val r = graft.ops.Ranking.withGlobalRunningSum(g, Seq(col("score")), "n")
-    r.agg(sum(col("p") * (lit(2) * (col("rsum") - col("n")) + col("n"))).as("u2"),
+    val (r, _) = graft.ops.Ranking.withGlobalRunningSums(g, Seq(col("score")), Seq("n"))
+    r.agg(sum(col("p") * (lit(2) * (col("rsum_n") - col("n")) + col("n"))).as("u2"),
         sum(col("p")).as("n_pos"), sum(col("n")).as("n_neg"))
       .select(col("n_pos"), col("n_neg"),
         (col("u2").cast("double") /

@@ -978,7 +978,7 @@ object RasterQueries {
     * in-plan (it oracles the derivation); values are exact integers
     * through the parquet round-trip, so consumer hashes are unchanged. */
   def regionLabelFront(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(front(dir, "regionfront")(regionLabel(s, dir).write.mode("overwrite").parquet(_)))
+    graft.sources.Parquet.read(s, front(dir, "regionfront")(regionLabel(s, dir).write.mode("overwrite").parquet(_)))
 
   val regionLabelSql: String = {
     val w = 4 * TS
@@ -1386,7 +1386,7 @@ object RasterQueries {
     * sigFront / regionLabelFront). r_dbscan_core stays fully in-plan
     * (it oracles the CC derivation). */
   def dbscanCoreLabFront(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(front(dir, "dbscanfront") { path =>
+    graft.sources.Parquet.read(s, front(dir, "dbscanfront") { path =>
       val (lab, checkpoints) = dbscanCoreLab(s, dir)
       lab.write.mode("overwrite").parquet(path)
       // the parquet front now holds the result; nothing references the

@@ -829,7 +829,7 @@ object RelationalQueries {
     * at once? The classic +1/−1 boundary sweep needs a GLOBAL running
     * sum, which naive SQL plans as a single-partition Window; the
     * engine side instead rides
-    * [[graft.ops.Ranking.withGlobalRunningSum]] — range shuffle +
+    * [[graft.ops.Ranking.withGlobalRunningSums]] — range shuffle +
     * driver-side P-row prefix + map pass, so no task ever sees more
     * than one partition of boundaries at 100 TB. Sessions are
     * half-open [start, end+1µs) (a zero-length session still counts as
@@ -850,10 +850,10 @@ object RelationalQueries {
       .agg(min(col("us")).as("s_us"), max(col("us")).as("e_us"))
     val sweep = sess.select(col("s_us").as("t"), lit(1L).as("delta"), col("user_id"))
       .unionByName(sess.select((col("e_us") + 1L).as("t"), lit(-1L).as("delta"), col("user_id")))
-    graft.ops.Ranking.withGlobalRunningSum(
-      sweep, Seq(col("t"), col("delta"), col("user_id")), "delta")
+    graft.ops.Ranking.withGlobalRunningSums(
+      sweep, Seq(col("t"), col("delta"), col("user_id")), Seq("delta"))._1
       .groupBy((col("t") - (col("t") % 3600000000L)).as("hour_us"))
-      .agg(max(col("rsum")).as("peak_concurrency"), count(lit(1)).as("n_changes"))
+      .agg(max(col("rsum_delta")).as("peak_concurrency"), count(lit(1)).as("n_changes"))
   }
 
   val peakConcurrencySql: String =

@@ -263,7 +263,7 @@ object TextQueries {
     * exact integers through the parquet round-trip keep every
     * consumer's hash unchanged. */
   def shinglePairsFront(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(front(dir, "pairfront")(shinglePairs(s, dir).write.mode("overwrite").parquet(_)))
+    graft.sources.Parquet.read(s, front(dir, "pairfront")(shinglePairs(s, dir).write.mode("overwrite").parquet(_)))
 
   val ngramJaccard: Q = (s, dir) =>
     shinglePairs(s, dir).select(col("a"), col("b"),
@@ -578,7 +578,7 @@ object TextQueries {
     * form (same kernel, exact integers through a parquet round-trip),
     * so every consumer's hash is unchanged. */
   def sigFront(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(front(dir, "sigfront")(sigsInline(s, dir).write.mode("overwrite").parquet(_)))
+    graft.sources.Parquet.read(s, front(dir, "sigfront")(sigsInline(s, dir).write.mode("overwrite").parquet(_)))
 
   /** Banding + candidate pairing over a signature relation — the LSH
     * stage, parameterized by where the signatures come from (in-plan
@@ -732,7 +732,7 @@ object TextQueries {
     dedupClusters(s, dir).write.mode("overwrite").parquet(base)
     TextOps.keeperFromClusters(
       table(s, dir, "documents").select(col("doc_id"), col("n_chars")),
-      s.read.parquet(base))
+      graft.sources.Parquet.read(s, base))
   }
 
   val dedupKeeperSql: String =

@@ -5,7 +5,7 @@ import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import graft.catalog.LayerStore
-import graft.ops.{Export, Histograms}
+import graft.ops.Export
 
 /** The reference's tile-serving surface (ServeLayerAsMap.scala:61-124:
   * an HTTP actor on the driver answering /{zoom}/{x}/{y} with a PNG
@@ -36,17 +36,19 @@ class TileServer(spark: SparkSession, catalogRoot: String, layer: String,
     * read time: a publish landing during the read must not put another
     * version's bytes under this key. Breaks come from `v`'s persisted
     * `_attributes` histogram (ServeLayerAsMap.scala:90-92 reads
-    * `histogramData` back the same way); only a pre-sidecar layer falls
-    * back to a live quantile aggregation. */
-  private def render(zoom: Int, v: String, x: Int, y: Int): Option[Array[Byte]] =
+    * `histogramData` back the same way); a version without one fails
+    * (every publish writes it), and the request answers 500. */
+  private def render(zoom: Int, v: String, x: Int, y: Int): Option[Array[Byte]] = {
+    val breaks = store.readAttributesAt(layer, zoom, v).getOrElse(
+      throw new IllegalStateException(s"layer ($layer, $zoom) version $v has no _attributes sidecar"))
+      .quantileBreaks(10)
     store.readAt(layer, zoom, v).where(col("tile_col") === x && col("tile_row") === y)
       .select("cells").collect().headOption.map { r =>
-        val breaks = store.readAttributesAt(layer, zoom, v).map(_.quantileBreaks(10))
-          .getOrElse(Histograms.quantileBreaks(store.readAt(layer, zoom, v), tileSize, 10))
         val out = new java.io.ByteArrayOutputStream()
         Export.renderPngTo(r.getSeq[Double](0), tileSize, tileSize, breaks, out)
         out.toByteArray
       }
+  }
 
   /** The slippy-map page (the reference serves a Leaflet index.html,
     * ServeLayerAsMap.scala + static/index.html; this build is offline so

@@ -267,7 +267,7 @@ object Similarity {
     // scan prunes statically to those partition directories
     val probed = qprobe.select(col("cluster")).distinct()
       .collect().map(_.getInt(0)).toSeq
-    val assigned = spark.read.parquet(s"$indexPath/assignments")
+    val assigned = graft.sources.Parquet.read(spark, s"$indexPath/assignments")
       .where(col("cluster").isin(probed: _*))
       .select(col("cluster"), col("vec_id").as("cid"), col("embedding").as("ce"))
     val scored = qprobe.join(assigned, Seq("cluster"))
@@ -458,7 +458,7 @@ object Similarity {
               codebook: Array[Array[Array[Double]]], k: Int): DataFrame = {
     val spark = queries.sparkSession
     val (nm, nk, sub) = (codebook.length, codebook(0).length, codebook(0)(0).length)
-    val idx = spark.read.parquet(s"$indexPath/codes")
+    val idx = graft.sources.Parquet.read(spark, s"$indexPath/codes")
       .select(col("vec_id").as("cid"), col("pq_codes"), col("n2s"))
     val qds = (0 until nm).map(m => array((0 until nk).map(code =>
       (0 until sub).map(j => col("_qe").getItem(m * sub + j) * lit(codebook(m)(code)(j)))

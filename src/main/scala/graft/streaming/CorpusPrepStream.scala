@@ -138,7 +138,7 @@ object CorpusPrepStream {
       // old survivor band rows, contracted to their cluster label —
       // the bandFront join on clusters keeps exactly the pre-batch
       // survivor rows (this batch's docs are not in `clusters` yet)
-      val oldBands = spark.read.parquet(st.bandFrontPath)
+      val oldBands = graft.sources.Parquet.read(spark, st.bandFrontPath)
         .join(clusters, Seq("doc_id"))
         .select(col("band"), col("key"), col("label"))
       val e2 = nb.join(oldBands, Seq("band", "key"))
@@ -170,7 +170,7 @@ object CorpusPrepStream {
   def keepers(spark: SparkSession, st: State): DataFrame = {
     val minima = readClusters(spark, st)
       .where(col("doc_id") === col("label")).select(col("doc_id"))
-    val bandFront = spark.read.parquet(st.bandFrontPath)
+    val bandFront = graft.sources.Parquet.read(spark, st.bandFrontPath)
     val hold = bandFront.where(col("doc_id") % 50 === 0)
       .select(col("band"), col("key")).distinct()
     val bad = bandFront.join(minima, Seq("doc_id"))
@@ -178,7 +178,7 @@ object CorpusPrepStream {
       .join(hold, Seq("band", "key")).select(col("doc_id")).distinct()
     val s3 = minima.where(col("doc_id") % 50 =!= 0)
       .join(bad, Seq("doc_id"), "left_anti")
-    spark.read.parquet(st.docMetaPath).join(s3, Seq("doc_id"))
+    graft.sources.Parquet.read(spark, st.docMetaPath).join(s3, Seq("doc_id"))
       .select(col("doc_id"), col("lang"), col("n_tokens"))
   }
 }

@@ -10,10 +10,6 @@ object GraftSqlShim {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
-  /** `StructType.asNullable` (spark-private): the schema a parquet
-    * read-back reports for data written with schema `s`. */
-  def asNullable(s: types.StructType): types.StructType = s.asNullable
-
   /** A frame over a logical plan (`Dataset.ofRows` is sql-private). */
   def ofRows(s: SparkSession, plan: catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(s.asInstanceOf[classic.SparkSession], plan)

@@ -51,7 +51,7 @@ class LayerAttributesSpec extends AnyFunSuite {
     assert(assertMatchesReference(store, "t2", 2, binWidth = 3.0).bins.head == -3L)
   }
 
-  test("a zipped multiband layer without cells gets bounds + schema only") {
+  test("a zipped multiband layer without cells gets bounds only") {
     val store = freshStore()
     val zipped = Raster.zipBands(Raster.stackBands(Seq(tiles(0), tiles(50))), 2)
     store.write(zipped, "mb", 2, tileSize = TS)
@@ -112,7 +112,6 @@ object SidecarReference {
 
   def json(spark: SparkSession, path: String, tileSize: Int, crs: String, binWidth: Double): String = {
     val tiles = spark.read.parquet(path)
-    val schemaJson = tiles.schema.json
     def extent(b: org.apache.spark.sql.Row): Seq[Double] =
       if (b.isNullAt(0)) Seq.empty
       else Seq(b.getInt(0).toDouble * tileSize, b.getInt(2).toDouble * tileSize,
@@ -131,7 +130,7 @@ object SidecarReference {
         nTiles = b.getLong(4), nCells = 0L,
         minV = 0.0, maxV = 0.0, binWidth = binWidth,
         bins = Seq.empty, counts = Seq.empty,
-        extent = extent(b), schemaJson = Some(schemaJson)))
+        extent = extent(b)))
     }
     val dataCells = filter(col("cells"), x => not(isnan(x)))
     val b = tiles.agg(
@@ -159,6 +158,6 @@ object SidecarReference {
       binWidth = effWidth,
       bins = hist.map(_.getLong(0)).toSeq.sorted,
       counts = hist.sortBy(_.getLong(0)).map(_.getLong(1)).toSeq,
-      extent = extent(b), schemaJson = Some(schemaJson)))
+      extent = extent(b)))
   }
 }

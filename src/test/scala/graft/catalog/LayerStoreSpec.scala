@@ -193,8 +193,8 @@ class LayerStoreSpec extends AnyFunSuite {
 
   test("jobs per publish are pinned, and no publish reads its written dir back") {
     // pinned: a publish runs its checkpoint's jobs, the range sample,
-    // the parquet write and one sidecar job; the sidecar schema comes
-    // from the checkpoint, so no publish reads the written dir back
+    // the parquet write and one sidecar job; the sidecar is built from
+    // the checkpoint, so no publish reads the written dir back
     val store = freshStore()
     def jobs(what: String)(f: => Unit) = graft.SparkTestBase.jobsIn(what)(f)
     assert(jobs("write")(store.write(tiles(0), "j", 1, tileSize = TS)) == 5)
@@ -207,7 +207,7 @@ class LayerStoreSpec extends AnyFunSuite {
   test("merge into a space-time layer fails by name instead of dropping the time dimension") {
     val store = freshStore()
     store.write(stTiles, "stm", 1, tileSize = TS)
-    // the live layer's time column comes from its sidecar schema: no job
+    // the live layer's time column comes from a footer read on the driver: no job
     val rejected = graft.SparkTestBase.jobsIn("rejected merge") {
       val live = intercept[IllegalArgumentException](store.merge(tiles(100), "stm", 1, tileSize = TS))
       assert(live.getMessage.contains("(stm, 1)"))
@@ -252,9 +252,14 @@ class LayerStoreSpec extends AnyFunSuite {
     assert(plan.contains("PartitionFilters") && plan.contains("time"))
     val cells = feb.where($"tile_col" === 1).select($"cells").as[Seq[Double]].head()
     assert(cells(0) == 2.0 && cells(1) == 3.0)
-    // sidecar covers all time slices
-    val a = store.readAttributes("stl", 4).get
-    assert(a.nTiles == 4 && a.schemaJson.exists(_.contains("time")))
+    // sidecar covers all time slices; the schema comes from a footer
+    // on the driver, with the partition column `time` last
+    assert(store.readAttributes("stl", 4).get.nTiles == 4)
+    var fields = Seq.empty[String]
+    assert(graft.SparkTestBase.jobsIn("space-time schema") {
+      fields = store.read("stl", 4).schema.fieldNames.toSeq
+    } == 0)
+    assert(fields == Seq("tile_col", "tile_row", "cells", "time"), fields)
   }
 
   test("concurrent merges serialize: no upsert is lost") {
@@ -452,7 +457,12 @@ class LayerStoreSpec extends AnyFunSuite {
     store.write(zipped, "mb", 2, tileSize = TS) // the sidecar of a cell-less layer MUST not throw
     val a = store.readAttributes("mb", 2).get
     assert(a.nTiles == 4 && a.minCol == 0 && a.maxCol == 1)
-    assert(a.bins.isEmpty && a.schemaJson.exists(_.contains("bands")))
+    assert(a.bins.isEmpty)
+    var fields = Seq.empty[String]
+    assert(graft.SparkTestBase.jobsIn("multiband schema") {
+      fields = store.read("mb", 2).schema.fieldNames.toSeq
+    } == 0)
+    assert(fields.contains("bands") && !fields.contains("cells"), fields)
     assert(store.read("mb", 2).count() == 4)
   }
 

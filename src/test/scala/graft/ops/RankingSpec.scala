@@ -62,17 +62,17 @@ class RankingSpec extends AnyFunSuite {
     assert(tiles == Map(1 -> 50L, 2 -> 50L, 3 -> 50L, 4 -> 50L))
   }
 
-  test("withGlobalRunningSum equals the single-partition ordered Window") {
+  test("withGlobalRunningSums equals the single-partition ordered Window") {
     val rnd = new scala.util.Random(11)
     val rows = (1L to 1000L).map(i => (i, if (rnd.nextBoolean()) 1L else -1L))
     val df = rows.toDF("id", "delta").repartition(9)
-    val dist = Ranking.withGlobalRunningSum(df, Seq($"id".asc), "delta")
-      .select($"id", $"rsum").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val (sums, Seq(total)) = Ranking.withGlobalRunningSums(df, Seq($"id".asc), Seq("delta"))
+    val dist = sums.select($"id", $"rsum_delta").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val w = Window.orderBy($"id".asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val ref = df.select($"id", sum($"delta").over(w).as("rsum"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(dist == ref)
+    assert(dist == ref && total == dist(1000L))
     // non-vacuity: the walk actually wanders
     assert(dist.values.toSet.size > 10)
   }

@@ -193,6 +193,21 @@ class TileServerSpec extends AnyFunSuite {
     } finally srv.stop()
   }
 
+  test("a tile of a version whose sidecar was deleted answers 500, not a second break algorithm") {
+    val ts = 8
+    val root = java.nio.file.Files.createTempDirectory("graft_serve_nosidecar").toString
+    val store = new LayerStore(spark, root)
+    publish(store, "bare", 1, ts)((tc, tr, px, py) => (tc + tr + px + py).toDouble)
+    val v = store.currentVersion("bare", 1).get
+    java.nio.file.Files.delete(java.nio.file.Paths.get(s"$root/tiles/layer_name=bare/zoom=1/$v/_attributes.json"))
+    val srv = new TileServer(spark, root, "bare", ts)
+    val client = new Client(srv.start())
+    try {
+      assert(client.get("/1/0/0").statusCode == 500)
+      assert(client.get("/1/9/9").statusCode == 500) // breaks are resolved before the tile
+    } finally srv.stop()
+  }
+
   test("stop() shuts down the request pool so the JVM can exit") {
     val root = java.nio.file.Files.createTempDirectory("graft_serve_stop").toString
     val srv = new TileServer(spark, root, "none", 8)
