@@ -353,14 +353,6 @@ class LayerStore(spark: SparkSession, val root: String,
     else None
   }
 
-  /** Time-pruned read: the `time` predicate prunes partition dirs; the
-    * schema comes from a footer on the driver like the spatial read's,
-    * with partition discovery appending `time`. */
-  def readSpaceTime(name: String, zoom: Int, time: Option[String] = None): DataFrame = {
-    val df = read(name, zoom)
-    time.fold(df)(t => df.where(col("time") === t))
-  }
-
   /** S10 space-time range form: time window + bbox in one read. Both
     * predicates push down — `time` is the partition column, so the
     * window prunes partition DIRECTORIES before any file is opened;
@@ -383,14 +375,17 @@ class LayerStore(spark: SparkSession, val root: String,
     * subsequent merge/write (previous version retained), giving readers
     * a point-in-time snapshot instead of a mid-swap mixture. */
   def read(name: String, zoom: Int): DataFrame =
-    Parquet.read(spark, dataPath(name, zoom))
+    readDir(dataPath(name, zoom))
 
   /** Tiles of one version dir, named as [[currentVersion]] returns it.
     * A reader that resolves the live version once and reads tiles and
     * sidecar through it (see [[readAttributesAt]]) sees one version even
     * when a publish lands in between. */
   def readAt(name: String, zoom: Int, version: String): DataFrame =
-    Parquet.read(spark, s"${zoomDir(name, zoom)}/$version")
+    readDir(s"${zoomDir(name, zoom)}/$version")
+
+  /** A version dir's tiles; `time` stays the string it was written as. */
+  private def readDir(path: String): DataFrame = Parquet.read(spark, path, Set("time"))
 
   /** The attribute sidecar of one version dir (see [[readAt]]). */
   def readAttributesAt(name: String, zoom: Int, version: String): Option[LayerAttributes] =
@@ -584,7 +579,7 @@ class LayerStore(spark: SparkSession, val root: String,
       val bytes = parquetFiles(live).map(_.length).sum
       val nFiles = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
       writeVersion(name, zoom, fence = Some(basePtr)) { path =>
-        layout(Parquet.read(spark, live), nFiles).parquet(path)
+        layout(readDir(live), nFiles).parquet(path)
         val attrs = Paths.get(s"$live/_attributes.json")
         if (Files.exists(attrs)) // metadata unchanged by compaction
           Files.copy(attrs, Paths.get(s"$path/_attributes.json")): Unit

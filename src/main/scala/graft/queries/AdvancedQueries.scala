@@ -562,16 +562,23 @@ object AdvancedQueries {
     * the sketch is gated, not just the plumbing. Parts (~200+ distinct)
     * exercise the estimation branch, suppliers (10 at small SF) the
     * exact-below-k branch. */
-  val kmvDistinct: Q = (s, dir) =>
-    table(s, dir, "lineitem")
-      .select(col("l_returnflag"), col("l_partkey"), col("l_suppkey"),
-        graft.text.TextOps.h60(col("l_partkey").cast("string")).as("hp"),
-        graft.text.TextOps.h60(col("l_suppkey").cast("string")).as("hs"))
-      .groupBy(col("l_returnflag"))
-      .agg(countDistinct(col("l_partkey")).as("exact_parts"),
-        graft.ops.Sketches.kmvDistinct(col("hp"), 64).as("kmv_parts"),
-        countDistinct(col("l_suppkey")).as("exact_supps"),
-        graft.ops.Sketches.kmvDistinct(col("hs"), 64).as("kmv_supps"))
+  val kmvDistinct: Q = (s, dir) => flagCensus(s, dir, "kmv")(graft.ops.Sketches.kmvDistinct(_, 64))
+
+  /** Per flag, the exact distinct count and `sketch` of the h60 hash of
+    * l_partkey (`exact_parts`, `<name>_parts`) and of l_suppkey (`…_supps`).
+    * Each key gets its own aggregation, joined null-safely on the flag (a
+    * null flag stays its own row): two distinct counts in one `agg` plan
+    * an Expand whose group order varies between JVMs. */
+  private def flagCensus(s: SparkSession, dir: String, name: String)(sketch: Column => Column): DataFrame = {
+    val li = table(s, dir, "lineitem")
+    def census(key: String, suffix: String) = li.groupBy(col("l_returnflag"))
+      .agg(countDistinct(col(key)).as(s"exact_$suffix"),
+        sketch(graft.text.TextOps.h60(col(key).cast("string"))).as(s"${name}_$suffix")).as(suffix)
+    census("l_partkey", "parts").join(census("l_suppkey", "supps"),
+        col("parts.l_returnflag") <=> col("supps.l_returnflag"))
+      .select(col("parts.l_returnflag"), col("exact_parts"), col(s"${name}_parts"),
+        col("exact_supps"), col(s"${name}_supps"))
+  }
 
   private def kmvEstSql(src: String, gExpr: String, keyExpr: String, alias: String): String =
     s"""SELECT g, CASE WHEN MAX(nd) < 64 THEN CAST(MAX(nd) AS DOUBLE)
@@ -749,25 +756,16 @@ object AdvancedQueries {
     * engine's double-literal folding (round 6 proved the folded α
     * chain is NOT bit-portable across DuckDB builds), so the hashed
     * projection carries only the exact integers; consumers derive the
-    * estimate from denom. Each key gets its own aggregation with ONE
-    * distinct count, joined on the flag: two distinct counts in one
-    * `agg` plan an Expand whose group order varies between JVMs. */
+    * estimate from denom. */
   val hllDistinct: Q = (s, dir) => {
-    val li = table(s, dir, "lineitem")
-    def census(key: String, suffix: String): DataFrame = {
-      val regs = s"r_$suffix"
-      li.groupBy(col("l_returnflag"))
-        .agg(countDistinct(col(key)).as(s"exact_$suffix"),
-          graft.ops.Sketches.hllSketch(graft.text.TextOps.h60(col(key).cast("string")), 8).as(regs))
-        .select(col("l_returnflag"), col(s"exact_$suffix"),
-          expr(s"aggregate($regs, CAST(0 AS BIGINT), (acc, r) -> acc + shiftleft(CAST(1 AS BIGINT), 53 - r))")
-            .as(s"denom_$suffix"),
-          expr(s"aggregate($regs, CAST(0 AS BIGINT), (acc, r) -> acc + IF(r = 0, 1, 0))")
-            .as(s"zeros_$suffix"))
-    }
-    census("l_partkey", "parts").join(census("l_suppkey", "supps"), Seq("l_returnflag"))
-      .select(col("l_returnflag"), col("exact_parts"), col("exact_supps"),
-        col("denom_parts"), col("zeros_parts"), col("denom_supps"), col("zeros_supps"))
+    def pieces(regs: String, suffix: String) = Seq(
+      expr(s"aggregate($regs, CAST(0 AS BIGINT), (acc, r) -> acc + shiftleft(CAST(1 AS BIGINT), 53 - r))")
+        .as(s"denom_$suffix"),
+      expr(s"aggregate($regs, CAST(0 AS BIGINT), (acc, r) -> acc + IF(r = 0, 1, 0))")
+        .as(s"zeros_$suffix"))
+    flagCensus(s, dir, "r")(graft.ops.Sketches.hllSketch(_, 8))
+      .select(Seq(col("l_returnflag"), col("exact_parts"), col("exact_supps")) ++
+        pieces("r_parts", "parts") ++ pieces("r_supps", "supps"): _*)
   }
 
   /** Register rebuild for one (source, group, key): CTE chain ending in

@@ -244,8 +244,8 @@ class LayerStoreSpec extends AnyFunSuite {
       .unionByName(Raster.assemble(st.where($"time" === "2024-02"), TS, TS).withColumn("time", lit("2024-02")))
     store.write(tiles, "stl", 4, tileSize = TS)
     // full read sees both slices; time-pruned read sees one
-    assert(store.readSpaceTime("stl", 4).count() == 4)
-    val feb = store.readSpaceTime("stl", 4, Some("2024-02"))
+    assert(store.read("stl", 4).count() == 4)
+    val feb = store.read("stl", 4).where($"time" === "2024-02")
     assert(feb.count() == 2)
     // partition pruning: the time filter reaches PartitionFilters
     val plan = feb.queryExecution.executedPlan.toString
@@ -443,11 +443,28 @@ class LayerStoreSpec extends AnyFunSuite {
       .unionByName(Raster.assemble(st.where($"time" === "2024-02"), TS, TS).withColumn("time", lit("2024-02")))
     store.write(stTiles, "stc", 4, tileSize = TS)
     store.compact("stc", 4)
-    val feb = store.readSpaceTime("stc", 4, Some("2024-02"))
+    val feb = store.read("stc", 4).where($"time" === "2024-02")
     assert(feb.count() == 2)
     val plan = feb.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("time"),
       s"time pruning lost after compaction:\n$plan")
+  }
+
+  test("a space-time layer's time reads back as the string it was written as, also after compact") {
+    // Spark's partition inference would read these as a DATE and the INT 1
+    val store = freshStore()
+    val days = tiles(1).withColumn("time", lit("2024-01-15"))
+      .unionByName(tiles(2).withColumn("time", lit("01")))
+    store.write(days, "std", 1, tileSize = TS)
+    def times() = {
+      val df = store.read("std", 1)
+      assert(df.schema("time").dataType == org.apache.spark.sql.types.StringType, df.schema)
+      df.select($"time").distinct().as[String].collect().sorted.toSeq
+    }
+    assert(times() == Seq("01", "2024-01-15"))
+    store.compact("std", 1)
+    assert(times() == Seq("01", "2024-01-15"))
+    assert(store.read("std", 1).where($"time" === "01").count() == 4)
   }
 
   test("writing a zipped multiband layer with default attributes produces a bounds+schema sidecar") {

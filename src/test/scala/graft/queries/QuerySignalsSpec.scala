@@ -328,6 +328,20 @@ class QuerySignalsSpec extends AnyFunSuite {
     assert(got(59049L) == ((1L, 10L)))
   }
 
+  test("hll and kmv distinct: a null return flag keeps its own row and exact counts") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_hll").toString
+    Seq[(Option[String], Long, Long)]((Some("A"), 1L, 10L), (Some("A"), 2L, 10L), (Some("A"), 2L, 11L),
+      (None, 3L, 12L), (None, 3L, 12L), (Some("R"), 4L, 13L))
+      .toDF("l_returnflag", "l_partkey", "l_suppkey").write.parquet(s"$dir/lineitem.parquet")
+    val out = AdvancedQueries.hllDistinct(spark, dir).collect()
+      .map(r => Option(r.getString(0)) -> (r.getLong(1), r.getLong(2))).toMap
+    val want = Map(Some("A") -> ((2L, 2L)), None -> ((1L, 1L)), Some("R") -> ((1L, 1L)))
+    assert(out == want, out)
+    val kmv = AdvancedQueries.kmvDistinct(spark, dir).collect()
+      .map(r => Option(r.getString(0)) -> (r.getLong(1), r.getLong(3))).toMap
+    assert(kmv == want, kmv)
+  }
+
   test("auc: hand-computed tie-aware value on a crafted score/label table") {
     // scores (n_chars) with labels (lang): (1,neg) (1,pos) (2,neg) (3,pos) (3,pos)
     // U1 = 0.5 (tie at 1) + 2 + 2 = 4.5; AUC = 4.5 / (3*2) = 0.75
