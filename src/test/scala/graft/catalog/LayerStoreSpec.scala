@@ -451,20 +451,21 @@ class LayerStoreSpec extends AnyFunSuite {
   }
 
   test("a space-time layer's time reads back as the string it was written as, also after compact") {
-    // Spark's partition inference would read these as a DATE and the INT 1
+    // Spark's partition inference would read these as DATEs and as the INTs 1 and 2
     val store = freshStore()
-    val days = tiles(1).withColumn("time", lit("2024-01-15"))
-      .unionByName(tiles(2).withColumn("time", lit("01")))
-    store.write(days, "std", 1, tileSize = TS)
-    def times() = {
-      val df = store.read("std", 1)
-      assert(df.schema("time").dataType == org.apache.spark.sql.types.StringType, df.schema)
-      df.select($"time").distinct().as[String].collect().sorted.toSeq
+    for ((name, t1, t2) <- Seq(("std", "2024-01-15", "2024-02-15"), ("stm", "01", "02"))) {
+      store.write(tiles(1).withColumn("time", lit(t1))
+        .unionByName(tiles(2).withColumn("time", lit(t2))), name, 1, tileSize = TS)
+      def times() = {
+        val df = store.read(name, 1)
+        assert(df.schema("time").dataType == org.apache.spark.sql.types.StringType, df.schema)
+        df.select($"time").distinct().as[String].collect().sorted.toSeq
+      }
+      assert(times() == Seq(t1, t2))
+      store.compact(name, 1)
+      assert(times() == Seq(t1, t2))
+      assert(store.read(name, 1).where($"time" === t1).count() == 4)
     }
-    assert(times() == Seq("01", "2024-01-15"))
-    store.compact("std", 1)
-    assert(times() == Seq("01", "2024-01-15"))
-    assert(store.read("std", 1).where($"time" === "01").count() == 4)
   }
 
   test("writing a zipped multiband layer with default attributes produces a bounds+schema sidecar") {
