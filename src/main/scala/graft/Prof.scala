@@ -51,7 +51,8 @@ object Prof {
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         for (p <- Option(e.properties); phase <- Option(p.getProperty(PhaseKey))) {
-          // nothing sets job descriptions; the result stage's name is
+          // a described job (a catalog publish step, see LayerStore)
+          // by its description; any other by its result stage's name,
           // the job's call site
           val j = new Job(e.jobId, phase, e.time,
             Option(p.getProperty("spark.job.description"))

@@ -62,7 +62,7 @@ class CatalogTxn(store: LayerStore) {
     withLocks(ordered) {
       val bindings = ordered.map { w =>
         store.writeVersion(w.name, w.zoom) { path =>
-          store.writeTo(w.tiles, path, w.tileSize, w.crs, w.binWidth)
+          store.writeTo(w.name, w.zoom, w.tiles, path, w.tileSize, w.crs, w.binWidth)
         }
         // under this layer's lock our publish IS the live pointer
         val v = store.currentVersion(w.name, w.zoom).getOrElse(

@@ -4,8 +4,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType}
-import org.json4s.NoTypeHints
-import org.json4s.jackson.Serialization
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 
 /** Per-(layer, zoom) attribute record — the engine's analog of the
   * reference's JSON attribute store (api/package.scala:62-65): layer
@@ -64,10 +63,68 @@ case class LayerAttributes(
 }
 
 object LayerAttributes {
-  private implicit val fmt: org.json4s.Formats = Serialization.formats(NoTypeHints)
+  private val mapper = new ObjectMapper()
 
-  def toJson(a: LayerAttributes): String = Serialization.writePretty(a)
-  def fromJson(s: String): LayerAttributes = Serialization.read[LayerAttributes](s)
+  /** The sidecar's bytes: the fields in declaration order through
+    * Jackson's default pretty printer — the bytes json4s's `writePretty`
+    * gives, without its reflective case-class derivation, which costs
+    * 0.3-0.6 s on its first call in a JVM, i.e. on the first publish. */
+  def toJson(a: LayerAttributes): String = {
+    val out = new java.io.StringWriter
+    val g = mapper.getFactory.createGenerator(out).useDefaultPrettyPrinter()
+    def array[A](name: String, xs: Seq[A])(write: A => Unit): Unit = {
+      g.writeArrayFieldStart(name); xs.foreach(write); g.writeEndArray()
+    }
+    g.writeStartObject()
+    g.writeStringField("cellType", a.cellType)
+    g.writeStringField("crs", a.crs)
+    g.writeNumberField("tileCols", a.tileCols)
+    g.writeNumberField("tileRows", a.tileRows)
+    g.writeNumberField("minCol", a.minCol)
+    g.writeNumberField("maxCol", a.maxCol)
+    g.writeNumberField("minRow", a.minRow)
+    g.writeNumberField("maxRow", a.maxRow)
+    g.writeNumberField("nTiles", a.nTiles)
+    g.writeNumberField("nCells", a.nCells)
+    g.writeNumberField("minV", a.minV)
+    g.writeNumberField("maxV", a.maxV)
+    g.writeNumberField("binWidth", a.binWidth)
+    array("bins", a.bins)(g.writeNumber(_))
+    array("counts", a.counts)(g.writeNumber(_))
+    array("extent", a.extent)(g.writeNumber(_))
+    g.writeEndObject()
+    g.close()
+    out.toString
+  }
+
+  /** Reads what [[toJson]] writes; fields it does not know (such as an
+    * older sidecar's recorded schema) are ignored, a missing or mistyped
+    * one throws naming it. */
+  def fromJson(s: String): LayerAttributes = {
+    val o = mapper.readTree(s)
+    def field(name: String, ok: JsonNode => Boolean): JsonNode =
+      Option(o.get(name)).filter(ok).getOrElse(
+        throw new IllegalArgumentException(s"sidecar field $name is missing or mistyped"))
+    def isInt(n: JsonNode) = n.isIntegralNumber && n.canConvertToInt
+    def isLong(n: JsonNode) = n.isIntegralNumber && n.canConvertToLong
+    def str(name: String) = field(name, _.isTextual).textValue
+    def int(name: String) = field(name, isInt).intValue
+    def long(name: String) = field(name, isLong).longValue
+    def dbl(name: String) = field(name, _.isNumber).doubleValue
+    def arr(name: String, ok: JsonNode => Boolean) = {
+      import scala.jdk.CollectionConverters._
+      field(name, n => n.isArray && n.elements.asScala.forall(ok)).elements.asScala.toSeq
+    }
+    LayerAttributes(
+      cellType = str("cellType"), crs = str("crs"),
+      tileCols = int("tileCols"), tileRows = int("tileRows"),
+      minCol = int("minCol"), maxCol = int("maxCol"),
+      minRow = int("minRow"), maxRow = int("maxRow"),
+      nTiles = long("nTiles"), nCells = long("nCells"),
+      minV = dbl("minV"), maxV = dbl("maxV"), binWidth = dbl("binWidth"),
+      bins = arr("bins", isLong).map(_.longValue), counts = arr("counts", isLong).map(_.longValue),
+      extent = arr("extent", _.isNumber).map(_.doubleValue))
+  }
 
   /** Driver-side histogram rows are bounded by value-range / binWidth,
     * not layer size — but an adversarial range (e.g. raw timestamps at
@@ -127,7 +184,7 @@ object LayerAttributes {
       minCol = if (c0 <= c1) c0 else 0, maxCol = if (c0 <= c1) c1 else -1,
       minRow = if (r0 <= r1) r0 else 0, maxRow = if (r0 <= r1) r1 else -1,
       nTiles = first.map(_.n).sum, nCells = nCells,
-      minV = if (nCells == 0L) 0.0 else vmin, // 0.0: json4s can't round-trip NaN
+      minV = if (nCells == 0L) 0.0 else vmin, // 0.0: a NaN would not read back as a number
       maxV = if (nCells == 0L) 0.0 else vmax,
       binWidth = effWidth,
       bins = bins.toSeq, counts = bins.map(hist.get).toSeq,

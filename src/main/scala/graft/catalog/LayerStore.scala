@@ -278,7 +278,7 @@ class LayerStore(spark: SparkSession, val root: String,
             tileSize: Int = graft.core.TileMath.DefaultTileSize,
             crs: String = "EPSG:4326", binWidth: Double = 1.0): Unit = withLayerLock(name, zoom) {
     writeVersion(name, zoom) { path =>
-      writeTo(tiles, path, tileSize, crs, binWidth)
+      writeTo(name, zoom, tiles, path, tileSize, crs, binWidth)
     }
   }
 
@@ -292,11 +292,15 @@ class LayerStore(spark: SparkSession, val root: String,
     * FILE is one contiguous key slice, so bbox and point reads skip
     * whole files and a month's dir holds a few files, not one per
     * (task x month). The explicit `parts` keeps AQE from coalescing a
-    * big write to one task. */
+    * big write to one task. A one-file spatial layout needs no range
+    * exchange: one task reads every input partition and sorts, the same
+    * rows in the same order with one job fewer. */
   private def layout(t: DataFrame, parts: Int): DataFrameWriter[Row] =
     if (t.columns.contains("time"))
       t.repartitionByRange(parts, col("time"), hKey).sortWithinPartitions(col("time"), hKey)
         .write.mode(SaveMode.Overwrite).partitionBy("time")
+    else if (parts == 1)
+      t.coalesce(1).sortWithinPartitions(zKey).write.mode(SaveMode.Overwrite)
     else
       t.repartitionByRange(parts, zKey).sortWithinPartitions(zKey).write.mode(SaveMode.Overwrite)
 
@@ -328,16 +332,27 @@ class LayerStore(spark: SparkSession, val root: String,
     * in its [[layout]] into `path`, then build the sidecar from the same
     * blocks in one job ([[LayerAttributes.fromRows]]), recording tile
     * geometry, CRS and requested bin width besides the data. The blocks
-    * are freed in every case; a failed write leaves no sidecar. */
-  private[catalog] def writeTo(tiles: DataFrame, path: String,
+    * are freed in every case; a failed write leaves no sidecar. Each
+    * step's jobs carry its [[step]] description. */
+  private[catalog] def writeTo(name: String, zoom: Int, tiles: DataFrame, path: String,
                                tileSize: Int, crs: String, binWidth: Double): Unit = {
-    val t = graft.ops.Materialize.checkpointFresh(tiles)
+    val t = step(name, zoom, "checkpoint")(graft.ops.Materialize.checkpointFresh(tiles))
     try {
-      layout(t, writeParts(t)).parquet(path)
-      val sidecar = LayerAttributes.fromRows(t, tileSize, crs, binWidth)
+      step(name, zoom, "write")(layout(t, writeParts(t)).parquet(path))
+      val sidecar = step(name, zoom, "sidecar")(LayerAttributes.fromRows(t, tileSize, crs, binWidth))
       Files.write(Paths.get(s"$path/_attributes.json"),
         LayerAttributes.toJson(sidecar).getBytes("UTF-8")): Unit
     } finally graft.ops.Materialize.free(t)
+  }
+
+  /** Runs one publish step with the job description
+    * `publish <name> zoom=<zoom> <what>`, so every job it starts names
+    * its layer and step; the caller's description is restored after. */
+  private def step[T](name: String, zoom: Int, what: String)(f: => T): T = {
+    val sc = spark.sparkContext
+    val caller = sc.getLocalProperty(LayerStore.JobDescription)
+    sc.setJobDescription(s"publish $name zoom=$zoom $what")
+    try f finally sc.setLocalProperty(LayerStore.JobDescription, caller)
   }
 
   /** S9: read the attribute sidecar of the live version (None for
@@ -434,7 +449,7 @@ class LayerStore(spark: SparkSession, val root: String,
           "and would mix the time slices of a space-time layer; write the layer instead")
     val toWrite = live.fold(incoming)(graft.ops.Raster.mergeLayers(_, incoming))
     writeVersion(name, zoom, fence = Some(base.map(_._1).getOrElse(0L))) { path =>
-      writeTo(toWrite, path, tileSize, crs, binWidth)
+      writeTo(name, zoom, toWrite, path, tileSize, crs, binWidth)
     }
   }
 
@@ -579,7 +594,7 @@ class LayerStore(spark: SparkSession, val root: String,
       val bytes = parquetFiles(live).map(_.length).sum
       val nFiles = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
       writeVersion(name, zoom, fence = Some(basePtr)) { path =>
-        layout(readDir(live), nFiles).parquet(path)
+        step(name, zoom, "write")(layout(readDir(live), nFiles).parquet(path))
         val attrs = Paths.get(s"$live/_attributes.json")
         if (Files.exists(attrs)) // metadata unchanged by compaction
           Files.copy(attrs, Paths.get(s"$path/_attributes.json")): Unit
@@ -673,4 +688,7 @@ object LayerStore {
   /** Output file size goal of a spatial publish (in cached-block bytes,
     * i.e. smaller on disk after parquet encoding) and of [[compact]]. */
   private val TargetFileBytes: Long = 128L << 20
+
+  /** Spark's local property behind `SparkContext.setJobDescription`. */
+  private val JobDescription = "spark.job.description"
 }

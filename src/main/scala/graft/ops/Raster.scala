@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.UserDefinedFunction
 import graft.core.TileMath
 
 /** DataFrame-level raster operators over the engine's tile schema:
@@ -32,12 +33,14 @@ object Raster {
 
   /** Pixel→tile reassembly (A3, TilePixelingExample.scala:97-107) as a
     * partial-aggregating UDAF — never materializes a 65k-row group. */
-  def assemble(pixels: DataFrame, cols: Int, rows: Int): DataFrame = {
-    val asm = udaf(new TileAggregators.TileAssemble(cols, rows),
-      ExpressionEncoder[TileAggregators.PixelIn]())
+  def assemble(pixels: DataFrame, cols: Int, rows: Int): DataFrame =
     pixels.groupBy(col("tile_col"), col("tile_row"))
-      .agg(asm(col("px"), col("py"), col("v")).as("cells"))
-  }
+      .agg(assembler(cols, rows)(col("px"), col("py"), col("v")).as("cells"))
+
+  /** The (px, py, v) -> cells UDAF of [[assemble]], for aggregations
+    * that group by more than the tile key or assemble several bands. */
+  def assembler(cols: Int, rows: Int): UserDefinedFunction =
+    udaf(new TileAggregators.TileAssemble(cols, rows), ExpressionEncoder[TileAggregators.PixelIn]())
 
   /** NDVI cell algebra (P1, NDVILayerExample.scala:70-75) on two joined
     * band columns, as a codegen'd higher-order function. */

@@ -197,6 +197,14 @@ object Fixtures {
   def tilesB(s: SparkSession, dir: String): DataFrame =
     graft.ops.Raster.assemble(pixelsB(s, dir), TS, TS)
 
+  /** Both bands from ONE lineitem scan and ONE aggregation: `a` holds
+    * tilesA's cells, `b` tilesB's, per tile key. */
+  def tilesAB(s: SparkSession, dir: String): DataFrame = {
+    val asm = graft.ops.Raster.assembler(TS, TS)
+    pixelKeys(table(s, dir, "lineitem")).groupBy(col("tile_col"), col("tile_row"))
+      .agg(asm(col("px"), col("py"), col("va")).as("a"), asm(col("px"), col("py"), col("vb")).as("b"))
+  }
+
   /** Rect features for rasterize, derived from `part`: deterministic
     * overlapping boxes in a 64x48 global pixel field. */
   def rectFeatures(s: SparkSession, dir: String): DataFrame =

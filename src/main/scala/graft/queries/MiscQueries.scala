@@ -22,6 +22,23 @@ object MiscQueries {
     s"""WITH $pxCte
        |SELECT tile_col, tile_row, px, py, v FROM pxa""".stripMargin
 
+  /** The overlay the catalog gates publish: band A as the base
+    * (`existing`) and band B masked by band A's QA bit 1 over
+    * tile_col < 2 as the merge (`incoming`), the one definition their
+    * oracles state the same CASE over. Both come from ONE checkpoint of
+    * [[Fixtures.tilesAB]], so a write and a merge scan lineitem and
+    * assemble once; the checkpoint is freed when `body` returns, so
+    * `body` must return only catalog reads. */
+  private def withOverlay(s: SparkSession, dir: String)(
+      body: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val ab = graft.ops.Materialize.checkpointFresh(tilesAB(s, dir))
+    try body(
+      ab.select(col("tile_col"), col("tile_row"), col("a").as("cells")),
+      ab.where(col("tile_col") < 2).select(col("tile_col"), col("tile_row"),
+        graft.ops.Raster.maskCells(col("b"), col("a"), 1L).as("cells")))
+    finally graft.ops.Materialize.free(ab)
+  }
+
   /** Time travel: write band A (sequence 1), merge a masked band-B
     * overlay (sequence 2), then read BOTH retained sequences back
     * pinned by `readVersion` — history must be byte-stable, so the
@@ -29,34 +46,22 @@ object MiscQueries {
     * band, seq 2 = the cell-wise incoming-wins merge, same CASE as the
     * r_merge_upsert oracle). The "VERSION AS OF" read every warehouse
     * catalog owes its users, over the fenced pointer-sequence store. */
-  /** The (existing, incoming) overlay pair c_time_travel and
-    * c_version_diff both publish: band A as the base, masked band B
-    * over tile_col < 2 as the merge — ONE definition, since both
-    * oracles state the same CASE over it. */
-  private def overlayPair(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val incoming = tilesA(s, dir).withColumnRenamed("cells", "qa")
-      .join(tilesB(s, dir), Seq("tile_col", "tile_row"))
-      .where(col("tile_col") < 2)
-      .select(col("tile_col"), col("tile_row"),
-        graft.ops.Raster.maskCells(col("cells"), col("qa"), 1L).as("cells"))
-    (tilesA(s, dir), incoming)
-  }
-
   val timeTravel: Q = (s, dir) => {
     val store = new graft.catalog.LayerStore(s, scratch(dir, "catalog_tt"))
-    val (existing, incoming) = overlayPair(s, dir)
-    store.write(existing, "band_tt", 9)
-    store.merge(incoming, "band_tt", 9)
-    // last two retained sequences, POSITION-labeled 1/2: the scratch
-    // store accumulates publishes when one process reruns the query
-    // (repeated runs in one process), so absolute sequence numbers
-    // drift while the oracle's statement (pre-merge, post-merge) does not
-    val seqs = store.publishedVersions("band_tt", 9).map(_._1).takeRight(2)
-    seqs.zipWithIndex.map { case (q, idx) => graft.ops.Raster
-        .pixelize(store.readVersion("band_tt", 9, q), TS)
-        .withColumn("seq", lit(idx + 1L))
-      }
-      .reduce(_ unionByName _)
+    withOverlay(s, dir) { (existing, incoming) =>
+      store.write(existing, "band_tt", 9)
+      store.merge(incoming, "band_tt", 9)
+      // last two retained sequences, POSITION-labeled 1/2: the scratch
+      // store accumulates publishes when one process reruns the query
+      // (repeated runs in one process), so absolute sequence numbers
+      // drift while the oracle's statement (pre-merge, post-merge) does not
+      val seqs = store.publishedVersions("band_tt", 9).map(_._1).takeRight(2)
+      seqs.zipWithIndex.map { case (q, idx) => graft.ops.Raster
+          .pixelize(store.readVersion("band_tt", 9, q), TS)
+          .withColumn("seq", lit(idx + 1L))
+        }
+        .reduce(_ unionByName _)
+    }
   }
 
   val timeTravelSql: String =
@@ -77,12 +82,13 @@ object MiscQueries {
     * c_time_travel (reruns accumulate publishes). */
   val rollbackGate: Q = (s, dir) => {
     val store = new graft.catalog.LayerStore(s, scratch(dir, "catalog_rb"))
-    val (existing, incoming) = overlayPair(s, dir)
-    store.write(existing, "band_rb", 9)
-    store.merge(incoming, "band_rb", 9)
-    val preMerge = store.publishedVersions("band_rb", 9).map(_._1).takeRight(2).head
-    store.rollback("band_rb", 9, preMerge)
-    graft.ops.Raster.pixelize(store.read("band_rb", 9), TS)
+    withOverlay(s, dir) { (existing, incoming) =>
+      store.write(existing, "band_rb", 9)
+      store.merge(incoming, "band_rb", 9)
+      val preMerge = store.publishedVersions("band_rb", 9).map(_._1).takeRight(2).head
+      store.rollback("band_rb", 9, preMerge)
+      graft.ops.Raster.pixelize(store.read("band_rb", 9), TS)
+    }
   }
 
   val rollbackGateSql: String =
@@ -109,15 +115,16 @@ object MiscQueries {
   val txnSnapshot: Q = (s, dir) => {
     val store = new graft.catalog.LayerStore(s, scratch(dir, "catalog_tx"))
     val txn = new graft.catalog.CatalogTxn(store)
-    val (existing, incoming) = overlayPair(s, dir)
-    txn.commit(Seq(
-      graft.catalog.TxnWrite("txn_a", 9, existing),
-      graft.catalog.TxnWrite("txn_b", 9, incoming)))
-    store.write(tilesB(s, dir), "txn_b", 9) // non-txn clobber
-    val snap = txn.readAtomic(Seq("txn_a" -> 9, "txn_b" -> 9))
-    graft.ops.Raster.pixelize(snap("txn_a" -> 9), TS).withColumn("layer", lit("a"))
-      .unionByName(
-        graft.ops.Raster.pixelize(snap("txn_b" -> 9), TS).withColumn("layer", lit("b")))
+    withOverlay(s, dir) { (existing, incoming) =>
+      txn.commit(Seq(
+        graft.catalog.TxnWrite("txn_a", 9, existing),
+        graft.catalog.TxnWrite("txn_b", 9, incoming)))
+      store.write(tilesB(s, dir), "txn_b", 9) // non-txn clobber
+      val snap = txn.readAtomic(Seq("txn_a" -> 9, "txn_b" -> 9))
+      graft.ops.Raster.pixelize(snap("txn_a" -> 9), TS).withColumn("layer", lit("a"))
+        .unionByName(
+          graft.ops.Raster.pixelize(snap("txn_b" -> 9), TS).withColumn("layer", lit("b")))
+    }
   }
 
   val txnSnapshotSql: String =
@@ -138,11 +145,12 @@ object MiscQueries {
     * like any other write. */
   val compactRoundtrip: Q = (s, dir) => {
     val store = new graft.catalog.LayerStore(s, scratch(dir, "catalog_cp"))
-    val (existing, incoming) = overlayPair(s, dir)
-    store.write(existing, "band_cp", 9)
-    store.merge(incoming, "band_cp", 9)
-    store.compact("band_cp", 9)
-    graft.ops.Raster.pixelize(store.read("band_cp", 9), TS)
+    withOverlay(s, dir) { (existing, incoming) =>
+      store.write(existing, "band_cp", 9)
+      store.merge(incoming, "band_cp", 9)
+      store.compact("band_cp", 9)
+      graft.ops.Raster.pixelize(store.read("band_cp", 9), TS)
+    }
   }
 
   val compactRoundtripSql: String =
@@ -153,15 +161,16 @@ object MiscQueries {
 
   val versionDiff: Q = (s, dir) => {
     val store = new graft.catalog.LayerStore(s, scratch(dir, "catalog_vd"))
-    val (existing, incoming) = overlayPair(s, dir)
-    store.write(existing, "band_vd", 9)
-    store.merge(incoming, "band_vd", 9)
-    // last two retained sequences, not literal 1/2: the scratch store
-    // accumulates publishes when one process runs the query repeatedly
-    // (repeated runs in one process), and older sequences are GC'd by
-    // retention
-    val seqs = store.publishedVersions("band_vd", 9).map(_._1).takeRight(2)
-    store.readDiff("band_vd", 9, seqs.head, seqs.last)
+    withOverlay(s, dir) { (existing, incoming) =>
+      store.write(existing, "band_vd", 9)
+      store.merge(incoming, "band_vd", 9)
+      // last two retained sequences, not literal 1/2: the scratch store
+      // accumulates publishes when one process runs the query repeatedly
+      // (repeated runs in one process), and older sequences are GC'd by
+      // retention
+      val seqs = store.publishedVersions("band_vd", 9).map(_._1).takeRight(2)
+      store.readDiff("band_vd", 9, seqs.head, seqs.last)
+    }
   }
 
   val versionDiffSql: String =
@@ -240,10 +249,8 @@ object MiscQueries {
         (col("l_partkey") % TS).cast("int").as("px"),
         (col("l_linenumber") % TS).cast("int").as("py"))
       .agg(sum(col("l_quantity")).cast("double").as("v"))
-    val asm = udaf(new graft.ops.TileAggregators.TileAssemble(TS, TS),
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[graft.ops.TileAggregators.PixelIn]())
     val tiles = px.groupBy(col("time"), col("tile_col"), col("tile_row"))
-      .agg(asm(col("px"), col("py"), col("v")).as("cells"))
+      .agg(graft.ops.Raster.assembler(TS, TS)(col("px"), col("py"), col("v")).as("cells"))
     store.write(tiles, "band_st", 9, tileSize = TS)
     val out = store.readSpaceTimeRange("band_st", 9, "1994-01", "1994-12", 1, 1, 2, 3)
     out.select(col("time"), col("tile_col"), col("tile_row"),

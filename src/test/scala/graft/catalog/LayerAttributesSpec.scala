@@ -51,6 +51,43 @@ class LayerAttributesSpec extends AnyFunSuite {
     assert(assertMatchesReference(store, "t2", 2, binWidth = 3.0).bins.head == -3L)
   }
 
+  test("toJson writes json4s's writePretty bytes; fromJson reads them and an older sidecar") {
+    // the sidecar format was json4s's case-class serialization; toJson
+    // must keep its bytes (field order, number forms, escapes, spacing)
+    implicit val fmt: org.json4s.Formats =
+      org.json4s.jackson.Serialization.formats(org.json4s.NoTypeHints)
+    val base = LayerAttributes(
+      cellType = "float64", crs = "EPSG:4326", tileCols = 4, tileRows = 4,
+      minCol = 0, maxCol = 1, minRow = -2, maxRow = 1, nTiles = 4, nCells = 64,
+      minV = -3.5, maxV = 6.0, binWidth = 2.0, bins = Seq(-2L, 0L, 3L), counts = Seq(5L, 1L, 58L),
+      extent = Seq(0.0, -8.0, 8.0, 8.0))
+    val cases = Seq(
+      base,
+      base.copy(nTiles = 0, nCells = 0, bins = Seq.empty, counts = Seq.empty, extent = Seq.empty),
+      base.copy(minV = 1.0e-7, maxV = -0.0, binWidth = 1.0e-7, nCells = Long.MaxValue,
+        counts = Seq(Long.MaxValue, 0L, Long.MinValue), extent = Seq(-0.0, 1.0e-7, 1.0e300, 5e-324)),
+      base.copy(crs = "EPSG:4326 \"Zürich\" \\ tab\t naïve"))
+    for (a <- cases) {
+      val json = LayerAttributes.toJson(a)
+      assert(json == org.json4s.jackson.Serialization.writePretty(a))
+      val back = LayerAttributes.fromJson(json)
+      assert(back == a)
+      assert((back.maxV +: back.extent).map(_.toString) == (a.maxV +: a.extent).map(_.toString),
+        "-0.0 must read back with its sign")
+    }
+    // a sidecar written before the recorded schema was dropped
+    val old = LayerAttributes.toJson(base).stripSuffix("\n}") +
+      ",\n  \"schemaJson\" : \"{\\\"type\\\":\\\"struct\\\",\\\"fields\\\":[]}\"\n}"
+    assert(old.contains("schemaJson") && LayerAttributes.fromJson(old) == base)
+    // a missing or mistyped field throws naming it
+    val noBins = intercept[IllegalArgumentException](
+      LayerAttributes.fromJson(LayerAttributes.toJson(base).replace("\"bins\"", "\"binz\"")))
+    assert(noBins.getMessage.contains("bins"))
+    val textTiles = intercept[IllegalArgumentException](
+      LayerAttributes.fromJson(LayerAttributes.toJson(base).replace("\"nTiles\" : 4", "\"nTiles\" : \"4\"")))
+    assert(textTiles.getMessage.contains("nTiles"))
+  }
+
   test("a zipped multiband layer without cells gets bounds only") {
     val store = freshStore()
     val zipped = Raster.zipBands(Raster.stackBands(Seq(tiles(0), tiles(50))), 2)

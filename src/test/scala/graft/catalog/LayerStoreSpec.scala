@@ -192,16 +192,72 @@ class LayerStoreSpec extends AnyFunSuite {
     .unionByName(tiles(2).withColumn("time", lit("2024-02")))
 
   test("jobs per publish are pinned, and no publish reads its written dir back") {
-    // pinned: a publish runs its checkpoint's jobs, the range sample,
-    // the parquet write and one sidecar job; the sidecar is built from
-    // the checkpoint, so no publish reads the written dir back
+    // pinned: a publish runs its checkpoint's jobs, the parquet write
+    // and one sidecar job; a one-file spatial layout adds no range
+    // exchange, a space-time one its range sample and shuffle-map job.
+    // The sidecar is built from the checkpoint, so no publish reads the
+    // written dir back
     val store = freshStore()
     def jobs(what: String)(f: => Unit) = graft.SparkTestBase.jobsIn(what)(f)
-    assert(jobs("write")(store.write(tiles(0), "j", 1, tileSize = TS)) == 5)
-    assert(jobs("merge")(store.merge(tiles(100), "j", 1, tileSize = TS)) == 6)
+    assert(jobs("write")(store.write(tiles(0), "j", 1, tileSize = TS)) == 4)
+    assert(jobs("merge")(store.merge(tiles(100), "j", 1, tileSize = TS)) == 5)
     assert(jobs("space-time write")(store.write(stTiles, "s", 1, tileSize = TS)) == 7)
     assert(store.readAttributes("j", 1).exists(_.nTiles == 4))
     assert(store.readAttributes("s", 1).exists(_.nTiles == 8))
+  }
+
+  test("every publish job is described by its layer, zoom and step; the caller's description is restored") {
+    val store = freshStore()
+    val sc = spark.sparkContext
+    val group = "publish-descriptions"
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          descs.add(String.valueOf(j.properties.getProperty("spark.job.description"))): Unit
+    }
+    def described(f: => Unit): Seq[String] = {
+      descs.clear()
+      f
+      org.apache.spark.sql.GraftSqlShim.drainListenerBus(sc)
+      assert(sc.getLocalProperty("spark.job.description") == "the caller's")
+      descs.toArray.toSeq.map(_.toString)
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup(group, "the caller's")
+      for ((what, f) <- Seq[(String, () => Unit)](
+             "write" -> (() => store.write(tiles(0), "d", 3, tileSize = TS)),
+             "merge" -> (() => store.merge(tiles(100), "d", 3, tileSize = TS)))) {
+        val ds = described(f())
+        assert(ds.nonEmpty && ds.forall(_.matches("publish d zoom=3 (checkpoint|write|sidecar)")),
+          s"$what: $ds")
+        assert(Seq("checkpoint", "write", "sidecar").forall(st => ds.contains(s"publish d zoom=3 $st")),
+          s"$what: $ds")
+      }
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(l)
+    }
+  }
+
+  test("a one-file publish writes, row for row, what a one-part range write does, in zorder") {
+    val store = freshStore()
+    val layer = Raster.assemble(
+      (for (tc <- 0 to 5; tr <- 0 to 4; px <- 0 until TS; py <- 0 until TS)
+        yield (tc, tr, px, py, (tc * 7 + tr * 3 + px * py).toDouble))
+        .toDF("tile_col", "tile_row", "px", "py", "v"), TS, TS).repartition(4)
+    store.write(layer, "one", 1, tileSize = TS)
+    val dir = new java.io.File(s"${store.root}/tiles/layer_name=one/zoom=1/${store.currentVersion("one", 1).get}")
+    assert(dir.listFiles().count(_.getName.endsWith(".parquet")) == 1)
+    val zk = graft.functions.ZOrderKey.zorder($"tile_col", $"tile_row")
+    val ref = java.nio.file.Files.createTempDirectory("graft_range1").resolve("t").toString
+    layer.repartitionByRange(1, zk).sortWithinPartitions(zk).write.parquet(ref)
+    def rows(path: String) = spark.read.parquet(path).select($"tile_col", $"tile_row", $"cells", zk.as("z"))
+      .as[(Int, Int, Seq[Double], Long)].collect().toSeq
+    val got = rows(dir.toString)
+    assert(got.length == 30 && got == rows(ref))
+    assert(got.map(_._4) == got.map(_._4).sorted, "rows are not in zorder")
   }
 
   test("merge into a space-time layer fails by name instead of dropping the time dimension") {
@@ -532,6 +588,11 @@ class LayerStoreSpec extends AnyFunSuite {
     assert(ranges.length >= 2, s"expected several files, got ${ranges.length}")
     ranges.sliding(2).foreach { case Array(a, b) =>
       assert(a._3 < b._2, s"files overlap in zorder: ${a._1} [${a._2}, ${a._3}] vs ${b._1} [${b._2}, ${b._3}]")
+    }
+    // and each file is one sorted slice
+    ranges.foreach { case (f, _, _) =>
+      val z = spark.read.parquet(f).select(zk).as[Long].collect().toSeq
+      assert(z == z.sorted, s"$f is not sorted in zorder")
     }
     assert(store.read("z", 2).count() == 64)
   }

@@ -52,6 +52,11 @@ class PersistedBlocksSpec extends AnyFunSuite {
       assert(residual(name) == 0, s"$name leaked persistent RDDs")
   }
 
+  test("the catalog gates free their overlay checkpoint: zero persistent blocks") {
+    for (name <- Seq("c_time_travel", "c_rollback", "c_compact", "c_version_diff", "c_txn_snapshot"))
+      assert(residual(name) == 0, s"$name leaked persistent RDDs")
+  }
+
   test("catalog publishes free their checkpoint blocks, also when the parquet write throws") {
     import spark.implicits._
     import org.apache.spark.sql.functions.lit
